@@ -3738,7 +3738,7 @@ def _ensure_binlog_fixture(spark: SparkSession, sf_dir: str) -> tuple:
         os.makedirs(log_dir, exist_ok=True)
         # file 1 of the chain carries its txns as zstd-compressed
         # TRANSACTION_PAYLOAD events (MySQL binlog_transaction_compression;
-        # decoded by the from-scratch RFC 8878 codec in sources/zstd_codec),
+        # decoded by pyarrow's zstd codec via sources/compression),
         # the rest as plain ROWS events — both shapes on the gated path
         bf.write_binlog_files(
             txns, tables, log_dir, per_file=8, payload_wrap_files={1: "zstd"}
@@ -4816,9 +4816,9 @@ def q_kafka_segment_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     o_orderpriority->'X' for %3==0, then delete %7==0) is encoded as JSON
     envelopes into REAL record-batch-v2 segment bytes — CRC32C, ZigZag
     varint records, broker directory layout, three partitions keyed by
-    o_orderkey%4 with ONE CODEC PER PARTITION (gzip / from-scratch
-    snappy-java framing / from-scratch LZ4 frame / from-scratch RFC 8878
-    zstd; sources/compression.py, sources/zstd_codec.py),
+    o_orderkey%4 with ONE CODEC PER PARTITION (gzip / snappy-java framing
+    / LZ4 frame / zstd, all through pyarrow's codecs in
+    sources/compression.py),
     so every supported batch codec is on the gated path — then re-read with the
     distributed segment scan, envelope-decoded (wire_format.decode_events),
     and replayed to final state with per-partition offsets ordering (one

@@ -32,7 +32,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ape_dts_spark.sources.zstd_codec import zstd_compress, zstd_decompress
+from ape_dts_spark.sources.compression import compress, decompress
 
 BINLOG_MAGIC = b"\xfebin"
 
@@ -836,9 +836,9 @@ def _payload_event(inner: bytes, compression: str = "none") -> bytes:
     size [+ uncompressed size when compressed] + end mark) followed by the
     inner-event bytes. ``compression='zstd'`` is the ONLY algorithm MySQL
     defines for binlog_transaction_compression (8.0.20+); the frame comes
-    from the in-repo RFC 8878 writer (sources/zstd_codec.py)."""
+    from pyarrow's zstd codec (sources/compression.py)."""
     if compression == "zstd":
-        body = zstd_compress(inner)
+        body = compress("zstd", inner)
         ctype = _COMPRESS_ZSTD
     elif compression == "none":
         body = inner
@@ -1164,10 +1164,10 @@ def _parse_binlog_events(
             inner = body[p : p + payload_len] if payload_len is not None else body[p:]
             if compression == _COMPRESS_ZSTD:
                 # the only algorithm MySQL defines for
-                # binlog_transaction_compression — RFC 8878 decoder in
-                # sources/zstd_codec.py (reference: TransactionPayload path
+                # binlog_transaction_compression — pyarrow's zstd codec via
+                # sources/compression.py (reference: TransactionPayload path
                 # of mysql_cdc_extractor.rs via the zstd crate)
-                inner = zstd_decompress(bytes(inner))
+                inner = decompress("zstd", bytes(inner))
                 if uncompressed_len is not None and len(inner) != uncompressed_len:
                     raise ValueError(
                         "TRANSACTION_PAYLOAD uncompressed size mismatch "

@@ -24,11 +24,9 @@ Wire format parity (per the public spec):
   value | headerCount varint | [hKeyLen varint | hKey | hValLen varint |
   hVal]...  (all varints ZigZag),
 - attributes bits 0-2: compression codec over the records block — 0 none,
-  1 gzip (zlib), 2 snappy (from-scratch block codec + the snappy-java
-  stream framing the Java producer emits), 3 lz4 (from-scratch LZ4
-  block+frame codec) — see sources/compression.py; 4 zstd (from-scratch
-  RFC 8878 decoder, sources/zstd_codec.py). Unknown codec values raise an
-  honest error,
+  1 gzip, 2 snappy (snappy-java stream framing, as the Java producer
+  emits it), 3 lz4 (LZ4 frame), 4 zstd — all through pyarrow's codecs in
+  sources/compression.py. Unknown codec values raise an honest error,
 - CRC32C (Castagnoli), NOT the zlib CRC32 — table-driven implementation
   below,
 - segment file name = 20-digit base offset + ".log"; directory name =
@@ -44,19 +42,12 @@ inside the task: exactly a consumer's seek(offset).
 
 from __future__ import annotations
 
-import gzip as _gzip
 import struct
 from zlib import error as _zlib_error
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ape_dts_spark.sources.compression import (
-    lz4_frame_compress,
-    lz4_frame_decompress,
-    snappy_java_frame,
-    snappy_java_unframe,
-)
-from ape_dts_spark.sources.zstd_codec import zstd_compress, zstd_decompress
+from ape_dts_spark.sources.compression import compress, decompress
 
 MESSAGE_SCHEMA = (
     "topic string, partition int, offset long, ts long, "
@@ -65,11 +56,8 @@ MESSAGE_SCHEMA = (
 
 _ATTR_CODEC_MASK = 0x07
 _CODEC_NONE = 0
-_CODEC_GZIP = 1
-_CODEC_SNAPPY = 2
-_CODEC_LZ4 = 3
-_CODEC_ZSTD = 4
-_CODEC_NAMES = {2: "snappy", 3: "lz4", 4: "zstd"}
+_CODEC_NAMES = {1: "gzip", 2: "snappy", 3: "lz4", 4: "zstd"}
+_CODEC_IDS = {name: i for i, name in _CODEC_NAMES.items()}
 
 # ---------------------------------------------------------------------------
 # CRC32C (Castagnoli) — table-driven, reflected polynomial 0x82F63B78
@@ -176,20 +164,9 @@ def encode_batch(
         max_ts = base_ts + i
     attrs = _CODEC_NONE
     rec_bytes = bytes(recs)
-    if compression == "gzip":
-        attrs = _CODEC_GZIP
-        rec_bytes = _gzip.compress(rec_bytes, mtime=0)
-    elif compression == "snappy":
-        attrs = _CODEC_SNAPPY
-        rec_bytes = snappy_java_frame(rec_bytes)
-    elif compression == "lz4":
-        attrs = _CODEC_LZ4
-        rec_bytes = lz4_frame_compress(rec_bytes)
-    elif compression == "zstd":
-        attrs = _CODEC_ZSTD
-        rec_bytes = zstd_compress(rec_bytes)
-    elif compression != "none":
-        raise ValueError(f"unsupported compression {compression!r}")
+    if compression != "none":
+        rec_bytes = compress(compression, rec_bytes)  # ValueError if unknown
+        attrs = _CODEC_IDS[compression]
     after_crc = struct.pack(
         ">hiqqqhii",
         attrs, len(msgs) - 1, base_ts, max_ts,
@@ -256,18 +233,11 @@ def _parse_segment_records(
             continue
         codec = attrs & _ATTR_CODEC_MASK
         rec_bytes = after_crc[40:]
-        if codec == _CODEC_GZIP:
-            rec_bytes = _gzip.decompress(rec_bytes)
-        elif codec == _CODEC_SNAPPY:
-            rec_bytes = snappy_java_unframe(rec_bytes)
-        elif codec == _CODEC_LZ4:
-            rec_bytes = lz4_frame_decompress(rec_bytes)
-        elif codec == _CODEC_ZSTD:
-            rec_bytes = zstd_decompress(rec_bytes)
+        if codec in _CODEC_NAMES:
+            rec_bytes = decompress(_CODEC_NAMES[codec], rec_bytes)
         elif codec != _CODEC_NONE:
-            name = _CODEC_NAMES.get(codec, str(codec))
             raise NotImplementedError(
-                f"compression codec {name} not available in this environment"
+                f"compression codec {codec} not available in this environment"
             )
         j = 0
         for _ in range(rec_count):

@@ -478,7 +478,7 @@ def test_transaction_payload_wrap_roundtrip(spark, tmp_path):
     as TLV header + unchecksummed inner events. The reference dispatches
     TransactionPayload the same way (SURVEY §2 MySQL CDC row). Parse output
     must equal the unwrapped encoding of the same history, for both the
-    uncompressed and the zstd-compressed (RFC 8878 from-scratch codec)
+    uncompressed and the zstd-compressed (pyarrow codec)
     payload forms; unknown compression types raise honestly."""
     txns = _basic_txns()
     plain = bf.parse_binlog_bytes(

@@ -54,15 +54,6 @@ def test_crc_corruption_detected():
         ks.parse_segment_bytes(bytes(data))
 
 
-def test_zstd_codec_roundtrip():
-    # codec 4 decodes for real since round 11 (from-scratch RFC 8878
-    # decoder, sources/zstd_codec.py)
-    msgs = _msgs(40)
-    data = ks.encode_batch(msgs, 0, 0, compression="zstd")
-    rows = ks.parse_segment_bytes(data, topic="t")
-    assert [(r["key"], r["value"]) for r in rows] == [(k, v) for k, v, _ in msgs]
-
-
 def test_unsupported_codec_honest():
     data = bytearray(ks.encode_batch(_msgs(2), 0, 0))
     # flip attributes to codec 5 (beyond any defined codec) and re-CRC so

@@ -140,7 +140,7 @@ def main() -> None:
         return
     never_n, forced_n = len(never), len(forced)
     header = [
-        "        # -- r15 window (machine-generated by tools/rotation.py; policy:",
+        "        # -- window (machine-generated by tools/rotation.py; policy:",
         f"        # -- {never_n} never-gated rows lead, then {forced_n} force-rotated"
         " (fixture/oracle",
         "        # -- changed this round), then stalest-first by last-green round;",
