@@ -477,6 +477,23 @@ def q_subscription_http_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _endpoint(server) -> tuple[str, int]:
+    """Start a loopback fake server (sources/fake_servers.py) -> its
+    (host, port). It outlives the gate call, serving every later session
+    until it has been idle for fake_servers.IDLE_TIMEOUT_S."""
+    server.start()
+    return server.host, server.port
+
+
+def _dir_blobs(path: str) -> dict[str, bytes]:
+    """{file name: bytes} for every file in ``path``, in name order."""
+    out = {}
+    for name in sorted(os.listdir(path)):
+        with open(os.path.join(path, name), "rb") as f:
+            out[name] = f.read()
+    return out
+
+
 def q_precheck_connection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LIVE CheckDatabaseConnection prechecks (r16 —
     precheck.run_connection_prechecks over the repo's four wire clients;
@@ -486,20 +503,25 @@ def q_precheck_connection(spark: SparkSession, sf_dir: str) -> DataFrame:
     IDENTIFY_SYSTEM, Redis RESP PING, Mongo OP_MSG hello — and the same
     four kinds against a dead port must land as ok=false rows (failures are
     results, never raises). The oracle restates every (kind, ok, detail)
-    from the fixture servers' constants."""
+    from the constants of the shared fake servers (FakeMysqlServer,
+    FakeWalsender, FakeMaster, FakeMongod)."""
     import socket as _socket
 
     from ape_dts_spark.precheck import (
         check_redis_psync_permission,
         run_connection_prechecks,
     )
+    from ape_dts_spark.sources.fake_servers import (
+        FakeMaster,
+        FakeMongod,
+        FakeMysqlServer,
+        FakeWalsender,
+    )
 
-    log_dir, _tables = _ensure_binlog_fixture(spark, sf_dir)
-    my_host, my_port, _f = _serve_mysql_binlogs(log_dir)[0]
-    pg_host, pg_port = _serve_pg_walsender([])
-    rdb_paths, _base = _ensure_rdb_fixture(spark, sf_dir)
-    (rd_host, rd_port), = _serve_rdb_dumps(rdb_paths[:1])
-    mg_host, mg_port = _serve_mongod({})
+    my_host, my_port = _endpoint(FakeMysqlServer({}))
+    pg_host, pg_port = _endpoint(FakeWalsender())
+    rd_host, rd_port = _endpoint(FakeMaster(repl_id="f" * 40, master_offset=0))
+    mg_host, mg_port = _endpoint(FakeMongod({}))
     s = _socket.socket()
     s.bind(("127.0.0.1", 0))
     dead = s.getsockname()[1]
@@ -819,73 +841,6 @@ def q_redis_rdb(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _serve_rdb_dumps(paths: list) -> list[tuple[str, int]]:
-    """Fixture harness for the psync gate: one loopback fake master per
-    node dump, speaking the real replication bytes (REPLCONF -> +OK,
-    PSYNC ? -1 -> +FULLRESYNC + length-framed RDB payload, ACKs consumed).
-    Daemon accept loops retire after an idle timeout, so repeated gate
-    evaluations (bench reruns, count+collect) each get fresh sessions.
-    Returns the (host, port) node list. The production client under test
-    lives in sources/redis_psync.py; this is the server side only."""
-    import socket as _socket
-    import threading
-
-    from ape_dts_spark.sources.redis_psync import RespSocket
-
-    def _session(sock, blob):
-        sock.settimeout(30)
-        conn = RespSocket(sock)
-        try:
-            while True:
-                kind, v, _n = conn.read_value()
-                if kind != "array" or not v:
-                    return
-                name = (v[0] if isinstance(v[0], bytes) else str(v[0]).encode())
-                name = name.decode().lower()
-                if name == "replconf":
-                    arg1 = (v[1] if isinstance(v[1], bytes) else str(v[1]).encode())
-                    if arg1.decode().lower() == "ack":
-                        continue  # ACKs get no reply
-                    conn.send_raw(b"+OK\r\n")
-                elif name == "psync":
-                    conn.send_raw(b"+FULLRESYNC " + b"f" * 40 + b" 0\r\n")
-                    conn.send_raw(b"$" + str(len(blob)).encode() + b"\r\n")
-                    conn.send_raw(blob)
-                elif name == "ping":
-                    conn.send_raw(b"+PONG\r\n")
-                else:
-                    conn.send_raw(b"-ERR unknown command\r\n")
-        except (ValueError, OSError):
-            return
-
-    nodes = []
-    for p in paths:
-        with open(p, "rb") as f:
-            blob = f.read()
-        srv = _socket.socket(_socket.AF_INET, _socket.SOCK_STREAM)
-        srv.setsockopt(_socket.SOL_SOCKET, _socket.SO_REUSEADDR, 1)
-        srv.bind(("127.0.0.1", 0))
-        srv.listen(8)
-        srv.settimeout(600)
-
-        def _accept(srv=srv, blob=blob):
-            while True:
-                try:
-                    sock, _ = srv.accept()
-                except (_socket.timeout, OSError):
-                    try:
-                        srv.close()
-                    finally:
-                        return
-                threading.Thread(
-                    target=_session, args=(sock, blob), daemon=True
-                ).start()
-
-        threading.Thread(target=_accept, daemon=True).start()
-        nodes.append(("127.0.0.1", srv.getsockname()[1]))
-    return nodes
-
-
 def q_psync_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LIVE Redis PSYNC full sync over real sockets (r15 —
     sources/redis_psync.py, the socket half of redis_psync_extractor.rs):
@@ -895,11 +850,17 @@ def q_psync_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     listening-port, PSYNC ? -1 -> +FULLRESYNC), receives the length-framed
     RDB payload, acks, and decodes it with the shared at-rest parser —
     so the gate proves handshake + framing + socket transport end-to-end
-    against the identical oracle the at-rest scan is graded on."""
+    against the identical oracle the at-rest scan is graded on. Each node
+    is a FakeMaster (sources/fake_servers.py)."""
+    from ape_dts_spark.sources.fake_servers import FakeMaster
     from ape_dts_spark.sources.redis_psync import read_psync_snapshots
 
     paths, base = _ensure_rdb_fixture(spark, sf_dir)
-    nodes = _serve_rdb_dumps(paths)
+    nodes = []
+    for p in paths:
+        with open(p, "rb") as f:
+            master = FakeMaster(rdb_bytes=f.read(), repl_id="f" * 40, master_offset=0)
+        nodes.append(_endpoint(master))
     parsed = read_psync_snapshots(spark, nodes, tail_commands=0)
     return parsed.select(
         "db_id", "key", "entry_type", "member", "value", "ord",
@@ -921,6 +882,7 @@ def _ensure_psync_tail_fixture(spark: SparkSession, sf_dir: str) -> list:
     import inspect
     import tempfile
 
+    from ape_dts_spark.sources.aof_manifest import encode_resp
     from ape_dts_spark.sources.redis import key_slot
 
     n_nodes = 4
@@ -942,100 +904,12 @@ def _ensure_psync_tail_fixture(spark: SparkSession, sf_dir: str) -> list:
         shards: list[bytearray] = [bytearray() for _ in range(n_nodes)]
         for r in lines:
             argv = r["line"].split()
-            node = key_slot(argv[1]) % n_nodes
-            enc = b"*%d\r\n" % len(argv) + b"".join(
-                b"$%d\r\n%s\r\n" % (len(a), a.encode()) for a in argv
-            )
-            shards[node] += enc
+            shards[key_slot(argv[1]) % n_nodes] += encode_resp(argv)
         os.makedirs(out_dir, exist_ok=True)
         for p, blob in zip(paths, shards):
             with open(p, "wb") as f:
                 f.write(bytes(blob))
     return paths
-
-
-def _serve_psync_tail_masters(paths: list) -> list[tuple[str, int]]:
-    """Fixture harness for the psync_tail gate: one loopback fake master per
-    node whose FIRST session answers ``PSYNC ? -1`` with +FULLRESYNC, an
-    EMPTY length-framed RDB, then only ~55% of the command bytes before
-    DROPPING the connection mid-command — forcing the client's partial
-    resync. A resume ``PSYNC <id> <offset>`` is answered ``+CONTINUE`` and
-    served the remainder FROM THE REQUESTED OFFSET (wrong offset accounting
-    replays or loses commands and diverges from the oracle), then held open
-    consuming ACKs until the client's quiet-socket timeout ends the tail.
-    The production client under test lives in sources/redis_psync.py."""
-    import socket as _socket
-    import threading
-
-    from ape_dts_spark.sources import redis_rdb as rdb
-    from ape_dts_spark.sources.redis_psync import RespSocket
-
-    repl_id = "c" * 40
-    base_offset = 1000
-    empty_rdb = rdb.encode_rdb([])
-
-    def _session(sock, blob):
-        sock.settimeout(30)
-        conn = RespSocket(sock)
-        try:
-            while True:
-                kind, v, _n = conn.read_value()
-                if kind != "array" or not v:
-                    return
-                argv = [x.decode() if isinstance(x, bytes) else str(x) for x in v]
-                name = argv[0].lower()
-                if name == "replconf":
-                    if argv[1].lower() == "ack":
-                        continue  # ACKs get no reply
-                    conn.send_raw(b"+OK\r\n")
-                elif name == "psync":
-                    if argv[1] == "?":
-                        conn.send_raw(
-                            f"+FULLRESYNC {repl_id} {base_offset}\r\n".encode()
-                        )
-                        conn.send_raw(b"$%d\r\n" % len(empty_rdb) + empty_rdb)
-                        cut = int(len(blob) * 0.55)
-                        conn.send_raw(blob[:cut])
-                        sock.close()  # mid-command drop: resume or bust
-                        return
-                    rel = int(argv[2]) - base_offset
-                    if argv[1] != repl_id or not 0 <= rel <= len(blob):
-                        conn.send_raw(b"-ERR cannot continue\r\n")
-                        return
-                    conn.send_raw(b"+CONTINUE\r\n")
-                    conn.send_raw(blob[rel:])
-                    # hold open consuming ACKs; the client's timeout ends it
-                else:
-                    conn.send_raw(b"-ERR unknown command\r\n")
-        except (ValueError, OSError):
-            return
-
-    nodes = []
-    for p in paths:
-        with open(p, "rb") as f:
-            blob = f.read()
-        srv = _socket.socket(_socket.AF_INET, _socket.SOCK_STREAM)
-        srv.setsockopt(_socket.SOL_SOCKET, _socket.SO_REUSEADDR, 1)
-        srv.bind(("127.0.0.1", 0))
-        srv.listen(8)
-        srv.settimeout(600)
-
-        def _accept(srv=srv, blob=blob):
-            while True:
-                try:
-                    sock, _ = srv.accept()
-                except (_socket.timeout, OSError):
-                    try:
-                        srv.close()
-                    finally:
-                        return
-                threading.Thread(
-                    target=_session, args=(sock, blob), daemon=True
-                ).start()
-
-        threading.Thread(target=_accept, daemon=True).start()
-        nodes.append(("127.0.0.1", srv.getsockname()[1]))
-    return nodes
 
 
 def q_psync_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1050,12 +924,26 @@ def q_psync_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the shared command->entry model to the IDENTICAL final-state
     oracle the at-rest parse is graded on — so a lost/replayed command at
     the resume boundary, broken offset arithmetic, or mis-sharded keys all
-    diverge."""
-    from ape_dts_spark.sources.redis import commands_to_entries, compact_entries
+    diverge. Each master is an offset-aware FakeMaster
+    (sources/fake_servers.py)."""
+    from ape_dts_spark.sources import redis_rdb as rdb
+    from ape_dts_spark.sources.fake_servers import FakeMaster
+    from ape_dts_spark.sources.redis import (
+        commands_to_entries,
+        compact_entries,
+        parse_resp_bytes,
+    )
     from ape_dts_spark.sources.redis_psync import read_psync_tails
 
-    paths = _ensure_psync_tail_fixture(spark, sf_dir)
-    nodes = _serve_psync_tail_masters(paths)
+    nodes = []
+    for p in _ensure_psync_tail_fixture(spark, sf_dir):
+        with open(p, "rb") as f:
+            stream = f.read()
+        nodes.append(_endpoint(FakeMaster(
+            rdb_bytes=rdb.encode_rdb([]), commands=parse_resp_bytes(stream),
+            repl_id="c" * 40, master_offset=1000,
+            drop_after_bytes=int(len(stream) * 0.55), offset_aware=True,
+        )))
     cmds = read_psync_tails(spark, nodes, timeout=3)
     entries = commands_to_entries(cmds.select("seq", F.col("cmd").alias("argv")))
     state = compact_entries(entries)
@@ -3972,76 +3860,6 @@ def q_pgoutput_file_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _serve_pg_walsender(frames: list) -> tuple[str, int]:
-    """Fixture harness for the pg_replication_live gate: one loopback fake
-    walsender (trust auth) speaking the real v3 wire bytes — startup ->
-    AuthenticationOk/ParameterStatus/ReadyForQuery, START_REPLICATION ->
-    CopyBothResponse, the fixture's XLogData frames as CopyData, CopyDone,
-    then standby-status-update consumption. The production client under
-    test lives in sources/pg_replication.py; this is the server side only."""
-    import socket as _socket
-    import struct as _struct
-    import threading
-
-    from ape_dts_spark.sources.pg_replication import PgSocket
-
-    srv = _socket.socket(_socket.AF_INET, _socket.SOCK_STREAM)
-    srv.setsockopt(_socket.SOL_SOCKET, _socket.SO_REUSEADDR, 1)
-    srv.bind(("127.0.0.1", 0))
-    srv.listen(8)
-    srv.settimeout(600)
-
-    def _session(sock):
-        sock.settimeout(30)
-        conn = PgSocket(sock)
-        try:
-            conn.read_startup()
-            conn.send_msg(b"R", _struct.pack(">I", 0))
-            conn.send_msg(b"S", b"server_version\x0016.3\x00")
-            conn.send_msg(b"Z", b"I")
-            while True:
-                mtype, payload = conn.read_msg()
-                if mtype == b"Q" and payload.upper().startswith(b"START_REPLICATION"):
-                    conn.send_msg(b"W", b"\x00\x00\x00")
-                    for frame in frames:
-                        conn.send_msg(b"d", frame)
-                    conn.send_msg(b"c")  # CopyDone: stream drained
-                elif mtype == b"Q" and payload.upper().startswith(b"IDENTIFY_SYSTEM"):
-                    # the walsender liveness probe (precheck_connection):
-                    # one-row systemid/timeline/xlogpos/dbname result
-                    cols = [b"systemid", b"timeline", b"xlogpos", b"dbname"]
-                    t = _struct.pack(">H", len(cols))
-                    for c in cols:
-                        t += c + b"\x00" + _struct.pack(">IHIhih", 0, 0, 25, -1, -1, 0)
-                    conn.send_msg(b"T", t)
-                    vals = [b"7284066108532061456", b"1", b"0/1000000", b""]
-                    d = _struct.pack(">H", len(vals))
-                    for v in vals:
-                        d += _struct.pack(">i", len(v)) + v
-                    conn.send_msg(b"D", d)
-                    conn.send_msg(b"C", b"IDENTIFY_SYSTEM\x00")
-                    conn.send_msg(b"Z", b"I")
-                elif mtype == b"X":
-                    return
-                # 'd' standby status updates: consumed
-        except (ValueError, OSError):
-            return
-
-    def _accept():
-        while True:
-            try:
-                sock, _ = srv.accept()
-            except (_socket.timeout, OSError):
-                try:
-                    srv.close()
-                finally:
-                    return
-            threading.Thread(target=_session, args=(sock,), daemon=True).start()
-
-    threading.Thread(target=_accept, daemon=True).start()
-    return "127.0.0.1", srv.getsockname()[1]
-
-
 def q_pg_replication_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LIVE PG logical replication over real sockets (r15 —
     sources/pg_replication.py, the socket half of pg_cdc_extractor.rs): the
@@ -4052,21 +3870,17 @@ def q_pg_replication_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     bookkeeping, CopyDone end), decodes XLogData per commit with the shared
     at-rest parser, and the replayed final state is graded against the
     identical oracle the at-rest scan is graded on — handshake + framing +
-    transport proven end-to-end by the driver."""
-    import struct as _struct
-
+    transport proven end-to-end by the gate. The walsender is a
+    FakeWalsender (sources/fake_servers.py)."""
+    from ape_dts_spark.sources.fake_servers import FakeWalsender, segment_to_frames
     from ape_dts_spark.sources.pg_replication import read_replication_changes
 
     log_dir = _ensure_pgwal_fixture(spark, sf_dir)
-    frames: list[bytes] = []
-    for fname in sorted(os.listdir(log_dir)):
-        blob = open(os.path.join(log_dir, fname), "rb").read()
-        i = 0
-        while i < len(blob):
-            (ln,) = _struct.unpack_from(">I", blob, i)
-            frames.append(blob[i + 4 : i + 4 + ln])
-            i += 4 + ln
-    host, port = _serve_pg_walsender(frames)
+    frames = [
+        frame for blob in _dir_blobs(log_dir).values()
+        for frame in segment_to_frames(blob)
+    ]
+    host, port = _endpoint(FakeWalsender(frames))
     dml = read_replication_changes(
         spark, [(host, port, "ape_dts_slot")], timeout=30
     ).filter(F.col("row_type").isin("insert", "update", "delete"))
@@ -4086,137 +3900,6 @@ def q_pg_replication_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _serve_mysql_binlogs(log_dir: str) -> list[tuple[str, int, str]]:
-    """Fixture harness for the mysql_binlog_live gate: one loopback fake
-    MySQL server (v10 handshake, empty-password native proof, COM_QUERY /
-    REGISTER_SLAVE OKs, COM_BINLOG_DUMP packetizing the requested fixture
-    file, EOF) serving every file of the chain. Returns one
-    (host, port, file) endpoint per binlog file. The production client
-    under test lives in sources/mysql_binlog_client.py."""
-    import secrets
-    import socket as _socket
-    import struct as _struct
-    import threading
-
-    from ape_dts_spark.sources.binlog_file import BINLOG_MAGIC
-    from ape_dts_spark.sources.mysql_binlog_client import (
-        COM_BINLOG_DUMP,
-        COM_BINLOG_DUMP_GTID,
-        MysqlSocket,
-        decode_gtid_set,
-        gtid_set_contains,
-        native_password_proof,
-    )
-
-    blobs = {
-        f: open(os.path.join(log_dir, f), "rb").read()
-        for f in sorted(os.listdir(log_dir))
-    }
-    OK = b"\x00\x00\x00\x02\x00\x00\x00"
-
-    def _events(blob: bytes):
-        i = 4
-        while i + 13 <= len(blob):
-            (size,) = _struct.unpack_from("<I", blob, i + 9)
-            yield blob[i : i + size]
-            i += size
-
-    def _events_excluding(blob: bytes, gs: dict):
-        """Real COM_BINLOG_DUMP_GTID semantics: transactions whose GTID the
-        client's set covers are withheld whole; ROTATE/FDE/PREVIOUS_GTIDS
-        always flow."""
-        skipping = False
-        for ev in _events(blob):
-            etype = ev[4]
-            if etype == 33:  # GTID event
-                raw = ev[20:36].hex()
-                uuid = f"{raw[:8]}-{raw[8:12]}-{raw[12:16]}-{raw[16:20]}-{raw[20:]}"
-                (gno,) = _struct.unpack_from("<q", ev, 36)
-                skipping = gtid_set_contains(gs, uuid, gno)
-            elif etype in (4, 15, 35):  # ROTATE / FDE / PREVIOUS_GTIDS
-                yield ev
-                continue
-            if not skipping:
-                yield ev
-
-    def _session(sock):
-        sock.settimeout(30)
-        conn = MysqlSocket(sock)
-        try:
-            scramble = secrets.token_bytes(20)
-            greeting = (
-                b"\x0a" + b"8.0.36-fixture\x00" + _struct.pack("<I", 7)
-                + scramble[:8] + b"\x00" + _struct.pack("<H", 0xFFFF) + b"\x21"
-                + _struct.pack("<HH", 2, 0xFFFF) + bytes([21]) + b"\x00" * 10
-                + scramble[8:] + b"\x00" + b"mysql_native_password\x00"
-            )
-            conn.send_packet(greeting, seq=0)
-            resp = conn.read_packet()
-            i = 4 + 4 + 1 + 23
-            j = resp.index(0, i)
-            n = resp[j + 1]
-            if resp[j + 2 : j + 2 + n] != native_password_proof("", scramble):
-                conn.send_packet(b"\xff" + _struct.pack("<H", 1045) + b"#28000denied")
-                return
-            conn.send_packet(OK, seq=conn.seq)
-            while True:
-                conn.reset_seq()
-                pkt = conn.read_packet()
-                if not pkt:
-                    return
-                if pkt[0] == COM_BINLOG_DUMP:
-                    fname = pkt[11:].decode()
-                    blob = blobs.get(fname)
-                    if blob is None or blob[:4] != BINLOG_MAGIC:
-                        conn.send_packet(
-                            b"\xff" + _struct.pack("<H", 1236)
-                            + b"#HY000unknown binlog file")
-                        continue
-                    for ev in _events(blob):
-                        conn.send_packet(b"\x00" + ev)
-                    conn.send_packet(b"\xfe\x00\x00\x02\x00")  # EOF
-                elif pkt[0] == COM_BINLOG_DUMP_GTID:
-                    (fn_len,) = _struct.unpack_from("<I", pkt, 7)
-                    fname = pkt[11 : 11 + fn_len].decode()
-                    i = 11 + fn_len + 8
-                    (gs_len,) = _struct.unpack_from("<I", pkt, i)
-                    gs = decode_gtid_set(pkt[i + 4 : i + 4 + gs_len])
-                    blob = blobs.get(fname)
-                    if blob is None or blob[:4] != BINLOG_MAGIC:
-                        conn.send_packet(
-                            b"\xff" + _struct.pack("<H", 1236)
-                            + b"#HY000unknown binlog file")
-                        continue
-                    for ev in _events_excluding(blob, gs):
-                        conn.send_packet(b"\x00" + ev)
-                    conn.send_packet(b"\xfe\x00\x00\x02\x00")  # EOF
-                else:  # COM_QUERY / COM_REGISTER_SLAVE session setup
-                    conn.send_packet(OK)
-        except (ValueError, OSError):
-            return
-
-    srv = _socket.socket(_socket.AF_INET, _socket.SOCK_STREAM)
-    srv.setsockopt(_socket.SOL_SOCKET, _socket.SO_REUSEADDR, 1)
-    srv.bind(("127.0.0.1", 0))
-    srv.listen(16)
-    srv.settimeout(600)
-
-    def _accept():
-        while True:
-            try:
-                sock, _ = srv.accept()
-            except (_socket.timeout, OSError):
-                try:
-                    srv.close()
-                finally:
-                    return
-            threading.Thread(target=_session, args=(sock,), daemon=True).start()
-
-    threading.Thread(target=_accept, daemon=True).start()
-    port = srv.getsockname()[1]
-    return [("127.0.0.1", port, f) for f in sorted(blobs)]
-
-
 def q_mysql_binlog_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LIVE MySQL binlog replication over real sockets (r15 —
     sources/mysql_binlog_client.py, the socket half of the reference's
@@ -4228,11 +3911,15 @@ def q_mysql_binlog_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream and decodes it with the shared gated parser; the replayed final
     state is graded against the identical oracle the at-rest scan is graded
     on. JSON-flattened images are projected back per column (the transport
-    relation is wire-stable strings)."""
+    relation is wire-stable strings). The server is a FakeMysqlServer
+    (sources/fake_servers.py) holding every file of the chain."""
+    from ape_dts_spark.sources.fake_servers import FakeMysqlServer
     from ape_dts_spark.sources.mysql_binlog_client import read_binlog_changes
 
     log_dir, tables = _ensure_binlog_fixture(spark, sf_dir)
-    endpoints = _serve_mysql_binlogs(log_dir)
+    blobs = _dir_blobs(log_dir)
+    host, port = _endpoint(FakeMysqlServer(blobs))
+    endpoints = [(host, port, fname) for fname in blobs]
     dml = read_binlog_changes(spark, endpoints, tables, timeout=30).filter(
         F.col("row_type").isin("insert", "update", "delete")
     )
@@ -4280,27 +3967,20 @@ def q_binlog_gtid_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     double-counts or loses a transaction and diverges from the identical
     final-state oracle. Apply order rides the GTID gno itself (globally
     increasing across the chain), the order the reference's
-    gtid_set-position resume is built on."""
-    import struct as _struct
-
+    gtid_set-position resume is built on. The server is a FakeMysqlServer
+    (sources/fake_servers.py)."""
+    from ape_dts_spark.sources.binlog_file import GTID_EVENT, gtid_event_id
+    from ape_dts_spark.sources.fake_servers import FakeMysqlServer, split_events
     from ape_dts_spark.sources.mysql_binlog_client import read_binlog_changes
 
     log_dir, tables = _ensure_binlog_fixture(spark, sf_dir)
     uuid = "3e11fa47-71ca-11e1-9e33-c80aa9429562"
-
-    def _file_gnos(blob: bytes) -> list[int]:
-        out, i = [], 4
-        while i + 13 <= len(blob):
-            (size,) = _struct.unpack_from("<I", blob, i + 9)
-            if blob[i + 4] == 33:  # GTID event: flags u8 + 16B sid + i64 gno
-                out.append(_struct.unpack_from("<q", blob, i + 19 + 17)[0])
-            i += size
-        return out
-
-    endpoints = _serve_mysql_binlogs(log_dir)
+    blobs = _dir_blobs(log_dir)
+    host, port = _endpoint(FakeMysqlServer(blobs))
     eps = []
-    for host, port, fname in endpoints:
-        gnos = _file_gnos(open(os.path.join(log_dir, fname), "rb").read())
+    for fname, blob in blobs.items():
+        gnos = [gtid_event_id(ev[19:])[1] for _, ev in split_events(blob)
+                if ev[4] == GTID_EVENT]
         lo, hi, mid = min(gnos), max(gnos), (min(gnos) + max(gnos)) // 2
         eps.append((host, port, fname,
                     f"{uuid}:{mid + 1}-{hi}" if hi > mid else ""))
@@ -4436,173 +4116,6 @@ def q_oplog_file_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _serve_mongod(collections: dict, change_events: list | None = None) -> tuple[str, int]:
-    """Fixture harness for the mongo live gates: one loopback fake mongod
-    speaking real OP_MSG bytes — hello, find with the client's filter
-    shapes ({}, {ts: {$gte}}, {$expr: {$gt: ["$_id", key]}}) over stored
-    documents with BSON type-order _id sorting, $changeStream aggregations
-    over ``change_events`` (startAtOperationTime / startAfter honored),
-    getMore pages, count, killCursors. ``collections``: {(db, coll):
-    [doc, ...]} (insertion order = natural order, the oplog contract).
-    Daemon accept loop retires after an idle timeout so repeated gate
-    evaluations get fresh sessions. The production client under test lives
-    in sources/mongo_client.py; this is the server side only."""
-    import secrets as _secrets
-    import socket as _socket
-    import threading
-
-    from ape_dts_spark.sources import bson_codec as bcodec
-    from ape_dts_spark.sources.mongo_client import MongoSocket, encode_op_msg
-
-    def _rank(v):
-        # BSON type-order subset: null < numbers < string < ObjectId < Timestamp
-        if v is None:
-            return (5, 0)
-        if isinstance(v, bool):
-            return (40, int(v))
-        if isinstance(v, (int, float)):
-            return (10, v)
-        if isinstance(v, str):
-            return (15, v)
-        if isinstance(v, bcodec.ObjectId):
-            return (35, v.raw)
-        if isinstance(v, bcodec.Timestamp):
-            return (50, v.sort_key())
-        return (99, str(v))
-
-    def _matches(doc, filt):
-        if not filt:
-            return True
-        if "ts" in filt and isinstance(filt.get("ts"), dict):
-            ts = doc.get("ts")
-            want = filt["ts"]["$gte"]
-            return isinstance(ts, bcodec.Timestamp) and ts.sort_key() >= want.sort_key()
-        if "$expr" in filt:
-            (_op, args), = filt["$expr"].items()
-            return _rank(doc.get("_id")) > _rank(args[1])
-        return all(doc.get(k) == v for k, v in filt.items())
-
-    def _session(sock):
-        sock.settimeout(30)
-        conn = MongoSocket(sock)
-        cursors: dict[int, tuple[str, list]] = {}
-        next_id = [_secrets.randbelow(1 << 30) + 1]
-
-        def reply(to_rid, doc):
-            rid = conn.next_request_id
-            conn.next_request_id += 1
-            sock.sendall(encode_op_msg(doc, rid, response_to=to_rid))
-
-        try:
-            while True:
-                rid, _, cmd = conn.read_msg()
-                name = next(iter(cmd))
-                if name == "hello":
-                    reply(rid, {"isWritablePrimary": True, "setName": "rs0",
-                                "maxWireVersion": 17, "minWireVersion": 0,
-                                "ok": 1.0})
-                elif name == "count":
-                    docs = collections.get((cmd["$db"], cmd["count"]), [])
-                    reply(rid, {"n": len(docs), "ok": 1.0})
-                elif name == "aggregate":
-                    stage = (cmd.get("pipeline") or [{}])[0].get("$changeStream")
-                    if stage is None:
-                        reply(rid, {"ok": 0.0, "code": 40324,
-                                    "errmsg": "only $changeStream supported"})
-                        continue
-                    events = list(change_events or [])
-                    if "startAfter" in stage:
-                        tok = stage["startAfter"]
-                        idx = next((i for i, e in enumerate(events)
-                                    if e.get("_id") == tok), None)
-                        if idx is None:
-                            reply(rid, {"ok": 0.0, "code": 286,
-                                        "errmsg": "resume token not found"})
-                            continue
-                        events = events[idx + 1:]
-                    elif "startAtOperationTime" in stage:
-                        want = stage["startAtOperationTime"].sort_key()
-                        events = [e for e in events
-                                  if e["clusterTime"].sort_key() >= want]
-                    batch = int((cmd.get("cursor") or {}).get("batchSize", 101))
-                    first, rest = events[:batch], events[batch:]
-                    cid = 0
-                    if rest:
-                        cid = next_id[0]
-                        next_id[0] += 1
-                        cursors[cid] = ("$cmd.aggregate", rest)
-                    reply(rid, {"cursor": {
-                        "firstBatch": first, "id": bcodec.Int64(cid),
-                        "ns": f"{cmd['$db']}.$cmd.aggregate"}, "ok": 1.0})
-                elif name == "find":
-                    docs = [d for d in collections.get((cmd["$db"], cmd["find"]), [])
-                            if _matches(d, cmd.get("filter"))]
-                    if cmd.get("sort"):
-                        (field, direction), = cmd["sort"].items()
-                        docs = sorted(docs, key=lambda d: _rank(d.get(field)),
-                                      reverse=direction < 0)
-                    if cmd.get("limit"):
-                        docs = docs[: int(cmd["limit"])]
-                    batch = int(cmd.get("batchSize", 101))
-                    first, rest = docs[:batch], docs[batch:]
-                    cid = 0
-                    if rest:
-                        cid = next_id[0]
-                        next_id[0] += 1
-                        cursors[cid] = (cmd["find"], rest)
-                    reply(rid, {"cursor": {
-                        "firstBatch": first, "id": bcodec.Int64(cid),
-                        "ns": f"{cmd['$db']}.{cmd['find']}"}, "ok": 1.0})
-                elif name == "getMore":
-                    cid = int(getattr(cmd["getMore"], "value", cmd["getMore"]))
-                    if cid not in cursors:
-                        reply(rid, {"ok": 0.0, "code": 43,
-                                    "errmsg": f"cursor id {cid} not found"})
-                        continue
-                    coll, pending = cursors[cid]
-                    batch = int(cmd.get("batchSize", 101))
-                    out, pending = pending[:batch], pending[batch:]
-                    if pending:
-                        cursors[cid] = (coll, pending)
-                        new_id = cid
-                    else:
-                        cursors.pop(cid)
-                        new_id = 0
-                    reply(rid, {"cursor": {
-                        "nextBatch": out, "id": bcodec.Int64(new_id),
-                        "ns": f"{cmd['$db']}.{coll}"}, "ok": 1.0})
-                elif name == "killCursors":
-                    ids = [int(getattr(c, "value", c)) for c in cmd.get("cursors", [])]
-                    for cid in ids:
-                        cursors.pop(cid, None)
-                    reply(rid, {"cursorsKilled": ids, "ok": 1.0})
-                else:
-                    reply(rid, {"ok": 0.0, "code": 59,
-                                "errmsg": f"no such command: '{name}'"})
-        except (ValueError, OSError):
-            return
-
-    srv = _socket.socket(_socket.AF_INET, _socket.SOCK_STREAM)
-    srv.setsockopt(_socket.SOL_SOCKET, _socket.SO_REUSEADDR, 1)
-    srv.bind(("127.0.0.1", 0))
-    srv.listen(16)
-    srv.settimeout(600)
-
-    def _accept():
-        while True:
-            try:
-                sock, _ = srv.accept()
-            except (_socket.timeout, OSError):
-                try:
-                    srv.close()
-                finally:
-                    return
-            threading.Thread(target=_session, args=(sock,), daemon=True).start()
-
-    threading.Thread(target=_accept, daemon=True).start()
-    return "127.0.0.1", srv.getsockname()[1]
-
-
 def q_mongo_oplog_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LIVE MongoDB oplog tail over real sockets (r16 —
     sources/mongo_client.py, the wire half of mongo_cdc_extractor.rs:
@@ -4613,17 +4126,19 @@ def q_mongo_oplog_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     received entries into the mongodump layout and decodes them with the
     shared gated parser; the folded final state is graded against the
     identical oracle the at-rest scan is graded on — handshake + framing +
-    cursor transport proven end-to-end by the driver."""
+    cursor transport proven end-to-end by the gate. The server is a
+    FakeMongod (sources/fake_servers.py)."""
     from ape_dts_spark.sources import bson_codec as bcodec
     from ape_dts_spark.sources import oplog_file as ofl
+    from ape_dts_spark.sources.fake_servers import FakeMongod
     from ape_dts_spark.sources.mongo_client import read_live_oplog_changes
 
     dump_dir = _ensure_oplog_fixture(spark, sf_dir)
-    entries: list[dict] = []
-    for fname in sorted(os.listdir(dump_dir)):
-        blob = open(os.path.join(dump_dir, fname), "rb").read()
-        entries.extend(bcodec.iter_documents(blob))
-    host, port = _serve_mongod({("local", "oplog.rs"): entries})
+    entries = [
+        doc for blob in _dir_blobs(dump_dir).values()
+        for doc in bcodec.iter_documents(blob)
+    ]
+    host, port = _endpoint(FakeMongod({("local", "oplog.rs"): entries}))
     changes = read_live_oplog_changes(spark, [(host, port)], timeout=30)
     return _oplog_state_projection(ofl.fold_oplog_state(changes))
 
@@ -4641,9 +4156,11 @@ def q_mongo_changestream_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the updateDescription -> {$set,$unset} path, and the folded
     final state is graded against the IDENTICAL oracle the at-rest oplog
     scan and the live oplog tail are graded on — so a lost event, a
-    mis-normalized diff, or broken (clusterTime, seq) order diverges."""
+    mis-normalized diff, or broken (clusterTime, seq) order diverges. The
+    server is a FakeMongod (sources/fake_servers.py)."""
     from ape_dts_spark.sources import bson_codec as bcodec
     from ape_dts_spark.sources import oplog_file as ofl
+    from ape_dts_spark.sources.fake_servers import FakeMongod
     from ape_dts_spark.sources.mongo_client import read_change_stream_changes
 
     dump_dir = _ensure_oplog_fixture(spark, sf_dir)
@@ -4658,8 +4175,7 @@ def q_mongo_changestream_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.update(kw)
         events.append(ev)
 
-    for fname in sorted(os.listdir(dump_dir)):
-        blob = open(os.path.join(dump_dir, fname), "rb").read()
+    for blob in _dir_blobs(dump_dir).values():
         for e in bcodec.iter_documents(blob):
             op, ts, o = e.get("op"), e.get("ts"), e.get("o") or {}
             if op == "i":
@@ -4681,7 +4197,7 @@ def q_mongo_changestream_live(spark: SparkSession, sf_dir: str) -> DataFrame:
                         _ev("delete", item["ns"], ts,
                             documentKey={"_id": (item.get("o") or {}).get("_id")})
             # 'n' noops: real change streams never surface them
-    host, port = _serve_mongod({}, change_events=events)
+    host, port = _endpoint(FakeMongod({}, change_events=events))
     changes = read_change_stream_changes(spark, [(host, port)], timeout=30)
     return _oplog_state_projection(ofl.fold_oplog_state(changes))
 
@@ -4698,8 +4214,9 @@ def q_mongo_cs_ddl(spark: SparkSession, sf_dir: str) -> DataFrame:
     the wire client into replayable runCommand rows; the oracle restates
     every (seq, op_time, ddl_type, ns, new-ns doc, command JSON) literally,
     so a mis-copied description field, a lost ignore rule, or a skipped-op
-    leak diverges."""
+    leak diverges. The server is a FakeMongod (sources/fake_servers.py)."""
     from ape_dts_spark.sources import bson_codec as bcodec
+    from ape_dts_spark.sources.fake_servers import FakeMongod
     from ape_dts_spark.sources.mongo_client import read_change_stream_changes
 
     T = bcodec.Timestamp
@@ -4726,7 +4243,7 @@ def q_mongo_cs_ddl(spark: SparkSession, sf_dir: str) -> DataFrame:
         mk(8, "invalidate"),  # must be skipped
         mk(9, "weirdOperation", "items9"),  # must be skipped
     ]
-    host, port = _serve_mongod({}, change_events=events)
+    host, port = _endpoint(FakeMongod({}, change_events=events))
     changes = read_change_stream_changes(spark, [(host, port)], timeout=30)
     return changes.filter(F.col("row_type") == "ddl").select(
         "seq", "op_time", F.col("id").alias("ddl_type"), "schema", "tb",
@@ -4782,11 +4299,12 @@ def q_mongo_snapshot_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     restates every document, its phase, and its in-session ordinal from
     part arithmetic, so a wrong sample limit, a resume filter that loses
     the cross-type boundary, a mis-sorted cursor or a dropped getMore page
-    all diverge."""
+    all diverge. The server is a FakeMongod (sources/fake_servers.py)."""
+    from ape_dts_spark.sources.fake_servers import FakeMongod
     from ape_dts_spark.sources.mongo_client import read_mongo_collections
 
     collections, resume_keys = _ensure_mongo_coll_fixture(spark, sf_dir)
-    host, port = _serve_mongod(collections)
+    host, port = _endpoint(FakeMongod(collections))
     sources = [(host, port, db, coll) for (db, coll) in sorted(collections)]
     sample = read_mongo_collections(
         spark, sources, batch_size=16, sample_rate=20, timeout=30

@@ -1048,6 +1048,14 @@ def _query_payload(schema: str, query: str) -> bytes:
 # ---------------------------------------------------------------------------
 
 
+def gtid_event_id(body: bytes) -> tuple[str, int]:
+    """GTID event body (flags u8 + 16-byte server uuid + i64 gno) ->
+    (uuid text, gno)."""
+    sid = body[1:17].hex()
+    uuid = f"{sid[:8]}-{sid[8:12]}-{sid[12:16]}-{sid[16:20]}-{sid[20:]}"
+    return uuid, struct.unpack_from("<q", body, 17)[0]
+
+
 def parse_binlog_bytes(
     data: bytes, tables: dict, file_name: str = "", start_pos: int = 0
 ) -> list[dict]:
@@ -1107,9 +1115,7 @@ def _parse_binlog_events(
     def handle(type_code, body, log_pos, ts):
         nonlocal gtid
         if type_code == GTID_EVENT:
-            sid = body[1:17].hex()
-            sid = f"{sid[:8]}-{sid[8:12]}-{sid[12:16]}-{sid[16:20]}-{sid[20:]}"
-            gno = struct.unpack_from("<q", body, 17)[0]
+            sid, gno = gtid_event_id(body)
             gtid = f"{sid}:{gno}"
         elif type_code == TABLE_MAP_EVENT:
             table_map.update(_parse_table_map(body))

@@ -42,6 +42,7 @@ from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ape_dts_spark.sources.aof_manifest import encode_resp
 from ape_dts_spark.sources.redis_rdb import ENTRY_SCHEMA
 
 
@@ -95,11 +96,7 @@ class RespSocket:
 
     # -- send ---------------------------------------------------------------
     def send_cmd(self, *args: str | bytes) -> None:
-        out = bytearray(f"*{len(args)}\r\n".encode())
-        for a in args:
-            b = a if isinstance(a, bytes) else str(a).encode()
-            out += b"$" + str(len(b)).encode() + b"\r\n" + b + b"\r\n"
-        self.send_raw(bytes(out))
+        self.send_raw(encode_resp(list(args)))
 
     def send_raw(self, data: bytes) -> None:
         try:

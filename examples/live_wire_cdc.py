@@ -1,7 +1,8 @@
 """Runnable tour of the LIVE wire transports — every replication protocol
 the engine speaks over real sockets, demonstrated end-to-end against
-loopback fake servers (tests/fake_*.py) that serve genuine protocol bytes,
-with every payload decoded by the same at-rest parsers the driver gates:
+loopback fake servers (sources/fake_servers.py) that serve genuine
+protocol bytes, with every payload decoded by the same at-rest parsers the
+gates check:
 
   1. MySQL binlog     sources/mysql_binlog_client.py  (v10 handshake +
                       native-password proof, REGISTER_SLAVE, BINLOG_DUMP,
@@ -21,17 +22,18 @@ Usage: python examples/live_wire_cdc.py
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from ape_dts_spark.session import get_spark  # noqa: E402
 
 
 def mysql_tour(spark):
     from ape_dts_spark.sources import binlog_file as bf
+    from ape_dts_spark.sources.fake_servers import FakeMysqlServer
     from ape_dts_spark.sources.mysql_binlog_client import read_binlog_changes
-    from tests.fake_mysql_server import FakeMysqlServer
 
     users = bf.BinlogTable(
         "db", "users",
@@ -44,7 +46,7 @@ def mysql_tour(spark):
         for i in range(1, 6)
     ]
     blob = bf.encode_binlog_file(txns, tables, "binlog.000001")
-    srv = FakeMysqlServer({"binlog.000001": blob}, max_clients=8)
+    srv = FakeMysqlServer({"binlog.000001": blob})
     srv.start()
     full = read_binlog_changes(
         spark, [("127.0.0.1", srv.port, "binlog.000001")], tables, timeout=10
@@ -62,11 +64,18 @@ def mysql_tour(spark):
 
 def pg_tour(spark):
     from ape_dts_spark.sources import pgoutput_file as pg
+    from ape_dts_spark.sources.fake_servers import FakeWalsender, segment_to_frames
     from ape_dts_spark.sources.pg_replication import read_replication_changes
-    from tests.fake_pg_walsender import FakeWalsender, segment_to_frames
-    from tests.test_pg_replication import TABLES, TXNS
 
-    segment, _ = pg.encode_segment(TXNS, TABLES)
+    users = pg.PgTable(
+        "public", "users", (("id", 20, True), ("name", 25, False)), rel_id=77,
+    )
+    tables = {("public", "users"): users}
+    txns = [
+        [(("public", "users"), "insert", None, {"id": i, "name": f"u{i}"})]
+        for i in range(1, 6)
+    ] + [[(("public", "users"), "delete", {"id": 1, "name": "u1"}, None)]]
+    segment, _ = pg.encode_segment(txns, tables)
     srv = FakeWalsender(frames=segment_to_frames(segment))
     srv.start()
     df = read_replication_changes(spark, [("127.0.0.1", srv.port, "demo_slot")],
@@ -79,15 +88,15 @@ def pg_tour(spark):
 
 def redis_tour(spark):
     from ape_dts_spark.sources import redis_rdb as rdb
+    from ape_dts_spark.sources.fake_servers import FakeMaster
     from ape_dts_spark.sources.redis_psync import tail_with_resume
-    from tests.fake_redis_master import FakeMaster
 
     cmds = [["SET", f"k:{i}", str(i)] for i in range(8)] + [["DEL", "k:0"]]
     stream_len = len(FakeMaster(commands=cmds).stream_bytes())
     srv = FakeMaster(
         rdb_bytes=rdb.encode_rdb([]), commands=cmds, repl_id="r" * 40,
         drop_after_bytes=stream_len // 2, offset_aware=True,
-        keepalive_newlines=0, max_clients=8,
+        keepalive_newlines=0,
     )
     srv.start()
     tailed, _rdb, resumes = tail_with_resume("127.0.0.1", srv.port, timeout=2)
@@ -99,12 +108,12 @@ def redis_tour(spark):
 def mongo_tour(spark):
     from ape_dts_spark.sources import bson_codec as bc
     from ape_dts_spark.sources import oplog_file as ofl
+    from ape_dts_spark.sources.fake_servers import FakeMongod
     from ape_dts_spark.sources.mongo_client import (
         read_change_stream_changes,
         read_live_oplog_changes,
         read_mongo_collections,
     )
-    from tests.fake_mongod import FakeMongod
 
     docs = [{"_id": i, "v": i * i} for i in range(20)]
     oplog = [
@@ -118,7 +127,7 @@ def mongo_tour(spark):
     ]
     srv = FakeMongod(
         {("appdb", "items"): docs, ("local", "oplog.rs"): oplog},
-        users={"app": "pw"}, change_events=cs_events, max_clients=16,
+        users={"app": "pw"}, change_events=cs_events,
     )
     srv.start()
     auth = dict(username="app", password="pw", timeout=10)

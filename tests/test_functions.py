@@ -300,10 +300,6 @@ def test_jaccard_pairs_matches_bruteforce_randomized(spark):
             ).collect()
         }
         want = set()
-        rep = {}  # identical-set collapse: min id represents, expand back
-        for i in sorted(sets):
-            key = frozenset(sets[i])
-            rep.setdefault(key, []).append(i)
         ids = sorted(sets)
         for a, b in itertools.combinations(ids, 2):
             sa, sb = sets[a], sets[b]

@@ -12,6 +12,7 @@ import pytest
 
 from ape_dts_spark.sources import bson_codec as bc
 from ape_dts_spark.sources import oplog_file as ofl
+from ape_dts_spark.sources.fake_servers import FakeMongod, bson_sort_key
 from ape_dts_spark.sources.mongo_client import (
     MongoWireClient,
     build_resume_filter,
@@ -21,7 +22,6 @@ from ape_dts_spark.sources.mongo_client import (
     read_live_oplog_changes,
     read_mongo_collections,
 )
-from tests.fake_mongod import FakeMongod, bson_sort_key
 
 DOCS = [
     {"_id": i, "name": f"doc{i}", "grp": i % 3, "tags": [i, i + 1]}
@@ -453,7 +453,7 @@ def test_change_stream_tail_and_fold(spark):
 def test_change_stream_resume_modes():
     from ape_dts_spark.sources.mongo_client import MongoWireClient
 
-    srv = FakeMongod({}, change_events=CS_EVENTS, max_clients=8)
+    srv = FakeMongod({}, change_events=CS_EVENTS)
     srv.start()
     try:
         c = MongoWireClient("127.0.0.1", srv.port, timeout=5)

@@ -7,12 +7,12 @@ writer, with events decoded by the same gated parser."""
 import pytest
 
 from ape_dts_spark.sources import binlog_file as bf
+from ape_dts_spark.sources.fake_servers import FakeMysqlServer
 from ape_dts_spark.sources.mysql_binlog_client import (
     MysqlBinlogClient,
     native_password_proof,
     read_binlog_changes,
 )
-from tests.fake_mysql_server import FakeMysqlServer
 
 USERS = bf.BinlogTable(
     "db", "users",
@@ -111,6 +111,35 @@ def test_auth_rejected_and_unknown_file():
         client.binlog_dump("binlog.000099")
         with pytest.raises(ValueError, match="Could not find first log"):
             list(client.events())
+    finally:
+        client.close()
+        srv.stop()
+
+
+@pytest.mark.parametrize("gtid", [False, True])
+@pytest.mark.parametrize("blob", [
+    b"not a binlog at all",
+    bf.BINLOG_MAGIC + bytes(19),  # an event header claiming size 0
+], ids=["bad_magic", "zero_size_event"])
+def test_non_binlog_file_answers_err_1236(blob, gtid):
+    """A served file the server cannot split into events gets ERR 1236 on
+    both dump commands, well inside the client's timeout — never a dead
+    session the client has to wait out."""
+    import time
+
+    srv = FakeMysqlServer({FILE: blob})
+    srv.start()
+    client = MysqlBinlogClient("127.0.0.1", srv.port, timeout=5)
+    try:
+        client.connect()
+        t0 = time.monotonic()
+        if gtid:
+            client.binlog_dump_gtid("", FILE)
+        else:
+            client.binlog_dump(FILE)
+        with pytest.raises(ValueError, match="1236"):
+            list(client.events())
+        assert time.monotonic() - t0 < 2
     finally:
         client.close()
         srv.stop()
@@ -251,7 +280,7 @@ def test_gtid_distributed_complementary_pull(spark):
 
     uuid = "3e11fa47-71ca-11e1-9e33-c80aa9429562"
     blob = bf.encode_binlog_file(TXNS, TABLES, FILE)
-    srv = FakeMysqlServer({FILE: blob}, max_clients=8)
+    srv = FakeMysqlServer({FILE: blob})
     srv.start()
     try:
         df = read_binlog_changes(

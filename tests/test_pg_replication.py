@@ -7,11 +7,11 @@ payloads decoded by the same at-rest parser the pgoutput gate proves."""
 import pytest
 
 from ape_dts_spark.sources import pgoutput_file as pg
+from ape_dts_spark.sources.fake_servers import FakeWalsender, segment_to_frames
 from ape_dts_spark.sources.pg_replication import (
     PgReplicationClient,
     read_replication_changes,
 )
-from tests.fake_pg_walsender import FakeWalsender, segment_to_frames
 
 USERS = pg.PgTable(
     "public", "users",

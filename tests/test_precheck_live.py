@@ -24,7 +24,7 @@ def _free_port() -> int:
 
 
 def test_mysql_connection_ok_and_auth_reject():
-    from tests.fake_mysql_server import FakeMysqlServer
+    from ape_dts_spark.sources.fake_servers import FakeMysqlServer
 
     srv = FakeMysqlServer({}, password="pw")
     srv.start()
@@ -38,7 +38,7 @@ def test_mysql_connection_ok_and_auth_reject():
 
 
 def test_pg_connection_ok():
-    from tests.fake_pg_walsender import FakeWalsender
+    from ape_dts_spark.sources.fake_servers import FakeWalsender
 
     srv = FakeWalsender(frames=[])
     srv.start()
@@ -50,9 +50,9 @@ def test_pg_connection_ok():
 
 
 def test_redis_connection_ok_and_auth_reject():
-    from tests.fake_redis_master import FakeMaster
+    from ape_dts_spark.sources.fake_servers import FakeMaster
 
-    srv = FakeMaster(password="sekrit", max_clients=4)
+    srv = FakeMaster(password="sekrit")
     srv.start()
     try:
         r = check_redis_connection("127.0.0.1", srv.port, password="sekrit")
@@ -64,9 +64,9 @@ def test_redis_connection_ok_and_auth_reject():
 
 
 def test_mongo_connection_ok_and_scram():
-    from tests.fake_mongod import FakeMongod
+    from ape_dts_spark.sources.fake_servers import FakeMongod
 
-    srv = FakeMongod({}, users={"app": "pw"}, max_clients=4)
+    srv = FakeMongod({}, users={"app": "pw"})
     srv.start()
     try:
         r = check_mongo_connection("127.0.0.1", srv.port, username="app",
@@ -94,9 +94,9 @@ def test_refused_endpoints_land_as_failures_not_raises():
 
 
 def test_run_connection_prechecks_mixed():
-    from tests.fake_redis_master import FakeMaster
+    from ape_dts_spark.sources.fake_servers import FakeMaster
 
-    srv = FakeMaster(max_clients=4)
+    srv = FakeMaster()
     srv.start()
     dead = _free_port()
     try:
@@ -111,10 +111,10 @@ def test_run_connection_prechecks_mixed():
 
 def test_redis_psync_permission_probe():
     from ape_dts_spark.precheck import check_redis_psync_permission
-    from tests.fake_redis_master import FakeMaster
+    from ape_dts_spark.sources.fake_servers import FakeMaster
 
     srv = FakeMaster(rdb_bytes=b"", repl_id="r" * 40, master_offset=77,
-                     keepalive_newlines=0, max_clients=4)
+                     keepalive_newlines=0)
     srv.start()
     try:
         r = check_redis_psync_permission("127.0.0.1", srv.port)

@@ -8,8 +8,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from ape_dts_spark.sources import redis_rdb as rdb
+from ape_dts_spark.sources.fake_servers import FakeMaster
 from ape_dts_spark.sources.redis_psync import PsyncClient, read_psync_snapshots
-from tests.fake_redis_master import FakeMaster
 
 
 def e(key, etype, member=None, value=None, ord_=0, db=0, exp=None):
@@ -104,6 +104,24 @@ def test_partial_resync_continue():
         assert client.repl_offset == 500
         tailed = list(client.tail(max_commands=4))
         assert [argv[0] for _, argv, _ in tailed] == ["SET", "HSET", "PING", "DEL"]
+    finally:
+        client.close()
+        master.stop()
+
+
+@pytest.mark.parametrize("past_end", [True, False])
+def test_resume_offset_outside_stream_is_refused(past_end):
+    """An offset-aware master answers -ERR to a resume offset before its
+    history or past its stream end, instead of serving the wrong bytes."""
+    master = FakeMaster(commands=STREAM, repl_id="r" * 40, offset_aware=True)
+    master.start()
+    stream_len = len(master.stream_bytes())
+    offset = (master.master_offset + stream_len + 10 if past_end
+              else master.master_offset - 1)
+    client = PsyncClient("127.0.0.1", master.port, timeout=3)
+    try:
+        with pytest.raises(ValueError, match="cannot continue"):
+            client.start_psync("r" * 40, offset)
     finally:
         client.close()
         master.stop()
@@ -249,7 +267,7 @@ def test_tail_with_resume_gives_up_without_progress():
     master = FakeMaster(
         rdb_bytes=rdb.encode_rdb([]), commands=STREAM, repl_id="r" * 40,
         drop_after_bytes=0, offset_aware=True, drop_resumes=True,
-        keepalive_newlines=0, max_clients=8,
+        keepalive_newlines=0,
     )
     master.start()
     try:

@@ -380,8 +380,8 @@ def test_mysql_binlog_client_wire_fuzz():
 
 def test_pg_replication_client_wire_fuzz():
     from ape_dts_spark.sources import pgoutput_file as pg
+    from ape_dts_spark.sources.fake_servers import segment_to_frames
     from ape_dts_spark.sources.pg_replication import PgReplicationClient
-    from tests.fake_pg_walsender import segment_to_frames
     from tests.test_pg_replication import TABLES, TXNS
 
     segment, _ = pg.encode_segment(TXNS, TABLES)

@@ -88,7 +88,7 @@ def main() -> int:
     for q in QUERIES:
         ts = {}
         samples_all: dict[int, list] = {}
-        loads: dict[int, list] = {}
+        loads: dict[int, float] = {}
         for f in (1, FACTOR):
             # r18: min-of-3 (was 2) + per-sample times and loadavg recorded
             # in-artifact — the shared host shows multi-minute external
