@@ -27,6 +27,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ape_dts_spark.model.changes import ROW_TYPE_DELETE
 
@@ -85,12 +86,18 @@ class ParquetTable:
             json.dump(meta, f)
         os.replace(tmp, self._meta_path)
 
+    def _empty(self) -> DataFrame:
+        """The empty table state as an empty ``LocalRelation``: no Python
+        worker runs for it (``createDataFrame([])`` would be a PythonRDD
+        whose every action starts one worker task per partition), and
+        Catalyst sees it as empty, so ``PropagateEmptyRelation`` prunes
+        joins against it."""
+        return self.spark.createDataFrame(
+            to_arrow_schema(self.payload_schema).empty_table(), self.payload_schema
+        )
+
     def current(self) -> DataFrame:
-        meta = self._read_meta()
-        if meta["version"] < 0:
-            return self.spark.createDataFrame([], self.payload_schema)
-        vdir = os.path.join(self.path, f"v{meta['version']}")
-        return self.spark.read.schema(self.payload_schema).parquet(vdir)
+        return self.at_version(self._read_meta()["version"])
 
     def last_applied(self, stream_id: str) -> int:
         """Highest foreachBatch epoch FULLY committed for `stream_id`
@@ -222,8 +229,7 @@ class ParquetTable:
         via at_version, exactly like a transactional table format)."""
         meta = self._read_meta()
         version = meta["version"] + 1
-        empty = self.spark.createDataFrame([], self.payload_schema)
-        empty.write.mode("overwrite").parquet(os.path.join(self.path, f"v{version}"))
+        self._empty().write.mode("overwrite").parquet(os.path.join(self.path, f"v{version}"))
         meta["version"] = version
         meta["committed_at"] = time.time()
         meta.setdefault("ddl_log", []).append({"ddl": ddl_text, "op": "truncate"})
@@ -265,8 +271,7 @@ class ParquetTable:
         self.payload_schema = T.StructType(list(fields))
         meta.pop("dropped", None)
         version = meta["version"] + 1
-        empty = self.spark.createDataFrame([], self.payload_schema)
-        empty.write.mode("overwrite").parquet(os.path.join(self.path, f"v{version}"))
+        self._empty().write.mode("overwrite").parquet(os.path.join(self.path, f"v{version}"))
         meta["version"] = version
         meta["committed_at"] = time.time()
         meta.setdefault("ddl_log", []).append(
@@ -307,56 +312,31 @@ class ParquetTable:
         if batch_id is not None and meta["applied_batches"].get(stream_id, -1) >= batch_id:
             return
 
-        # Materialize both write-set inputs ONCE: the apply plan references
-        # `compacted` from two branches (changed-keys anti-join + upsert
-        # images) and `spilled` from three (keyed deletes, whole-row deletes,
-        # inserts, two of them behind broadcast subqueries), and in a
-        # foreachBatch caller every reference re-executes the whole
-        # micro-batch subtree — measured ~3x the batch cost per apply.
-        from pyspark.storagelevel import StorageLevel
+        # No materializing preamble: the caller caches the batch both inputs
+        # derive from (CdcPipeline.apply_batch persists it), so each branch
+        # re-reads cached rows, not the source; a caller passing an uncached
+        # plan pays one recompute per branch. An empty state (first apply,
+        # after TRUNCATE/CREATE) is an empty LocalRelation, so Catalyst's
+        # PropagateEmptyRelation prunes the anti-join and the second
+        # reference to `compacted` with it. AQE's post-shuffle coalescing
+        # sizes the upsert files; the kept branch keeps the table's layout.
+        # Invariant (ADVICE r17): a ParquetTable holds ONE (schema, tb) —
+        # every caller routes per table — so selecting key_cols alone cannot
+        # put duplicate key rows on the build side (and the anti-join would
+        # tolerate them anyway; no distinct, which would add an exchange).
+        changed_keys = compacted.select(*[F.col(k) for k in key_cols])
+        kept = self.at_version(meta["version"]).join(changed_keys, key_cols, "left_anti")
+        upserts = compacted.filter(F.col("op") == "upsert").select(
+            *self._image_cols(compacted, "after")
+        )
+        state = kept.unionByName(upserts)
+        if not spilled.isEmpty():
+            # one emptiness probe: most CDC batches spill nothing, and an
+            # empty spill set would still plan two broadcast anti-joins
+            state = self._replay_spill(state, spilled, key_cols)
 
-        compacted = compacted.persist(StorageLevel.MEMORY_AND_DISK)
-        spilled = spilled.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            n_comp = compacted.count()
-            n_spill = spilled.count()
-
-            state = self.current()
-            # no distinct: compacted is one row per (schema, tb, key) by
-            # compact_changes construction, and anti-join semantics are
-            # unaffected by duplicate build rows — the distinct only added an
-            # exchange + two hash aggregates to every apply.
-            # Invariant (ADVICE r17): a ParquetTable holds ONE (schema, tb) —
-            # every caller routes per table — so selecting key_cols alone
-            # cannot put duplicate key rows on the build side; a multi-table
-            # batch would still be CORRECT here (anti-join tolerates dup
-            # build rows) but would weaken the n_comp file-sizing estimate
-            changed_keys = compacted.select(*[F.col(k) for k in key_cols])
-            kept = state.join(changed_keys, key_cols, "left_anti")
-            # right-size the batch branch of the write: the upsert images
-            # inherit the compaction shuffle's width (session cores), so a
-            # small CDC batch otherwise adds cores-many tiny files per
-            # version and every subsequent read/diff pays the file opens.
-            # The batch's own row count (already materialized) sizes the
-            # narrow coalesce; the kept branch keeps the table's layout.
-            n_files = max(1, math.ceil(n_comp / 1_000_000))
-            upserts = compacted.filter(F.col("op") == "upsert").select(
-                *self._image_cols(compacted, "after")
-            ).coalesce(n_files)
-            state = kept.unionByName(upserts)
-            if n_spill:
-                # empty spill set -> the two anti-joins are no-ops; skip the
-                # broadcast exchanges entirely (most CDC batches spill nothing)
-                state = self._replay_spill(
-                    state, spilled, key_cols, max(1, math.ceil(n_spill / 1_000_000))
-                )
-
-            version = meta["version"] + 1
-            vdir = os.path.join(self.path, f"v{version}")
-            state.write.mode("overwrite").parquet(vdir)
-        finally:
-            compacted.unpersist()
-            spilled.unpersist()
+        version = meta["version"] + 1
+        state.write.mode("overwrite").parquet(os.path.join(self.path, f"v{version}"))
         meta["version"] = version
         meta["committed_at"] = time.time()
         if batch_id is not None:
@@ -378,9 +358,7 @@ class ParquetTable:
             for f in self.payload_schema.fields
         ]
 
-    def _replay_spill(
-        self, state: DataFrame, spilled: DataFrame, key_cols: list[str], n_files: int = 1
-    ) -> DataFrame:
+    def _replay_spill(self, state: DataFrame, spilled: DataFrame, key_cols: list[str]) -> DataFrame:
         """Serial-equivalent replay of the unmergeable spill rows, set-based.
 
         The reference applies spill rows one-by-one through a single sinker
@@ -420,9 +398,7 @@ class ParquetTable:
 
         inserts = spilled.filter(
             (F.col("row_type") != ROW_TYPE_DELETE) & F.col("after").isNotNull()
-        ).select(*self._image_cols(spilled, "after"), F.col("seq").alias(seq_c)).coalesce(
-            n_files  # same batch-sized file sizing as the upsert branch
-        )
+        ).select(*self._image_cols(spilled, "after"), F.col("seq").alias(seq_c))
 
         rows = state.withColumn(seq_c, F.lit(-1).cast("long")).unionByName(
             inserts.select(*payload_cols, seq_c)
@@ -516,7 +492,7 @@ class ParquetTable:
 
     def at_version(self, version: int) -> DataFrame:
         if version < 0:
-            return self.spark.createDataFrame([], self.payload_schema)
+            return self._empty()
         return self.spark.read.schema(self.payload_schema).parquet(
             os.path.join(self.path, f"v{version}")
         )

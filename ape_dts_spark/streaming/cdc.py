@@ -415,6 +415,40 @@ class CdcPipeline:
                 if hasattr(self.limiter, "admit_batch")
                 else self.limiter.acquire(n_events)
             )
+        t_apply = time.perf_counter()
+        # an empty micro-batch (e.g. every event filtered out) records its
+        # epoch only: merge-applying it would commit a full copy of the table
+        if n_events:
+            self._apply_segments(batch, batch_id)
+        self.target.record_batch(self.stream_id, batch_id)
+        apply_s = time.perf_counter() - t_apply
+        check = self._inline_check(batch) if self.inline_check else {}
+        max_ts = _stats
+        batch.unpersist()
+        lag = (time.time() - max_ts["t"].timestamp()) if max_ts["t"] is not None else None
+        if self.monitor is not None:
+            self.monitor.add("extractor", "record_count", n_events, count=1)
+            self.monitor.add("sinker", "record_count", n_events, count=1)
+            self.monitor.add("sinker", "synced_record_count", n_events)
+            self.monitor.add("sinker", "rt_per_batch_us", apply_s * 1e6, count=1)
+        self.metrics.append(
+            {
+                "batch_id": batch_id,
+                "n_events": n_events,
+                "max_seq": max_ts["m"],
+                "lag_sec": lag,
+                "throttle_sec": throttle_sec,
+                "apply_ms": apply_s * 1e3,
+                "at": time.time(),
+                **check,
+            }
+        )
+        if self.position_log is not None and self.position_of is not None:
+            self.position_log.checkpoint(self.position_of(self.metrics[-1]))
+
+    def _apply_segments(self, batch: DataFrame, batch_id: int) -> None:
+        """Compact and merge-apply the batch's DML in the seq-ordered
+        segments its DDL barriers cut, applying each DDL in between."""
         ddls = (
             batch.filter(F.col("row_type") == "ddl").orderBy("seq").collect()
             if "ddl" in batch.columns
@@ -450,28 +484,6 @@ class CdcPipeline:
             if hi is not None:
                 self.apply_ddl(ddls[i])
             lo = hi
-        self.target.record_batch(self.stream_id, batch_id)
-        check = self._inline_check(batch) if self.inline_check else {}
-        max_ts = _stats
-        batch.unpersist()
-        lag = (time.time() - max_ts["t"].timestamp()) if max_ts["t"] is not None else None
-        if self.monitor is not None:
-            self.monitor.add("extractor", "record_count", n_events, count=1)
-            self.monitor.add("sinker", "record_count", n_events, count=1)
-            self.monitor.add("sinker", "synced_record_count", n_events)
-        self.metrics.append(
-            {
-                "batch_id": batch_id,
-                "n_events": n_events,
-                "max_seq": max_ts["m"],
-                "lag_sec": lag,
-                "throttle_sec": throttle_sec,
-                "at": time.time(),
-                **check,
-            }
-        )
-        if self.position_log is not None and self.position_of is not None:
-            self.position_log.checkpoint(self.position_of(self.metrics[-1]))
 
     def _inline_check(self, batch: DataFrame) -> dict:
         """CDC-inline check (the reference's checker-in-CDC mode,

@@ -101,7 +101,9 @@ def run_task(spark: SparkSession, cfg: TaskConfig, registry: dict[str, list[str]
                 out = os.path.join(dst_dir, f"{routed}.{sink_type}")
                 df.write.mode("overwrite").format(sink_type).save(out)
                 result.outputs[routed] = out
-                result.tables[routed] = spark.read.format(sink_type).load(out)
+                # read back with the written schema: inferring it from the
+                # file footers would cost a Spark job per table
+                result.tables[routed] = spark.read.format(sink_type).schema(df.schema).load(out)
             elif sink_type == "sql_file":
                 # insert-only rendering: snapshot rows become insert events
                 payload = F.struct(*[F.col(c) for c in df.columns])

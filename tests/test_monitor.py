@@ -2,6 +2,8 @@
 time-window aggregations with expiry, no-window accumulators, monitor.log
 formatting, and the CDC pipeline ride-along."""
 
+import pytest
+
 from ape_dts_spark.monitor import Monitor, NoWindowCounter, TimeWindowCounter
 
 
@@ -78,6 +80,14 @@ def test_cdc_pipeline_monitor_ride_along(spark, tmp_path):
     rendered = "\n".join(mon.log_lines())
     assert "extractor | record_count" in rendered and "sum=2" in rendered
     assert "sinker | synced_record_count | latest=2" in rendered
+    # the apply wall time (compact -> merge_apply -> commit) is reported
+    # both as the monitor counter and in the batch metrics
+    apply_ms = pipe.metrics[-1]["apply_ms"]
+    assert apply_ms > 0
+    (rt_line,) = [ln for ln in mon.log_lines() if ln.startswith("sinker | rt_per_batch_us |")]
+    aggs = dict(kv.split("=") for kv in rt_line.split(" | ")[2:])
+    assert set(aggs) == {"avg", "max"}
+    assert float(aggs["max"]) == pytest.approx(apply_ms * 1e3, rel=1e-5)
 
 
 def test_prometheus_exposition():

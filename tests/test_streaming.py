@@ -731,3 +731,96 @@ def test_multi_table_limiter_and_meta_center(spark, dirs, tmp_path):
                              table="users")], os.path.join(src, "b2.jsonl"))
     pipe.run(read_json_change_stream(spark, src, PAYLOAD), ckpt)
     assert c.slept and 9 in state_dict(users)
+
+
+def test_empty_state_is_a_local_relation(spark, tmp_path, spark_jobs):
+    """The empty table state runs no Python: its optimized plan holds no
+    LogicalRDD (a PythonRDD scan), an action on it starts no Spark job, and
+    an anti-join against it is pruned to an empty relation."""
+    table = ParquetTable(spark, str(tmp_path / "t"), PAYLOAD)
+    empty = table.current()
+    assert empty.schema == PAYLOAD
+    plan = empty._jdf.queryExecution().optimizedPlan().toString()
+    assert "LogicalRDD" not in plan and "LocalRelation" in plan
+    with spark_jobs() as jobs:
+        assert empty.collect() == []
+    assert jobs.n == 0
+    pruned = empty.join(spark.range(3), ["id"], "left_anti")._jdf.queryExecution().optimizedPlan().toString()
+    assert pruned.startswith("LocalRelation <empty>")
+
+
+@pytest.mark.parametrize("spill", [False, True], ids=["no_spill", "spill"])
+def test_merge_apply_runs_no_count(spark, dirs, monkeypatch, spill):
+    """merge_apply sizes nothing by row count: no DataFrame.count() runs in
+    it, with or without spilled rows to replay."""
+    src, target_dir, _ = dirs
+    table = ParquetTable(spark, target_dir, PAYLOAD)
+    write_debezium_jsonl(BATCH_1, os.path.join(src, "b1.jsonl"))
+    batch = parse_debezium(spark.read.text(os.path.join(src, "b1.jsonl")), PAYLOAD)
+    if spill:
+        table.merge_apply(*compact_changes(batch, ["id"]), ["id"])
+        write_debezium_jsonl(BATCH_2, os.path.join(src, "b2.jsonl"))
+        batch = parse_debezium(spark.read.text(os.path.join(src, "b2.jsonl")), PAYLOAD)
+    compacted, spilled = compact_changes(batch, ["id"])
+
+    def no_count(self):
+        raise AssertionError("DataFrame.count() called in merge_apply")
+
+    with monkeypatch.context() as m:
+        # the concrete (classic) DataFrame class overrides count()
+        m.setattr(type(compacted), "count", no_count)
+        table.merge_apply(compacted, spilled, ["id"])
+    if spill:
+        assert state_dict(table) == {1: ("a2", 12), 4: ("c", 30), None: ("ghost", 0)}
+    else:
+        assert state_dict(table) == {1: ("a", 11), 3: ("c", 30)}
+
+
+def test_empty_micro_batch_records_epoch_only(spark, dirs):
+    """A micro-batch whose every event is filtered out commits no version
+    (no rewrite of the table) but still advances the applied epoch."""
+    src, target_dir, _ = dirs
+    write_debezium_jsonl(BATCH_1, os.path.join(src, "b1.jsonl"))
+    table = ParquetTable(spark, target_dir, PAYLOAD)
+    CdcPipeline(spark, table, key_cols=["id"]).apply_batch(
+        parse_debezium(spark.read.text(src), PAYLOAD), batch_id=0
+    )
+    v0 = table.version()
+    # every event is an echo of the ignored node -> empty after _prepare
+    write_debezium_jsonl(
+        [ev("u", before={"id": 1, "name": "a", "bal": 11}, after={"id": 1, "name": "a", "bal": 99},
+            seq=9, origin="peer")],
+        os.path.join(src, "b2.jsonl"),
+    )
+    pipe = CdcPipeline(spark, table, key_cols=["id"], ignore_origin_nodes=("peer",))
+    pipe.apply_batch(parse_debezium(spark.read.text(os.path.join(src, "b2.jsonl")), PAYLOAD), batch_id=1)
+    assert table.version() == v0
+    assert table.last_applied("cdc") == 1
+    assert pipe.metrics[-1]["n_events"] == 0
+    assert state_dict(table) == {1: ("a", 11), 3: ("c", 30)}
+
+
+def test_bulk_apply_batch_job_count(spark, dirs, spark_jobs):
+    """One bulk-shaped micro-batch (one DML segment, no spill) into a
+    non-empty table: the apply starts fewer Spark jobs than the 12 the
+    materializing count() preamble cost."""
+    src, target_dir, _ = dirs
+    table = ParquetTable(spark, target_dir, PAYLOAD)
+    initial = [ev("c", after={"id": i, "name": f"n{i}", "bal": i}, seq=i) for i in range(1, 201)]
+    write_debezium_jsonl(initial, os.path.join(src, "b0.jsonl"))
+    table.merge_apply(*compact_changes(parse_debezium(spark.read.text(src), PAYLOAD), ["id"]), ["id"])
+    updates = [
+        ev("u", before={"id": i % 50 + 1, "name": "x", "bal": 0},
+           after={"id": i % 50 + 1, "name": "x", "bal": i}, seq=1000 + i)
+        for i in range(200)
+    ]
+    write_debezium_jsonl(updates, os.path.join(src, "b1.jsonl"))
+    batch = parse_debezium(spark.read.text(os.path.join(src, "b1.jsonl")), PAYLOAD).select(
+        "schema", "tb", "row_type", "before", "after", "seq", "ts"
+    )
+    pipe = CdcPipeline(spark, table, key_cols=["id"])
+    with spark_jobs() as jobs:
+        pipe.apply_batch(batch, batch_id=0)
+    assert 0 < jobs.n < 12
+    st = state_dict(table)
+    assert len(st) == 200 and st[1] == ("x", 150) and st[51] == ("n51", 51)

@@ -382,3 +382,42 @@ url={meta_path}
     got = PositionLog(str(tmp_path / "poslog" / "position.log")).latest()
     assert got is not None and got.offset == 3
     assert MetaCenter(meta_path).schema_at("d", "users")[-1] == ("note", "VARCHAR(8)")
+
+
+def test_snapshot_read_back_uses_written_schema(spark, tmp_path, spark_jobs, monkeypatch):
+    """The snapshot read-back of a parquet sink carries the written
+    DataFrame's schema and rows, and building it starts no Spark job (no
+    schema inference over the file footers)."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    load = DataFrameReader.load
+    load_jobs = []
+
+    def counted_load(self, *args, **kwargs):
+        with spark_jobs() as jobs:
+            df = load(self, *args, **kwargs)
+        load_jobs.append(jobs.n)
+        return df
+
+    monkeypatch.setattr(DataFrameReader, "load", counted_load)
+    cfg = TaskConfig.from_string(
+        f"""
+[extractor]
+extract_type=snapshot
+url={SF}
+db=default
+tables=nation
+
+[sinker]
+sink_type=parquet
+url={tmp_path}/out
+"""
+    )
+    res = run_task(spark, cfg)
+    monkeypatch.undo()
+    assert load_jobs == [0]
+    src = spark.read.parquet(f"{SF}/nation.parquet")
+    written = spark.read.parquet(res.outputs["nation"])
+    assert res.tables["nation"].schema == written.schema == src.schema
+    assert res.tables["nation"].count() == src.count()
+    assert sorted(res.tables["nation"].collect()) == sorted(src.collect())
