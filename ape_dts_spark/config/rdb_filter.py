@@ -27,7 +27,6 @@ import fnmatch
 import json
 import re
 from dataclasses import dataclass, field
-from functools import lru_cache
 
 
 def _pattern_to_regex(pattern: str) -> re.Pattern:
@@ -188,11 +187,6 @@ class RdbFilter:
 
     def ignored_cols(self, schema: str, tb: str) -> list[str]:
         return self._ignore_cols.get((schema, tb), [])
-
-
-@lru_cache(maxsize=None)
-def _dotted_splitter() -> re.Pattern:
-    return re.compile(r"\.")
 
 
 def _split_dotted(pattern: str) -> list[str]:

@@ -28,12 +28,6 @@ class SectionConfig:
         v = self.values.get(key)
         return int(v) if v not in (None, "") else default
 
-    def get_bool(self, key: str, default: bool = False) -> bool:
-        v = self.values.get(key)
-        if v is None:
-            return default
-        return v.strip().lower() in ("true", "1", "yes")
-
 
 @dataclass
 class TaskConfig:

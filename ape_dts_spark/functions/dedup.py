@@ -704,24 +704,6 @@ def _token_num() -> str:
     return portable_hash_expr("token")
 
 
-def minhash_signatures(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:
-    """Per-doc MinHash signature: columns m_0..m_{N_HASHES-1}.
-
-    One aggregation over the exploded (doc, token) pairs; the mins fold
-    map-side, so shuffle volume is |docs| x N_HASHES longs regardless of
-    corpus size. Low-threshold bandings consume only the first 16 columns;
-    computing the full width unconditionally keeps one signature format for
-    every threshold (and the incremental index reusable across thresholds)
-    at the cost of a few extra codegen'd multiply-mods per token.
-    """
-    tok = doc_tokens(df, id_col, text_col).withColumn("tn", F.expr(_token_num()))
-    aggs = [
-        F.min(F.expr(f"(CAST({MINHASH_A[i]} AS BIGINT) * tn + {MINHASH_B[i]}) % {PORTABLE_HASH_P}")).alias(f"m_{i}")
-        for i in range(N_HASHES)
-    ]
-    return tok.groupBy(id_col).agg(*aggs)
-
-
 def _band_hash(i: int, rows_per_band: int = ROWS_PER_BAND) -> str:
     """Combine one band's minhashes into a single bucket key. Each fold step
     reduces mod 2^31-1 so the accumulator never exceeds ~2^36 (m values are

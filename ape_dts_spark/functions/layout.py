@@ -60,34 +60,6 @@ def with_morton_key(
     return df.withColumn(out, F.expr(morton_key_sql(cols, bits)).cast("long"))
 
 
-def with_rank_buckets(
-    df: DataFrame, col: str, bits: int = 8, out: str | None = None,
-    relative_error: float = 0.001,
-) -> DataFrame:
-    """Quantile-bucket a numeric column into [0, 2^bits) so it can feed the
-    Morton key regardless of distribution or range. Real filter columns are
-    skewed (ids cluster, timestamps trend); uniform binning would put most
-    rows in few buckets and destroy the curve's locality. Boundaries come
-    from one ``approxQuantile`` pass (Greenwald-Khanna, driver gets 2^bits
-    scalars — tiny); the bucket id is ``cardinality(filter(boundaries,
-    b -> b <= x))`` over the broadcast literal array — a vectorized
-    higher-order function, pure JVM, no join and no extra shuffle. The
-    filter is linear in 2^bits per row, so the default stays at 8 (256
-    comparisons); layout keys rarely benefit from finer than 10. NULL
-    values get a NULL bucket — filter them to a dedicated file instead of
-    feeding them to the curve."""
-    n_buckets = 1 << bits
-    bounds = df.stat.approxQuantile(
-        col, [i / n_buckets for i in range(1, n_buckets)], relative_error
-    )
-    lits = ", ".join(f"CAST({b!r} AS DOUBLE)" for b in bounds)
-    expr = (
-        f"CAST(cardinality(filter(array({lits}), b -> b <= CAST({col} AS DOUBLE)))"
-        f" AS BIGINT)"
-    )
-    return df.withColumn(out or f"{col}_bucket", F.expr(expr))
-
-
 def zorder_layout(
     df: DataFrame, cols: list[str], num_files: int = 8, bits: int = 16
 ) -> DataFrame:

@@ -693,20 +693,6 @@ def phash_index(hashes: DataFrame, n_bands: int = 4) -> DataFrame:
     return idx
 
 
-def phash_index_append(index: DataFrame, new_hashes: DataFrame, n_bands: int = 4) -> DataFrame:
-    """Roll the band index forward with an admitted batch: a pure union —
-    the result equals phash_index over the concatenated corpus (banding is
-    row-local, so append is trivially associative). Schema-validated
-    against the index's stored band width."""
-    width = 64 // n_bands
-    if f"bh{width}" not in index.columns:
-        raise ValueError(
-            f"stored phash index has columns {index.columns} but n_bands={n_bands} "
-            f"needs bh{width} — band width is part of the index format"
-        )
-    return index.unionByName(_phash_band_rows(new_hashes, n_bands))
-
-
 def phash_incremental_pairs(
     index: DataFrame,
     new_hashes: DataFrame,
@@ -749,56 +735,6 @@ def phash_incremental_pairs(
         .filter(F.col("hamming") <= max_hamming)
         .groupBy("id_a", "id_b")  # dedup pairs matching in several bands
         .agg(F.first("hamming").alias("hamming"))
-    )
-
-
-def audio_fp_index(fps: DataFrame) -> DataFrame:
-    """Persistent constellation-hash index for INCREMENTAL audio dedup: the
-    fingerprint relation ``(id, t, fp)`` itself, persisted — fingerprinting
-    is row-local so the index is just the landed relation (parquet at
-    scale), and append is a union. The audio analogue of phash_index."""
-    from pyspark import StorageLevel
-
-    idx = fps.select("id", "t", "fp").persist(StorageLevel.MEMORY_AND_DISK)
-    idx.count()
-    return idx
-
-
-def audio_incremental_pairs(
-    index: DataFrame, new_fps: DataFrame, min_matches: int = 10
-) -> DataFrame:
-    """Incremental audio near-dup pairs: audio_dup_pairs over the
-    concatenated corpus restricted to pairs touching the new batch — only
-    new-batch fingerprints probe the (index UNION new) side, offset-vote
-    semantics identical (group by the time shift, count, threshold). Cost
-    scales with |new batch| + true-duplicate mass, never corpus size.
-    Batch ids must be disjoint from indexed ids (the caller's ingest
-    contract, as for phash_index_append)."""
-    new_side = new_fps.select("id", "t", "fp")
-    all_side = index.select("id", "t", "fp").withColumn(
-        "_new", F.lit(False)
-    ).unionByName(new_side.withColumn("_new", F.lit(True)))
-    a = new_side.select(F.col("id").alias("id_n"), F.col("t").alias("t_n"), "fp")
-    b = all_side.select(
-        F.col("id").alias("id_o"), F.col("t").alias("t_o"), "fp", "_new"
-    )
-    return (
-        a.join(b, "fp")
-        # each unordered pair must contribute each fp match exactly ONCE,
-        # as in the full-corpus run: new-vs-old matches surface only from
-        # the new probe side; new-vs-new matches only lesser-probes-greater
-        .filter((~F.col("_new")) | (F.col("id_n") < F.col("id_o")))
-        .filter(F.col("id_n") != F.col("id_o"))
-        .select(
-            F.least("id_n", "id_o").alias("id_a"),
-            F.greatest("id_n", "id_o").alias("id_b"),
-            F.when(F.col("id_n") < F.col("id_o"), F.col("t_n") - F.col("t_o"))
-            .otherwise(F.col("t_o") - F.col("t_n"))
-            .alias("dt"),
-        )
-        .groupBy("id_a", "id_b", "dt")
-        .agg(F.count(F.lit(1)).alias("n_matches"))
-        .filter(F.col("n_matches") >= min_matches)
     )
 
 
@@ -907,8 +843,7 @@ def video_dup_pairs(
 def video_fp_index(fps: DataFrame, n_bands: int = 4) -> DataFrame:
     """Persistent per-frame pHash band index for INCREMENTAL video dedup:
     the exploded band relation ``(id, t, phash, band, bh{width})``,
-    persisted — the video member of the incremental-index triad next to
-    phash_index (images) and audio_fp_index (constellations). Band width is
+    persisted — the video twin of phash_index (images). Band width is
     part of the stored FORMAT (the bh column name), schema-validated by the
     incremental queries."""
     from pyspark import StorageLevel
@@ -918,21 +853,6 @@ def video_fp_index(fps: DataFrame, n_bands: int = 4) -> DataFrame:
     )
     idx.count()
     return idx
-
-
-def video_fp_index_append(
-    index: DataFrame, new_fps: DataFrame, n_bands: int = 4
-) -> DataFrame:
-    """Roll the video band index forward with an admitted batch: a pure
-    union (banding is row-local) — equals video_fp_index over the
-    concatenated corpus. Schema-validated against the stored band width."""
-    width = 64 // n_bands
-    if f"bh{width}" not in index.columns:
-        raise ValueError(
-            f"stored video index has columns {index.columns} but n_bands={n_bands} "
-            f"needs bh{width} — band width is part of the index format"
-        )
-    return index.unionByName(_phash_band_rows(new_fps, n_bands, carry=("id", "t")))
 
 
 def video_incremental_pairs(
@@ -970,9 +890,9 @@ def video_incremental_pairs(
     )
     frame_matches = (
         a.join(b, ["band", f"bh{width}"])
-        # each unordered frame match exactly once (the audio_incremental
-        # argument): new-vs-old only from the new probe side, new-vs-new
-        # only lesser-probes-greater
+        # each unordered frame match exactly once, as in the full run:
+        # new-vs-old only from the new probe side, new-vs-new only
+        # lesser-probes-greater
         .filter((~F.col("_new")) | (F.col("id_n") < F.col("id_o")))
         .filter(F.col("id_n") != F.col("id_o"))
         .filter(

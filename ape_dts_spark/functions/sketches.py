@@ -156,17 +156,6 @@ def cms_table(
     )
 
 
-def cms_table_sql(table: str, col: str, depth: int = CMS_DEPTH, width: int = CMS_WIDTH) -> str:
-    branches = "\nUNION ALL\n".join(
-        f"SELECT {r} AS sketch_row, {_cms_exprs_sql(col, r, width)} AS idx FROM {table}"
-        for r in range(depth)
-    )
-    return f"""
-WITH cells AS ({branches})
-SELECT sketch_row, idx, CAST(COUNT(*) AS BIGINT) AS cnt
-FROM cells GROUP BY 1, 2"""
-
-
 def cms_heavy_hitters(
     df: DataFrame, col: str, threshold: int,
     depth: int = CMS_DEPTH, width: int = CMS_WIDTH,

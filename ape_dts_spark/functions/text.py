@@ -148,16 +148,6 @@ def portable_hash_sql(s: str) -> str:
     )
 
 
-def with_tokens(df: DataFrame, col: str = "text", out: str = "tokens") -> DataFrame:
-    return df.withColumn(out, F.expr(tokens_expr(col)))
-
-
-def token_count(col: str = "text") -> Column:
-    """Whitespace/punct token count (the reference has no text ops; this is the
-    BASELINE.json training-pipeline extension surface)."""
-    return F.size(F.expr(tokens_expr(col)))
-
-
 # BPE-ish piece pattern over ASCII-stripped lowercase text: letter runs,
 # single digits (BPE tokenizers split numbers), punctuation runs. ASCII
 # stripping ('[^ -~]') removes \t and \n, so plain ' ' is the only whitespace

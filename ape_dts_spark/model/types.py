@@ -22,16 +22,14 @@ semantics that matter for correctness, reproduced here:
   Spark's ``eqNullSafe``/``<=>`` already treats NaN as equal to NaN, so the
   checker gets this for free.
 
-``spark_type_for`` is the single mapping entry point; ``coercion_exprs``
-provides the casts the sink side needs (hex for binary, canonical string for
-decimals, saturating unsigned handling).
+``spark_type_for`` is the single mapping entry point.
 """
 
 from __future__ import annotations
 
 import re
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -96,38 +94,6 @@ def spark_type_for(source_type: str) -> T.DataType:
                 return out(*m.groups()[1:])
             return out  # type: ignore[return-value]
     return T.StringType()
-
-
-def struct_for(cols: dict[str, str]) -> T.StructType:
-    """{col -> source type string} -> StructType (ordered as given)."""
-    return T.StructType([T.StructField(n, spark_type_for(t), True) for n, t in cols.items()])
-
-
-# -- canonical/comparison coercions (checker + sink side) --------------------
-
-
-def canonical_str(col: Column, dt: T.DataType) -> Column:
-    """Engine-stable string form used when comparing heterogeneous sources —
-    mirrors the reference's normalized-string compares (col_value.rs:135-169):
-    decimals/temporals as canonical strings, binary as lowercase hex, bool as
-    0/1, NaN spelled 'NaN'."""
-    if isinstance(dt, T.BinaryType):
-        return F.lower(F.hex(col))
-    if isinstance(dt, T.BooleanType):
-        return col.cast("int").cast("string")
-    if isinstance(dt, (T.FloatType, T.DoubleType)):
-        return F.when(F.isnan(col), F.lit("NaN")).otherwise(col.cast("string"))
-    if isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
-        return F.date_format(col, "yyyy-MM-dd HH:mm:ss.SSSSSS")
-    return col.cast("string")
-
-
-def saturating_unsigned(col: Column, bits: int) -> Column:
-    """Clamp a widened unsigned value back into [0, 2^bits-1] on the sink side
-    (the reference saturates on overflow, col_value.rs:345-354)."""
-    hi = F.lit((1 << bits) - 1).cast("decimal(20,0)")
-    v = col.cast("decimal(20,0)")
-    return F.when(v < 0, F.lit(0).cast("decimal(20,0)")).when(v > hi, hi).otherwise(v)
 
 
 # -- MySQL zero-date recovery (issue apecloud/ape-dts#328) --------------------

@@ -41,22 +41,6 @@ def partition_for_apply(df: DataFrame, key_cols: list[str], num_partitions: int)
     return parallel, serial
 
 
-def snapshot_subbatches(df: DataFrame, num_partitions: int) -> DataFrame:
-    """Insert-only round-robin fan-out (snapshot_parallelizer.rs:29-50)."""
-    return df.repartition(num_partitions)
-
-
-def partition_by_table(df: DataFrame) -> DataFrame:
-    """One partition stream per (schema, tb) (table_parallelizer.rs:15-107)."""
-    return df.repartition(F.col("schema"), F.col("tb"))
-
-
-def serial_ordered(df: DataFrame, order_cols: list[str] | None = None) -> DataFrame:
-    """Strict global order for DDL / foreign-key mode (serial_parallelizer.rs)."""
-    order_cols = order_cols or ["seq"]
-    return df.coalesce(1).sortWithinPartitions(*order_cols)
-
-
 def salted_join(
     skewed: DataFrame,
     other: DataFrame,

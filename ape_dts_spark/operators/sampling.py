@@ -29,8 +29,3 @@ def mod_sample(df: DataFrame, key_col: str, modulus: int = 100, keep_below: int 
     for repeatable partial checks of huge tables.
     """
     return df.filter(F.pmod(F.col(key_col), F.lit(modulus)) < keep_below)
-
-
-def hash_sample(df: DataFrame, key_cols: list[str], modulus: int = 100, keep_below: int = 10) -> DataFrame:
-    """Deterministic sampling over arbitrary (incl. non-numeric) keys via hash."""
-    return df.filter(F.pmod(F.hash(*[F.col(c) for c in key_cols]), F.lit(modulus)) < keep_below)

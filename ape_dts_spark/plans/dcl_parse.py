@@ -61,7 +61,3 @@ def parse_dcl(text: str | None) -> DclStatement:
         if m:
             return DclStatement(kind, _principal(m.groups()))
     return DclStatement("unknown")
-
-
-def is_dcl(text: str | None) -> bool:
-    return parse_dcl(text).kind != "unknown"

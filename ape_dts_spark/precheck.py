@@ -24,6 +24,7 @@ from dataclasses import dataclass
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
+from ape_dts_spark import session
 from ape_dts_spark.config.rdb_filter import RdbFilter
 
 
@@ -277,16 +278,13 @@ def check_jdbc_config(spark: SparkSession, url: str, props: dict | None = None) 
     )
     if known:
         cls = props.get("driver", _JDBC_DRIVERS[dialect])
-        try:
-            spark._jvm.java.lang.Class.forName(cls)  # type: ignore[union-attr]
-            out.append(CheckResult("jdbc_driver_class", cls, True))
-        except Exception:
-            out.append(
-                CheckResult(
-                    "jdbc_driver_class", cls, False,
-                    "driver jar not on the Spark classpath (add via spark.jars)",
-                )
+        loadable = session.driver_class_loadable(spark, cls)
+        out.append(
+            CheckResult(
+                "jdbc_driver_class", cls, loadable,
+                "" if loadable else "driver jar not on the Spark classpath (add via spark.jars)",
             )
+        )
     return out
 
 
@@ -464,106 +462,6 @@ def check_mongo_cdc(hello: dict, is_source: bool = True) -> CheckResult:
         "cdc_supported", "mongo", not err, err,
         warn="" if not err else CDC_ADVISE["mongo"],
     )
-
-
-def _scope_names(filt: RdbFilter) -> bool:
-    """True when the filter uses wildcard/regex patterns — the reference
-    skips struct existence/supportability checks for pattern filters
-    (basic.rs:is_filter_pattern; mysql_prechecker.rs:161-173)."""
-    specs = [filt.do_schemas, filt.ignore_schemas, filt.do_tbs, filt.ignore_tbs]
-    for spec in specs:
-        for p in _split_patterns_pure(spec):
-            name = p[1:-1] if len(p) >= 2 and p[0] == "`" and p[-1] == "`" else None
-            if name is not None:
-                continue  # escaped identifier: literal
-            if p.startswith("r#") or "*" in p or "?" in p:
-                return True
-    return False
-
-
-def _split_patterns_pure(spec: str) -> list:
-    from ape_dts_spark.config.rdb_filter import _split_patterns
-
-    return _split_patterns(spec)
-
-
-def check_struct_existed(
-    filt: RdbFilter,
-    current_dbs: set,
-    current_tbs: set,
-    is_source: bool = True,
-    do_struct_init: bool = True,
-) -> CheckResult:
-    """Existence of every configured db / db.tb against a captured catalog
-    listing (mysql_prechecker.rs:147-254). Target-side with struct-init on is
-    a no-op (the task will create them); a pattern filter downgrades to a
-    warning like the reference (lines 163-173). ``current_tbs`` holds
-    'db.tb' strings."""
-    if not is_source and do_struct_init:
-        return CheckResult("struct_existed", "sink", True, "struct_init will create")
-    if _scope_names(filt):
-        return CheckResult(
-            "struct_existed", "filter", True,
-            warn="CheckIfStructExisted with filter in pattern is not supported.",
-        )
-    err_msgs = []
-    want_tbs = [p for p in _split_patterns_pure(filt.do_tbs)]
-    want_dbs = [p for p in _split_patterns_pure(filt.do_schemas)]
-    missing_tbs = sorted(t for t in want_tbs if t not in current_tbs)
-    if want_tbs and missing_tbs:
-        err_msgs.append("tables not existed: [%s]" % ";".join(missing_tbs))
-    need_dbs = set(want_dbs) | {t.split(".", 1)[0] for t in want_tbs}
-    missing_dbs = sorted(d for d in need_dbs if d not in current_dbs)
-    if missing_dbs:
-        err_msgs.append("databases not existed: [%s]" % ";".join(missing_dbs))
-    return CheckResult(
-        "struct_existed", "source" if is_source else "sink",
-        not err_msgs, ".".join(err_msgs),
-    )
-
-
-def check_table_structs(
-    filt: RdbFilter,
-    tables: list,
-    constraints: list,
-    is_source: bool = True,
-    do_struct_init: bool = True,
-) -> CheckResult:
-    """Struct supportability over a captured constraint catalog
-    (mysql_prechecker.rs:256-396; same shape pg_prechecker.rs): FK-referenced
-    tables outside the replication scope are a hard error (apply order cannot
-    be honoured), tables with no PK/UK are a warning (merge degrades to
-    serial whole-row apply). ``tables`` = ['db.tb', ...] in scope;
-    ``constraints`` = [(constraint_type, db, tb, rel_db, rel_tb), ...] with
-    rel_* empty for non-FK rows."""
-    if not is_source and do_struct_init:
-        return CheckResult("table_structs", "sink", True, "struct_init will create")
-    if _scope_names(filt):
-        return CheckResult(
-            "table_structs", "filter", True,
-            warn="CheckIfTableStructSupported with filter in pattern is not supported.",
-        )
-    has_pkuk, fkref_out_of_scope = set(), set()
-    for ctype, db, tb, rel_db, rel_tb in constraints:
-        if ctype in ("PRIMARY KEY", "UNIQUE"):
-            has_pkuk.add(f"{db}.{tb}")
-        elif ctype == "FOREIGN KEY" and rel_db and rel_tb:
-            if filt.filter_tb(rel_db, rel_tb):
-                fkref_out_of_scope.add(f"{rel_db}.{rel_tb}")
-    no_pkuk = sorted(t for t in tables if t not in has_pkuk)
-    err = ""
-    if fkref_out_of_scope:
-        err = (
-            "the following foreign key dependent tables are not defined in the replication object:[%s]"
-            % ";".join(sorted(fkref_out_of_scope))
-        )
-    warn = ""
-    if no_pkuk:
-        warn = (
-            "primary key or unique key are needed, but these tables don't have any:[%s]"
-            % ";".join(no_pkuk)
-        )
-    return CheckResult("table_structs", "source", not err, err, warn=warn)
 
 
 def run_cdc_prechecks(

@@ -86,6 +86,36 @@ class ParquetTable:
             json.dump(meta, f)
         os.replace(tmp, self._meta_path)
 
+    def _commit(self, state: DataFrame, meta: dict, ddl: dict | None = None) -> None:
+        """Write ``state`` as the next version directory, then point
+        ``_meta.json`` at it (stamping ``committed_at`` and logging ``ddl``)
+        — the one data commit every rewrite shares. A failed write leaves the
+        meta, and so the table, at the previous version."""
+        version = meta["version"] + 1
+        state.write.mode("overwrite").parquet(os.path.join(self.path, f"v{version}"))
+        meta["version"] = version
+        meta["committed_at"] = time.time()
+        if ddl is not None:
+            meta.setdefault("ddl_log", []).append(ddl)
+        self._write_meta(meta)
+
+    def log_ddl(self, entry: dict, log: str = "ddl_log", **meta_fields) -> None:
+        """Metadata-only commit: append ``entry`` to the meta's ``log``
+        (``ddl_log``, or ``dcl_log`` for access-control statements) and set
+        ``meta_fields`` in the same meta write."""
+        meta = self._read_meta()
+        meta.update(meta_fields)
+        meta.setdefault(log, []).append(entry)
+        self._write_meta(meta)
+
+    def table_name(self) -> str | None:
+        """The logical name the last RENAME TABLE set, None before any."""
+        return self._read_meta().get("table_name")
+
+    def is_dropped(self) -> bool:
+        """True while a DROP TABLE tombstone stands (until ``recreate``)."""
+        return bool(self._read_meta().get("dropped"))
+
     def _empty(self) -> DataFrame:
         """The empty table state as an empty ``LocalRelation``: no Python
         worker runs for it (``createDataFrame([])`` would be a PythonRDD
@@ -123,11 +153,7 @@ class ParquetTable:
         if field.name in [f.name for f in self.payload_schema.fields]:
             return
         self.payload_schema = T.StructType(list(self.payload_schema.fields) + [field])
-        meta = self._read_meta()
-        meta.setdefault("ddl_log", []).append(
-            {"ddl": ddl_text, "column": field.name, "type": field.dataType.simpleString()}
-        )
-        self._write_meta(meta)
+        self.log_ddl({"ddl": ddl_text, "column": field.name, "type": field.dataType.simpleString()})
 
     def drop_column(self, name: str, ddl_text: str = "") -> None:
         """Schema evolution: DROP COLUMN. No data rewrite — the column simply
@@ -136,9 +162,7 @@ class ParquetTable:
         if name not in [f.name for f in self.payload_schema.fields]:
             return
         self.payload_schema = T.StructType([f for f in self.payload_schema.fields if f.name != name])
-        meta = self._read_meta()
-        meta.setdefault("ddl_log", []).append({"ddl": ddl_text, "op": "drop_column", "column": name})
-        self._write_meta(meta)
+        self.log_ddl({"ddl": ddl_text, "op": "drop_column", "column": name})
 
     def rename_column(self, old: str, new: str, ddl_text: str = "") -> None:
         """Schema evolution: RENAME COLUMN. Parquet has no column mapping, so
@@ -152,15 +176,10 @@ class ParquetTable:
         self.payload_schema = T.StructType(
             [T.StructField(new if f.name == old else f.name, f.dataType, f.nullable) for f in self.payload_schema.fields]
         )
-        meta = self._read_meta()
-        version = meta["version"] + 1
-        renamed.write.mode("overwrite").parquet(os.path.join(self.path, f"v{version}"))
-        meta["version"] = version
-        meta["committed_at"] = time.time()
-        meta.setdefault("ddl_log", []).append(
-            {"ddl": ddl_text, "op": "rename_column", "column": old, "to": new}
+        self._commit(
+            renamed, self._read_meta(),
+            {"ddl": ddl_text, "op": "rename_column", "column": old, "to": new},
         )
-        self._write_meta(meta)
 
     def widen_column(self, name: str, new_type: T.DataType, ddl_text: str = "") -> None:
         """Schema evolution: MODIFY/ALTER COLUMN TYPE, applied only for SAFE
@@ -178,22 +197,14 @@ class ParquetTable:
         if name not in fields:
             # a misrouted or typo'd MODIFY must still leave an audit trail,
             # like every other outcome (noop / refused / applied)
-            meta = self._read_meta()
-            meta.setdefault("ddl_log", []).append(
-                {"ddl": ddl_text, "op": "modify_column", "column": name, "missing_column": True}
-            )
-            self._write_meta(meta)
+            self.log_ddl({"ddl": ddl_text, "op": "modify_column", "column": name, "missing_column": True})
             return
         old_type = fields[name].dataType
-        meta = self._read_meta()
         if old_type == new_type:
-            meta.setdefault("ddl_log", []).append(
-                {"ddl": ddl_text, "op": "modify_column", "column": name, "noop": True}
-            )
-            self._write_meta(meta)
+            self.log_ddl({"ddl": ddl_text, "op": "modify_column", "column": name, "noop": True})
             return
         if not _can_widen(old_type, new_type):
-            meta.setdefault("ddl_log", []).append(
+            self.log_ddl(
                 {
                     "ddl": ddl_text,
                     "op": "modify_column",
@@ -201,7 +212,6 @@ class ParquetTable:
                     "refused": f"{old_type.simpleString()} -> {new_type.simpleString()} is not a safe widening",
                 }
             )
-            self._write_meta(meta)
             return
         widened = self.current().withColumn(name, F.col(name).cast(new_type))
         self.payload_schema = T.StructType(
@@ -210,48 +220,27 @@ class ParquetTable:
                 for f in self.payload_schema.fields
             ]
         )
-        version = meta["version"] + 1
-        widened.write.mode("overwrite").parquet(os.path.join(self.path, f"v{version}"))
-        meta["version"] = version
-        meta["committed_at"] = time.time()
-        meta.setdefault("ddl_log", []).append(
-            {
-                "ddl": ddl_text,
-                "op": "modify_column",
-                "column": name,
-                "to": new_type.simpleString(),
-            }
+        self._commit(
+            widened, self._read_meta(),
+            {"ddl": ddl_text, "op": "modify_column", "column": name, "to": new_type.simpleString()},
         )
-        self._write_meta(meta)
 
     def truncate(self, ddl_text: str = "") -> None:
         """TRUNCATE TABLE: commit an empty version (history stays readable
         via at_version, exactly like a transactional table format)."""
-        meta = self._read_meta()
-        version = meta["version"] + 1
-        self._empty().write.mode("overwrite").parquet(os.path.join(self.path, f"v{version}"))
-        meta["version"] = version
-        meta["committed_at"] = time.time()
-        meta.setdefault("ddl_log", []).append({"ddl": ddl_text, "op": "truncate"})
-        self._write_meta(meta)
+        self._commit(self._empty(), self._read_meta(), {"ddl": ddl_text, "op": "truncate"})
 
     def rename_table(self, new_name: str, ddl_text: str = "") -> None:
         """RENAME TABLE: metadata-only — downstream routing reads the current
         logical name from meta (the physical path is the storage identity,
         as in table formats where rename never moves data)."""
-        meta = self._read_meta()
-        meta["table_name"] = new_name
-        meta.setdefault("ddl_log", []).append({"ddl": ddl_text, "op": "rename_table", "to": new_name})
-        self._write_meta(meta)
+        self.log_ddl({"ddl": ddl_text, "op": "rename_table", "to": new_name}, table_name=new_name)
 
     def mark_dropped(self, ddl_text: str = "") -> None:
         """DROP TABLE: tombstone in meta; subsequent applies are refused until
         a create re-registers it (matches the reference's struct sinker which
         executes the drop on the target and forgets the table)."""
-        meta = self._read_meta()
-        meta["dropped"] = True
-        meta.setdefault("ddl_log", []).append({"ddl": ddl_text, "op": "drop_table"})
-        self._write_meta(meta)
+        self.log_ddl({"ddl": ddl_text, "op": "drop_table"}, dropped=True)
 
     def recreate(self, fields: list[T.StructField], ddl_text: str = "") -> None:
         """CREATE TABLE re-registration (r13) — the other half of
@@ -263,25 +252,14 @@ class ParquetTable:
         IF NOT EXISTS no-ops; either way the target data must survive)."""
         meta = self._read_meta()
         if not meta.get("dropped") and meta["version"] >= 0:
-            meta.setdefault("ddl_log", []).append(
-                {"ddl": ddl_text, "op": "create_table_noop"}
-            )
-            self._write_meta(meta)
+            self.log_ddl({"ddl": ddl_text, "op": "create_table_noop"})
             return
         self.payload_schema = T.StructType(list(fields))
         meta.pop("dropped", None)
-        version = meta["version"] + 1
-        self._empty().write.mode("overwrite").parquet(os.path.join(self.path, f"v{version}"))
-        meta["version"] = version
-        meta["committed_at"] = time.time()
-        meta.setdefault("ddl_log", []).append(
-            {
-                "ddl": ddl_text,
-                "op": "create_table",
-                "columns": [f.name for f in self.payload_schema.fields],
-            }
+        self._commit(
+            self._empty(), meta,
+            {"ddl": ddl_text, "op": "create_table", "columns": [f.name for f in fields]},
         )
-        self._write_meta(meta)
 
     # -- apply ---------------------------------------------------------------
 
@@ -335,13 +313,9 @@ class ParquetTable:
             # empty spill set would still plan two broadcast anti-joins
             state = self._replay_spill(state, spilled, key_cols)
 
-        version = meta["version"] + 1
-        state.write.mode("overwrite").parquet(os.path.join(self.path, f"v{version}"))
-        meta["version"] = version
-        meta["committed_at"] = time.time()
         if batch_id is not None:
             meta["applied_batches"][stream_id] = batch_id
-        self._write_meta(meta)
+        self._commit(state, meta)
 
     def _image_cols(self, df: DataFrame, image: str) -> list:
         """Project an event image struct onto the CURRENT payload schema,

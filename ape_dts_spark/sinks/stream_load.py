@@ -53,38 +53,6 @@ def _row_json(payload_cols: list[str], extra: dict[str, Column] | None = None) -
     return F.to_json(F.struct(*fields), {"ignoreNullFields": "false"})
 
 
-def stream_load_rows(
-    changes: DataFrame,
-    payload_cols: list[str],
-    db_type: str = "starrocks",
-    sync_ts: int = 1_700_000_000_000,
-    hard_delete: bool = False,
-) -> DataFrame:
-    """Change rows -> per-row Stream Load serialization:
-    ``(schema, tb, seq, op, url_path, row_json)``.
-
-    ``op`` is the per-batch marker the row will ride under: '' (upsert) or
-    'delete' — under StarRocks soft delete (the default) delete rows become
-    upserts of the sign column and op stays ''."""
-    soft = db_type == "starrocks" and not hard_delete
-    is_del = F.col("row_type") == "delete"
-    extra: dict[str, Column] = {}
-    if db_type == "starrocks":
-        # hidden columns ride unconditionally (rs:118-131)
-        extra[SIGN_COL] = F.when(is_del, F.lit(1)).otherwise(F.lit(0))
-        extra[VERSION_COL] = F.lit(sync_ts)
-    op = F.when(is_del & F.lit(not soft), F.lit("delete")).otherwise(F.lit(""))
-    return changes.select(
-        "schema",
-        "tb",
-        "seq",
-        op.alias("op"),
-        F.concat(F.lit("/api/"), F.col("schema"), F.lit("/"), F.col("tb"),
-                 F.lit("/_stream_load")).alias("url_path"),
-        _row_json(payload_cols, extra).alias("row_json"),
-    )
-
-
 def stream_load_batches(
     changes: DataFrame,
     payload_cols: list[str],

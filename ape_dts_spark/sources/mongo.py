@@ -19,9 +19,11 @@ exactly what this module parses). Document field access downstream is
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ape_dts_spark.streaming.cdc import _change_columns
 
 MONGO_PAYLOAD = T.StructType(
     [
@@ -29,8 +31,6 @@ MONGO_PAYLOAD = T.StructType(
         T.StructField("doc", T.StringType()),
     ]
 )
-
-_OP_MAP = {"c": "insert", "u": "update", "d": "delete", "r": "insert"}
 
 
 def mongo_envelope_schema() -> T.StructType:
@@ -57,14 +57,11 @@ def mongo_envelope_schema() -> T.StructType:
     )
 
 
-def _image(col: str):
+def _image(doc: Column) -> Column:
     """JSON document string -> (_id, doc) struct; NULL document -> NULL image."""
     return F.when(
-        F.col(col).isNotNull(),
-        F.struct(
-            F.get_json_object(F.col(col), "$._id").alias("_id"),
-            F.col(col).alias("doc"),
-        ),
+        doc.isNotNull(),
+        F.struct(F.get_json_object(doc, "$._id").alias("_id"), doc.alias("doc")),
     )
 
 
@@ -74,18 +71,8 @@ def parse_debezium_mongo(raw: DataFrame, value_col: str = "value") -> DataFrame:
     (_id, doc) payload — identical shape to streaming/cdc.parse_debezium, so
     CdcPipeline / compact_changes / merge_apply work unchanged with
     key_cols=['_id']."""
-    parsed = raw.select(F.from_json(F.col(value_col), mongo_envelope_schema()).alias("r")).select("r.*")
-    op_map = F.create_map(*[F.lit(x) for kv in _OP_MAP.items() for x in kv])
-    return parsed.select(
-        F.col("source.db").alias("schema"),
-        F.col("source.collection").alias("tb"),
-        F.coalesce(op_map[F.col("op")], F.col("op")).alias("row_type"),
-        _image("before").alias("before"),
-        _image("after").alias("after"),
-        F.col("source.seq").alias("seq"),
-        F.to_timestamp(F.col("source.ts_ms") / F.lit(1000.0)).alias("ts"),
-        F.col("source.origin_node").alias("origin_node"),
-    )
+    parsed = raw.select(F.from_json(F.col(value_col), mongo_envelope_schema()).alias("_r"))
+    return parsed.select(*_change_columns("_r", tb_field="collection", ddl=False, image=_image))
 
 
 def mongo_statements(compacted: DataFrame, shard_key: str | None = None) -> DataFrame:

@@ -158,7 +158,3 @@ def change_stream_event_to_ddl(event: dict) -> dict | None:
         return _build(db, coll, "", "", SHARD_TYPES[op], command)
 
     return None
-
-
-def is_mongo_shard_ddl(ddl_type: str) -> bool:
-    return ddl_type in SHARD_TYPES.values()

@@ -57,16 +57,6 @@ class SnapshotSource:
             df = df.sample(fraction=sample_percent / 100.0, seed=42)
         return self.router.route_df(df, self.schema_name, tb)
 
-    def read_tables(self, sf_dir: str, tables: list[str]) -> dict[str, DataFrame]:
-        """Multi-table snapshot respecting do/ignore filters; key = routed name."""
-        out: dict[str, DataFrame] = {}
-        for tb in tables:
-            if self.filter.filter_tb(self.schema_name, tb):
-                continue
-            _, routed_tb = self.router.route_table(self.schema_name, tb)
-            out[routed_tb] = self.read_table(sf_dir, tb)
-        return out
-
     # -- JDBC backend (cluster path; mirrors the chunked scan) --------------
     def read_jdbc(
         self,
@@ -115,18 +105,3 @@ def with_chunk_id(df: DataFrame, key_col: str, lo: int, chunk_size: int, out: st
     observability (per-chunk row/byte stats, the ChunkPartitioner cost model's
     input — dt-parallelizer/src/chunk_partitioner.rs:14-120)."""
     return df.withColumn(out, F.expr(f"CAST(({key_col} - {lo}) DIV {chunk_size} AS BIGINT)"))
-
-
-def keyset_predicates(min_key: int, max_key: int, chunk_size: int, key_col: str) -> list[str]:
-    """Build keyset-range predicates for manual chunking — the splitter's
-    evenly-sized integer ranges (mysql_snapshot_splitter.rs:63-123). Each
-    predicate becomes one Spark partition; NULL-key sweep appended last
-    (mysql_snapshot_extractor.rs:1143-1185)."""
-    preds = []
-    lo = min_key
-    while lo <= max_key:
-        hi = min(lo + chunk_size - 1, max_key)
-        preds.append(f"{key_col} >= {lo} AND {key_col} <= {hi}")
-        lo = hi + 1
-    preds.append(f"{key_col} IS NULL")
-    return preds

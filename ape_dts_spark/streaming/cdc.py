@@ -31,7 +31,7 @@ import time
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -68,27 +68,42 @@ def debezium_envelope_schema(payload: T.StructType) -> T.StructType:
     )
 
 
+def _change_columns(
+    env: str,
+    tb_field: str = "table",
+    ddl: bool = True,
+    image: Callable[[Column], Column] = lambda c: c,
+) -> list[Column]:
+    """The canonical change columns (schema, tb, row_type[, ddl], before,
+    after, seq, ts, origin_node) projected from the parsed Debezium envelope
+    struct ``env``. The relational parses carry ``ddl``; the Mongo parse
+    reads ``source.collection``, has no ``ddl`` and decodes its string
+    images with ``image``."""
+    op_map = F.create_map(*[F.lit(x) for kv in _OP_MAP.items() for x in kv])
+    op = F.col(f"{env}.op")
+    return [
+        F.col(f"{env}.source.db").alias("schema"),
+        F.col(f"{env}.source.{tb_field}").alias("tb"),
+        F.coalesce(op_map[op], op).alias("row_type"),
+        *([F.col(f"{env}.ddl").alias("ddl")] if ddl else []),
+        image(F.col(f"{env}.before")).alias("before"),
+        image(F.col(f"{env}.after")).alias("after"),
+        F.col(f"{env}.source.seq").alias("seq"),
+        F.to_timestamp(F.col(f"{env}.source.ts_ms") / F.lit(1000.0)).alias("ts"),
+        F.col(f"{env}.source.origin_node").alias("origin_node"),
+    ]
+
+
 def parse_debezium(raw: DataFrame, payload: T.StructType, value_col: str = "value") -> DataFrame:
     """Debezium JSON envelope -> canonical change DataFrame
-    (schema, tb, row_type, before, after, seq, ts, origin_node).
+    (schema, tb, row_type, ddl, before, after, seq, ts, origin_node).
 
     Works identically on a batch DataFrame and a streaming one (same plan);
     for Kafka, pass ``df.selectExpr("CAST(value AS STRING) AS value")``.
     """
     env = debezium_envelope_schema(payload)
-    parsed = raw.select(F.from_json(F.col(value_col), env).alias("r")).select("r.*")
-    op_map = F.create_map(*[F.lit(x) for kv in _OP_MAP.items() for x in kv])
-    return parsed.select(
-        F.col("source.db").alias("schema"),
-        F.col("source.table").alias("tb"),
-        F.coalesce(op_map[F.col("op")], F.col("op")).alias("row_type"),
-        F.col("ddl"),
-        F.col("before"),
-        F.col("after"),
-        F.col("source.seq").alias("seq"),
-        F.to_timestamp(F.col("source.ts_ms") / F.lit(1000.0)).alias("ts"),
-        F.col("source.origin_node").alias("origin_node"),
-    )
+    parsed = raw.select(F.from_json(F.col(value_col), env).alias("_r"))
+    return parsed.select(*_change_columns("_r"))
 
 
 def parse_debezium_with_dead_letter(
@@ -125,18 +140,7 @@ def parse_debezium_with_dead_letter(
     dead = tagged.filter(F.col("_dead").isNotNull()).select(
         F.col(value_col).alias("raw"), F.col("_dead").alias("reason")
     )
-    op_map = F.create_map(*[F.lit(x) for kv in _OP_MAP.items() for x in kv])
-    changes = tagged.filter(F.col("_dead").isNull()).select(
-        F.col("_r.source.db").alias("schema"),
-        F.col("_r.source.table").alias("tb"),
-        F.coalesce(op_map[F.col("_r.op")], F.col("_r.op")).alias("row_type"),
-        F.col("_r.ddl").alias("ddl"),
-        F.col("_r.before").alias("before"),
-        F.col("_r.after").alias("after"),
-        F.col("_r.source.seq").alias("seq"),
-        F.to_timestamp(F.col("_r.source.ts_ms") / F.lit(1000.0)).alias("ts"),
-        F.col("_r.source.origin_node").alias("origin_node"),
-    )
+    changes = tagged.filter(F.col("_dead").isNull()).select(*_change_columns("_r"))
     return changes, dead
 
 
@@ -302,11 +306,9 @@ class CdcPipeline:
             # target-side replay (dcl_type.rs inventory)
             if self.rdb_filter is not None and self.rdb_filter.filter_dcl(dcl.kind):
                 return
-            meta = self.target._read_meta()
-            meta.setdefault("dcl_log", []).append(
-                {"dcl": text, "op": dcl.kind, "principal": dcl.principal}
+            self.target.log_ddl(
+                {"dcl": text, "op": dcl.kind, "principal": dcl.principal}, log="dcl_log"
             )
-            self.target._write_meta(meta)
             return
         # multi-target statements (DROP TABLE a, b / RENAME TABLE .. , ..)
         # split into one routable statement per target, like the reference's
@@ -326,7 +328,7 @@ class CdcPipeline:
         # the target's current logical name (rename_table updates it) also
         # identifies this pipeline — a post-rename DDL names the new table
         # while the envelope may still carry the original channel name
-        target_tb = self.target._read_meta().get("table_name")
+        target_tb = self.target.table_name()
         for st in split_ddl(text):
             if (
                 st.table is not None
@@ -369,13 +371,9 @@ class CdcPipeline:
                         text,
                     )
                 else:  # CTAS / LIKE: no typed column list to install
-                    meta = self.target._read_meta()
-                    meta.setdefault("ddl_log", []).append({"ddl": text, "op": st.kind})
-                    self.target._write_meta(meta)
+                    self.target.log_ddl({"ddl": text, "op": st.kind})
             else:
-                meta = self.target._read_meta()
-                meta.setdefault("ddl_log", []).append({"ddl": text, "op": st.kind})
-                self.target._write_meta(meta)
+                self.target.log_ddl({"ddl": text, "op": st.kind})
 
     def apply_batch(self, batch: DataFrame, batch_id: int) -> None:
         """foreachBatch body: compact the micro-batch and merge-apply it.
@@ -405,9 +403,19 @@ class CdcPipeline:
         # readout (max seq / max ts) the metrics block needs at the end —
         # the old separate count + agg paid two jobs per micro-batch
         _stats = batch.agg(
-            F.count(F.lit(1)).alias("n"), F.max("seq").alias("m"), F.max("ts").alias("t")
+            F.count(F.lit(1)).alias("n"), F.count("seq").alias("n_seq"),
+            F.max("seq").alias("m"), F.max("ts").alias("t"),
         ).collect()[0]
         n_events = _stats["n"]
+        if _stats["n_seq"] != n_events:
+            # a NULL seq cannot be placed against the DDL barriers: a DDL
+            # would never apply and every segment would re-cover the batch
+            batch.unpersist()
+            raise ValueError(
+                f"batch {batch_id}: {n_events - _stats['n_seq']} event(s) with a NULL seq "
+                "cannot be ordered; parse the stream with parse_debezium_with_dead_letter, "
+                "which quarantines them as missing_seq"
+            )
         throttle_sec = 0.0
         if self.limiter is not None:
             throttle_sec = (
@@ -470,7 +478,7 @@ class CdcPipeline:
             if hi is not None:
                 seg = seg.filter(F.col("seq") < hi)
             seg_epoch = batch_id - 1 + (i + 1) / len(bounds)
-            if self.target._read_meta().get("dropped"):
+            if self.target.is_dropped():
                 if seg.limit(1).count():
                     raise ValueError(
                         "target table was dropped (DROP TABLE barrier); "

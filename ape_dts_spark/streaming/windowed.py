@@ -221,26 +221,6 @@ def stateful_seq_dedup(
     )
 
 
-def watermark_dedup(
-    events: DataFrame, key_cols: list[str], ts_col: str = "ts", delay: str = "10 minutes"
-) -> DataFrame:
-    """Built-in streaming dedup: drop repeated (key) rows while only holding
-    state within the watermark horizon — the bounded-state sibling of
-    stateful_seq_dedup (which keeps one high-water mark per key forever and
-    needs no event-time column).
-
-    Uses ``dropDuplicatesWithinWatermark`` when the relation is streaming
-    (state for a key is dropped `delay` after its event time passes the
-    watermark — at-source replay protection with bounded state, the exact
-    shape of the reference's resume-replay window); on a batch relation it
-    degrades to plain dropDuplicates on the keys, which is the same
-    fixed-point semantics without the horizon.
-    """
-    if events.isStreaming:
-        return events.withWatermark(ts_col, delay).dropDuplicatesWithinWatermark(key_cols)
-    return events.dropDuplicates(key_cols)
-
-
 def heartbeat_lag(events: DataFrame, ts_col: str = "ts") -> DataFrame:
     """Downstream-lag metric: max event time seen (the heartbeat analogue,
     mysql_cdc_extractor.rs:468-540) — subtract from now() for lag."""

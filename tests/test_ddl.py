@@ -156,6 +156,25 @@ def test_truncate_rename_drop_table_in_stream(spark, tmp_path):
         _apply(spark, src, table, [ev("c", after={"id": 3, "name": "c", "bal": 1}, seq=7)], PAYLOAD, batch_id=3)
 
 
+def test_null_seq_event_refused_before_commit(spark, tmp_path):
+    """An event with no source.seq cannot be ordered against the batch's DDL
+    barriers (the DDL would never apply and every segment would re-cover the
+    batch): the batch is refused before anything commits."""
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    table = ParquetTable(spark, str(tmp_path / "tgt"), PAYLOAD)
+    truncate = ddl("TRUNCATE TABLE default.users", seq=2)
+    del truncate["source"]["seq"]
+    with pytest.raises(ValueError, match="NULL seq.*parse_debezium_with_dead_letter"):
+        _apply(spark, src, table, [
+            ev("c", after={"id": 1, "name": "a", "bal": 10}, seq=1),
+            truncate,
+            ev("c", after={"id": 2, "name": "b", "bal": 20}, seq=3),
+            ev("c", after={"id": None, "name": "n", "bal": 0}, seq=4),
+        ], PAYLOAD, batch_id=0)
+    assert table.version() == -1
+
+
 def test_parse_dcl_statement_kinds():
     from ape_dts_spark.plans.dcl_parse import parse_dcl
 

@@ -1870,8 +1870,8 @@ def test_phash64_grayscale_paths():
 
 def test_phash_incremental_index(spark):
     """Incremental pHash dedup == the full-corpus run restricted to pairs
-    touching the batch; the persisted index is reusable across batches and
-    append equals a fresh full build; band width is format-validated."""
+    touching the batch; the persisted index is reusable across batches;
+    band width is format-validated."""
     import pytest
 
     from ape_dts_spark.functions import multimodal as mm
@@ -1903,20 +1903,16 @@ def test_phash_incremental_index(spark):
     assert got == want and got  # non-trivial: (1,2) and (2,3) at least
     assert set(got) == {(1, 2), (2, 3), (2, 5)}
 
-    # append == fresh full build over the concatenated corpus
-    appended = mm.phash_index_append(index, new)
-    fresh = mm.phash_index(hdf)
-    key = lambda r: (r["id"], r["phash"], r["band"], r["bh16"])  # noqa: E731
-    assert sorted(map(key, appended.collect())) == sorted(map(key, fresh.collect()))
-
-    # a second batch probes the rolled-forward index: within-batch pair
-    # (7, 8) and cross pair vs indexed id 1 all surface exactly once
+    # a second batch probes the index rolled forward over the concatenated
+    # corpus: within-batch pair (7, 8) and cross pair vs indexed id 1 all
+    # surface exactly once
     batch2 = spark.createDataFrame(
         [(7, flip(h0, [5])), (8, flip(h0, [5, 11]))], "id long, phash long"
     )
+    fresh = mm.phash_index(hdf)
     got2 = {
         (r["id_a"], r["id_b"]): r["hamming"]
-        for r in mm.phash_incremental_pairs(appended, batch2).collect()
+        for r in mm.phash_incremental_pairs(fresh, batch2).collect()
     }
     assert got2 == {(1, 7): 1, (1, 8): 2, (2, 7): 2, (2, 8): 3, (5, 7): 2,
                     (5, 8): 3, (7, 8): 1}
@@ -1924,58 +1920,7 @@ def test_phash_incremental_index(spark):
     # band width is part of the stored format
     with pytest.raises(ValueError, match="index format"):
         mm.phash_incremental_pairs(index, new, n_bands=8)
-    with pytest.raises(ValueError, match="index format"):
-        mm.phash_index_append(index, new, n_bands=8)
     index.unpersist(), fresh.unpersist()
-
-
-def test_audio_incremental_pairs(spark):
-    """Incremental audio dedup == audio_dup_pairs over the concatenated
-    corpus restricted to pairs touching the batch — including exact vote
-    counts for within-batch pairs (each fp match counted once)."""
-    import numpy as np
-
-    from ape_dts_spark.functions import media_codec as mc
-    from ape_dts_spark.functions import multimodal as mm
-
-    def clip(bins, shift):
-        cos = lambda b: np.rint(
-            1000 * np.cos(2 * np.pi * b * np.arange(256) / 256)
-        ).astype("<i2")
-        frames = [np.zeros(256, "<i2")] * shift + [cos(b) for b in bins]
-        return mc.encode_wav(np.concatenate(frames), 8000)
-
-    seq_a = [10, 30, 50, 70, 20, 40, 60, 80, 25, 45, 65, 85]
-    seq_b = [11, 31, 51, 71, 21, 41, 61, 81, 26, 46, 66, 86]
-    df = spark.createDataFrame(
-        [
-            (1, clip(seq_a, 0)),
-            (2, clip(seq_a, 2)),   # dup of 1, indexed
-            (3, clip(seq_b, 1)),
-            (4, clip(seq_a, 1)),   # dup of 1 and 2, arrives in the batch
-            (5, clip(seq_b, 3)),   # dup of 3, arrives in the batch
-            (6, clip(seq_b, 0)),   # dup of 3 and 5, arrives in the batch
-        ],
-        "id long, payload binary",
-    )
-    fps = mm.audio_fingerprints(df)
-    full = {
-        (r["id_a"], r["id_b"]): (r["dt"], r["n_matches"])
-        for r in mm.audio_dup_pairs(fps, min_matches=10).collect()
-    }
-    new_ids = {4, 5, 6}
-    index = mm.audio_fp_index(fps.filter(~F.col("id").isin(list(new_ids))))
-    got = {
-        (r["id_a"], r["id_b"]): (r["dt"], r["n_matches"])
-        for r in mm.audio_incremental_pairs(
-            index, fps.filter(F.col("id").isin(list(new_ids))), min_matches=10
-        ).collect()
-    }
-    want = {p: v for p, v in full.items() if p[0] in new_ids or p[1] in new_ids}
-    assert got == want
-    assert (5, 6) in got  # within-batch pair, vote count not double-counted
-    assert (1, 2) not in got  # old-vs-old never recomputed
-    index.unpersist()
 
 
 def test_video_dup_pairs(spark):
@@ -2036,7 +1981,7 @@ def test_video_dup_pairs(spark):
 def test_video_incremental_pairs(spark):
     """Incremental video dedup == video_dup_pairs over the concatenated
     corpus restricted to pairs touching the batch, exact dt and vote
-    counts; append == fresh build; band width is format-validated."""
+    counts; band width is format-validated."""
     import hashlib
 
     import numpy as np
@@ -2090,12 +2035,6 @@ def test_video_incremental_pairs(spark):
     assert (5, 6) in got and got[(5, 6)] == (1, 11)  # within-batch, exact votes
     assert (1, 2) not in got  # old-vs-old never recomputed
 
-    # append == fresh full build
-    appended = mm.video_fp_index_append(index, fps.filter(F.col("id").isin(list(new_ids))))
-    fresh = mm.video_fp_index(fps)
-    key = lambda r: (r["id"], r["t"], r["phash"], r["band"], r["bh16"])  # noqa: E731
-    assert sorted(map(key, appended.collect())) == sorted(map(key, fresh.collect()))
-
     with pytest.raises(ValueError, match="index format"):
         mm.video_incremental_pairs(index, fps, n_bands=8)
-    index.unpersist(), fresh.unpersist()
+    index.unpersist()

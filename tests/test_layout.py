@@ -87,31 +87,3 @@ def test_zorder_layout_boxes_are_tight_in_both_dims(spark):
     assert max(r["s1"] for r in lin if r["n"] >= 64) >= 48
     # schema unchanged (helper key dropped)
     assert ly.zorder_layout(grid, ["d0", "d1"]).columns == ["d0", "d1"]
-
-
-def test_rank_buckets_handle_skew(spark):
-    # heavily skewed values: 90% in [0, 10), 10% in [10^6, 10^6 + 10).
-    # Quantile bucketing spreads rows near-uniformly; uniform binning
-    # would collapse 90% of rows into bucket 0.
-    df = spark.range(1000).select(
-        F.when(F.col("id") % 10 < 9, F.col("id") % 10)
-        .otherwise(F.col("id") % 10 + 1_000_000)
-        .cast("double")
-        .alias("v")
-    )
-    b = ly.with_rank_buckets(df, "v", bits=3)
-    counts = {r["v_bucket"]: r["n"] for r in b.groupBy("v_bucket").agg(F.count(F.lit(1)).alias("n")).collect()}
-    assert set(counts) <= set(range(8))
-    assert max(counts.values()) <= 350  # no bucket hoards the skewed mass
-    # pure codegen: no Python eval in the plan
-    plan = b._jdf.queryExecution().executedPlan().toString()
-    assert "Python" not in plan
-    # feeds the Morton key end to end
-    two = ly.with_rank_buckets(
-        ly.with_rank_buckets(spark.range(256).select(
-            (F.col("id") % 16).cast("double").alias("x"),
-            (F.col("id") / 16).cast("double").alias("y")),
-            "x", bits=3),
-        "y", bits=3)
-    keyed = ly.with_morton_key(two, ["x_bucket", "y_bucket"], bits=3)
-    assert keyed.select(F.max("zkey")).collect()[0][0] < 64

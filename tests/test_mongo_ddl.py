@@ -9,7 +9,6 @@ from ape_dts_spark.sources.mongo_ddl import (
     build_shard_collection_ddl,
     change_stream_event_to_ddl,
     command_to_query,
-    is_mongo_shard_ddl,
     query_to_command,
 )
 
@@ -75,7 +74,7 @@ def test_collmod_and_sharding_ignore_rules():
                               "reshardUUID": "xx", "oldShardKey": {"a": 1}}))
     assert s["command"] == {"shardCollection": "appdb.items",
                             "key": {"uid": 1}, "unique": False}
-    assert is_mongo_shard_ddl(s["ddl_type"])
+    assert s["ddl_type"] == "mongo_shard_collection"
     r = change_stream_event_to_ddl(_ev(
         "refineCollectionShardKey",
         operationDescription={"shardKey": {"uid": 1, "ts": 1}}))

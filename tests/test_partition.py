@@ -56,16 +56,3 @@ def test_bucketed_join_has_no_shuffle(spark, sf_dir, tmp_path):
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
         spark.sql("DROP TABLE IF EXISTS b_orders")
         spark.sql("DROP TABLE IF EXISTS b_lineitem")
-
-
-def test_table_and_serial_partitioners(spark, sf_dir):
-    from ape_dts_spark.operators.partition import partition_by_table, serial_ordered
-
-    stream = demo.users_change_stream(spark, sf_dir)
-    by_tb = partition_by_table(stream)
-    assert by_tb.count() == stream.count()
-
-    ser = serial_ordered(stream)
-    assert ser.rdd.getNumPartitions() == 1
-    seqs = [r["seq"] for r in ser.select("seq").collect()]
-    assert seqs == sorted(seqs)

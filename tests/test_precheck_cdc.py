@@ -1,15 +1,10 @@
-"""CDC-prerequisite + struct-supportability precheck parity.
+"""CDC-prerequisite precheck parity.
 
 Pure-function ports of the reference's precheckers operating on captured
 server snapshots (dt-precheck/src/prechecker/mysql_prechecker.rs:40-396,
-pg_prechecker.rs:46-160, mongo_prechecker.rs:38-114), plus scenario-parity
-cases mirroring the 10 reference precheck test dirs
-(dt-tests/tests/mysql_to_mysql/precheck/*): db_not_exists{,_non_struct},
-expression_filter, struct_existed, struct_supported_{basic,have_fk_test1..3,
-have_uk_no_pk,no_pkuk}.
+pg_prechecker.rs:46-160, mongo_prechecker.rs:38-114).
 """
 
-from ape_dts_spark.config.rdb_filter import RdbFilter
 from ape_dts_spark.precheck import (
     check_mongo_cdc,
     check_mongo_version,
@@ -17,8 +12,6 @@ from ape_dts_spark.precheck import (
     check_mysql_version,
     check_pg_cdc_vars,
     check_pg_version,
-    check_struct_existed,
-    check_table_structs,
     run_cdc_prechecks,
 )
 
@@ -107,122 +100,3 @@ def test_run_cdc_prechecks_bundle_shapes():
     out = run_cdc_prechecks("mongo", {}, hello={"ok": 1.0, "primary": "a", "me": "a"},
                             version="7.0.1")
     assert all(r.ok for r in out)
-
-
-# ---------------------------------------------------------------------------
-# the 10 reference precheck scenarios
-# (dt-tests/tests/mysql_to_mysql/precheck/<name>/{src_prepare.sql,task_config.ini})
-# ---------------------------------------------------------------------------
-
-DB1, DB2 = "precheck_db_1", "precheck_db_2"
-
-
-def test_scenario_db_not_exists():
-    """db_not_exists_test: do_tbs names a table in a dropped database."""
-    filt = RdbFilter(do_tbs=f"{DB1}.table_test")
-    r = check_struct_existed(filt, current_dbs=set(), current_tbs=set())
-    assert not r.ok
-    assert f"tables not existed: [{DB1}.table_test]" in r.detail
-    assert f"databases not existed: [{DB1}]" in r.detail
-
-
-def test_scenario_db_not_exists_non_struct():
-    """db_not_exists_non_struct_test: same missing db, struct-init off on the
-    sink side still checks (reference skips only when do_struct_init)."""
-    filt = RdbFilter(do_schemas=DB1)
-    r = check_struct_existed(filt, set(), set(), is_source=False, do_struct_init=False)
-    assert not r.ok and f"databases not existed: [{DB1}]" in r.detail
-    # sink with struct_init on -> no-op (the task creates the schema)
-    assert check_struct_existed(filt, set(), set(), is_source=False, do_struct_init=True).ok
-
-
-def test_scenario_expression_filter():
-    """expression_filter_test: do_tbs='precheck_it.*' is a pattern — the
-    existence/supportability checks degrade to an explicit warning
-    (mysql_prechecker.rs:161-173)."""
-    filt = RdbFilter(do_tbs=f"{DB1}.*")
-    r = check_struct_existed(filt, set(), set())
-    assert r.ok and "filter in pattern is not supported" in r.warn
-    r = check_table_structs(filt, [], [])
-    assert r.ok and "filter in pattern is not supported" in r.warn
-
-
-def test_scenario_struct_existed():
-    """struct_existed_test: everything configured exists -> green."""
-    filt = RdbFilter(do_tbs=f"{DB1}.t1,{DB1}.t2")
-    r = check_struct_existed(
-        filt, current_dbs={DB1}, current_tbs={f"{DB1}.t1", f"{DB1}.t2"})
-    assert r.ok and not r.detail
-
-
-def test_scenario_struct_supported_basic():
-    """struct_supported_basic_test: PK tables, no FK -> green, no warns."""
-    filt = RdbFilter(do_tbs=f"{DB1}.t1,{DB1}.t2")
-    cons = [("PRIMARY KEY", DB1, "t1", "", ""), ("PRIMARY KEY", DB1, "t2", "", "")]
-    r = check_table_structs(filt, [f"{DB1}.t1", f"{DB1}.t2"], cons)
-    assert r.ok and not r.warn
-
-
-def test_scenario_struct_supported_have_fk_1():
-    """have_fk_test1: FK child AND parent both in do_tbs -> green (the
-    referenced table is inside the replication object)."""
-    filt = RdbFilter(do_tbs=f"{DB1}.table_test_1,{DB1}.table_test_3")
-    cons = [
-        ("PRIMARY KEY", DB1, "table_test_1", "", ""),
-        ("PRIMARY KEY", DB1, "table_test_3", "", ""),
-        ("FOREIGN KEY", DB1, "table_test_3", DB1, "table_test_1"),
-    ]
-    r = check_table_structs(filt, [f"{DB1}.table_test_1", f"{DB1}.table_test_3"], cons)
-    assert r.ok
-
-
-def test_scenario_struct_supported_have_fk_2():
-    """have_fk_test2: table_test_3 has FKs to table_test_1 AND table_test_2
-    but only {3,2} are configured -> table_test_1 reported out-of-scope."""
-    filt = RdbFilter(do_tbs=f"{DB1}.table_test_3,{DB1}.table_test_2")
-    cons = [
-        ("PRIMARY KEY", DB1, "table_test_2", "", ""),
-        ("PRIMARY KEY", DB1, "table_test_3", "", ""),
-        ("FOREIGN KEY", DB1, "table_test_3", DB1, "table_test_1"),
-        ("FOREIGN KEY", DB1, "table_test_3", DB1, "table_test_2"),
-    ]
-    r = check_table_structs(filt, [f"{DB1}.table_test_2", f"{DB1}.table_test_3"], cons)
-    assert not r.ok
-    assert (
-        r.detail
-        == "the following foreign key dependent tables are not defined in the"
-        f" replication object:[{DB1}.table_test_1]"
-    )
-
-
-def test_scenario_struct_supported_have_fk_3():
-    """have_fk_test3: FK parent lives in a DIFFERENT database not configured
-    -> out-of-scope error names db2.table_test_1."""
-    filt = RdbFilter(do_tbs=f"{DB1}.table_test_3")
-    cons = [
-        ("PRIMARY KEY", DB1, "table_test_3", "", ""),
-        ("FOREIGN KEY", DB1, "table_test_3", DB2, "table_test_1"),
-    ]
-    r = check_table_structs(filt, [f"{DB1}.table_test_3"], cons)
-    assert not r.ok and f"{DB2}.table_test_1" in r.detail
-
-
-def test_scenario_struct_supported_uk_no_pk():
-    """have_uk_no_pk_test: UNIQUE KEY counts as a merge key -> no warning."""
-    filt = RdbFilter(do_schemas=DB1)
-    cons = [("UNIQUE", DB1, "table_with_unique_constraint", "", "")]
-    r = check_table_structs(filt, [f"{DB1}.table_with_unique_constraint"], cons)
-    assert r.ok and not r.warn
-
-
-def test_scenario_struct_supported_no_pkuk():
-    """no_pkuk_test: a table with neither PK nor UK warns (serial whole-row
-    apply) but does not block (mysql_prechecker.rs:372-381)."""
-    filt = RdbFilter(do_schemas=DB1)
-    r = check_table_structs(filt, [f"{DB1}.table_test_1"], [])
-    assert r.ok  # warning, not error
-    assert (
-        r.warn
-        == "primary key or unique key are needed, but these tables don't have"
-        f" any:[{DB1}.table_test_1]"
-    )

@@ -32,17 +32,18 @@ def _changes(spark):
 
 
 def test_starrocks_soft_delete_rows(spark):
-    """Default StarRocks path: deletes ride as upserts of the hidden sign
-    column; every row carries the version column; nulls serialize
-    explicitly."""
-    out = {r["seq"]: r for r in sl.stream_load_rows(_changes(spark), COLS).collect()}
-    r1 = json.loads(out[1]["row_json"])
-    assert r1 == {"id": 1, "name": "a", sl.SIGN_COL: 0, sl.VERSION_COL: 1_700_000_000_000}
-    assert json.loads(out[2]["row_json"])["name"] is None  # explicit null
-    d = json.loads(out[4]["row_json"])
-    assert d[sl.SIGN_COL] == 1 and d["id"] == 2  # delete = before image + sign
-    assert out[4]["op"] == ""  # soft delete is an upsert load
-    assert out[1]["url_path"] == "/api/db/t/_stream_load"
+    """Default StarRocks path: deletes ride in the upsert load as rows of the
+    hidden sign column; every row carries the version column; nulls
+    serialize explicitly."""
+    out = sl.stream_load_batches(_changes(spark), COLS).collect()
+    by = {(r["tb"], r["op"]): r for r in out}
+    assert set(by) == {("t", ""), ("u", "")}  # soft delete is an upsert load
+    up = by[("t", "")]
+    body = json.loads(up["body"])
+    assert body[0] == {"id": 1, "name": "a", sl.SIGN_COL: 0, sl.VERSION_COL: 1_700_000_000_000}
+    assert body[1]["name"] is None  # explicit null
+    assert body[3][sl.SIGN_COL] == 1 and body[3]["id"] == 2  # delete = before image + sign
+    assert up["url_path"] == "/api/db/t/_stream_load"
 
 
 def test_starrocks_hard_delete_batches(spark):

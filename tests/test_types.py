@@ -1,9 +1,8 @@
 """Type-fidelity matrix tests (SURVEY.md §1.2/§1.3; build plan step 3)."""
 
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ape_dts_spark.model.types import canonical_str, saturating_unsigned, spark_type_for, struct_for
+from ape_dts_spark.model.types import spark_type_for
 
 
 def test_unsigned_widening():
@@ -53,35 +52,6 @@ def test_pg_arrays():
     assert spark_type_for("int4[]") == T.ArrayType(T.IntegerType())
     assert spark_type_for("text[]") == T.ArrayType(T.StringType())
     assert spark_type_for("timestamptz[]") == T.ArrayType(T.TimestampType())
-
-
-def test_struct_for_order():
-    st = struct_for({"id": "bigint unsigned", "name": "varchar(64)"})
-    assert [f.name for f in st.fields] == ["id", "name"]
-    assert st["id"].dataType == T.DecimalType(20, 0)
-
-
-def test_canonical_str_and_nan(spark):
-    df = spark.createDataFrame(
-        [(b"\xde\xad", float("nan"), True), (b"\x01", 1.5, False)],
-        "b binary, d double, f boolean",
-    )
-    out = df.select(
-        canonical_str(F.col("b"), T.BinaryType()).alias("b"),
-        canonical_str(F.col("d"), T.DoubleType()).alias("d"),
-        canonical_str(F.col("f"), T.BooleanType()).alias("f"),
-    ).collect()
-    assert out[0]["b"] == "dead" and out[0]["d"] == "NaN" and out[0]["f"] == "1"
-    assert out[1]["b"] == "01" and out[1]["d"] == "1.5" and out[1]["f"] == "0"
-    # NaN == NaN under eqNullSafe — the checker relies on this
-    nan = df.filter(F.isnan("d")).select(F.col("d").eqNullSafe(float("nan"))).collect()
-    assert nan[0][0] is True
-
-
-def test_saturating_unsigned(spark):
-    df = spark.createDataFrame([(-5,), (300,), (100,)], "v long")
-    out = [int(r[0]) for r in df.select(saturating_unsigned(F.col("v"), 8)).collect()]
-    assert out == [0, 255, 100]
 
 
 def test_restore_zero_dates(spark):

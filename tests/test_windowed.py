@@ -113,54 +113,6 @@ def test_heartbeat_lag(spark, sf_dir):
     assert row["max_event_ts"] == ev_df.agg(F.max("ts")).collect()[0][0]
 
 
-def test_watermark_dedup_streaming_drops_replays(spark, tmp_path):
-    """dropDuplicatesWithinWatermark path: a replayed (id, seq) row inside
-    the watermark horizon is dropped; distinct seqs all pass."""
-    from ape_dts_spark.streaming.windowed import watermark_dedup
-
-    src = str(tmp_path / "wm_src")
-    os.makedirs(src)
-    rows = [
-        {"id": 1, "seq": 1, "ts": "2024-01-01T00:00:01"},
-        {"id": 1, "seq": 2, "ts": "2024-01-01T00:00:02"},
-        {"id": 1, "seq": 2, "ts": "2024-01-01T00:00:02"},  # replay
-        {"id": 2, "seq": 1, "ts": "2024-01-01T00:00:03"},
-    ]
-    import json as _json
-
-    with open(os.path.join(src, "b1.jsonl"), "w") as f:
-        for r in rows:
-            f.write(_json.dumps(r) + "\n")
-    stream = (
-        spark.readStream.schema("id long, seq long, ts string")
-        .json(src)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    )
-    out = watermark_dedup(stream, ["id", "seq"], "ts", "10 minutes")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("wm_dedup")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "wm_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {(r["id"], r["seq"]) for r in spark.sql("SELECT * FROM wm_dedup").collect()}
-    assert got == {(1, 1), (1, 2), (2, 1)}
-    assert spark.sql("SELECT COUNT(*) AS n FROM wm_dedup").collect()[0]["n"] == 3
-
-
-def test_watermark_dedup_batch_degrades(spark):
-    from ape_dts_spark.streaming.windowed import watermark_dedup
-
-    df = spark.createDataFrame(
-        [(1, 1, "2024-01-01 00:00:01"), (1, 1, "2024-01-01 00:00:01"), (2, 1, "2024-01-01 00:00:02")],
-        "id long, seq long, ts string",
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    assert watermark_dedup(df, ["id", "seq"], "ts").count() == 2
-
-
 def test_sliding_counts_every_event_in_two_buckets(spark, sf_dir):
     from ape_dts_spark import demo
     from ape_dts_spark.streaming import windowed as wd
