@@ -2550,8 +2550,8 @@ def q_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_embedding_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-family keep list: cosine near-dup pairs (threshold-adaptive
-    hyperplane LSH + bucket GEMM verify) clustered to (vec_id, rep_id)
-    min-label components — the consumable dedup output for the embedding
+    hyperplane LSH + bucket GEMM verify) clustered to (vec_id, rep_id =
+    component min) — the consumable dedup output for the embedding
     column, completing the family next to the text-side dedup_cluster."""
     emb = demo.load(spark, sf_dir, "embeddings")
     pairs = sim.cosine_dup_pairs(emb, "vec_id", "embedding", dim=64, threshold=0.35)
@@ -2584,13 +2584,12 @@ def q_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keep-list clustering: every doc mapped to the min-id representative of
     its near-dup connected component (minhash pairs at J>=0.95) — the output
     shape a training pipeline consumes (keep WHERE doc_id = rep_id), linear
-    in docs where the pair list is quadratic in group size. Engine is
-    auto-routed by edge count: metadata-sized edge sets (<=2M pairs — the
+    in docs where the pair list is quadratic in group size. The route is
+    picked by edge count: metadata-sized edge sets (<=2M pairs — the
     broadcast-join size judgment; sf0.1's 186k-edge graph qualifies) are
-    solved by union-find in ONE task, huge dense graphs run the
-    large-star/small-star engine whose edge set shrinks per round, huge
-    sparse graphs the min-label pointer-jumping path — identical contract,
-    same oracle."""
+    solved by union-find in ONE task, larger graphs run the
+    large-star/small-star rounds whose edge set shrinks per round —
+    identical contract, same oracle."""
     d = demo.load(spark, sf_dir, "documents")
     pairs = dd.minhash_lsh_pairs(d, "doc_id", "text", threshold=0.95)
     return dd.keep_representatives(d, "doc_id", pairs)

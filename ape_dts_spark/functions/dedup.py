@@ -878,7 +878,7 @@ def _single_task_labels(und: DataFrame, id_type) -> DataFrame:
     Deterministic: the representative is a pure min over the component
     (Python's str ordering is code-point order == Spark's UTF8 binary
     ordering, and numeric ids compare identically), so the output is
-    bit-identical to the iterative engines.
+    bit-identical to the star route.
     """
     from pyspark.sql import types as T
 
@@ -926,68 +926,35 @@ def _single_task_labels(und: DataFrame, id_type) -> DataFrame:
     return und.coalesce(1).mapInPandas(cc, schema)
 
 
-def keep_representatives(
-    df: DataFrame,
-    id_col: str,
-    pairs: DataFrame,
-    max_iter: int = 25,
-    engine: str = "auto",
-    star_edge_threshold: int = 50_000,
-    single_task_edge_threshold: int | None = None,
-) -> DataFrame:
+# Edge count at or below which keep_representatives solves the graph in one
+# task: tens of MB of id pairs, the same size judgment a broadcast join makes.
+_CC_SINGLE_TASK_EDGES = 2_000_000
+
+
+def keep_representatives(df: DataFrame, id_col: str, pairs: DataFrame) -> DataFrame:
     """Cluster/keep-list output for the dedup family: (doc_id, rep_id) where
     rep_id = the minimum doc id in the document's near-duplicate connected
     component (singletons keep themselves).
-
-    ``engine``: ``"auto"`` (default) counts the deduped edge list (already
-    materialized by the checkpoint, so the count is a metadata-cheap job) and
-    routes by scale: an edge set at or below ``single_task_edge_threshold``
-    (default ``$SPARK_GRAFT_CC_SINGLE_TASK_EDGES`` or 2M — tens of MB of id
-    pairs, the same size judgment a broadcast join makes) is solved in ONE
-    task by :func:`_single_task_labels` (union-find over the metadata-sized
-    edge list; zero per-round shuffles); larger graphs route dense —
-    ``|edges| >= star_edge_threshold`` — to :func:`keep_representatives_star`,
-    whose per-round edge set SHRINKS and whose hub neighborhoods split
-    across reducers, and sparse graphs to min-label propagation (which
-    re-shuffles the FULL edge list every round, so on a duplicate-heavy
-    corpus it pays ~rounds x |E| where star pays ~sum of a geometrically
-    decaying series). ``"minlabel"`` / ``"star"`` force a path. Contract is
-    identical on all paths (pure min over the component), so the routing is
-    invisible to callers and oracles.
 
     This is the shape a training pipeline actually consumes — ``keep rows
     WHERE doc_id = rep_id`` — and sidesteps the pair list's quadratic output
     on duplicate-heavy groups (a g-duplicate group emits C(g,2) pairs but only
     g assignment rows here).
 
-    Algorithm: min-label propagation with POINTER JUMPING — each round every
-    node takes min(own label, neighbors' labels), then shortcuts through its
-    label's label (path halving), so convergence is O(log diameter) rounds
-    instead of O(diameter): the sf0.1 near-threshold cosine graph needs 46
-    plain-propagation rounds but 7 with jumping, and a diameter larger than
-    the round cap used to return silently-partial components (caught by the
-    sf0.1 oracle check; now it raises instead). Each round is two joins +
-    one aggregation shuffle of |edges| rows. Deterministic (pure min), so
-    engine-portable. Every round ``localCheckpoint``s the label table:
-    persist alone leaves the logical plan growing (the self-referential join
-    doubles it per round and re-analysis goes exponential — measured 0.7s ->
-    30s by round 4); truncating lineage keeps rounds flat. On a cluster use
-    a reliable checkpoint dir or land labels to storage per round. At
-    extreme graph sizes the large-star/small-star alternation (Kiveris et
-    al., "Connected Components in MapReduce") is the same fixed point with
-    better skew behavior.
-    """
-    if engine not in ("auto", "minlabel", "star"):
-        raise ValueError(f"keep_representatives: unknown engine {engine!r}")
-    if single_task_edge_threshold is None:
-        import os
+    Two routes, picked by the size of the canonical edge set (materialized
+    once by a lazy checkpoint, so the routing count is the job that builds
+    it and neither route forces ``pairs`` — often an LSH join — again):
 
-        single_task_edge_threshold = int(
-            os.environ.get("SPARK_GRAFT_CC_SINGLE_TASK_EDGES", "2000000")
-        )
-    # canonical undirected edge set, materialized ONCE and shared by whichever
-    # engine runs (routing must not force pairs — often an LSH join — twice;
-    # lazy checkpoint: the routing count is the materializing action)
+    - at or below ``_CC_SINGLE_TASK_EDGES`` edges, :func:`_single_task_labels`
+      runs a union-find over the metadata-sized edge list in ONE task (zero
+      per-round shuffles);
+    - above it, :func:`_star_keep` runs the large-star/small-star
+      alternation (Kiveris et al., SoCC'14), whose per-round edge set
+      shrinks and whose hub neighborhoods split across reducers.
+
+    Both return the pure min over the component, so the routing is invisible
+    to callers and oracles.
+    """
     und = (
         pairs.select(
             F.greatest("id_a", "id_b").alias("id_a"), F.least("id_a", "id_b").alias("id_b")
@@ -997,114 +964,26 @@ def keep_representatives(
         .localCheckpoint(eager=False)
     )
     und_n = und.count()
-    nodes = df.select(F.col(id_col).alias("node")).distinct()
+    if und_n > _CC_SINGLE_TASK_EDGES:
+        return _star_keep(
+            df, id_col, und.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
+        )
     from pyspark.sql.types import NumericType
 
-    id_numeric = isinstance(df.schema[id_col].dataType, NumericType)
-    if engine == "auto" and und_n <= single_task_edge_threshold:
-        labels = _single_task_labels(und, df.schema[id_col].dataType)
-        # broadcast judgement in BYTES, not rows (ADVICE r17): the label
-        # table is bounded by 2x the edge threshold (up to ~4M rows at the
-        # 2M default). Numeric ids are 16 B/row (<= ~64 MB, safely inside a
-        # broadcast); wide string doc ids at the threshold boundary could
-        # reach hundreds of MB, so only force the hint below 500k edges and
-        # otherwise let the planner's own size estimate decide.
-        if id_numeric or und_n <= 500_000:
-            labels = F.broadcast(labels)
-        return nodes.join(labels, "node", "left").select(
-            F.col("node").alias("doc_id"),
-            F.coalesce("label", "node").alias("rep_id"),
-        )
-    if engine != "minlabel":
-        if engine == "star" or und_n >= star_edge_threshold:
-            return _star_keep(
-                df, id_col,
-                und.select(F.col("id_a").alias("u"), F.col("id_b").alias("v")),
-            )
-    edges = (
-        und.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .unionByName(und.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-        .localCheckpoint(eager=False)
-    )
-    # Iterate ONLY over nodes with at least one edge: singletons keep their
-    # own label and never change, so excluding them bounds every round's
-    # label table by 2|E| instead of |V| (on a web corpus the dup graph is
-    # sparse — most nodes are singletons) and re-attaching them is one final
-    # left join. That bound also makes the label tables broadcast-safe
-    # whenever the edge count is small: the min-label path only runs below
-    # star_edge_threshold edges, so the per-round join of a <= 2|E|-row
-    # label table can skip the shuffle entirely; huge graphs take the star
-    # engine (or forced minlabel with a raised threshold) and keep
-    # shuffle joins.
-    conn = edges.select("src").distinct().select(F.col("src").alias("node"))
-    # lazy checkpoints throughout the loop: the convergence witness is the
-    # first action over each round's label table, so ONE job both
-    # materializes the checkpoint and computes the witness (the old eager
-    # checkpoint + separate witness collect paid two jobs per round)
-    labels = conn.select("node", F.col("node").alias("label")).localCheckpoint(eager=False)
-    small = und_n < 500_000
-
-    def _b(d: DataFrame) -> DataFrame:
-        return F.broadcast(d) if small else d
-    # Convergence witness, one aggregate per round instead of the old
-    # join-old-vs-new + filter + count (a full |V| shuffle per round).
-    # Numeric ids: labels only ever DECREASE (pure min fold + least() jump),
-    # so the exact decimal sum is strictly decreasing and unchanged sum <=>
-    # no label changed — a PROOF, not a probability. Non-numeric ids (string
-    # doc keys): the decimal cast would go NULL (sum None every round -> a
-    # false stop after one iteration, ADVICE r11) and lexicographic min
-    # breaks the monotone-sum argument even for numeric strings — use the
-    # order-free xxhash64 signature over (node, label) instead, the same
-    # driver-side witness _star_keep uses (never lands in query output, so
-    # engine portability of xxhash64 is moot here). (`id_numeric` computed
-    # above, before engine routing.)
-
-    def _witness(lb: DataFrame):
-        if id_numeric:
-            row = lb.agg(F.sum(F.col("label").cast("decimal(38,0)")).alias("s")).collect()[0]
-            return ("sum", row["s"])
-        row = lb.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.expr("bit_xor(xxhash64(node, label))").alias("h"),
-        ).collect()[0]
-        return ("sig", row["n"], row["h"])
-
-    prev_sum = _witness(labels)
-    for _ in range(max_iter):
-        neigh = edges.join(
-            _b(labels.select(F.col("node").alias("dst"), F.col("label"))), "dst"
-        ).select(F.col("src").alias("node"), "label")
-        stepped = (
-            labels.unionByName(neigh)
-            .groupBy("node")
-            .agg(F.min("label").alias("label"))
-        )
-        # pointer jumping: label <- label(label). Labels only decrease, and
-        # every label value is itself a (connected) node, so the inner lookup
-        # always resolves; least() guards the identity case.
-        hop = stepped.select(F.col("node").alias("label"), F.col("label").alias("_l2"))
-        new_labels = (
-            stepped.join(_b(hop), "label")
-            .select("node", F.least("label", "_l2").alias("label"))
-            .localCheckpoint(eager=False)
-        )
-        cur_sum = _witness(new_labels)
-        labels = new_labels
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    else:
-        raise RuntimeError(
-            f"keep_representatives did not converge in {max_iter} rounds — "
-            "raise max_iter (components deeper than 2^max_iter hops)"
-        )
-    # singletons (no edges) kept their own id; re-attach them in one join
-    return (
-        nodes.join(labels, "node", "left")
-        .select(
-            F.col("node").alias("doc_id"),
-            F.coalesce("label", "node").alias("rep_id"),
-        )
+    id_type = df.schema[id_col].dataType
+    labels = _single_task_labels(und, id_type)
+    # broadcast judgement in BYTES, not rows (ADVICE r17): the label table is
+    # bounded by 2x the edge threshold (up to ~4M rows at 2M edges). Numeric
+    # ids are 16 B/row (<= ~64 MB, safely inside a broadcast); wide string
+    # doc ids at the threshold boundary could reach hundreds of MB, so only
+    # force the hint below 500k edges and otherwise let the planner's own
+    # size estimate decide.
+    if isinstance(id_type, NumericType) or und_n <= 500_000:
+        labels = F.broadcast(labels)
+    nodes = df.select(F.col(id_col).alias("node")).distinct()
+    return nodes.join(labels, "node", "left").select(
+        F.col("node").alias("doc_id"),
+        F.coalesce("label", "node").alias("rep_id"),
     )
 
 
@@ -1115,25 +994,27 @@ def keep_representatives_star(
     max_iter: int = 50,
 ) -> DataFrame:
     """Large-star / small-star connected components (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC'14) — the
-    extreme-scale alternative to :func:`keep_representatives`, with the
-    identical output contract: (doc_id, rep_id = min id in the component).
+    "Connected Components in MapReduce and Beyond", SoCC'14) — the route
+    :func:`keep_representatives` takes above its single-task bound, here
+    forced at every graph size, with the identical output contract: (doc_id,
+    rep_id = min id in the component).
 
-    Why a second engine: min-label propagation with pointer jumping runs
-    O(log diameter) rounds, but each round shuffles the FULL edge list and a
-    hub node's whole neighborhood lands in one reduce group. The star
-    alternation instead provably SHRINKS the edge set toward a star forest
-    (O(log^2 n) rounds worst case, 2-4 observed) and large-star splits hub
-    neighborhoods by the strictly-greater filter, so skew decays with the
-    edge set — the shape that survives a 100-TB dup graph with
-    celebrity-document hubs.
+    Why the distributed route is the star alternation: it provably SHRINKS
+    the edge set toward a star forest (O(log^2 n) rounds worst case, 2-4
+    observed) and large-star splits hub neighborhoods by the strictly-greater
+    filter, so skew decays with the edge set — the shape that survives a
+    100-TB dup graph with celebrity-document hubs. A label-propagation loop
+    would instead shuffle the FULL edge list every round and land a hub's
+    whole neighborhood in one reduce group.
 
     large-star(u): m = min(N(u) ∪ {u}); emit (v, m) for v ∈ N(u), v > u.
     small-star(u): over edges oriented (u, v<u): m = min(N_<(u)); emit
     (v, m) for v ∈ N_<(u) ∪ {u}. Alternate to fixed point (edge multiset
     stable), each phase two shuffles (groupBy min + re-join), self-loops
-    dropped, localCheckpoint per round to keep lineage flat (same rationale
-    as keep_representatives). Deterministic, engine-portable.
+    dropped, localCheckpoint per round to keep lineage flat (each round
+    reads the previous edge set twice, so without truncation the plan
+    doubles per round and its re-analysis goes exponential; on a cluster use
+    a reliable checkpoint dir). Deterministic, engine-portable.
     """
     # canonical undirected edge set (big, small), no self-loops
     edges = (
@@ -1155,9 +1036,9 @@ def _star_keep(
 ) -> DataFrame:
     """Star-alternation core over an ALREADY-canonical (u > v, distinct,
     checkpointed) edge set — shared by :func:`keep_representatives_star` and
-    the auto-routing path of :func:`keep_representatives`, which has the
+    the large-graph route of :func:`keep_representatives`, which has the
     canonical set in hand from its routing count and must not pay a second
-    distinct+checkpoint of the full edge list to enter this engine."""
+    distinct+checkpoint of the full edge list to enter this route."""
     nodes = df.select(F.col(id_col).alias("node")).distinct()
     prev_sig = None
     for _ in range(max_iter):

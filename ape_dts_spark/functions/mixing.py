@@ -291,7 +291,6 @@ def source_caps(
     group_col: str = "source",
     cap: int = 100,
     seed: int = 0,
-    two_level: bool = False,
 ) -> DataFrame:
     """Per-source document cap: keep at most ``cap`` documents from every
     source/domain, chosen deterministically pseudo-randomly — the host-level
@@ -305,39 +304,9 @@ def source_caps(
 
     Scale shape: one hash shuffle on ``group_col`` + a per-group window —
     identical to stratified_quota. Skew note: a megadomain makes one hot
-    partition; ``two_level=True`` is the 100-TB path — salt the group, take
-    the per-salt top-cap, re-rank the <= n_salts*cap survivors (the standard
-    top-k-per-key refinement; output proven identical to the one-window
-    path, see inline argument).
+    partition.
     """
     h = _scramble_expr(id_col, seed)
-    if two_level:
-        # megadomain skew path: one domain holding a large corpus share makes
-        # the single-window partition a straggler. Salt the group 
-        # (n_salts ~ parallelism), take the per-salt top-cap (each salt
-        # partition is ~1/n_salts of the domain), then re-rank only the
-        # <= n_salts*cap survivors in the final window. Any row with final
-        # rank <= cap has at most cap-1 rows ahead of it globally, and every
-        # globally-top-cap row survives its salt's cut (a salt holds at most
-        # cap of the global top-cap), so the output is IDENTICAL to the
-        # one-window path — the standard distributed top-k-per-key shape.
-        n_salts = 16
-        salted = df.select(group_col, id_col).withColumn(
-            "_salt", F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_salts))
-        )
-        w1 = Window.partitionBy(group_col, "_salt").orderBy(
-            F.expr(h).asc(), F.col(id_col).asc()
-        )
-        survivors = (
-            salted.withColumn("_rk1", F.row_number().over(w1))
-            .filter(F.col("_rk1") <= cap)
-        )
-        w2 = Window.partitionBy(group_col).orderBy(F.expr(h).asc(), F.col(id_col).asc())
-        return (
-            survivors.withColumn("rk", F.row_number().over(w2).cast("long"))
-            .filter(F.col("rk") <= cap)
-            .select(id_col, group_col, "rk")
-        )
     w = Window.partitionBy(group_col).orderBy(F.expr(h).asc(), F.col(id_col).asc())
     return (
         df.select(group_col, id_col)
@@ -391,7 +360,7 @@ def temperature_mix(
     Scale shape: one per-source count agg (map-side combined), a broadcast
     of the tiny (n_sources)-row quota table, one per-source window — one
     data shuffle end to end. The same megadomain-skew note as source_caps
-    applies to the window at 100 TB (two-level salted top-k).
+    applies to the window.
     """
     counts = df.groupBy(group_col).agg(F.count(F.lit(1)).alias("n"))
     weights = counts.withColumn(

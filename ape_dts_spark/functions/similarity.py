@@ -595,8 +595,8 @@ def semantic_dedup(
     vectors always co-cluster (argmax over the same centroid scores), so
     exact-duplicate recall is 1 regardless of the clustering quality.
 
-    Components are resolved with the same min-label propagation as the text
-    dedup family (dedup.keep_representatives).
+    Components are resolved by the same connected-components routes as the
+    text dedup family (dedup.keep_representatives).
     """
     import numpy as np
     import pandas as pd

@@ -1270,35 +1270,24 @@ def bpe_learn(df: DataFrame, text_col: str = "text", k: int = 6) -> DataFrame:
     )
 
 
-def _tokenizer_single_task_words() -> int:
-    """Vocab-size bound for the single-task tokenizer-training route
-    (``$SPARK_GRAFT_TOKENIZER_SINGLE_TASK_WORDS``, default 200k rows).
+# Vocab-size bound for the single-task tokenizer-training route. All the
+# iterated trainers (BPE / WordPiece / unigram EM) first compress the corpus
+# to the weighted distinct-word relation — O(vocab), not O(corpus) — and then
+# pay per-iteration job/shuffle/collect overhead that dwarfs the compute when
+# the vocabulary is metadata-sized. At or below this many rows the whole
+# K-step loop runs in ONE task (a mapInPandas kernel over the coalesced
+# vocab), exactly the keep_representatives union-find pattern; larger
+# vocabularies keep the distributed loops. The bound is a row-count contract
+# on the vocabulary (Heaps-law bounded), not a local-core constant.
+_TOKENIZER_SINGLE_TASK_WORDS = 200_000
 
-    All the iterated trainers (BPE / WordPiece / unigram EM) first compress
-    the corpus to the weighted distinct-word relation — O(vocab), not
-    O(corpus) — and then pay per-iteration job/shuffle/collect overhead that
-    dwarfs the compute when the vocabulary is metadata-sized. Below this
-    bound the whole K-step loop runs in ONE task (a mapInPandas kernel over
-    the coalesced vocab), exactly the keep_representatives union-find
-    pattern; larger vocabularies keep the distributed loops. The bound is a
-    row-count contract on the vocabulary (Heaps-law bounded), not a
-    local-core constant."""
-    import os
-
-    return int(os.environ.get("SPARK_GRAFT_TOKENIZER_SINGLE_TASK_WORDS", "200000"))
-
-
-def _trainer_single_task_rows() -> int:
-    """Feature-row bound for the single-task perceptron/langid trainer route
-    (``$SPARK_GRAFT_TRAINER_SINGLE_TASK_ROWS``, default 2M — tens of MB of
-    (doc, bucket, cnt) ints, the same size-class judgment as the
-    connected-components single-task threshold). Below it the K full-batch
-    iterations run as ONE vectorized numpy task instead of 2 x iters
-    distributed jobs + iters driver round-trips; above it the distributed
-    loop is unchanged."""
-    import os
-
-    return int(os.environ.get("SPARK_GRAFT_TRAINER_SINGLE_TASK_ROWS", "2000000"))
+# Feature-row bound for the single-task perceptron/langid trainer route: tens
+# of MB of (doc, bucket, cnt) ints, the same size-class judgment as the
+# connected-components single-task bound. At or below it the K full-batch
+# iterations run as ONE vectorized numpy task instead of 2 x iters
+# distributed jobs + iters driver round-trips; above it the distributed loop
+# runs.
+_TRAINER_SINGLE_TASK_ROWS = 2_000_000
 
 
 def _bpe_merge_step(syms: list[str], a: str, b: str) -> list[str]:
@@ -1389,7 +1378,7 @@ def _bpe_train(df: DataFrame, text_col: str, k: int):
     ).localCheckpoint(eager=False)
     # vocab-bounded single-task route (guide §1.2: the per-iteration
     # job/shuffle/collect overhead IS the cost at metadata-sized vocabs)
-    if words.count() <= _tokenizer_single_task_words():
+    if words.count() <= _TOKENIZER_SINGLE_TASK_WORDS:
         return _bpe_train_single_task(words, k)
     # lazy checkpoints throughout the loop: each step's winner collect is the
     # first action over the current symbol relation, so ONE job both
@@ -1671,7 +1660,7 @@ def perceptron_train(
     # feature-row-bounded single-task route (guide §1.2: 2 x iters jobs +
     # iters driver round-trips collapse into ONE vectorized task; the math
     # is the same order-independent integer sums)
-    if feats.count() <= _trainer_single_task_rows():
+    if feats.count() <= _TRAINER_SINGLE_TASK_ROWS:
 
         def kernel(it):
             import numpy as np
@@ -1946,7 +1935,7 @@ def _unigram_train(
     # lazy: the seed-candidate collects are the materializing action
     chunks = _unigram_chunks(df, text_col, max_word).localCheckpoint(eager=False)
     # vocab-bounded single-task route (guide §1.2), see _bpe_train
-    if chunks.count() <= _tokenizer_single_task_words():
+    if chunks.count() <= _TOKENIZER_SINGLE_TASK_WORDS:
         return _unigram_train_single_task(chunks, vocab_size, rounds, max_piece), chunks
     seed_size = 4 * vocab_size
     cand = (
@@ -2207,10 +2196,10 @@ def langid_train(
         eager=False
     )
     k = len(langs)
-    # feature-row-bounded single-task route (see _trainer_single_task_rows):
+    # feature-row-bounded single-task route (see _TRAINER_SINGLE_TASK_ROWS):
     # the one-vs-rest iterations are order-independent integer sums, so the
     # whole loop vectorizes into one numpy task emitting the k x dim table
-    if feats.count() <= _trainer_single_task_rows():
+    if feats.count() <= _TRAINER_SINGLE_TASK_ROWS:
         langs_t = tuple(langs)
 
         def kernel(it):
@@ -2609,7 +2598,7 @@ def _wordpiece_train(df: DataFrame, text_col: str, k: int):
     # relation in the same job (see _bpe_train)
     syms = _wordpiece_syms(df, text_col).localCheckpoint(eager=False)
     # vocab-bounded single-task route (guide §1.2), see _bpe_train
-    if syms.count() <= _tokenizer_single_task_words():
+    if syms.count() <= _TOKENIZER_SINGLE_TASK_WORDS:
         return _wordpiece_train_single_task(syms, k)
     merges = []
     for step in range(1, k + 1):

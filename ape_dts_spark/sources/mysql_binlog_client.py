@@ -255,11 +255,10 @@ class MysqlBinlogClient:
         part1 = greeting[i : i + 8]
         i += 8 + 1  # filler
         i += 2 + 1 + 2 + 2  # cap_low, charset, status, cap_high
-        auth_len = greeting[i]
-        i += 1 + 10  # reserved
-        part2_len = max(13, auth_len - 8)
-        part2 = greeting[i : i + part2_len].rstrip(b"\x00")
-        scramble = part1 + part2[:12]
+        i += 1 + 10  # auth data length, reserved
+        # part 2 is 12 scramble bytes plus a NUL terminator; a scramble byte
+        # may itself be 0x00, so cut by length, never by stripping NULs
+        scramble = part1 + greeting[i : i + 12]
         caps = (
             CLIENT_LONG_PASSWORD | CLIENT_PROTOCOL_41
             | CLIENT_SECURE_CONNECTION | CLIENT_PLUGIN_AUTH

@@ -125,6 +125,9 @@ _DEDUP_OUT_SCHEMA = (
     "schema string, tb string, row_type string, seq long, key string"
 )
 _DEDUP_COLS = ["schema", "tb", "row_type", "seq", "key"]
+# hash buckets per (schema, tb); each is one state group, so one Python call
+# per bucket per trigger
+_STATE_BUCKETS = 64
 
 
 def _dedup_fn(key: tuple, pdfs, state: GroupState):
@@ -171,9 +174,7 @@ def _dedup_fn(key: tuple, pdfs, state: GroupState):
     state.update((list(last.keys()), [int(v) for v in last.values()]))
 
 
-def stateful_seq_dedup(
-    changes: DataFrame, key_cols: list[str], n_buckets: int | None = None
-) -> DataFrame:
+def stateful_seq_dedup(changes: DataFrame, key_cols: list[str]) -> DataFrame:
     """Custom stateful streaming operator: per-key monotonic-seq filter.
 
     Input: the canonical change stream. Output: the stream minus replays
@@ -187,16 +188,10 @@ def stateful_seq_dedup(
     dominated the operator (measured: the whole gate ~13 s with per-key
     groups). Bucketing keeps state partitioning deterministic (xxhash64 of
     the key, stable across triggers) while the per-bucket function handles
-    its keys vectorized. ``n_buckets`` scales with key cardinality /
-    cluster width, not event volume — default 64
-    (``$SPARK_GRAFT_STATE_BUCKETS``), giving every state partition a few
-    groups at any realistic shuffle width; results are bucket-count
+    its keys vectorized. ``_STATE_BUCKETS`` gives every state partition a
+    few groups at any realistic shuffle width; results are bucket-count
     independent.
     """
-    import os
-
-    if n_buckets is None:
-        n_buckets = int(os.environ.get("SPARK_GRAFT_STATE_BUCKETS", "64"))
     key = F.concat_ws(
         "\x01",
         *[
@@ -211,7 +206,7 @@ def stateful_seq_dedup(
     )
     slim = changes.select(
         "schema", "tb", "row_type", "seq", key.alias("key")
-    ).withColumn("_bucket", F.pmod(F.xxhash64("key"), F.lit(n_buckets)))
+    ).withColumn("_bucket", F.pmod(F.xxhash64("key"), F.lit(_STATE_BUCKETS)))
     return slim.groupBy("schema", "tb", "_bucket").applyInPandasWithState(
         _dedup_fn,
         outputStructType=_DEDUP_OUT_SCHEMA,

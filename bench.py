@@ -241,7 +241,7 @@ BENCH_QUERIES = [
     "temperature_mix",
     "cheapest_shipment",
     "ccnet_buckets",
-    # keep-list clustering (minhash pairs + min-label connected components):
+    # keep-list clustering (minhash pairs + connected components):
     # ordered BEFORE the ann micro-queries so the engine-defining CC rows are
     # never the budget victims (r9 skipped dedup_cluster_star; the ~1-3s ann
     # entries below are the right thing to shed under host-load bursts)

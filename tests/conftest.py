@@ -1,11 +1,12 @@
 import sys
 import uuid
 from contextlib import contextmanager
+from pathlib import Path
 from types import SimpleNamespace
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from ape_dts_spark.session import get_spark
 

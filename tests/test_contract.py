@@ -3,8 +3,9 @@ gated, no orphan oracles, and the 50-slot correctness window stays fully
 populated (the external gate checks only the first 50 dict entries)."""
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 
 def test_every_query_is_oracle_gated():

@@ -677,49 +677,56 @@ def test_interval_join_hand_case(spark):
     assert out == {(100, 900), (101, 901), (102, 901)}
 
 
-def test_keep_representatives_long_chain_converges(spark):
-    """A 200-hop path graph needs 200 plain-propagation rounds but only
-    O(log) with pointer jumping — the silent-truncation regression caught by
-    the sf0.1 oracle check (46-hop chains vs max_iter=25)."""
+def _both_cc_routes(monkeypatch, run):
+    """``run()`` on keep_representatives' single-task route (the default at
+    test sizes), then on its star route (single-task bound forced to 0)."""
+    single = run()
+    monkeypatch.setattr(dd, "_CC_SINGLE_TASK_EDGES", 0)
+    star = run()
+    monkeypatch.undo()
+    return single, star
+
+
+def test_keep_representatives_long_chain_converges(spark, monkeypatch):
+    """A 200-hop path graph converges fully to its min on both routes — the
+    silent-truncation regression caught by the sf0.1 oracle check (46-hop
+    chains vs a fixed round cap)."""
     n = 200
     docs = spark.createDataFrame([(i,) for i in range(n)], ["doc_id"])
     pairs = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], ["id_a", "id_b"])
-    out = {r["doc_id"]: r["rep_id"] for r in
-           dd.keep_representatives(docs, "doc_id", pairs, max_iter=15,
-                                   engine="minlabel").collect()}
-    assert all(v == 0 for v in out.values())
+    for out in _both_cc_routes(monkeypatch, lambda: {
+            r["doc_id"]: r["rep_id"] for r in
+            dd.keep_representatives(docs, "doc_id", pairs).collect()}):
+        assert len(out) == n and all(v == 0 for v in out.values())
 
 
-def test_keep_representatives_string_ids_converge(spark):
-    """ADVICE r11: with string doc ids the decimal-cast sum witness went
-    NULL and stopped after ONE round (None == None), silently returning
-    unconverged clusters. The witness now routes by id type: a 6-hop chain
-    of string ids — including numeric strings, where lexicographic min
-    ordering ('10' < '9') breaks the monotone-sum argument — must still
-    fully converge to the lexicographic component min."""
+def test_keep_representatives_string_ids_converge(spark, monkeypatch):
+    """String doc ids must not stop a route early (ADVICE r11: a witness once
+    did after ONE round). On both routes a 6-hop chain of string ids — and
+    numeric strings, where the min is LEXICOGRAPHIC ('10' < '2' < '9') —
+    converges to the lexicographic component min (the single-task route's
+    Python min must agree with Spark's UTF8 ordering)."""
     ids = ["d-%02d" % i for i in range(7)]
     docs = spark.createDataFrame([(i,) for i in ids], ["doc_id"])
     pairs = spark.createDataFrame(
         [(ids[i], ids[i + 1]) for i in range(6)], ["id_a", "id_b"]
     )
-    out = {r["doc_id"]: r["rep_id"] for r in
-           dd.keep_representatives(docs, "doc_id", pairs,
-                                   engine="minlabel").collect()}
-    assert all(v == "d-00" for v in out.values()), out
-    # numeric strings: min is LEXICOGRAPHIC ('10' < '2' < '9') — on BOTH the
-    # iterative engine and the single-task union-find (default auto route,
-    # whose Python min must agree with Spark's UTF8 ordering)
+    for out in _both_cc_routes(monkeypatch, lambda: {
+            r["doc_id"]: r["rep_id"] for r in
+            dd.keep_representatives(docs, "doc_id", pairs).collect()}):
+        assert out == {i: "d-00" for i in ids}, out
     docs2 = spark.createDataFrame([("9",), ("10",), ("2",)], ["doc_id"])
     pairs2 = spark.createDataFrame([("9", "10"), ("10", "2")], ["id_a", "id_b"])
-    for kw in ({"engine": "minlabel"}, {"engine": "auto"}):
-        out2 = {r["doc_id"]: r["rep_id"] for r in
-                dd.keep_representatives(docs2, "doc_id", pairs2, **kw).collect()}
-        assert out2 == {"9": "10", "10": "10", "2": "10"}, (kw, out2)
+    for out2 in _both_cc_routes(monkeypatch, lambda: {
+            r["doc_id"]: r["rep_id"] for r in
+            dd.keep_representatives(docs2, "doc_id", pairs2).collect()}):
+        assert out2 == {"9": "10", "10": "10", "2": "10"}, out2
 
 
 def test_star_components_matches_jump_engine(spark):
-    """Large-star/small-star fixed point == pointer-jumping labels on a mixed
-    graph (chain + triangle + singleton + reversed-order pairs)."""
+    """Large-star/small-star fixed point == keep_representatives' default
+    (single-task union-find) labels on a mixed graph (chain + triangle +
+    singleton + reversed-order pairs)."""
     docs = spark.createDataFrame([(i,) for i in range(1, 12)], ["doc_id"])
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (5, 6), (6, 7), (7, 5), (9, 8), (10, 11)],
@@ -734,36 +741,27 @@ def test_star_components_matches_jump_engine(spark):
                     8: 8, 9: 8, 10: 10, 11: 10}
 
 
-def test_keep_representatives_engine_routing(spark):
-    """engine= forcing and the auto thresholds all land on the same labels;
-    tiny/huge thresholds provably route auto through every core (single-task
-    union-find, star, minlabel)."""
+def test_keep_representatives_engine_routing(spark, monkeypatch):
+    """Both routes of keep_representatives (single-task union-find for 7
+    edges, star once the bound is 0) and the forced star entry land on the
+    same labels."""
     docs = spark.createDataFrame([(i,) for i in range(1, 12)], ["doc_id"])
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (5, 6), (6, 7), (7, 5), (9, 8), (10, 11), (2, 1)],
         ["id_a", "id_b"],
     )
     want = {1: 1, 2: 1, 3: 1, 4: 4, 5: 5, 6: 5, 7: 5, 8: 8, 9: 8, 10: 10, 11: 10}
-    for kw in (
-        {"engine": "minlabel"},
-        {"engine": "star"},
-        {"engine": "auto"},  # auto -> single-task union-find (7 edges << 2M)
-        {"engine": "auto", "single_task_edge_threshold": 0,
-         "star_edge_threshold": 1},  # auto -> star core
-        {"engine": "auto", "single_task_edge_threshold": 0,
-         "star_edge_threshold": 10**9},  # auto -> minlabel
-    ):
-        got = {r["doc_id"]: r["rep_id"] for r in
-               dd.keep_representatives(docs, "doc_id", pairs, **kw).collect()}
-        assert got == want, kw
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        dd.keep_representatives(docs, "doc_id", pairs, engine="boop")
+    for got in _both_cc_routes(monkeypatch, lambda: {
+            r["doc_id"]: r["rep_id"] for r in
+            dd.keep_representatives(docs, "doc_id", pairs).collect()}):
+        assert got == want
+    assert {r["doc_id"]: r["rep_id"] for r in
+            dd.keep_representatives_star(docs, "doc_id", pairs).collect()} == want
 
 
 def test_single_task_cc_matches_iterative_engines(spark):
     """The single-task union-find route is bit-identical to the distributed
-    engines on a pseudo-random multi-component graph (chains, cliques,
+    star route on a pseudo-random multi-component graph (chains, cliques,
     duplicate and reversed edges, singletons)."""
     import random
 
@@ -780,7 +778,7 @@ def test_single_task_cc_matches_iterative_engines(spark):
     local = {r["doc_id"]: r["rep_id"] for r in
              dd.keep_representatives(docs, "doc_id", pairs).collect()}
     star = {r["doc_id"]: r["rep_id"] for r in
-            dd.keep_representatives(docs, "doc_id", pairs, engine="star").collect()}
+            dd.keep_representatives_star(docs, "doc_id", pairs).collect()}
     assert local == star
     # singletons (400..419) keep themselves
     assert all(local[i] == i for i in range(400, 420))
@@ -788,8 +786,8 @@ def test_single_task_cc_matches_iterative_engines(spark):
 
 def test_star_components_long_path_round_bound(spark):
     """A 10k-node path graph converges in ~log rounds, nowhere near the
-    diameter — the 100-TB adversarial-graph property the jump engine lacks
-    a proof for. max_iter=20 would fail if rounds ~ diameter (9999)."""
+    diameter — the 100-TB adversarial-graph property of the star route.
+    max_iter=20 would fail if rounds ~ diameter (9999)."""
     n = 10_000
     docs = spark.createDataFrame([(i,) for i in range(n)], ["doc_id"])
     pairs = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], ["id_a", "id_b"])
@@ -1184,9 +1182,9 @@ def test_tokenizer_single_task_matches_distributed(spark, monkeypatch):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
     def both(fn):
-        monkeypatch.setenv("SPARK_GRAFT_TOKENIZER_SINGLE_TASK_WORDS", "0")
+        monkeypatch.setattr(tx, "_TOKENIZER_SINGLE_TASK_WORDS", 0)
         dist = sorted(tuple(r) for r in fn().collect())
-        monkeypatch.setenv("SPARK_GRAFT_TOKENIZER_SINGLE_TASK_WORDS", "200000")
+        monkeypatch.undo()
         single = sorted(tuple(r) for r in fn().collect())
         assert dist == single
 
@@ -1213,9 +1211,9 @@ def test_perceptron_single_task_matches_distributed(spark, monkeypatch):
     docs = spark.createDataFrame(rows, "doc_id long, text string, lang string")
 
     def both(fn):
-        monkeypatch.setenv("SPARK_GRAFT_TRAINER_SINGLE_TASK_ROWS", "0")
+        monkeypatch.setattr(tx, "_TRAINER_SINGLE_TASK_ROWS", 0)
         dist = sorted(tuple(r) for r in fn().collect())
-        monkeypatch.setenv("SPARK_GRAFT_TRAINER_SINGLE_TASK_ROWS", "2000000")
+        monkeypatch.undo()
         single = sorted(tuple(r) for r in fn().collect())
         assert dist == single
         assert any(any(v not in (None, 0) for v in t[1:]) for t in dist)

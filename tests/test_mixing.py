@@ -155,6 +155,17 @@ def test_source_caps_exact_cap_and_stability(spark):
     small = {r["doc_id"] for r in out.collect()}
     big = {r["doc_id"] for r in out5.collect()}
     assert small < big
+    # skewed corpus: one 5000-doc megadomain beside seven 10-doc sources —
+    # the megadomain keeps exactly ranks 1..cap, the small sources pass whole
+    rows = [(i, "mega") for i in range(5000)] + [
+        (10_000 + i, f"s{i % 7}") for i in range(70)
+    ]
+    skewed = spark.createDataFrame(rows, "doc_id long, source string")
+    ranks: dict = {}
+    for r in mx.source_caps(skewed, cap=40, seed=5).collect():
+        ranks.setdefault(r["source"], []).append(r["rk"])
+    assert sorted(ranks["mega"]) == list(range(1, 41))
+    assert {s: len(v) for s, v in ranks.items() if s != "mega"} == {f"s{i}": 10 for i in range(7)}
 
 
 def test_source_caps_seed_changes_membership(spark):
@@ -162,23 +173,6 @@ def test_source_caps_seed_changes_membership(spark):
     a = {r["doc_id"] for r in mx.source_caps(df, "doc_id", "source", 30, seed=0).collect()}
     b = {r["doc_id"] for r in mx.source_caps(df, "doc_id", "source", 30, seed=1).collect()}
     assert len(a) == len(b) == 30 and a != b
-
-
-def test_source_caps_two_level_identical_to_plain(spark):
-    """The salted two-level top-k must select EXACTLY the one-window rows —
-    including ranks — on a skewed corpus (one megadomain, several small)."""
-    from ape_dts_spark.functions.mixing import source_caps
-
-    rows = [(i, "mega") for i in range(5000)] + [
-        (10_000 + i, f"s{i % 7}") for i in range(70)
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, source string")
-    plain = {(r["doc_id"], r["source"], r["rk"])
-             for r in source_caps(df, cap=40, seed=5).collect()}
-    salted = {(r["doc_id"], r["source"], r["rk"])
-              for r in source_caps(df, cap=40, seed=5, two_level=True).collect()}
-    assert salted == plain
-    assert sum(1 for d, s, _ in plain if s == "mega") == 40
 
 
 def test_unimax_water_filling(spark):

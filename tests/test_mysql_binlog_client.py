@@ -116,6 +116,27 @@ def test_auth_rejected_and_unknown_file():
         srv.stop()
 
 
+def test_scramble_ending_in_nul_authenticates(monkeypatch):
+    """The 20-byte scramble is random, so its tail can be 0x00 (about one
+    handshake in 256). The client must hash all 20 bytes, not the scramble
+    with its trailing NULs stripped as if they were the terminator."""
+    from ape_dts_spark.sources import fake_servers
+
+    token_bytes = fake_servers.secrets.token_bytes
+    scramble = bytes(range(1, 19)) + b"\x00\x00"
+    monkeypatch.setattr(fake_servers.secrets, "token_bytes",
+                        lambda n: scramble if n == 20 else token_bytes(n))
+    srv = FakeMysqlServer({}, password="pw")
+    srv.start()
+    client = MysqlBinlogClient("127.0.0.1", srv.port, password="pw", timeout=5)
+    try:
+        client.connect()
+        client.query_ok("SELECT 1")
+    finally:
+        client.close()
+        srv.stop()
+
+
 @pytest.mark.parametrize("gtid", [False, True])
 @pytest.mark.parametrize("blob", [
     b"not a binlog at all",

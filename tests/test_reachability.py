@@ -13,6 +13,10 @@ A def that nothing in production reaches is either deleted together with its
 tests or listed in ``KEEP`` with the reason it stays. ``KEEP`` is checked both
 ways, so it cannot go stale: an entry that no longer exists fails, and so does
 one that a production line outside the ``KEEP`` defs now reaches.
+
+The same walk guards the package's environment reads: each must name a
+deployment setting in ``DEPLOYMENT_ENV``. A value that picks a route or tunes
+an operator is worked out from the input or is a module constant, not a knob.
 """
 
 from __future__ import annotations
@@ -136,3 +140,51 @@ def test_keep_list_is_current():
     wired = sorted(set(KEEP) & reached)
     assert not wired, f"KEEP names defs that production now reaches: {wired}"
     assert all(reason.strip() for reason in KEEP.values())
+
+
+DEPLOYMENT_ENV: dict[str, str] = {
+    "SPARK_GRAFT_CPUS": "local-mode core count: the cores the deployment grants, "
+                        "which os.cpu_count() cannot see under a CPU quota",
+    "SPARK_DRIVER_MEMORY": "driver JVM heap: the memory the deployment grants",
+    "SPARK_GRAFT_STREAM_SHUFFLE": "state-partition width of a stream, pinned into "
+                                  "its checkpoint; sized to the deployment's keyed state",
+}
+
+
+def _env_reads() -> list[tuple[str, str | None]]:
+    """("file:line", variable name) for every ``os.environ`` / ``getenv`` use
+    in the package; the name is None when it is not a string literal."""
+    reads = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        parent = {c: n for n in ast.walk(tree) for c in ast.iter_child_nodes(n)}
+        for node in ast.walk(tree):
+            name = node.attr if isinstance(node, ast.Attribute) else getattr(node, "id", None)
+            if name not in ("environ", "getenv"):
+                continue
+            up = parent.get(node)
+            if isinstance(up, ast.Attribute):  # os.environ.get(...)
+                up = parent.get(up)
+            key = None
+            if isinstance(up, ast.Call) and up.args:
+                key = up.args[0]
+            elif isinstance(up, ast.Subscript):
+                key = up.slice
+            elif isinstance(up, ast.Compare):  # "X" in os.environ
+                key = up.left
+            literal = isinstance(key, ast.Constant) and isinstance(key.value, str)
+            reads.append((f"{path.relative_to(ROOT)}:{node.lineno}",
+                          key.value if literal else None))
+    return reads
+
+
+def test_environment_reads_are_deployment_settings():
+    reads = _env_reads()
+    knobs = [(where, name) for where, name in reads if name not in DEPLOYMENT_ENV]
+    assert not knobs, (
+        f"environment reads that are not deployment settings: {knobs}. Derive the "
+        "value from the input or make it a module constant; a real deployment "
+        "setting goes into DEPLOYMENT_ENV with its reason."
+    )
+    gone = sorted(set(DEPLOYMENT_ENV) - {name for _, name in reads})
+    assert not gone, f"DEPLOYMENT_ENV names variables the package no longer reads: {gone}"

@@ -4,6 +4,7 @@ prepare -> run task -> compare target to source, dt-tests/README.md)."""
 
 import json
 import os
+from pathlib import Path
 
 from ape_dts_spark.config.task_config import TaskConfig
 from ape_dts_spark.streaming.cdc import write_debezium_jsonl
@@ -285,10 +286,9 @@ def test_cli_main(spark, tmp_path, capsys):
 def test_example_configs_parse_and_registry_flows(spark, tmp_path):
     """examples/*.ini stay parseable, and the [registry] section feeds key
     columns into check/revise tasks (information_schema stand-in)."""
-    import glob
-
-    for path in sorted(glob.glob("/root/repo/examples/*.ini")):
-        cfg = TaskConfig.from_file(path)
+    examples = Path(__file__).resolve().parents[1] / "examples"
+    for path in sorted(examples.glob("*.ini")):
+        cfg = TaskConfig.from_file(str(path))
         assert cfg.extractor.get("extract_type") in ("snapshot", "check", "check_log", "cdc"), path
 
     cfg = TaskConfig.from_string(

@@ -12,10 +12,11 @@ import math
 import os
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
