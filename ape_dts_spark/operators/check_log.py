@@ -9,6 +9,11 @@ base_check_extractor.rs:16-84): revise re-reads the flagged rows from source
 and upserts them; review re-runs the check on only the flagged keys
 (dt-tests/tests/mysql_to_mysql/review/).
 
+Like the reference's task-level log, a check task writes one log: every
+table's lines go out in one Spark write, and each line names its own
+``schema``/``tb``. On disk each table keeps its own directory,
+``check_{tb}/check_class={miss,diff,extra}/*.txt``, which revise reads.
+
 Spark-native: the log is a DataFrame written/read as JSONL; review is the
 same full-outer-join checker (operators/checker.py) with both sides
 semi-joined down to the flagged keys first — at 100 TB the semi-join prunes
@@ -17,6 +22,10 @@ broadcast.
 """
 
 from __future__ import annotations
+
+import os
+import shutil
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -45,11 +54,35 @@ def to_check_log(diff_df: DataFrame, key_cols: list[str], schema: str, tb: str) 
     return diff_df.select(F.col("check_class"), log.alias("log"))
 
 
-def write_check_log(diff_df: DataFrame, key_cols: list[str], schema: str, tb: str, path: str) -> None:
-    """Persist miss/diff logs partitioned by class (miss.log / diff.log twin)."""
-    to_check_log(diff_df, key_cols, schema, tb).write.partitionBy("check_class").mode(
-        "overwrite"
-    ).text(path)
+def write_check_log(checks: dict[str, tuple[DataFrame, list[str]]], schema: str, path: str) -> None:
+    """Persist one task's check log: ``checks`` maps each table to its
+    checker output and key columns.
+
+    All tables' lines go out in one write, partitioned by table and class,
+    into a staging directory under ``path``; driver-side renames then move
+    each table's class directories to ``path/check_{tb}/`` (replacing what a
+    previous run left there) and mark it with ``_SUCCESS``. A table with no
+    findings still gets its (empty) directory."""
+    if not checks:
+        return
+    # partition by the table's position, not its name, which Spark would
+    # path-escape in the directory name
+    logs = [
+        to_check_log(diff_df, key_cols, schema, tb).withColumn("tb_idx", F.lit(i))
+        for i, (tb, (diff_df, key_cols)) in enumerate(checks.items())
+    ]
+    staging = os.path.join(path, "_check_log_staging")
+    reduce(DataFrame.unionByName, logs).write.partitionBy("tb_idx", "check_class").mode("overwrite").text(staging)
+    for i, tb in enumerate(checks):
+        out = os.path.join(path, f"check_{tb}")
+        shutil.rmtree(out, ignore_errors=True)
+        written = os.path.join(staging, f"tb_idx={i}")
+        if os.path.isdir(written):
+            os.rename(written, out)
+        else:
+            os.makedirs(out)
+        open(os.path.join(out, "_SUCCESS"), "w").close()
+    shutil.rmtree(staging, ignore_errors=True)
 
 
 def read_check_log_keys(spark: SparkSession, path: str, key_cols: list[str], key_schema: str) -> DataFrame:

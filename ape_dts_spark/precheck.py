@@ -26,6 +26,7 @@ from pyspark.sql import types as T
 
 from ape_dts_spark import session
 from ape_dts_spark.config.rdb_filter import RdbFilter
+from ape_dts_spark.sources.snapshot import read_parquet
 
 
 @dataclass
@@ -47,7 +48,7 @@ def check_source_readable(spark: SparkSession, sf_dir: str, tables: list[str]) -
             out.append(CheckResult("source_readable", tb, False, f"missing {path}"))
             continue
         try:
-            spark.read.parquet(path).schema
+            read_parquet(spark, path).schema
             out.append(CheckResult("source_readable", tb, True))
         except Exception as e:  # corrupt footer, permission, ...
             out.append(CheckResult("source_readable", tb, False, str(e)[:200]))
@@ -90,7 +91,7 @@ def check_type_support(spark: SparkSession, sf_dir: str, tables: list[str], dial
         path = f"{sf_dir}/{tb}.parquet"
         if not os.path.exists(path):
             continue
-        schema = spark.read.parquet(path).schema
+        schema = read_parquet(spark, path).schema
         lossy = [f.name for f in schema.fields if isinstance(f.dataType, _LOSSY_FOR_RDB)]
         if lossy and dialect in ("mysql", "pg", "starrocks"):
             out.append(
@@ -127,7 +128,7 @@ def check_key_columns_exist(
         path = f"{sf_dir}/{tb}.parquet"
         if not keys or not os.path.exists(path):
             continue
-        schema = spark.read.parquet(path).schema
+        schema = read_parquet(spark, path).schema
         cols = {f.name: f.dataType for f in schema.fields}
         for k in keys:
             if k not in cols:

@@ -16,6 +16,8 @@ Spark-native: the *declarative* equivalents —
   ``ReadSchema``.
 - sampling               -> ``df.sample`` / deterministic key-mod.
 - routing                -> column renames (zero-cost projection).
+- schema discovery       -> ``read_parquet``: one footer converted on the
+  driver, the same schema Spark's inference job would return.
 
 So the whole extractor collapses to building the right lazy DataFrame; there
 is no imperative chunk loop to port — that is the point of Spark-first design.
@@ -23,13 +25,71 @@ is no imperative chunk loop to port — that is the point of Spark-first design.
 
 from __future__ import annotations
 
+import json
+import os
 from dataclasses import dataclass, field
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ape_dts_spark.config.rdb_filter import RdbFilter
 from ape_dts_spark.router import RdbRouter
+
+
+_SUMMARY_FILES = ("_common_metadata", "_metadata")
+
+
+def _hidden(name: str) -> bool:
+    """Names Spark's file index skips when it lists a table directory."""
+    return (
+        (name.startswith("_") and "=" not in name) or name.startswith(".") or name.endswith("._COPYING_")
+    ) and not name.startswith(_SUMMARY_FILES)
+
+
+def _footer_file(path: str) -> str | None:
+    """The one file whose footer Spark's non-merging parquet inference reads:
+    ``_common_metadata``, else ``_metadata``, else the first data file in
+    path order among the files its index lists. None when ``path`` is no
+    local file or directory, or lists no file."""
+    if os.path.isfile(path):
+        return path
+    leaves = []
+    for d, dirs, files in os.walk(path, followlinks=True):
+        dirs[:] = [x for x in dirs if not _hidden(x)]
+        leaves += [os.path.join(d, f) for f in files if not _hidden(f)]
+    leaves.sort()
+    for summary in _SUMMARY_FILES:
+        hit = next((p for p in leaves if os.path.basename(p) == summary), None)
+        if hit:
+            return hit
+    return next((p for p in leaves if os.path.basename(p) not in _SUMMARY_FILES), None)
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without its schema-inference job.
+
+    Inference reads one footer (see ``_footer_file``) in a Spark job. Here
+    the driver reads that footer and converts it with Spark's own
+    ``ParquetToSparkSchemaConverter`` under the session's SQL conf, so the
+    schema is the one inference returns (TIMESTAMP columns written without
+    UTC adjustment stay ``TimestampNTZType``; ``nanosAsLong`` holds), and
+    no job runs. A path with no local file to read goes to
+    ``spark.read.parquet``, which infers or raises Spark's own error."""
+    footer_file = _footer_file(path)
+    if footer_file is None:
+        return spark.read.parquet(path)
+    jvm = spark._jvm
+    hadoop_path = jvm.org.apache.hadoop.fs.Path(Path(footer_file).resolve().as_uri())
+    parquet_hadoop = jvm.org.apache.parquet.hadoop
+    footer = parquet_hadoop.Footer(
+        hadoop_path, parquet_hadoop.ParquetFileReader.readFooter(spark._jsc.hadoopConfiguration(), hadoop_path)
+    )
+    spark_parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
+    converter = spark_parquet.ParquetToSparkSchemaConverter(spark._jsparkSession.sessionState().conf())
+    schema = spark_parquet.ParquetFileFormat.readSchemaFromFooter(footer, converter)
+    return spark.read.schema(StructType.fromJson(json.loads(schema.json()))).parquet(path)
 
 
 @dataclass
@@ -46,7 +106,7 @@ class SnapshotSource:
     def read_table(self, sf_dir: str, tb: str, sample_percent: float | None = None) -> DataFrame:
         if self.filter.filter_tb(self.schema_name, tb):
             raise ValueError(f"table {self.schema_name}.{tb} is filtered out by config")
-        df = self.spark.read.parquet(f"{sf_dir}/{tb}.parquet")
+        df = read_parquet(self.spark, f"{sf_dir}/{tb}.parquet")
         cond = self.filter.where_condition(self.schema_name, tb)
         if cond:
             df = df.filter(cond)  # Catalyst pushes into the parquet scan

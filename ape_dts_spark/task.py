@@ -17,7 +17,8 @@ repartition count).
 Supported matrix (each maps to an e2e test):
 - snapshot + parquet : chunked scan -> filter/route -> parquet tables
 - snapshot + sql_file: scan -> INSERT statements file
-- check    + check_log: full-outer diff -> miss/diff JSONL
+- check    + check_log: full-outer diff -> miss/diff JSONL, one log write
+  for all the task's tables (the reference's task-level check log)
 - check_log + parquet : revise — re-read flagged keys -> merge into target
 - cdc      + parquet : Debezium JSONL stream -> compact -> merge apply
 """
@@ -37,7 +38,7 @@ from ape_dts_spark.operators.checker import check_diff
 from ape_dts_spark.plans.fk_order import apply_stages, parse_fk_spec
 from ape_dts_spark.sinks.parquet_table import ParquetTable
 from ape_dts_spark.sinks.sql_file import events_to_sql, write_sql_file
-from ape_dts_spark.sources.snapshot import SnapshotSource
+from ape_dts_spark.sources.snapshot import SnapshotSource, read_parquet
 from ape_dts_spark.streaming.cdc import CdcPipeline, read_json_change_stream
 
 
@@ -125,18 +126,17 @@ def run_task(spark: SparkSession, cfg: TaskConfig, registry: dict[str, list[str]
 
     if extract_type == "check":
         tables = [t for t in _tables_from(cfg, src_dir) if not cfg.filter.filter_tb(schema, t)]
-        result = TaskResult(kind="check")
+        cmp_dir = cfg.sinker.get("compare_url", dst_dir)
+        checks = {}
         for tb in tables:
             keys = registry.get(tb)
-            if not keys:
-                continue
-            src = spark.read.parquet(f"{src_dir}/{tb}.parquet")
-            dst = spark.read.parquet(f"{cfg.sinker.get('compare_url', dst_dir)}/{tb}.parquet")
-            d = check_diff(src, dst, keys, include_extra=True)
-            out = os.path.join(dst_dir, f"check_{tb}")
-            write_check_log(d, keys, schema, tb, out)
-            result.outputs[tb] = out
-        return result
+            if keys:
+                src = read_parquet(spark, f"{src_dir}/{tb}.parquet")
+                dst = read_parquet(spark, f"{cmp_dir}/{tb}.parquet")
+                checks[tb] = (check_diff(src, dst, keys, include_extra=True), keys)
+        # one log for the task, as the reference's task-level miss/diff log
+        write_check_log(checks, schema, path=dst_dir)
+        return TaskResult(kind="check", outputs={tb: os.path.join(dst_dir, f"check_{tb}") for tb in checks})
 
     if extract_type == "check_log":
         # revise: flagged keys -> re-read source -> merge into target table dir
@@ -144,7 +144,7 @@ def run_task(spark: SparkSession, cfg: TaskConfig, registry: dict[str, list[str]
         keys = registry[tb]
         key_schema = cfg.extractor.get("key_schema", ", ".join(f"{k} long" for k in keys))
         flagged = read_check_log_keys(spark, cfg.extractor.get("check_log_dir", ""), keys, key_schema)
-        src = spark.read.parquet(f"{src_dir}/{tb}.parquet")
+        src = read_parquet(spark, f"{src_dir}/{tb}.parquet")
         rows = src.join(F.broadcast(flagged), keys, "left_semi")
         table = ParquetTable(spark, os.path.join(dst_dir, tb), src.schema)
         compacted = rows.select(
@@ -164,11 +164,10 @@ def run_task(spark: SparkSession, cfg: TaskConfig, registry: dict[str, list[str]
     if extract_type == "cdc":
         tb = cfg.extractor.get("tb", "users")
         keys = registry.get(tb, ["id"])
-        payload = spark.read.parquet(cfg.extractor.get("payload_sample", "")).schema if cfg.extractor.get(
-            "payload_sample"
-        ) else None
-        if payload is None:
+        payload_sample = cfg.extractor.get("payload_sample", "")
+        if not payload_sample:
             raise ValueError("cdc task needs extractor.payload_sample (parquet file with the payload schema)")
+        payload = read_parquet(spark, payload_sample).schema
         table = ParquetTable(spark, os.path.join(dst_dir, tb), payload)
         # [processor] section: the reference's lua_code_file hook
         # (processor_config.rs; docs/en/etl/lua.md) — here a Python script

@@ -27,8 +27,9 @@ import json
 import os
 import sys
 import tempfile
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from pyspark.sql import functions as F  # noqa: E402
 

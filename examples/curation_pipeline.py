@@ -23,8 +23,9 @@ together, printing per-stage row counts.
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from pyspark.sql import functions as F
 

@@ -25,8 +25,9 @@ from __future__ import annotations
 
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from ape_dts_spark.functions import text as tx
 from ape_dts_spark.session import get_spark

@@ -41,9 +41,9 @@ def test_check_log_roundtrip_and_review(spark, sf_dir, tmp_path):
     dst = demo.drifted_orders(spark, sf_dir)
     d = check_diff(src, dst, ["o_orderkey"])
     path = str(tmp_path / "check")
-    write_check_log(d, ["o_orderkey"], "default", "orders", path)
+    write_check_log({"orders": (d, ["o_orderkey"])}, "default", path)
 
-    keys = read_check_log_keys(spark, path, ["o_orderkey"], "o_orderkey long")
+    keys = read_check_log_keys(spark, f"{path}/check_orders", ["o_orderkey"], "o_orderkey long")
     assert keys.count() == d.select("o_orderkey").distinct().count()
 
     # full repair -> review comes back clean

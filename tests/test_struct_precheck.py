@@ -182,6 +182,22 @@ def test_precheck_breadth(spark, sf_dir, tmp_path):
     assert keys["nation.no_such_col"] is False
 
 
+def test_source_readable_flags_a_non_parquet_file(spark, tmp_path, spark_jobs):
+    """A .parquet directory holding a file that is not parquet fails
+    source_readable; a good table passes without a Spark job."""
+    from ape_dts_spark.precheck import check_source_readable
+
+    bad = tmp_path / "bad.parquet"
+    bad.mkdir()
+    (bad / "part-00000.parquet").write_text("not a parquet file\n")
+    spark.range(3).write.parquet(str(tmp_path / "good.parquet"))
+    with spark_jobs() as jobs:
+        res = {r.object: r for r in check_source_readable(spark, str(tmp_path), ["bad", "good"])}
+    assert res["bad"].ok is False and res["bad"].detail
+    assert res["good"].ok is True
+    assert jobs.n == 0
+
+
 def test_precheck_cdc_source_missing(spark, tmp_path):
     from ape_dts_spark.precheck import check_cdc_source
 

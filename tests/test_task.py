@@ -2,6 +2,7 @@
 (dt-task parity; golden pattern = the reference's integration tests:
 prepare -> run task -> compare target to source, dt-tests/README.md)."""
 
+import glob
 import json
 import os
 from pathlib import Path
@@ -421,3 +422,150 @@ url={tmp_path}/out
     assert res.tables["nation"].schema == written.schema == src.schema
     assert res.tables["nation"].count() == src.count()
     assert sorted(res.tables["nation"].collect()) == sorted(src.collect())
+
+
+_CHECK_KEYS = {"orders": ["o_orderkey"], "customer": ["c_custkey"], "part": ["p_partkey"]}
+
+
+def _replica(spark, path, miss_mod, diff_mod):
+    """Replica of the check tables: orders loses the keys where
+    ``o_orderkey % miss_mod == 0``, customer's balance is off by one where
+    ``c_custkey % diff_mod == 0`` (none when ``diff_mod`` is 0), part is
+    identical."""
+    from pyspark.sql import functions as F
+
+    spark.read.parquet(f"{SF}/orders.parquet").filter(F.col("o_orderkey") % miss_mod != 0).write.parquet(
+        f"{path}/orders.parquet"
+    )
+    cust = spark.read.parquet(f"{SF}/customer.parquet")
+    if diff_mod:
+        drifted = F.when(F.col("c_custkey") % diff_mod == 0, F.col("c_acctbal") + 1).otherwise(F.col("c_acctbal"))
+        cust = cust.withColumn("c_acctbal", drifted)
+    cust.write.parquet(f"{path}/customer.parquet")
+    spark.read.parquet(f"{SF}/part.parquet").write.parquet(f"{path}/part.parquet")
+    return path
+
+
+def _run_check(spark, url, cmp_dir):
+    cfg = TaskConfig.from_string(
+        f"""
+[extractor]
+extract_type=check
+url={SF}
+tables={",".join(_CHECK_KEYS)}
+
+[sinker]
+sink_type=check_log
+url={url}
+compare_url={cmp_dir}
+"""
+    )
+    return run_task(spark, cfg, registry=_CHECK_KEYS)
+
+
+def _log_lines(check_dir):
+    """Multiset of (check_class, line) under one table's check directory."""
+    from collections import Counter
+
+    lines = Counter()
+    for p in glob.glob(f"{check_dir}/check_class=*/*.txt"):
+        cls = os.path.basename(os.path.dirname(p)).split("=", 1)[1]
+        with open(p) as f:
+            lines.update((cls, line.rstrip("\n")) for line in f)
+    return lines
+
+
+def _expected_lines(spark, cmp_dir, tb):
+    """What a per-table write of ``tb``'s own check log holds."""
+    from collections import Counter
+
+    from ape_dts_spark.operators.check_log import to_check_log
+    from ape_dts_spark.operators.checker import check_diff
+
+    keys = _CHECK_KEYS[tb]
+    d = check_diff(spark.read.parquet(f"{SF}/{tb}.parquet"), spark.read.parquet(f"{cmp_dir}/{tb}.parquet"),
+                   keys, include_extra=True)
+    return Counter((r["check_class"], r["log"]) for r in to_check_log(d, keys, "default", tb).collect())
+
+
+def test_check_task_writes_one_log_for_all_tables(spark, tmp_path, spark_jobs):
+    """A three-table check runs the join shuffles plus one log write (7
+    jobs; a schema-inference read per input and a write per table took 15),
+    and each table's directory holds exactly the lines of its own log."""
+    cmp_dir = _replica(spark, str(tmp_path / "dst"), miss_mod=7, diff_mod=5)
+    with spark_jobs() as jobs:
+        res = _run_check(spark, str(tmp_path / "check"), cmp_dir)
+    assert jobs.n <= 7
+    assert set(res.outputs) == set(_CHECK_KEYS)
+    for tb in _CHECK_KEYS:
+        got = _log_lines(res.outputs[tb])
+        assert got == _expected_lines(spark, cmp_dir, tb), tb
+    assert {c for c, _ in _log_lines(res.outputs["orders"])} == {"miss"}
+    assert {c for c, _ in _log_lines(res.outputs["customer"])} == {"diff"}
+    assert sorted(os.listdir(tmp_path / "check")) == [f"check_{tb}" for tb in sorted(_CHECK_KEYS)]
+
+
+def test_check_without_findings_keeps_its_dir_and_revise_commits_empty(spark, tmp_path):
+    """A table with no differences still gets ``check_{tb}/`` (marked with
+    ``_SUCCESS``), and revise on it commits an empty version."""
+    from ape_dts_spark.sinks.parquet_table import ParquetTable
+
+    cmp_dir = _replica(spark, str(tmp_path / "dst"), miss_mod=7, diff_mod=0)
+    res = _run_check(spark, str(tmp_path / "check"), cmp_dir)
+    part_dir = res.outputs["part"]
+    assert os.path.isfile(os.path.join(part_dir, "_SUCCESS"))
+    assert not _log_lines(part_dir) and not _log_lines(res.outputs["customer"])
+
+    revise_cfg = TaskConfig.from_string(
+        f"""
+[extractor]
+extract_type=check_log
+url={SF}
+tb=part
+check_log_dir={part_dir}
+
+[sinker]
+sink_type=parquet
+url={tmp_path}/revised
+"""
+    )
+    revised = run_task(spark, revise_cfg, registry=_CHECK_KEYS)
+    assert revised.tables["part"].count() == 0
+    src_schema = spark.read.parquet(f"{SF}/part.parquet").schema
+    assert ParquetTable(spark, str(tmp_path / "revised" / "part"), src_schema).version() == 0  # first commit
+
+
+def test_check_rerun_replaces_logs_and_leaves_no_staging(spark, tmp_path):
+    """Re-running a check into the same url leaves only the second run's
+    lines (a class the second run does not find disappears) and no
+    staging directory."""
+    url = str(tmp_path / "check")
+    _run_check(spark, url, _replica(spark, str(tmp_path / "dst1"), miss_mod=3, diff_mod=4))
+    cmp_dir = _replica(spark, str(tmp_path / "dst2"), miss_mod=11, diff_mod=0)
+    res = _run_check(spark, url, cmp_dir)
+    for tb in _CHECK_KEYS:
+        assert _log_lines(res.outputs[tb]) == _expected_lines(spark, cmp_dir, tb), tb
+    assert not glob.glob(f"{url}/check_customer/check_class=*")
+    assert sorted(os.listdir(url)) == [f"check_{tb}" for tb in sorted(_CHECK_KEYS)]
+
+
+def test_snapshot_task_runs_one_job_per_table(spark, tmp_path, spark_jobs):
+    """A snapshot runs only each table's write: no schema-inference job on
+    the source read (two jobs per table when it inferred)."""
+    cfg = TaskConfig.from_string(
+        f"""
+[extractor]
+extract_type=snapshot
+url={SF}
+tables=region,nation,customer
+
+[sinker]
+sink_type=parquet
+url={tmp_path}/out
+"""
+    )
+    with spark_jobs() as jobs:
+        res = run_task(spark, cfg)
+    assert jobs.n == 3
+    for tb in ("region", "nation", "customer"):
+        assert res.tables[tb].schema == spark.read.parquet(f"{SF}/{tb}.parquet").schema

@@ -14,7 +14,7 @@ cost under test is scan/shuffle/merge planning and execution).
 
 Usage: python tools/baseline_repro.py [rows_per_table] [n_updates]
        (defaults: 5_000_000 and 3_200_000 — the published scale)
-Prints one JSON line AND persists it to /root/repo/BASELINE_REPRO.json —
+Prints one JSON line AND persists it to BASELINE_REPRO.json at the repository root —
 tools/scaling.py renders its SCALING.md appendix from that artifact, so a
 SCALING regeneration can never silently drop the published-scale numbers
 again (this artifact was hand-pasted and lost twice: rounds 7 and 8).
@@ -27,8 +27,10 @@ import os
 import shutil
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from pyspark.sql import functions as F
 
@@ -163,7 +165,7 @@ def main() -> int:
 
     out["code_commit"] = (
         subprocess.run(
-            ["git", "-C", "/root/repo", "rev-parse", "--short", "HEAD"],
+            ["git", "-C", str(ROOT), "rev-parse", "--short", "HEAD"],
             capture_output=True,
             text=True,
         ).stdout.strip()
@@ -178,7 +180,7 @@ def main() -> int:
     # headlines, the durable number measures engine capability, not the
     # instantaneous host. Force an overwrite by deleting the file first.
     if n_rows >= 5_000_000 and n_updates >= 3_200_000:
-        path = "/root/repo/BASELINE_REPRO.json"
+        path = str(ROOT / "BASELINE_REPRO.json")
         try:
             with open(path) as fh:
                 prev = json.load(fh)

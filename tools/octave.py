@@ -12,7 +12,7 @@ time; the overhead floor can't hide that).
 Corpus construction matches tools/scaling.py exactly (rewritten-content
 replication at constant duplicate density; id-shifted replication for the
 row-stream tables). Usage: python tools/octave.py [sf_dir]
-Prints one JSON line AND persists /root/repo/OCTAVE.json — tools/scaling.py
+Prints one JSON line AND persists OCTAVE.json at the repository root — tools/scaling.py
 renders its x16-octave appendix from that artifact so a SCALING
 regeneration can never drop the measurement.
 """
@@ -25,9 +25,11 @@ import os
 import shutil
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
+sys.path.insert(0, str(ROOT / "tools"))
 
 from scaling import build_corpus  # noqa: E402
 
@@ -146,7 +148,7 @@ def main() -> int:
             "snapshot_x16_rps": out[f"core_x{FACTOR}"]["snapshot_rps"],
         },
     }
-    with open("/root/repo/OCTAVE.json", "w") as fh:
+    with open(ROOT / "OCTAVE.json", "w") as fh:
         json.dump(artifact, fh, indent=1)
     return 0
 

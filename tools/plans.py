@@ -12,8 +12,10 @@ from __future__ import annotations
 
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 AUDITED = [
     "snapshot_scan",      # pushdown + pruning into the parquet scan
@@ -276,7 +278,7 @@ def main() -> int:
             out.extend(dict.fromkeys(details))  # dedup, keep order
         out.append("```")
         out.append("")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(ROOT / "PLANS.md", "w") as f:
         f.write("\n".join(out))
     print(f"PLANS.md written ({len(AUDITED)} queries)")
     return 0

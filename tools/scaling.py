@@ -24,8 +24,10 @@ import os
 import shutil
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 BASE = "/tmp/ape_scale"
 FACTORS = [1, 2, 4]
@@ -375,7 +377,7 @@ def appendix_sections() -> list[str]:
     lines.append("## Published-scale baseline reproduction (tools/baseline_repro.py)")
     lines.append("")
     try:
-        with open("/root/repo/BASELINE_REPRO.json") as fh:
+        with open(ROOT / "BASELINE_REPRO.json") as fh:
             br = json.load(fh)
         snap_x = br["snapshot_rps"] / br["baseline_snapshot_rps_4c8g"]
         cdc_x = br["cdc_apply_rps"] / br["baseline_cdc_rps_4c8g"]
@@ -412,7 +414,7 @@ def appendix_sections() -> list[str]:
     lines.append("## x16 octave (tools/octave.py)")
     lines.append("")
     try:
-        with open("/root/repo/OCTAVE.json") as fh:
+        with open(ROOT / "OCTAVE.json") as fh:
             oc = json.load(fh)
         qparts = []
         for q, r in oc.get("queries", {}).items():
@@ -446,7 +448,7 @@ def appendix_sections() -> list[str]:
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    out_md = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/SCALING.md"
+    out_md = sys.argv[2] if len(sys.argv) > 2 else str(ROOT / "SCALING.md")
 
     import __spark_entry__ as entrymod
     from ape_dts_spark.session import clear_spark_blocks, get_spark
