@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ape_dts_spark.sources.snapshot import read_parquet
+
 DEMO_SCHEMA = "demo"
 DEMO_TB = "users"
 USER_KEY = ["user_id"]
@@ -46,7 +48,8 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         spark.conf.set("spark.sql.session.timeZone", "UTC")
         spark._ape_demo_confs = True
-    df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
+    # read_parquet reads the footer on the driver: no schema-inference job
+    df = read_parquet(spark, f"{sf_dir}/{table}.parquet")
     # events.ts is TIMESTAMP(NANOS) in parquet — Spark reads it as long (via
     # spark.sql.legacy.parquet.nanosAsLong); truncate to microseconds exactly
     # like DuckDB/arrow do when downcasting ns -> us.

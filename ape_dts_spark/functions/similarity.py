@@ -1,20 +1,54 @@
 """Similarity search over embedding columns (`array<float>`).
 
+Eleven top-k searchers, each returning (query_id, neighbor_id, rank):
+
 - `cosine_topk`: brute-force exact top-k — the correctness baseline. Dot
   products via zip_with + an ordered left fold (deterministic float
   accumulation, reproducible across engines); ranks by similarity with id
   tiebreak. Cost O(|queries| x |corpus|): fine when the query set is small or
   as the ground-truth for recall measurement.
+- `cosine_topk_np`: the same exact top-k as one numpy GEMM per Arrow batch.
 - `lsh_ann_topk`: the scale path — random-hyperplane (sign) LSH bucketing.
   Each vector gets an n-bit signature from fixed pseudo-random hyperplanes;
   candidates share a signature band; exact cosine re-ranks candidates. At
   100 TB the bucket join replaces the cross join; hyperplanes are generated
   from a deterministic integer recurrence (engine-portable, no RNG state).
+- `ivf_topk`, `ivf_index` + `ivf_index_topk`: inverted-file lists around
+  trained k-means centroids; each query probes its nearest lists.
+- `pq_topk`, `pq_index` + `pq_index_topk`: product-quantization codes
+  scored by ADC table lookups.
+- `ivfpq_topk`, `ivfpq_index` + `ivfpq_index_topk` (and
+  `ivfpq_index_append`): IVF cells over residual PQ codes.
+- `sq8_topk`, `sq8_index` + `sq8_index_topk`: one uint8 code per dimension.
+
+Each ``X_topk`` is a fused scan (train, then score the corpus in one
+Arrow-batched pass); each ``X_index`` + ``X_index_topk`` pair is the served
+shape (build and persist the codes once, then query them). The two shapes
+keep their own plans but share one implementation of every step:
+
+- query loader ``_load_queries``: the small query set, collected to ids and
+  unit rows;
+- row normaliser ``_unit_rows``: clamps zero norms, so a zero vector stays
+  zero instead of going NaN;
+- candidate emitter ``_scan`` (with ``_cut`` or ``_rerank`` per batch, or
+  ``_cell_adc_cut`` per IVF-PQ cell): each batch keeps its best candidates
+  and drops self-matches;
+- global top-k ``_topk``: one row_number window, score descending,
+  neighbor-id tiebreak;
+- exact re-rank ``_exact_rerank``: ordered-fold cosine of the survivors;
+- quantizers: ``_train_sample`` (hash-mod training sample), ``_nearest`` /
+  ``_probe`` (IVF lists), ``_pq_encode`` / ``_subspace_dists`` (PQ codes
+  and ADC tables), ``_sq8_bounds`` / ``_sq8_encode`` / ``_sq8_decode``.
+
+Near-duplicate finders sit beside them: `cosine_dup_pairs` (banded
+hyperplane LSH, exact fold) and `semantic_dedup` (SemDeDup on IVF lists).
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 DOT = "aggregate(zip_with({a}, {b}, (x, y) -> x * y), CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
@@ -30,6 +64,109 @@ def with_norm(df: DataFrame, vec_col: str = "embedding", out: str = "norm") -> D
     return df.withColumn(out, F.expr(f"sqrt({_dot(dbl, dbl)})"))
 
 
+def _doubles(df: DataFrame, id_col: str, vec_col: str, name: str, prefix: str) -> DataFrame:
+    """(name, <prefix>_vec): the id renamed, the vector promoted to double."""
+    return df.select(
+        F.col(id_col).alias(name),
+        F.expr(f"transform({vec_col}, x -> CAST(x AS DOUBLE))").alias(f"{prefix}_vec"),
+    )
+
+
+def _exact_cosine():
+    """Cosine of q_vec and c_vec over their norms: the ordered-fold dot,
+    the same IEEE operations as the DuckDB oracles."""
+    return F.expr(_dot("q_vec", "c_vec")) / (F.col("q_norm") * F.col("c_norm"))
+
+
+def _topk(scored: DataFrame, k: int) -> DataFrame:
+    """Global top-k per query over (query_id, neighbor_id, score) rows: rank
+    1..k by descending score with neighbor-id tiebreak."""
+    w = W.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank")
+    )
+
+
+def _exact_rerank(
+    survivors: DataFrame, queries: DataFrame, vectors: DataFrame, id_col: str, vec_col: str, k: int
+) -> DataFrame:
+    """Top-k of the (query_id, neighbor_id) survivors by exact cosine.
+
+    Fetches ONLY the survivors' vectors: the tiny survivor relation
+    broadcasts onto the cold-storage vector table, then exact cosine per
+    pair (the query vectors ride along the same way — both sides are
+    query-bounded)."""
+    pairs = (
+        _doubles(vectors, id_col, vec_col, "neighbor_id", "c")
+        .join(F.broadcast(survivors.select("query_id", "neighbor_id")), "neighbor_id")
+        .join(F.broadcast(_doubles(queries, id_col, vec_col, "query_id", "q")), "query_id")
+    )
+    normed = with_norm(with_norm(pairs, "q_vec", "q_norm"), "c_vec", "c_norm")
+    return _topk(normed.withColumn("score", _exact_cosine()), k)
+
+
+def _unit_rows(mat):
+    """Row-normalize, clamping zero norms to eps: a zero vector stays zero
+    instead of going NaN and silently poisoning codebooks / ADC tables."""
+    nrm = np.linalg.norm(mat, axis=1, keepdims=True)
+    return mat / np.maximum(nrm, 1e-12)
+
+
+def _vectors(values):
+    """An Arrow batch's vector column as an (n, dim) float64 matrix."""
+    return np.array(values.tolist(), dtype=np.float64)
+
+
+def _load_queries(queries: DataFrame, id_col: str, vec_col: str):
+    """(ids, unit rows) of the query set, collected to the driver — the
+    query set is small by contract and rides in the task closures."""
+    rows = queries.select(id_col, vec_col).collect()
+    ids = np.array([int(r[id_col]) for r in rows])
+    return ids, _unit_rows(np.array([r[vec_col] for r in rows], dtype=np.float64))
+
+
+def _scan(df: DataFrame, score_batch) -> DataFrame:
+    """One Arrow-batched ``mapInPandas`` pass over ``df``.
+
+    ``score_batch(pdf)`` returns the batch's candidate parts, a list of
+    ``(query_ids, neighbor_ids, scores)`` arrays (higher score = nearer).
+    Self-matches are dropped here, per batch; the candidates then need only
+    the one tiny shuffle of ``_topk`` (|queries| x batches x kept rows)."""
+
+    def _run(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            parts = score_batch(pdf) if len(pdf) else []
+            if parts:
+                q, n, s = (np.concatenate(col) for col in zip(*parts))
+                out = pd.DataFrame({"query_id": q, "neighbor_id": n, "score": s})
+                yield out[out["query_id"] != out["neighbor_id"]]
+
+    return df.mapInPandas(_run, schema="query_id long, neighbor_id long, score double")
+
+
+def _best(scores, keep: int):
+    """Column indices of each row's ``keep`` highest scores (unordered)."""
+    keep = min(keep, scores.shape[1])
+    return np.argpartition(-scores, keep - 1, axis=1)[:, :keep]
+
+
+def _cut(q_ids, c_ids, scores, keep: int):
+    """Candidate part of each query's ``keep`` best-scored batch rows, from
+    a (|queries| x |batch|) score matrix."""
+    idx = _best(scores, keep)
+    return q_ids.repeat(idx.shape[1]), c_ids[idx].ravel(), np.take_along_axis(scores, idx, axis=1).ravel()
+
+
+def _rerank(q_ids, q_mat, c_ids, c_mat, picks):
+    """Candidate parts re-scored by exact cosine with the batch's unit
+    vectors in hand; ``picks`` yields (query row, candidate rows)."""
+    return [(np.full(len(sel), q_ids[qi]), c_ids[sel], c_mat[sel] @ q_mat[qi]) for qi, sel in picks]
+
+
 def cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -43,28 +180,10 @@ def cosine_topk(
     neighbor-id tiebreak. The (usually small) query side is broadcast so the
     corpus never shuffles — the scan stays embarrassingly parallel.
     """
-    from pyspark.sql import Window as W
-
-    q = with_norm(queries, vec_col, "q_norm").select(
-        F.col(id_col).alias("query_id"),
-        F.expr(f"transform({vec_col}, x -> CAST(x AS DOUBLE))").alias("q_vec"),
-        "q_norm",
-    )
-    c = with_norm(corpus, vec_col, "c_norm").select(
-        F.col(id_col).alias("neighbor_id"),
-        F.expr(f"transform({vec_col}, x -> CAST(x AS DOUBLE))").alias("c_vec"),
-        "c_norm",
-    )
-    scored = (
-        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine", F.expr(_dot("q_vec", "c_vec")) / (F.col("q_norm") * F.col("c_norm")))
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    q = with_norm(_doubles(queries, id_col, vec_col, "query_id", "q"), "q_vec", "q_norm")
+    c = with_norm(_doubles(corpus, id_col, vec_col, "neighbor_id", "c"), "c_vec", "c_norm")
+    scored = c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
+    return _topk(scored.withColumn("score", _exact_cosine()), k)
 
 
 def cosine_topk_np(
@@ -86,42 +205,34 @@ def cosine_topk_np(
     Output: (query_id, neighbor_id, rank) — identical to cosine_topk up to
     float-summation-order rank ties.
     """
-    import numpy as np
-    import pandas as pd
+    q_ids, q_mat = _load_queries(queries, id_col, vec_col)
 
-    q_rows = queries.select(id_col, vec_col).collect()
-    q_ids = np.array([r[id_col] for r in q_rows])
-    q_mat = np.array([r[vec_col] for r in q_rows], dtype=np.float64)
-    q_mat /= np.linalg.norm(q_mat, axis=1, keepdims=True)
+    def _score(pdf):
+        sims = q_mat @ _unit_rows(_vectors(pdf[vec_col])).T  # |Q| x |batch|
+        return [_cut(q_ids, pdf[id_col].to_numpy(), sims, k + 1)]  # +1 to survive self-match removal
 
-    def _score(batches):
-        for pdf in batches:
-            c_ids = pdf[id_col].to_numpy()
-            c_mat = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            c_mat /= np.linalg.norm(c_mat, axis=1, keepdims=True)
-            sims = q_mat @ c_mat.T  # |Q| x |batch|
-            kk = min(k + 1, sims.shape[1])  # +1 to survive self-match removal
-            idx = np.argpartition(-sims, kk - 1, axis=1)[:, :kk]
-            out = pd.DataFrame(
-                {
-                    "query_id": np.repeat(q_ids, kk),
-                    "neighbor_id": c_ids[idx].ravel(),
-                    "cosine": np.take_along_axis(sims, idx, axis=1).ravel(),
-                }
-            )
-            yield out[out["query_id"] != out["neighbor_id"]]
+    return _topk(_scan(corpus.select(id_col, vec_col), _score), k)
 
-    from pyspark.sql import Window as W
 
-    partial = corpus.select(id_col, vec_col).mapInPandas(
-        _score, schema="query_id long, neighbor_id long, cosine double"
+def _train_sample(corpus: DataFrame, id_col: str, vec_col: str, target: int, empty_msg: str):
+    """The driver-side training sample of every quantizer, as unit rows.
+
+    A hash-mod filter (``xxhash64(id) % mod == 0``) sized to about
+    ``target`` rows — unbiased across the id space, no global sort — is
+    collected (bounded regardless of corpus size) and put in id order, so
+    the strided init is reproducible. An empty sample raises ValueError
+    with ``empty_msg`` (formatted with the corpus rows ``n`` and ``mod``)."""
+    n = corpus.count()
+    mod = max(1, n // max(1, target))
+    sample = (
+        corpus.select(id_col, vec_col)
+        .filter(F.pmod(F.xxhash64(F.col(id_col)), F.lit(mod)) == 0)
+        .collect()
     )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    if not sample:
+        raise ValueError(empty_msg.format(n=n, mod=mod))
+    sample.sort(key=lambda r: r[id_col])
+    return _unit_rows(np.array([r[vec_col] for r in sample], dtype=np.float64))
 
 
 def _train_centroids(
@@ -143,25 +254,15 @@ def _train_centroids(
     max dot product, centroid = normalized mean). Everything is seeded by
     data content only, so results are reproducible across runs/engines.
     """
-    import numpy as np
-
-    n = corpus.count()
-    target = n_lists * sample_per_list
-    m = max(1, n // max(1, target))
-    sample = (
-        corpus.select(id_col, vec_col)
-        .filter(F.pmod(F.xxhash64(F.col(id_col)), F.lit(m)) == 0)
-        .collect()
+    mat = _train_sample(
+        corpus, id_col, vec_col, n_lists * sample_per_list,
+        "IVF centroid training sample is empty (corpus rows={n}, hash mod={mod})",
     )
-    # deterministic order for reproducible init (sample is driver-small)
-    sample.sort(key=lambda r: r[id_col])
-    mat = np.array([r[vec_col] for r in sample], dtype=np.float64)
-    mat /= np.linalg.norm(mat, axis=1, keepdims=True)
     k_eff = min(n_lists, len(mat))
     step = max(1, len(mat) // k_eff)
     cent = mat[::step][:k_eff].copy()
     for _ in range(iters):
-        assign = np.argmax(mat @ cent.T, axis=1)
+        assign = _nearest(mat, cent)
         for li in range(k_eff):
             members = mat[assign == li]
             if len(members):
@@ -170,6 +271,16 @@ def _train_centroids(
                 if nrm > 0:
                     cent[li] = c / nrm
     return cent
+
+
+def _nearest(unit, cent):
+    """Each unit row's IVF list: the centroid with the largest dot product."""
+    return np.argmax(unit @ cent.T, axis=1)
+
+
+def _probe(q_mat, cent, n_probe: int):
+    """Probe matrix: probing[qi] = the n_probe nearest centroid ids."""
+    return np.argsort(-(q_mat @ cent.T), axis=1)[:, :n_probe]
 
 
 def ivf_topk(
@@ -204,57 +315,24 @@ def ivf_topk(
     slow path this module's docstring warns about).
     Output: (query_id, neighbor_id, rank).
     """
-    import numpy as np
-    import pandas as pd
-
     cent = _train_centroids(corpus, id_col, vec_col, n_lists)
+    q_ids, q_mat = _load_queries(queries, id_col, vec_col)
+    probing = _probe(q_mat, cent, n_probe)
 
-    q_rows = queries.select(id_col, vec_col).collect()
-    q_ids = np.array([int(r[id_col]) for r in q_rows])
-    q_mat = np.array([r[vec_col] for r in q_rows], dtype=np.float64)
-    q_mat /= np.linalg.norm(q_mat, axis=1, keepdims=True)
-    # probe matrix: probing[qi] = the n_probe nearest centroid ids
-    probing = np.argsort(-(q_mat @ cent.T), axis=1)[:, :n_probe]
-
-    def _score(batches):
-        for pdf in batches:
-            c_ids = pdf[id_col].to_numpy()
-            c_mat = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            c_mat /= np.linalg.norm(c_mat, axis=1, keepdims=True)
-            lists = np.argmax(c_mat @ cent.T, axis=1)
-            parts = []
-            for li in np.unique(lists):
-                qsel = np.nonzero((probing == li).any(axis=1))[0]
+    def _score(pdf):
+        c_ids = pdf[id_col].to_numpy()
+        c_mat = _unit_rows(_vectors(pdf[vec_col]))
+        lists = _nearest(c_mat, cent)
+        parts = []
+        for li in np.unique(lists):
+            qsel = np.nonzero((probing == li).any(axis=1))[0]
+            if qsel.size:
                 csel = np.nonzero(lists == li)[0]
-                if qsel.size == 0 or csel.size == 0:
-                    continue
                 sims = q_mat[qsel] @ c_mat[csel].T  # |probing queries| x |cell|
-                kk = min(k + 1, sims.shape[1])  # +1 survives self-match removal
-                idx = np.argpartition(-sims, kk - 1, axis=1)[:, :kk]
-                parts.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": np.repeat(q_ids[qsel], kk),
-                            "neighbor_id": c_ids[csel][idx].ravel(),
-                            "cosine": np.take_along_axis(sims, idx, axis=1).ravel(),
-                        }
-                    )
-                )
-            if parts:
-                out = pd.concat(parts, ignore_index=True)
-                yield out[out["query_id"] != out["neighbor_id"]]
+                parts.append(_cut(q_ids[qsel], c_ids[csel], sims, k + 1))  # +1 survives self-match removal
+        return parts
 
-    from pyspark.sql import Window as W
-
-    partial = corpus.select(id_col, vec_col).mapInPandas(
-        _score, schema="query_id long, neighbor_id long, cosine double"
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _topk(_scan(corpus.select(id_col, vec_col), _score), k)
 
 
 N_PLANES = 8
@@ -384,7 +462,6 @@ def cosine_dup_pairs(
     slack. A pair colliding in multiple buckets emits identical rows —
     groupBy(max) dedups.
     """
-    import numpy as np
     import pandas as pd
 
     n_bands, band_bits = dup_banding_for(threshold, target_recall)
@@ -486,8 +563,6 @@ def lsh_ann_topk(
     (query_id, neighbor_id, cosine) candidate rows ever shuffle (for the
     dual-band dedup + final ranking).
     Output: (query_id, neighbor_id, rank)."""
-    from pyspark.sql import Window as W
-
     sig = signature_expr(vec_col, dim)
     half = (1 << (N_PLANES // 2)) - 1
     band_vals = f"array(sig & {half}, shiftright(sig, {N_PLANES // 2}))"
@@ -512,19 +587,9 @@ def lsh_ann_topk(
     q = banded(queries, "query_id", "q")
     c = banded(corpus, "neighbor_id", "c")
     cand = c.join(F.broadcast(q), ["band", "bv"]).filter(F.col("query_id") != F.col("neighbor_id"))
-    scored = cand.select(
-        "query_id",
-        "neighbor_id",
-        (F.expr(_dot("q_vec", "c_vec")) / (F.col("q_norm") * F.col("c_norm"))).alias("cosine"),
-    )
+    scored = cand.select("query_id", "neighbor_id", _exact_cosine().alias("score"))
     # a pair matching on both bands appears twice with an identical cosine
-    dedup = scored.groupBy("query_id", "neighbor_id").agg(F.max("cosine").alias("cosine"))
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        dedup.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _topk(scored.groupBy("query_id", "neighbor_id").agg(F.max("score").alias("score")), k)
 
 
 def ivf_index(
@@ -544,27 +609,12 @@ def ivf_index(
     the right shape for ad-hoc queries; this is the right shape for a served
     index). Assignment happens in one Arrow-batched pass with the centroids
     broadcast in the closure."""
-    import numpy as np
-    import pandas as pd
     from pyspark import StorageLevel
 
     cent = _train_centroids(corpus, id_col, vec_col, n_lists)
-
-    def _assign(batches):
-        for pdf in batches:
-            vecs = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            vecs = vecs / np.linalg.norm(vecs, axis=1, keepdims=True)
-            yield pd.DataFrame(
-                {
-                    "list_id": np.argmax(vecs @ cent.T, axis=1).astype(np.int32),
-                    "id": pdf[id_col].to_numpy(),
-                    "vec": list(pdf[vec_col]),
-                }
-            )
-
     assigned = (
         corpus.select(id_col, vec_col)
-        .mapInPandas(_assign, schema="list_id int, id long, vec array<double>")
+        .mapInPandas(_assigner(cent, id_col, vec_col), schema=_ASSIGNED_SCHEMA)
         # the partitioned-landing stand-in: one shuffle partition per list,
         # independent of spark.sql.shuffle.partitions
         .repartition(n_lists, F.col("list_id"))
@@ -572,6 +622,28 @@ def ivf_index(
     )
     assigned.count()
     return cent, assigned
+
+
+_ASSIGNED_SCHEMA = "list_id int, id long, vec array<double>"
+
+
+def _assigner(cent, id_col: str, vec_col: str):
+    """mapInPandas kernel putting each vector in its IVF list: rows of
+    ``_ASSIGNED_SCHEMA``, the vector passed through as stored."""
+
+    def _assign(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            yield pd.DataFrame(
+                {
+                    "list_id": _nearest(_unit_rows(_vectors(pdf[vec_col])), cent).astype(np.int32),
+                    "id": pdf[id_col].to_numpy(),
+                    "vec": list(pdf[vec_col]),
+                }
+            )
+
+    return _assign
 
 
 def semantic_dedup(
@@ -598,7 +670,6 @@ def semantic_dedup(
     Components are resolved by the same connected-components routes as the
     text dedup family (dedup.keep_representatives).
     """
-    import numpy as np
     import pandas as pd
 
     from ape_dts_spark.functions.dedup import keep_representatives
@@ -609,29 +680,15 @@ def semantic_dedup(
         )
 
     cent = _train_centroids(df, id_col, vec_col, n_lists)
-
-    def _assign(batches):
-        for pdf in batches:
-            vecs = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            vecs = vecs / np.linalg.norm(vecs, axis=1, keepdims=True)
-            yield pd.DataFrame(
-                {
-                    "list_id": np.argmax(vecs @ cent.T, axis=1).astype(np.int32),
-                    "id": pdf[id_col].to_numpy(),
-                    "vec": list(pdf[vec_col]),
-                }
-            )
-
     assigned = df.select(id_col, vec_col).mapInPandas(
-        _assign, schema="list_id int, id long, vec array<double>"
+        _assigner(cent, id_col, vec_col), schema=_ASSIGNED_SCHEMA
     )
 
     def _pairs(pdf: pd.DataFrame) -> pd.DataFrame:
         if len(pdf) < 2:
             return pd.DataFrame({"id_a": [], "id_b": []}).astype("int64")
         ids = pdf["id"].to_numpy()
-        vecs = np.array(pdf["vec"].tolist(), dtype=np.float64)
-        vecs = vecs / np.linalg.norm(vecs, axis=1, keepdims=True)
+        vecs = _unit_rows(_vectors(pdf["vec"]))
         sims = vecs @ vecs.T
         ai, bi = np.nonzero(np.triu(sims >= threshold, k=1))
         a, b = ids[ai], ids[bi]
@@ -655,15 +712,9 @@ def ivf_index_topk(
     the index is landed partitioned-by-list), then an Arrow kernel scores
     candidates with a per-query GEMM and one tiny shuffle resolves global
     top-k. Output: (query_id, neighbor_id, rank)."""
-    import numpy as np
-    import pandas as pd
-
     cent, assigned = index
-    q_rows = queries.select(id_col, vec_col).collect()
-    q_ids = np.array([int(r[id_col]) for r in q_rows])
-    q_mat = np.array([r[vec_col] for r in q_rows], dtype=np.float64)
-    q_mat /= np.linalg.norm(q_mat, axis=1, keepdims=True)
-    probing = np.argsort(-(q_mat @ cent.T), axis=1)[:, :n_probe]
+    q_ids, q_mat = _load_queries(queries, id_col, vec_col)
+    probing = _probe(q_mat, cent, n_probe)
     q_index = {int(q): i for i, q in enumerate(q_ids)}
 
     probe = assigned.sparkSession.createDataFrame(
@@ -674,36 +725,12 @@ def ivf_index_topk(
         F.col("id") != F.col("query_id")
     )
 
-    def _score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            vecs = np.array(pdf["vec"].tolist(), dtype=np.float64)
-            vecs = vecs / np.linalg.norm(vecs, axis=1, keepdims=True)
-            qi = np.array([q_index[int(q)] for q in pdf["query_id"]])
-            cos = np.einsum("ij,ij->i", q_mat[qi], vecs)
-            yield pd.DataFrame(
-                {"query_id": pdf["query_id"], "neighbor_id": pdf["id"], "cosine": cos}
-            )
+    def _score(pdf):
+        qi = np.array([q_index[int(q)] for q in pdf["query_id"]])
+        cos = np.einsum("ij,ij->i", q_mat[qi], _unit_rows(_vectors(pdf["vec"])))
+        return [(pdf["query_id"].to_numpy(), pdf["id"].to_numpy(), cos)]
 
-    from pyspark.sql import Window as W
-
-    scored = cand.mapInPandas(_score, schema="query_id long, neighbor_id long, cosine double")
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
-
-
-def _unit_rows(mat):
-    """Row-normalize, clamping zero norms to eps: a zero vector stays zero
-    instead of going NaN and silently poisoning codebooks / ADC tables."""
-    import numpy as np
-
-    nrm = np.linalg.norm(mat, axis=1, keepdims=True)
-    return mat / np.maximum(nrm, 1e-12)
+    return _topk(_scan(cand, _score), k)
 
 
 def _train_pq_codebooks(
@@ -723,31 +750,17 @@ def _train_pq_codebooks(
     size), unit-normalized, then independent Lloyd k-means per subspace with
     strided deterministic init. Returns (m, ks, subdim) float64 array.
     """
-    import numpy as np
-
-    n = corpus.count()
-    target = ks * sample_per_code
-    mod = max(1, n // max(1, target))
-    sample = (
-        corpus.select(id_col, vec_col)
-        .filter(F.pmod(F.xxhash64(F.col(id_col)), F.lit(mod)) == 0)
-        .collect()
+    mat = _train_sample(
+        corpus, id_col, vec_col, ks * sample_per_code,
+        "PQ codebook training sample is empty (corpus rows={n}, hash mod={mod}) "
+        "— cannot train codebooks on zero vectors",
     )
-    sample.sort(key=lambda r: r[id_col])
-    if not sample:
-        raise ValueError(
-            f"PQ codebook training sample is empty (corpus rows={n}, hash mod={mod}) "
-            "— cannot train codebooks on zero vectors"
-        )
-    mat = np.array([r[vec_col] for r in sample], dtype=np.float64)
-    return _kmeans_subspaces(_unit_rows(mat), m, ks, iters)
+    return _kmeans_subspaces(mat, m, ks, iters)
 
 
 def _kmeans_subspaces(mat, m: int, ks: int, iters: int = 10):
     """Independent Lloyd k-means per subspace over an (n, dim) float64
     matrix with strided deterministic init. Returns (m, k_eff, dim//m)."""
-    import numpy as np
-
     dim = mat.shape[1]
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
@@ -760,14 +773,42 @@ def _kmeans_subspaces(mat, m: int, ks: int, iters: int = 10):
         cent = s[::step][:k_eff].copy()
         for _ in range(iters):
             # L2 assignment via the expanded form; argmin is deterministic
-            d2 = ((s[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-            assign = np.argmin(d2, axis=1)
+            assign = np.argmin(_sq_dists(s, cent), axis=1)
             for c in range(k_eff):
                 members = s[assign == c]
                 if len(members):
                     cent[c] = members.mean(axis=0)
         books[j] = cent
     return books
+
+
+def _sq_dists(x, cent):
+    """d2[i, c] = squared L2 distance of row x[i] to centroid cent[c]."""
+    return ((x[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
+
+
+def _subspace_dists(mat, books):
+    """d[i, j, c] = ||mat_i sub_j - books[j][c]||^2 over the (m, ks, sub)
+    codebooks: a row's PQ code is its argmin over c, and a query's ADC table
+    is its own d[i]."""
+    sub = books.shape[2]
+    return np.stack(
+        [_sq_dists(mat[:, j * sub : (j + 1) * sub], books[j]) for j in range(len(books))], axis=1
+    )
+
+
+def _pq_encode(mat, books):
+    """PQ codes: codes[i, j] = nearest centroid of subvector j."""
+    return np.argmin(_subspace_dists(mat, books), axis=2)
+
+
+def _adc(tabs, codes):
+    """ADC: dist[qi, i] = sum_j tabs[qi, j, codes[i, j]] — one (nq x n)
+    table-lookup gather per subspace."""
+    dist = np.zeros((len(tabs), len(codes)))
+    for j in range(tabs.shape[1]):
+        dist += tabs[:, j, :][:, codes[:, j]]
+    return dist
 
 
 def pq_topk(
@@ -801,75 +842,19 @@ def pq_topk(
     corpus is scanned once and never shuffled, no pair relation materializes.
     Output: (query_id, neighbor_id, rank).
     """
-    import numpy as np
-    import pandas as pd
-
     books = _train_pq_codebooks(corpus, id_col, vec_col, m, ks)
-    sub = books.shape[2]
-
-    q_rows = queries.select(id_col, vec_col).collect()
-    q_ids = np.array([int(r[id_col]) for r in q_rows])
-    q_mat = np.array([r[vec_col] for r in q_rows], dtype=np.float64)
-    q_mat = _unit_rows(q_mat)
+    q_ids, q_mat = _load_queries(queries, id_col, vec_col)
     # ADC tables: tabs[qi, j, c] = ||q_sub_j - centroid_jc||^2
-    tabs = np.stack(
-        [
-            ((q_mat[:, j * sub : (j + 1) * sub][:, None, :] - books[j][None, :, :]) ** 2).sum(
-                axis=2
-            )
-            for j in range(m)
-        ],
-        axis=1,
-    )
+    tabs = _subspace_dists(q_mat, books)
 
-    def _score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            c_ids = pdf[id_col].to_numpy()
-            c_mat = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            c_mat = _unit_rows(c_mat)
-            # encode: codes[i, j] = nearest centroid of subvector j
-            codes = np.empty((len(c_mat), m), dtype=np.int64)
-            for j in range(m):
-                s = c_mat[:, j * sub : (j + 1) * sub]
-                d2 = ((s[:, None, :] - books[j][None, :, :]) ** 2).sum(axis=2)
-                codes[:, j] = np.argmin(d2, axis=1)
-            # ADC: dist[qi, i] = sum_j tabs[qi, j, codes[i, j]] — one
-            # (nq x n) table-lookup gather per subspace
-            dist = np.zeros((len(q_ids), len(c_mat)))
-            for j in range(m):
-                dist += tabs[:, j, :][:, codes[:, j]]
-            cand = min(k * rerank + 1, dist.shape[1])  # +1 survives self-match
-            idx = np.argpartition(dist, cand - 1, axis=1)[:, :cand]
-            # exact re-rank of the ADC survivors (vectors are local)
-            rows = []
-            for qi in range(len(q_ids)):
-                sel = idx[qi]
-                cos = c_mat[sel] @ q_mat[qi]
-                rows.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": np.full(len(sel), q_ids[qi]),
-                            "neighbor_id": c_ids[sel],
-                            "cosine": cos,
-                        }
-                    )
-                )
-            out = pd.concat(rows, ignore_index=True)
-            yield out[out["query_id"] != out["neighbor_id"]]
+    def _score(pdf):
+        c_mat = _unit_rows(_vectors(pdf[vec_col]))
+        dist = _adc(tabs, _pq_encode(c_mat, books))
+        idx = _best(-dist, k * rerank + 1)  # +1 survives self-match
+        # exact re-rank of the ADC survivors (vectors are local)
+        return _rerank(q_ids, q_mat, pdf[id_col].to_numpy(), c_mat, enumerate(idx))
 
-    from pyspark.sql import Window as W
-
-    partial = corpus.select(id_col, vec_col).mapInPandas(
-        _score, schema="query_id long, neighbor_id long, cosine double"
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _topk(_scan(corpus.select(id_col, vec_col), _score), k)
 
 
 def pq_index(
@@ -889,24 +874,17 @@ def pq_index(
     float vectors stay in cold storage (only an optional exact re-rank
     stage would fetch the few survivors).
     """
-    import numpy as np
-    import pandas as pd
     from pyspark import StorageLevel
 
     books = _train_pq_codebooks(corpus, id_col, vec_col, m, ks)
-    sub = books.shape[2]
 
     def _encode(batches):
+        import pandas as pd
+
         for pdf in batches:
             if not len(pdf):
                 continue
-            vecs = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            vecs = _unit_rows(vecs)
-            codes = np.empty((len(vecs), m), dtype=np.int32)
-            for j in range(m):
-                s = vecs[:, j * sub : (j + 1) * sub]
-                d2 = ((s[:, None, :] - books[j][None, :, :]) ** 2).sum(axis=2)
-                codes[:, j] = np.argmin(d2, axis=1)
+            codes = _pq_encode(_unit_rows(_vectors(pdf[vec_col])), books).astype(np.int32)
             yield pd.DataFrame(
                 {"id": pdf[id_col].to_numpy(), "codes": list(codes)}
             )
@@ -936,87 +914,27 @@ def pq_index_topk(
     vectors) — recall is pure-ADC, the published IVFADC trade.
     Output: (query_id, neighbor_id, rank).
     """
-    import numpy as np
-    import pandas as pd
-
     books, encoded = index
-    m, ks, sub = books.shape
+    q_ids, q_mat = _load_queries(queries, id_col, vec_col)
+    tabs = _subspace_dists(q_mat, books)
 
-    q_rows = queries.select(id_col, vec_col).collect()
-    q_ids = np.array([int(r[id_col]) for r in q_rows])
-    q_mat = np.array([r[vec_col] for r in q_rows], dtype=np.float64)
-    q_mat = _unit_rows(q_mat)
-    tabs = np.stack(
-        [
-            ((q_mat[:, j * sub : (j + 1) * sub][:, None, :] - books[j][None, :, :]) ** 2).sum(
-                axis=2
-            )
-            for j in range(m)
-        ],
-        axis=1,
-    )
+    def _score(pdf):
+        dist = _adc(tabs, np.array(pdf["codes"].tolist(), dtype=np.int64))
+        # the score is the negated distance: nearest first
+        return [_cut(q_ids, pdf["id"].to_numpy(), -dist, k + 1)]
 
-    def _score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            c_ids = pdf["id"].to_numpy()
-            codes = np.array(pdf["codes"].tolist(), dtype=np.int64)
-            dist = np.zeros((len(q_ids), len(c_ids)))
-            for j in range(m):
-                dist += tabs[:, j, :][:, codes[:, j]]
-            cand = min(k + 1, dist.shape[1])
-            idx = np.argpartition(dist, cand - 1, axis=1)[:, :cand]
-            rows = []
-            for qi in range(len(q_ids)):
-                sel = idx[qi]
-                rows.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": np.full(len(sel), q_ids[qi]),
-                            "neighbor_id": c_ids[sel],
-                            "dist": dist[qi, sel],
-                        }
-                    )
-                )
-            out = pd.concat(rows, ignore_index=True)
-            yield out[out["query_id"] != out["neighbor_id"]]
-
-    from pyspark.sql import Window as W
-
-    partial = encoded.mapInPandas(
-        _score, schema="query_id long, neighbor_id long, dist double"
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("dist").asc(), F.col("neighbor_id"))
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _topk(_scan(encoded, _score), k)
 
 def _train_residual_books(corpus, id_col, vec_col, cent, m, ks, sample_per_code=40, iters=10):
     """Residual PQ codebooks for IVF-PQ (Jegou et al. 2011 SIV, IVFADC):
     hash-mod sample -> unit rows -> subtract each vector's nearest coarse
     centroid -> shared per-subspace k-means over the residuals. One codebook
     set is shared across all cells (the paper's memory-efficient variant)."""
-    import numpy as np
-
-    n = corpus.count()
-    target = ks * sample_per_code
-    mod = max(1, n // max(1, target))
-    sample = (
-        corpus.select(id_col, vec_col)
-        .filter(F.pmod(F.xxhash64(F.col(id_col)), F.lit(mod)) == 0)
-        .collect()
+    mat = _train_sample(
+        corpus, id_col, vec_col, ks * sample_per_code,
+        "IVF-PQ residual training sample is empty (corpus rows={n}, hash mod={mod})",
     )
-    sample.sort(key=lambda r: r[id_col])
-    if not sample:
-        raise ValueError(
-            f"IVF-PQ residual training sample is empty (corpus rows={n}, hash mod={mod})"
-        )
-    mat = _unit_rows(np.array([r[vec_col] for r in sample], dtype=np.float64))
-    assign = np.argmax(mat @ cent.T, axis=1)
-    resid = mat - cent[assign]
+    resid = mat - cent[_nearest(mat, cent)]
     return _kmeans_subspaces(resid, m, ks, iters)
 
 
@@ -1025,17 +943,27 @@ def _adc_tables(q_mat, cent, probing, books):
     — one ADC table per (query, probed cell), since IVF-PQ residuals are
     relative to the probed cell's centroid. Bounded by the query set:
     nq x n_probe x m x ks doubles."""
-    import numpy as np
+    return np.stack(
+        [_subspace_dists(q_mat - cent[probing[:, pi]], books) for pi in range(probing.shape[1])],
+        axis=1,
+    )
 
-    nq, n_probe = probing.shape
-    m, ks, sub = books.shape
-    tabs = np.empty((nq, n_probe, m, ks))
-    for pi in range(n_probe):
-        resid = q_mat - cent[probing[:, pi]]
-        for j in range(m):
-            s = resid[:, j * sub : (j + 1) * sub]
-            tabs[:, pi, j, :] = ((s[:, None, :] - books[j][None, :, :]) ** 2).sum(axis=2)
-    return tabs
+
+def _cell_adc_cut(cells, codes, probing, tabs, keep: int):
+    """IVF-PQ's per-cell candidate cut over one batch: for each cell and
+    each query probing it, the ADC distances of the cell's members against
+    that query's table for the cell, and the ``keep`` nearest. Yields
+    (query row, member rows, their distances)."""
+    for li in np.unique(cells):
+        csel = np.nonzero(cells == li)[0]
+        for qi, pi in zip(*np.nonzero(probing == li)):
+            # ADC over this cell's members for this query:
+            # dist[i] = sum_j t[j, codes[i, j]] via a broadcast gather
+            t = tabs[qi, pi]
+            dist = t[np.arange(t.shape[0]), codes[csel]].sum(axis=1)
+            cand = min(keep, len(csel))
+            idx = np.argpartition(dist, cand - 1)[:cand]
+            yield qi, csel[idx], dist[idx]
 
 
 def ivfpq_topk(
@@ -1072,69 +1000,20 @@ def ivfpq_topk(
     (absent 16^8-space code collisions) and exact re-rank pins cosine=1 at
     rank 1. Output: (query_id, neighbor_id, rank).
     """
-    import numpy as np
-    import pandas as pd
-
     cent = _train_centroids(corpus, id_col, vec_col, n_lists)
     books = _train_residual_books(corpus, id_col, vec_col, cent, m, ks)
-    sub = books.shape[2]
-
-    q_rows = queries.select(id_col, vec_col).collect()
-    q_ids = np.array([int(r[id_col]) for r in q_rows])
-    q_mat = _unit_rows(np.array([r[vec_col] for r in q_rows], dtype=np.float64))
-    probing = np.argsort(-(q_mat @ cent.T), axis=1)[:, :n_probe]
+    q_ids, q_mat = _load_queries(queries, id_col, vec_col)
+    probing = _probe(q_mat, cent, n_probe)
     tabs = _adc_tables(q_mat, cent, probing, books)
 
-    def _score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            c_ids = pdf[id_col].to_numpy()
-            c_mat = _unit_rows(np.array(pdf[vec_col].tolist(), dtype=np.float64))
-            lists = np.argmax(c_mat @ cent.T, axis=1)
-            resid = c_mat - cent[lists]
-            codes = np.empty((len(c_mat), m), dtype=np.int64)
-            for j in range(m):
-                s = resid[:, j * sub : (j + 1) * sub]
-                d2 = ((s[:, None, :] - books[j][None, :, :]) ** 2).sum(axis=2)
-                codes[:, j] = np.argmin(d2, axis=1)
-            rows = []
-            for li in np.unique(lists):
-                csel = np.nonzero(lists == li)[0]
-                hits = np.nonzero(probing == li)
-                for qi, pi in zip(*hits):
-                    # ADC over this cell's members for this query:
-                    # dist[i] = sum_j t[j, codes[i, j]] via a broadcast gather
-                    t = tabs[qi, pi]
-                    dist = t[np.arange(m), codes[csel]].sum(axis=1)
-                    cand = min(k * rerank + 1, len(csel))
-                    idx = np.argpartition(dist, cand - 1)[:cand]
-                    sel = csel[idx]
-                    cos = c_mat[sel] @ q_mat[qi]  # exact re-rank, vectors local
-                    rows.append(
-                        pd.DataFrame(
-                            {
-                                "query_id": np.full(len(sel), q_ids[qi]),
-                                "neighbor_id": c_ids[sel],
-                                "cosine": cos,
-                            }
-                        )
-                    )
-            if rows:
-                out = pd.concat(rows, ignore_index=True)
-                yield out[out["query_id"] != out["neighbor_id"]]
+    def _score(pdf):
+        c_mat = _unit_rows(_vectors(pdf[vec_col]))
+        lists = _nearest(c_mat, cent)
+        cut = _cell_adc_cut(lists, _pq_encode(c_mat - cent[lists], books), probing, tabs, k * rerank + 1)
+        # exact re-rank, vectors local
+        return _rerank(q_ids, q_mat, pdf[id_col].to_numpy(), c_mat, ((qi, sel) for qi, sel, _ in cut))
 
-    from pyspark.sql import Window as W
-
-    partial = corpus.select(id_col, vec_col).mapInPandas(
-        _score, schema="query_id long, neighbor_id long, cosine double"
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _topk(_scan(corpus.select(id_col, vec_col), _score), k)
 
 
 def ivfpq_index(
@@ -1152,8 +1031,6 @@ def ivfpq_index(
     query touches n_probe/n_lists of the index files — partition pruning on
     top of m-byte compression — and never reads a corpus float vector.
     """
-    import numpy as np
-    import pandas as pd
     from pyspark import StorageLevel
 
     cent = _train_centroids(corpus, id_col, vec_col, n_lists)
@@ -1161,7 +1038,7 @@ def ivfpq_index(
 
     encoded = (
         corpus.select(id_col, vec_col)
-        .mapInPandas(_ivfpq_encoder(cent, books, m, id_col, vec_col), schema=_IVFPQ_CODES_SCHEMA)
+        .mapInPandas(_ivfpq_encoder(cent, books, id_col, vec_col), schema=_IVFPQ_CODES_SCHEMA)
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     encoded.count()
@@ -1171,36 +1048,29 @@ def ivfpq_index(
 _IVFPQ_CODES_SCHEMA = "id long, cell int, codes array<int>, err double"
 
 
-def _ivfpq_encoder(cent, books, m: int, id_col: str, vec_col: str):
+def _ivfpq_encoder(cent, books, id_col: str, vec_col: str):
     """mapInPandas closure encoding vectors against FROZEN centroids +
     residual codebooks. ``err`` is each vector's squared residual
     reconstruction error — the quantization quality the codebooks were
     trained to minimize, recorded so index maintenance can measure drift."""
 
     def _encode(batches):
-        import numpy as np
         import pandas as pd
 
-        sub = books.shape[2]
         for pdf in batches:
             if not len(pdf):
                 continue
-            vecs = _unit_rows(np.array(pdf[vec_col].tolist(), dtype=np.float64))
-            lists = np.argmax(vecs @ cent.T, axis=1)
+            vecs = _unit_rows(_vectors(pdf[vec_col]))
+            lists = _nearest(vecs, cent)
             resid = vecs - cent[lists]
-            codes = np.empty((len(vecs), m), dtype=np.int32)
-            recon = np.empty_like(resid)
-            for j in range(m):
-                s = resid[:, j * sub : (j + 1) * sub]
-                d2 = ((s[:, None, :] - books[j][None, :, :]) ** 2).sum(axis=2)
-                codes[:, j] = np.argmin(d2, axis=1)
-                recon[:, j * sub : (j + 1) * sub] = books[j][codes[:, j]]
+            codes = _pq_encode(resid, books)
+            recon = books[np.arange(len(books)), codes].reshape(resid.shape)
             err = ((resid - recon) ** 2).sum(axis=1)
             yield pd.DataFrame(
                 {
                     "id": pdf[id_col].to_numpy(),
                     "cell": lists,
-                    "codes": list(codes),
+                    "codes": list(codes.astype(np.int32)),
                     "err": err,
                 }
             )
@@ -1232,10 +1102,9 @@ def ivfpq_index_append(
     from pyspark import StorageLevel
 
     cent, books, encoded = index
-    m = books.shape[0]
     appended = (
         new_batch.select(id_col, vec_col)
-        .mapInPandas(_ivfpq_encoder(cent, books, m, id_col, vec_col), schema=_IVFPQ_CODES_SCHEMA)
+        .mapInPandas(_ivfpq_encoder(cent, books, id_col, vec_col), schema=_IVFPQ_CODES_SCHEMA)
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     base_err = encoded.agg(F.avg("err")).first()[0]
@@ -1279,91 +1148,47 @@ def ivfpq_index_topk(
     measured 39/40 planted twins at rank 1 pure-ADC vs 40/40 with re-rank
     on the sf0.1 corpus. Output: (query_id, neighbor_id, rank).
     """
-    import numpy as np
-    import pandas as pd
-
     cent, books, encoded = index
-
-    q_rows = queries.select(id_col, vec_col).collect()
-    q_ids = np.array([int(r[id_col]) for r in q_rows])
-    q_mat = _unit_rows(np.array([r[vec_col] for r in q_rows], dtype=np.float64))
-    probing = np.argsort(-(q_mat @ cent.T), axis=1)[:, :n_probe]
+    q_ids, q_mat = _load_queries(queries, id_col, vec_col)
+    probing = _probe(q_mat, cent, n_probe)
     tabs = _adc_tables(q_mat, cent, probing, books)
     probed_cells = sorted({int(c) for c in probing.ravel()})
 
-    def _score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            c_ids = pdf["id"].to_numpy()
-            cells = pdf["cell"].to_numpy()
-            codes = np.array(pdf["codes"].tolist(), dtype=np.int64)
-            rows = []
-            for li in np.unique(cells):
-                csel = np.nonzero(cells == li)[0]
-                for qi, pi in zip(*np.nonzero(probing == li)):
-                    t = tabs[qi, pi]
-                    dist = t[np.arange(t.shape[0]), codes[csel]].sum(axis=1)
-                    cand = min(k + 1, len(csel))
-                    idx = np.argpartition(dist, cand - 1)[:cand]
-                    sel = csel[idx]
-                    rows.append(
-                        pd.DataFrame(
-                            {
-                                "query_id": np.full(len(sel), q_ids[qi]),
-                                "neighbor_id": c_ids[sel],
-                                "dist": dist[idx],
-                            }
-                        )
-                    )
-            if rows:
-                out = pd.concat(rows, ignore_index=True)
-                yield out[out["query_id"] != out["neighbor_id"]]
+    def _score(pdf):
+        c_ids = pdf["id"].to_numpy()
+        codes = np.array(pdf["codes"].tolist(), dtype=np.int64)
+        cut = _cell_adc_cut(pdf["cell"].to_numpy(), codes, probing, tabs, k + 1)
+        # the score is the negated ADC distance: nearest first
+        return [(np.full(len(sel), q_ids[qi]), c_ids[sel], -dist) for qi, sel, dist in cut]
 
-    from pyspark.sql import Window as W
-
-    partial = encoded.filter(F.col("cell").isin(probed_cells)).mapInPandas(
-        _score, schema="query_id long, neighbor_id long, dist double"
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("dist").asc(), F.col("neighbor_id"))
+    partial = _scan(encoded.filter(F.col("cell").isin(probed_cells)), _score)
     if rerank_with is None:
-        return (
-            partial.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank")
-        )
-    survivors = (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k * rerank)
-        .select("query_id", "neighbor_id")
-    )
-    # fetch ONLY the survivors' vectors: broadcast the tiny survivor relation
-    # onto the cold-storage vector table, then exact cosine per pair (the
-    # query vectors ride along the same way — both sides are query-bounded)
-    n_vec = rerank_with.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.expr(f"transform({vec_col}, x -> CAST(x AS DOUBLE))").alias("c_vec"),
-    )
-    q_vec = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.expr(f"transform({vec_col}, x -> CAST(x AS DOUBLE))").alias("q_vec"),
-    )
-    nrm = "sqrt(aggregate(zip_with({v}, {v}, (x, y) -> x * y), CAST(0 AS DOUBLE), (acc, v) -> acc + v))"
-    scored = (
-        n_vec.join(F.broadcast(survivors), "neighbor_id")
-        .join(F.broadcast(q_vec), "query_id")
-        .withColumn(
-            "cosine",
-            F.expr(_dot("q_vec", "c_vec"))
-            / (F.expr(nrm.format(v="q_vec")) * F.expr(nrm.format(v="c_vec"))),
-        )
-    )
-    w2 = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+        return _topk(partial, k)
+    return _exact_rerank(_topk(partial, k * rerank), queries, rerank_with, id_col, vec_col, k)
+
+
+def _sq8_bounds(corpus: DataFrame, vec_col: str):
+    """SQ8 quantizer: per-dimension bounds from ONE map-side combined
+    aggregate (2*dim scalars) as (lo, span), span 1 on a constant
+    dimension."""
+    dim = len(corpus.select(vec_col).first()[0])
+    bounds_row = corpus.agg(
+        *[F.min(F.col(vec_col)[i]).alias(f"lo{i}") for i in range(dim)],
+        *[F.max(F.col(vec_col)[i]).alias(f"hi{i}") for i in range(dim)],
+    ).collect()[0]
+    lo = np.array([bounds_row[f"lo{i}"] for i in range(dim)], dtype=np.float64)
+    hi = np.array([bounds_row[f"hi{i}"] for i in range(dim)], dtype=np.float64)
+    return lo, np.where(hi > lo, hi - lo, 1.0)
+
+
+def _sq8_encode(mat, lo, span):
+    """One uint8 code (0..255, held as int64) per dimension."""
+    return np.clip(np.rint((mat - lo) / span * 255.0), 0, 255).astype(np.int64)
+
+
+def _sq8_decode(codes, lo, span):
+    """Unit rows of the dequantized codes."""
+    return _unit_rows(lo + codes * span / 255.0)
 
 
 def sq8_topk(
@@ -1390,57 +1215,16 @@ def sq8_topk(
     quantization of the query itself, and exact re-rank breaks any
     quantization tie in the twin's favor. One tiny top-k shuffle; the
     corpus is scanned once and never shuffled."""
-    import numpy as np
-    import pandas as pd
+    lo, span = _sq8_bounds(corpus, vec_col)
+    q_ids, q_mat = _load_queries(queries, id_col, vec_col)
 
-    dim = len(corpus.select(vec_col).first()[0])
-    bounds_row = corpus.agg(
-        *[F.min(F.col(vec_col)[i]).alias(f"lo{i}") for i in range(dim)],
-        *[F.max(F.col(vec_col)[i]).alias(f"hi{i}") for i in range(dim)],
-    ).collect()[0]
-    lo = np.array([bounds_row[f"lo{i}"] for i in range(dim)], dtype=np.float64)
-    hi = np.array([bounds_row[f"hi{i}"] for i in range(dim)], dtype=np.float64)
-    span = np.where(hi > lo, hi - lo, 1.0)
+    def _score(pdf):
+        c_mat = _vectors(pdf[vec_col])
+        approx = _sq8_decode(_sq8_encode(c_mat, lo, span), lo, span) @ q_mat.T  # (n, nq) dequantized cosine
+        idx = _best(approx.T, k * rerank + 1)
+        return _rerank(q_ids, q_mat, pdf[id_col].to_numpy(), _unit_rows(c_mat), enumerate(idx))
 
-    q_rows = queries.select(id_col, vec_col).collect()
-    q_ids = np.array([int(r[id_col]) for r in q_rows])
-    q_mat = _unit_rows(np.array([r[vec_col] for r in q_rows], dtype=np.float64))
-
-    def _score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            c_ids = pdf[id_col].to_numpy()
-            c_mat = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            codes = np.clip(np.rint((c_mat - lo) / span * 255.0), 0, 255).astype(np.uint8)
-            deq = _unit_rows(lo + codes.astype(np.float64) * span / 255.0)
-            approx = deq @ q_mat.T  # (n, nq) dequantized cosine
-            cand = min(k * rerank + 1, len(c_mat))
-            idx = np.argpartition(-approx, cand - 1, axis=0)[:cand].T  # (nq, cand)
-            exact = _unit_rows(c_mat)
-            rows = []
-            for qi in range(len(q_ids)):
-                sel = idx[qi]
-                cos = exact[sel] @ q_mat[qi]
-                rows.append(pd.DataFrame({
-                    "query_id": np.full(len(sel), q_ids[qi]),
-                    "neighbor_id": c_ids[sel],
-                    "cosine": cos,
-                }))
-            out = pd.concat(rows, ignore_index=True)
-            yield out[out["query_id"] != out["neighbor_id"]]
-
-    from pyspark.sql import Window as W
-
-    partial = corpus.select(id_col, vec_col).mapInPandas(
-        _score, schema="query_id long, neighbor_id long, cosine double"
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _topk(_scan(corpus.select(id_col, vec_col), _score), k)
 
 
 def sq8_index(
@@ -1454,17 +1238,9 @@ def sq8_index(
     (the family's build-once/serve pattern next to pq_index/ivfpq_index).
     Returns (bounds, codes_df); codes persist eagerly like the other
     served indexes."""
-    import numpy as np
     from pyspark import StorageLevel
 
-    dim = len(corpus.select(vec_col).first()[0])
-    bounds_row = corpus.agg(
-        *[F.min(F.col(vec_col)[i]).alias(f"lo{i}") for i in range(dim)],
-        *[F.max(F.col(vec_col)[i]).alias(f"hi{i}") for i in range(dim)],
-    ).collect()[0]
-    lo = np.array([bounds_row[f"lo{i}"] for i in range(dim)], dtype=np.float64)
-    hi = np.array([bounds_row[f"hi{i}"] for i in range(dim)], dtype=np.float64)
-    span = np.where(hi > lo, hi - lo, 1.0)
+    lo, span = _sq8_bounds(corpus, vec_col)
 
     def _encode(batches):
         import pandas as pd
@@ -1472,11 +1248,9 @@ def sq8_index(
         for pdf in batches:
             if not len(pdf):
                 continue
-            c_mat = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            codes = np.clip(np.rint((c_mat - lo) / span * 255.0), 0, 255).astype(np.int64)
             yield pd.DataFrame({
                 id_col: pdf[id_col].to_numpy(),
-                "codes": list(codes),
+                "codes": list(_sq8_encode(_vectors(pdf[vec_col]), lo, span)),
             })
 
     codes = corpus.select(id_col, vec_col).mapInPandas(
@@ -1499,74 +1273,14 @@ def sq8_index_topk(
     relation (never touches raw vectors), then an exact re-rank of the
     top-k*rerank survivors against ``rerank_with`` (the deployed
     fetch-survivor-vectors stage; None = approx ranks ship as-is)."""
-    import numpy as np
-    import pandas as pd
-
     (lo, span), codes = index
-    q_rows = queries.select(id_col, vec_col).collect()
-    q_ids = np.array([int(r[id_col]) for r in q_rows])
-    q_mat = _unit_rows(np.array([r[vec_col] for r in q_rows], dtype=np.float64))
+    q_ids, q_mat = _load_queries(queries, id_col, vec_col)
 
-    def _score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            c_ids = pdf[id_col].to_numpy()
-            code_mat = np.array(pdf["codes"].tolist(), dtype=np.float64)
-            deq = _unit_rows(lo + code_mat * span / 255.0)
-            approx = deq @ q_mat.T
-            cand = min(k * rerank + 1, len(c_ids))
-            idx = np.argpartition(-approx, cand - 1, axis=0)[:cand].T
-            rows = []
-            for qi in range(len(q_ids)):
-                sel = idx[qi]
-                rows.append(pd.DataFrame({
-                    "query_id": np.full(len(sel), q_ids[qi]),
-                    "neighbor_id": c_ids[sel],
-                    "cosine": approx[sel, qi],
-                }))
-            out = pd.concat(rows, ignore_index=True)
-            yield out[out["query_id"] != out["neighbor_id"]]
+    def _score(pdf):
+        approx = _sq8_decode(_vectors(pdf["codes"]), lo, span) @ q_mat.T
+        return [_cut(q_ids, pdf[id_col].to_numpy(), approx.T, k * rerank + 1)]
 
-    from pyspark.sql import Window as W
-
-    partial = codes.mapInPandas(_score, schema="query_id long, neighbor_id long, cosine double")
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    survivors = (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k * rerank)
-        .drop("rank")
-    )
+    partial = _scan(codes, _score)
     if rerank_with is None:
-        w2 = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-        return (
-            survivors.withColumn("rank", F.row_number().over(w2))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank")
-        )
-    vec = rerank_with.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.expr(f"transform({vec_col}, x -> CAST(x AS DOUBLE))").alias("c_vec"),
-    )
-    qv = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.expr(f"transform({vec_col}, x -> CAST(x AS DOUBLE))").alias("q_vec"),
-    )
-    nq = with_norm(qv.withColumnRenamed("q_vec", "embedding"), "embedding", "q_norm").select(
-        "query_id", F.col("embedding").alias("q_vec"), "q_norm"
-    )
-    nc = with_norm(vec.withColumnRenamed("c_vec", "embedding"), "embedding", "c_norm").select(
-        "neighbor_id", F.col("embedding").alias("c_vec"), "c_norm"
-    )
-    exact = (
-        survivors.select("query_id", "neighbor_id")
-        .join(nc, "neighbor_id")
-        .join(F.broadcast(nq), "query_id")
-        .withColumn("cos", F.expr(_dot("q_vec", "c_vec")) / (F.col("q_norm") * F.col("c_norm")))
-    )
-    w3 = W.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
-        exact.withColumn("rank", F.row_number().over(w3))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+        return _topk(partial, k)
+    return _exact_rerank(_topk(partial, k * rerank), queries, rerank_with, id_col, vec_col, k)

@@ -82,17 +82,18 @@ class PipelineLimiter:
     def wants_bytes(self) -> bool:
         return self.max_mbps > 0
 
-    def admit_batch(self, batch) -> float:
+    def admit_batch(self, batch, n_records: int | None = None) -> float:
         """Admit a micro-batch DataFrame: one agg computes (records, bytes)
         and both buckets acquire together (buffer_limiter.rs:79-99). Bytes =
         serialized-JSON row size — the same order of magnitude as the
         reference's malloc-size accounting on DtData. The bytes agg only
-        runs when max_mbps is configured; a pure max_rps limiter stays a
-        single count."""
+        runs when max_mbps is configured; a pure max_rps limiter charges
+        ``n_records`` when the caller has already counted the batch, and
+        counts it otherwise."""
         from pyspark.sql import functions as F
 
         if not self.wants_bytes:
-            return self.acquire(batch.count())
+            return self.acquire(batch.count() if n_records is None else n_records)
         row = batch.agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(F.length(F.to_json(F.struct(*batch.columns)))).alias("b"),

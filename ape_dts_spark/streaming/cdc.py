@@ -418,11 +418,7 @@ class CdcPipeline:
             )
         throttle_sec = 0.0
         if self.limiter is not None:
-            throttle_sec = (
-                self.limiter.admit_batch(batch)
-                if hasattr(self.limiter, "admit_batch")
-                else self.limiter.acquire(n_events)
-            )
+            throttle_sec = self.limiter.admit_batch(batch, n_events)
         t_apply = time.perf_counter()
         # an empty micro-batch (e.g. every event filtered out) records its
         # epoch only: merge-applying it would commit a full copy of the table
@@ -609,10 +605,7 @@ class MultiTableCdcPipeline:
         staged = batch.repartition(F.col("schema"), F.col("tb")).persist()
         try:
             if self.limiter is not None:
-                if hasattr(self.limiter, "admit_batch"):
-                    self.limiter.admit_batch(staged)
-                else:
-                    self.limiter.acquire(staged.count())
+                self.limiter.admit_batch(staged)
             present = [
                 (r["schema"], r["tb"])
                 for r in staged.select("schema", "tb").distinct().collect()

@@ -2,6 +2,7 @@
 text analysis sanity (the oracle gate covers exactness; these cover semantic
 quality properties the oracle can't express)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from ape_dts_spark import demo
@@ -205,6 +206,50 @@ def test_ann_family_recall_at_5(spark, sf_dir):
         approx = {(r["query_id"], r["neighbor_id"]) for r in fn().collect()}
         recall = len(exact & approx) / len(exact)
         assert recall >= floor, f"{name} recall@5 {recall:.2f} < {floor}"
+
+
+RERANKED = {
+    "cosine_topk": lambda q, c: sim.cosine_topk(q, c, k=5),
+    "cosine_topk_np": lambda q, c: sim.cosine_topk_np(q, c, k=5),
+    "pq_topk": lambda q, c: sim.pq_topk(q, c, k=5),
+    "sq8_topk": lambda q, c: sim.sq8_topk(q, c, k=5),
+    "ivfpq_topk": lambda q, c: sim.ivfpq_topk(q, c, k=5),
+    "sq8_index_topk": lambda q, c: sim.sq8_index_topk(sim.sq8_index(c), q, k=5, rerank_with=c),
+    "ivfpq_index_topk": lambda q, c: sim.ivfpq_index_topk(sim.ivfpq_index(c), q, k=5, rerank_with=c),
+}
+
+
+@pytest.mark.parametrize("name", sorted(RERANKED))
+def test_reranked_searchers_rank_by_exact_cosine(spark, sf_dir, name):
+    """Ranks 2..k, not only rank 1: every searcher that re-ranks by exact
+    cosine returns ranks 1..k without gaps, no self-match, no repeated
+    neighbor, and exact cosines (recomputed in numpy) that never increase
+    from one rank to the next, ties going to the lower neighbor_id. The
+    corpus holds a twin (id + 100000) of every vector, so ties occur."""
+    import numpy as np
+
+    emb = demo.load(spark, sf_dir, "embeddings")
+    corpus = emb.unionByName(emb.withColumn("vec_id", F.col("vec_id") + 100_000))
+    queries = emb.filter(F.col("vec_id") % 50 == 0)
+    vec = {r["vec_id"]: np.array(r["embedding"], dtype=np.float64) for r in corpus.collect()}
+    ranked = {}
+    for r in RERANKED[name](queries, corpus).collect():
+        ranked.setdefault(r["query_id"], []).append((r["rank"], r["neighbor_id"]))
+    assert set(ranked) == {r["vec_id"] for r in queries.collect()}
+    n_ties = 0
+    for qid, rows in ranked.items():
+        rows.sort()
+        assert [rank for rank, _ in rows] == [1, 2, 3, 4, 5], (qid, rows)
+        nids = [nid for _, nid in rows]
+        assert qid not in nids and len(set(nids)) == len(nids), (qid, nids)
+        q = vec[qid]
+        cos = [float(np.dot(q, vec[n]) / (np.linalg.norm(q) * np.linalg.norm(vec[n]))) for n in nids]
+        for r in range(len(nids) - 1):
+            assert cos[r + 1] <= cos[r] + 1e-12, (qid, nids, cos)
+            if cos[r + 1] == cos[r]:
+                n_ties += 1
+                assert nids[r] < nids[r + 1], (qid, nids, cos)
+    assert n_ties > 0
 
 
 def test_minhash_identical_set_expansion(spark):
@@ -922,7 +967,8 @@ def test_minhash_incremental_cheap_profile_and_width_guard(spark):
 
 def test_pq_codebook_edge_guards(spark):
     """Empty training sample raises a clear error; zero-norm vectors stay
-    finite (clamped norm) instead of poisoning codebooks with NaN."""
+    finite (clamped norm) instead of poisoning codebooks with NaN — in the
+    PQ codebooks and in the IVF centroids."""
     import numpy as np
     import pytest
 
@@ -938,6 +984,24 @@ def test_pq_codebook_edge_guards(spark):
     q = spark.createDataFrame(rows[:2], "vec_id long, embedding array<float>")
     out = sim.pq_topk(q, emb, m=2, ks=2, k=2)
     assert out.count() == 4  # 2 queries x top-2, no NaN-dropped rows
+
+    # IVF family: a zero vector with the lowest id is the first strided
+    # centroid pick; a NaN centroid would put every vector in list 0 and
+    # no query probes it, so every twin must still come back at rank 1
+    rng = np.random.default_rng(7)
+    corpus = [(0, [0.0] * 16)] + [(i, rng.standard_normal(16).tolist()) for i in range(1, 200)]
+    twins = [(i + 1000, v) for i, v in corpus if i % 10 == 5]
+    emb = spark.createDataFrame(corpus, "vec_id long, embedding array<float>")
+    q = spark.createDataFrame(twins, "vec_id long, embedding array<float>")
+    searchers = {
+        "ivf_topk": lambda: sim.ivf_topk(q, emb, k=1),
+        "ivf_index_topk": lambda: sim.ivf_index_topk(sim.ivf_index(emb), q, k=1),
+        "ivfpq_topk": lambda: sim.ivfpq_topk(q, emb, k=1),
+        "ivfpq_index_topk": lambda: sim.ivfpq_index_topk(sim.ivfpq_index(emb), q, k=1, rerank_with=emb),
+    }
+    want = {(qid, qid - 1000, 1) for qid, _ in twins}
+    for name, search in searchers.items():
+        assert {tuple(r) for r in search().collect()} == want, name
 
 
 def test_dup_spans_planted_substrings(spark):

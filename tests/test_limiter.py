@@ -78,10 +78,9 @@ def test_from_config_keys():
     assert from_config(cfg.sinker) is None
 
 
-def test_cdc_pipeline_throttles_batches(spark, tmp_path):
-    """apply_batch acquires its record count: with a tiny max_rps, the
-    second batch records throttle_sec > 0 while state stays correct."""
-    from pyspark.sql import functions as F
+def _debezium_pipe(spark, root, limiter):
+    """A CdcPipeline over a fresh target under ``root`` and a two-insert
+    Debezium batch for it."""
     from pyspark.sql import types as T
 
     from ape_dts_spark.sinks.parquet_table import ParquetTable
@@ -91,24 +90,46 @@ def test_cdc_pipeline_throttles_batches(spark, tmp_path):
         T.StructField("id", T.LongType()), T.StructField("name", T.StringType()),
         T.StructField("bal", T.LongType()),
     ])
-    c = Clock()
-    lim = PipelineLimiter(max_rps=2, clock=c.now, sleep=c.sleep)
-    table = ParquetTable(spark, str(tmp_path / "tgt"), payload)
-    pipe = CdcPipeline(spark, table, key_cols=["id"], limiter=lim)
+    table = ParquetTable(spark, str(root / "tgt"), payload)
+    pipe = CdcPipeline(spark, table, key_cols=["id"], limiter=limiter)
 
     def ev(i):
         return {"op": "c", "before": None, "after": {"id": i, "name": f"u{i}", "bal": i},
                 "source": {"db": "d", "table": "t", "ts_ms": 1_700_000_000_000, "seq": i}}
 
-    src = tmp_path / "src"
-    src.mkdir()
+    src = root / "src"
+    src.mkdir(parents=True)
     write_debezium_jsonl([ev(1), ev(2)], os.path.join(src, "b1.jsonl"))
-    batch = parse_debezium(spark.read.text(str(src)), payload)
+    return pipe, parse_debezium(spark.read.text(str(src)), payload)
+
+
+def test_cdc_pipeline_throttles_batches(spark, tmp_path):
+    """apply_batch acquires its record count: with a tiny max_rps, the
+    second batch records throttle_sec > 0 while state stays correct."""
+    from pyspark.sql import functions as F
+
+    c = Clock()
+    lim = PipelineLimiter(max_rps=2, clock=c.now, sleep=c.sleep)
+    pipe, batch = _debezium_pipe(spark, tmp_path, lim)
     pipe.apply_batch(batch, batch_id=0)
     assert pipe.metrics[-1]["throttle_sec"] == 0.0  # initial bucket covers it
     pipe.apply_batch(batch.withColumn("seq", F.col("seq") + 10), batch_id=1)
     assert pipe.metrics[-1]["throttle_sec"] > 0.0  # bucket drained -> slept
-    assert sorted(r["id"] for r in table.current().collect()) == [1, 2]
+    assert sorted(r["id"] for r in pipe.target.current().collect()) == [1, 2]
+
+
+def test_rps_limiter_adds_no_job_to_apply_batch(spark, spark_jobs, tmp_path):
+    """An rps-only limiter charges the record count apply_batch's stats agg
+    already has: the limited batch runs as many Spark jobs as an unlimited
+    one."""
+    c = Clock()
+    runs = {}
+    for name, lim in [("unlimited", None), ("rps", PipelineLimiter(max_rps=2, clock=c.now, sleep=c.sleep))]:
+        pipe, batch = _debezium_pipe(spark, tmp_path / name, lim)
+        with spark_jobs() as jobs:
+            pipe.apply_batch(batch, batch_id=0)
+        runs[name] = jobs.n
+    assert runs["rps"] == runs["unlimited"] > 0, runs
 
 
 def test_admit_batch_charges_bytes(spark):

@@ -68,3 +68,21 @@ def test_read_parquet_schema_matches_inference_without_a_job(spark, spark_jobs, 
         assert read_parquet(spark, path).count() == 40
     if case == "common_metadata":
         assert schema.fieldNames() == ["id", "note"]
+
+
+@pytest.mark.parametrize("path", sorted(glob.glob(f"{SF01}/*.parquet")), ids=os.path.basename)
+def test_demo_load_schema_without_a_job(spark, spark_jobs, path):
+    """``demo.load`` returns the schema of ``spark.read.parquet`` plus its
+    events.ts conversion, and starts no Spark job."""
+    from pyspark.sql import functions as F
+
+    from ape_dts_spark import demo
+
+    table = os.path.basename(path)[: -len(".parquet")]
+    with spark_jobs() as jobs:
+        schema = demo.load(spark, SF01, table).schema
+    assert jobs.n == 0
+    inferred = spark.read.parquet(path)
+    if table == "events" and dict(inferred.dtypes).get("ts") == "bigint":
+        inferred = inferred.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    assert schema == inferred.schema
