@@ -18,6 +18,22 @@ Design for 100 TB:
 Everything is engine-portable (the token hash is the 31-polynomial from
 functions/text.py), so DuckDB oracles reproduce results bit-for-bit — that is
 why we avoid xxhash64/crc32 here.
+
+The near-duplicate kernels — ``jaccard_pairs`` (exact PPJoin),
+``minhash_lsh_pairs``, ``simhash_pairs``, and ``minhash_index`` +
+``minhash_incremental_pairs`` — each keep their own plan but share one
+private implementation per step:
+
+- identical-set collapse ``_collapse_sets``: tokenize, one window shuffle to
+  the min-id group representative, one persist;
+- MinHash signatures ``_minhash_signatures`` and their band relation
+  ``_bands_of``;
+- bucket join ``_band_collisions``: the band self-join, or with an index the
+  incremental probe (batch bands against index UNION batch) — also used by
+  the image, video and audio kernels in functions/multimodal.py;
+- exact verify ``_verify_jaccard`` (candidate-local ``array_intersect``),
+  with ``_ceil_bound`` keeping every PPJoin bound at or below the exact one;
+- pair expansion ``_expand_pairs``: group-level pairs back to doc pairs.
 """
 
 from __future__ import annotations
@@ -499,6 +515,211 @@ def _fan_out(df: DataFrame) -> DataFrame:
     return src
 
 
+def _collapse_sets(
+    df: DataFrame, id_col: str, text_col: str, tokens: str | None
+) -> tuple[DataFrame, DataFrame]:
+    """Identical-set collapse, the first step of every token-set kernel.
+
+    Jaccard and MinHash are pure functions of the token SET, so the
+    quadratic stages run over distinct sets and doc pairs are expanded
+    afterwards (:func:`_expand_pairs`). Each doc's sorted distinct token
+    array gets ``_rep`` = the min doc id over its identical-set group, and
+    the group size rides the same window shuffle; one eager persist then
+    serves both relations (a lazily-populated cache lets the concurrent
+    self-join branches race and redo the tokenize). Docs without tokens get
+    no set and so no pairs.
+
+    Returns ``(members, sets)``: members ``(_id, _rep, _n)`` with ``_n`` the
+    set size, sets ``(_rep, _toks, _gsz)`` one row per distinct set."""
+    # fan out only for custom tokenizers (shingles): their tokenize is the
+    # CPU-heavy stage that single-threads on one input split; for cheap word
+    # tokens the barrier's extra shuffles+persists COST more than they save
+    # (word minhash measured 3.5s -> 10.6s with an unconditional barrier)
+    src = _fan_out(df) if tokens else df
+    w_set = Window.partitionBy("_toks")
+    memb = (
+        src.select(
+            F.col(id_col).alias("_id"),
+            F.array_sort(F.array_distinct(F.expr(tokens or tokens_expr(text_col)))).alias("_toks"),
+        )
+        .filter(F.size("_toks") > 0)
+        .withColumn("_rep", F.min("_id").over(w_set))
+        .withColumn("_gsz", F.count(F.lit(1)).over(w_set))
+    )
+    if tokens:
+        # shingle path: keep full CPU parallelism downstream (AQE coalesces
+        # the tiny window exchange to ~1 partition, which would
+        # single-thread the signature / prefix stages)
+        memb = memb.repartition(df.sparkSession.sparkContext.defaultParallelism)
+    memb = memb.persist(StorageLevel.MEMORY_AND_DISK)
+    memb.count()
+    members = memb.select("_id", "_rep", F.size("_toks").alias("_n"))
+    sets = memb.filter(F.col("_id") == F.col("_rep")).select("_rep", "_toks", "_gsz")
+    return members, sets
+
+
+def _ceil_bound(x):
+    """ceil of a PPJoin bound computed in doubles. The double product can
+    overshoot the exact rational (0.8 / 1.8 * 63 = 28.000000000000004,
+    0.55 * 100 = 55.00000000000001), and its ceil would prune pairs at
+    J == threshold; the slack keeps every bound at or below the exact one
+    (a looser bound only prunes less)."""
+    return F.ceil(x - F.lit(1e-6))
+
+
+def _token_num() -> str:
+    return portable_hash_expr("token")
+
+
+def _minhash_signatures(sets: DataFrame, token_num: str | None, n_hashes: int) -> DataFrame:
+    """``(_rep, m_0..m_{n_hashes-1})``: per distinct set, the min of each of
+    the first ``n_hashes`` permutations (a*tn + b) mod p over its tokens —
+    one groupBy over the exploded (set, token) relation. ``token_num``
+    derives the numeric token ``tn``: the portable string hash by default,
+    ``"token"`` when the tokens are already hashed BIGINTs
+    (text.hashed_shingles_expr). An incremental pass must derive ``tn`` the
+    same way its index build did, or the signatures diverge."""
+    tok = sets.select("_rep", F.explode("_toks").alias("token")).withColumn(
+        "tn", F.expr(token_num or _token_num())
+    )
+    return tok.groupBy("_rep").agg(
+        *[
+            F.min(
+                F.expr(f"(CAST({MINHASH_A[i]} AS BIGINT) * tn + {MINHASH_B[i]}) % {PORTABLE_HASH_P}")
+            ).alias(f"m_{i}")
+            for i in range(n_hashes)
+        ]
+    )
+
+
+def _band_hash(i: int, rows_per_band: int = ROWS_PER_BAND) -> str:
+    """Combine one band's minhashes into a single bucket key. Each fold step
+    reduces mod 2^31-1 so the accumulator never exceeds ~2^36 (m values are
+    < 2^31; an unreduced 8-row fold would overflow int64)."""
+    expr = f"m_{i * rows_per_band}"
+    for j in range(1, rows_per_band):
+        expr = f"(({expr} * 31 + m_{i * rows_per_band + j}) % {PORTABLE_HASH_P})"
+    return expr
+
+
+def _bands_of(sigs: DataFrame, n_bands: int, rows_per_band: int) -> DataFrame:
+    """The band relation ``(rep, band, bh)`` of a signature table: one row
+    per (set, band), ``bh`` the band's folded bucket key."""
+    bands = None
+    for i in range(n_bands):
+        part = sigs.select(
+            F.col("_rep").alias("rep"),
+            F.lit(i).alias("band"),
+            F.expr(_band_hash(i, rows_per_band)).alias("bh"),
+        )
+        bands = part if bands is None else bands.unionByName(part)
+    return bands
+
+
+def _band_collisions(
+    bands: DataFrame,
+    on: list[str],
+    key: str,
+    carry: tuple[str, ...] = (),
+    index: DataFrame | None = None,
+) -> DataFrame:
+    """Bucket equi-join of a band relation: every pair of rows sharing all
+    ``on`` columns, as ``({key}_a, {key}_b)`` with ``{key}_a < {key}_b``;
+    each ``carry`` column follows its side as ``{c}_a`` / ``{c}_b``. Never
+    all-pairs: a pair is only seen where a concrete bucket matches, once per
+    matching bucket (callers dedup or count).
+
+    With ``index`` (the same columns, an earlier build) this is the
+    incremental probe: ``bands`` is the new batch, joined against
+    (index UNION batch), so only pairs touching the batch come out — a
+    batch row meets an index row from the batch side, and another batch
+    row once, from the lesser key. Self-matches never pair."""
+
+    def side(rel: DataFrame, s: str) -> DataFrame:
+        return rel.select(F.col(key).alias(f"_k{s}"), *(F.col(c).alias(f"_{c}{s}") for c in carry), *on)
+
+    probe = side(bands, "n")
+    if index is None:
+        hits = probe.join(side(bands, "o"), on).filter(F.col("_kn") < F.col("_ko"))
+        lo = F.lit(True)  # folds away, so the probe side's partitioning carries over
+    else:
+        other = side(index, "o").withColumn("_new", F.lit(False)).unionByName(
+            side(bands, "o").withColumn("_new", F.lit(True))
+        )
+        hits = probe.join(other, on).filter(
+            F.when(F.col("_new"), F.col("_kn") < F.col("_ko")).otherwise(F.col("_kn") != F.col("_ko"))
+        )
+        lo = F.col("_kn") < F.col("_ko")
+    out = []
+    for src, dst in [("k", key), *((c, c) for c in carry)]:
+        n, o = F.col(f"_{src}n"), F.col(f"_{src}o")
+        out += [F.when(lo, n).otherwise(o).alias(f"{dst}_a"), F.when(lo, o).otherwise(n).alias(f"{dst}_b")]
+    return hits.select(*out)
+
+
+def _verify_jaccard(candidates: DataFrame, sets: DataFrame, threshold: float) -> DataFrame:
+    """Exact token-set Jaccard of candidate set pairs ``(rep_a, rep_b)``:
+    candidate-local — each pair fetches its two sets (two rep-keyed joins)
+    and intersects them, O(|candidates| x set size), never a corpus-wide
+    join. The lossless size-ratio filter (J >= t implies min(n_a, n_b) >=
+    ceil(t * max)) drops pairs before any intersection is computed. Returns
+    the persisted ``(rep_a, rep_b, shared, n_a, n_b, jaccard)`` rows with
+    jaccard >= threshold."""
+    toks_a = sets.select(F.col("_rep").alias("rep_a"), F.col("_toks").alias("toks_a"))
+    toks_b = sets.select(F.col("_rep").alias("rep_b"), F.col("_toks").alias("toks_b"))
+    set_pairs = (
+        candidates.join(toks_a, "rep_a")
+        .join(toks_b, "rep_b")
+        .withColumn("n_a", F.size("toks_a"))
+        .withColumn("n_b", F.size("toks_b"))
+        .filter(F.least("n_a", "n_b") >= _ceil_bound(F.lit(threshold) * F.greatest("n_a", "n_b")))
+        .withColumn("shared", F.size(F.array_intersect("toks_a", "toks_b")))
+        .withColumn(
+            "jaccard",
+            F.col("shared").cast("double") / (F.col("n_a") + F.col("n_b") - F.col("shared")).cast("double"),
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select("rep_a", "rep_b", "shared", "n_a", "n_b", "jaccard")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    set_pairs.count()
+    return set_pairs
+
+
+def _expand_pairs(
+    members: DataFrame,
+    rep_pairs: DataFrame,
+    within: list,
+    cross: list,
+    touching: str | None = None,
+) -> DataFrame:
+    """Group-level pairs back to doc pairs ``(id_a, id_b, ...)``, id_a < id_b.
+
+    ``members`` ``(_id, _rep, ...)`` maps each doc to its group; ``rep_pairs``
+    ``(rep_a, rep_b, ...)`` holds the verified pairs of distinct groups.
+    Within a group every doc pair gets the ``within`` columns (the group's
+    member columns are ``mb.<col>``); across groups the group cross product
+    gets the ``cross`` columns (over rep_pairs' columns and ``ia`` / ``ib``,
+    the rep_a / rep_b side ids before ordering). ``touching`` names a
+    boolean member column: only pairs with it true on a side are kept."""
+    ma, mb = members.alias("ma"), members.alias("mb")
+    in_group = ma.join(mb, F.col("ma._rep") == F.col("mb._rep")).filter(F.col("ma._id") < F.col("mb._id"))
+
+    def side(s: str) -> DataFrame:
+        cols = [F.col("_rep").alias(f"rep_{s}"), F.col("_id").alias(f"i{s}")]
+        if touching:
+            cols.append(F.col(touching).alias(f"t{s}"))
+        return members.select(*cols)
+
+    across = rep_pairs.join(side("a"), "rep_a").join(side("b"), "rep_b")
+    if touching:
+        in_group = in_group.filter(F.col(f"ma.{touching}") | F.col(f"mb.{touching}"))
+        across = across.filter(F.col("ta") | F.col("tb"))
+    return in_group.select(F.col("ma._id").alias("id_a"), F.col("mb._id").alias("id_b"), *within).unionByName(
+        across.select(F.least("ia", "ib").alias("id_a"), F.greatest("ia", "ib").alias("id_b"), *cross)
+    )
+
+
 def jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -549,28 +770,7 @@ def jaccard_pairs(
     — silently swapping engines would change answers. Pass ``None`` to run
     dense anyway (the exact-oracle calibration use case).
     """
-    # fan out only for custom tokenizers (shingles): their tokenize is the
-    # CPU-heavy stage that single-threads on one input split; for cheap word
-    # tokens the barrier's extra shuffles+persists COST more than they save
-    # (word minhash measured 3.5s -> 10.6s with an unconditional barrier)
-    src = _fan_out(df) if tokens else df
-    members = src.select(
-        F.col(id_col).alias("_id"),
-        F.array_sort(F.array_distinct(F.expr(tokens or tokens_expr(text_col)))).alias("_toks"),
-    ).filter(F.size("_toks") > 0)
-    # ONE materialization instead of three (members / sets / mem) — same
-    # single-window identical-set collapse as minhash_lsh_pairs, with the
-    # group size riding the same shuffle
-    w_set = Window.partitionBy("_toks")
-    memb = members.withColumn("_rep", F.min("_id").over(w_set)).withColumn(
-        "_gsz", F.count(F.lit(1)).over(w_set)
-    )
-    if tokens:
-        memb = memb.repartition(df.sparkSession.sparkContext.defaultParallelism)
-    memb = memb.persist(StorageLevel.MEMORY_AND_DISK)
-    memb.count()
-    mem = memb.select("_id", "_rep")
-    sets = memb.filter(F.col("_id") == F.col("_rep")).select("_toks", "_rep", "_gsz")
+    members, sets = _collapse_sets(df, id_col, text_col, tokens)
 
     tok = sets.select("_rep", "_gsz", F.explode("_toks").alias("token"))
     # document frequency = sum of group sizes (identical to the per-doc df)
@@ -584,7 +784,7 @@ def jaccard_pairs(
         "_pos", F.row_number().over(per_rep.orderBy("_df", "token"))
     ).withColumn("n", F.count(F.lit(1)).over(per_rep))
     prefix = (
-        ranked.filter(F.col("_pos") <= F.col("n") - F.ceil(F.lit(threshold) * F.col("n")) + 1)
+        ranked.filter(F.col("_pos") <= F.col("n") - _ceil_bound(F.lit(threshold) * F.col("n")) + 1)
         .select("_rep", "token", "_pos", "n")
     )
     if max_candidate_fanout is not None:
@@ -629,7 +829,7 @@ def jaccard_pairs(
     candidates = (
         a.join(b, "token")
         .filter(F.col("rep_a") < F.col("rep_b"))
-        .filter(F.least("sz_a", "sz_b") >= F.ceil(F.lit(threshold) * F.greatest("sz_a", "sz_b")))
+        .filter(F.least("sz_a", "sz_b") >= _ceil_bound(F.lit(threshold) * F.greatest("sz_a", "sz_b")))
         .groupBy("rep_a", "rep_b")
         .agg(
             F.count(F.lit(1)).alias("_c"),
@@ -640,78 +840,25 @@ def jaccard_pairs(
         )
         .filter(
             F.col("_c") + F.least(F.col("_sa") - F.col("_pa"), F.col("_sb") - F.col("_pb"))
-            >= F.ceil(F.lit(threshold / (1.0 + threshold)) * (F.col("_sa") + F.col("_sb")))
+            >= _ceil_bound(F.lit(threshold / (1.0 + threshold)) * (F.col("_sa") + F.col("_sb")))
         )
         .select("rep_a", "rep_b")
     )
-
-    # exact verification over the full (unpruned) token sets; the lossless
-    # size-ratio filter (J >= t implies min(n_a, n_b) >= ceil(t * max)) drops
-    # candidates before the O(n_a + n_b) intersection is ever computed
-    toks_a = sets.select(F.col("_rep").alias("rep_a"), F.col("_toks").alias("toks_a"))
-    toks_b = sets.select(F.col("_rep").alias("rep_b"), F.col("_toks").alias("toks_b"))
-    set_pairs = (
-        candidates.join(toks_a, "rep_a")
-        .join(toks_b, "rep_b")
-        .withColumn("n_a", F.size("toks_a"))
-        .withColumn("n_b", F.size("toks_b"))
-        .filter(F.least("n_a", "n_b") >= F.ceil(F.lit(threshold) * F.greatest("n_a", "n_b")))
-        .withColumn("shared", F.size(F.array_intersect("toks_a", "toks_b")))
-        .withColumn(
-            "jaccard",
-            F.col("shared").cast("double") / (F.col("n_a") + F.col("n_b") - F.col("shared")).cast("double"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("rep_a", "rep_b", "shared", "n_a", "n_b", "jaccard")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    set_pairs.count()
-
-    # expand: (a) within a set group every pair is J=1 with identical stats
-    ma, mb = mem.alias("ma"), mem.alias("mb")
-    set_n = sets.select(F.col("_rep").alias("_sn_rep"), F.size("_toks").alias("_n"))
-    within = (
-        ma.join(mb, F.col("ma._rep") == F.col("mb._rep"))
-        .filter(F.col("ma._id") < F.col("mb._id"))
-        .join(set_n, F.col("ma._rep") == F.col("_sn_rep"))
-        .select(
-            F.col("ma._id").alias("id_a"),
-            F.col("mb._id").alias("id_b"),
-            F.col("_n").alias("shared"),
-            F.col("_n").alias("n_a"),
-            F.col("_n").alias("n_b"),
-            F.lit(1.0).alias("jaccard"),
-        )
-    )
-    # (b) cross-group: group cross product, n_a/n_b swap with the id ordering
+    # within a set group every pair is J=1 with identical stats; across
+    # groups n_a/n_b swap with the id ordering
+    n = F.col("mb._n")
     swap = F.col("ia") > F.col("ib")
-    cross = (
-        set_pairs.join(mem.select(F.col("_rep").alias("rep_a"), F.col("_id").alias("ia")), "rep_a")
-        .join(mem.select(F.col("_rep").alias("rep_b"), F.col("_id").alias("ib")), "rep_b")
-        .select(
-            F.least("ia", "ib").alias("id_a"),
-            F.greatest("ia", "ib").alias("id_b"),
+    return _expand_pairs(
+        members,
+        _verify_jaccard(candidates, sets, threshold),
+        [n.alias("shared"), n.alias("n_a"), n.alias("n_b"), F.lit(1.0).alias("jaccard")],
+        [
             "shared",
             F.when(swap, F.col("n_b")).otherwise(F.col("n_a")).alias("n_a"),
             F.when(swap, F.col("n_a")).otherwise(F.col("n_b")).alias("n_b"),
             "jaccard",
-        )
+        ],
     )
-    return within.unionByName(cross)
-
-
-def _token_num() -> str:
-    return portable_hash_expr("token")
-
-
-def _band_hash(i: int, rows_per_band: int = ROWS_PER_BAND) -> str:
-    """Combine one band's minhashes into a single bucket key. Each fold step
-    reduces mod 2^31-1 so the accumulator never exceeds ~2^36 (m values are
-    < 2^31; an unreduced 8-row fold would overflow int64)."""
-    expr = f"m_{i * rows_per_band}"
-    for j in range(1, rows_per_band):
-        expr = f"(({expr} * 31 + m_{i * rows_per_band + j}) % {PORTABLE_HASH_P})"
-    return expr
 
 
 def minhash_lsh_pairs(
@@ -762,105 +909,13 @@ def minhash_lsh_pairs(
     prefix filter, while MinHash cost is banding-bounded regardless of df).
     Output: (id_a, id_b, jaccard).
     """
-    # fan out only for custom tokenizers (see jaccard_pairs: the barrier
-    # saves 20s+ on shingle tokenize but costs ~7s of extra shuffle/persist
-    # on the cheap word path)
-    src = _fan_out(df) if tokens else df
-    members = src.select(
-        F.col(id_col).alias("_id"),
-        F.array_sort(F.array_distinct(F.expr(tokens or tokens_expr(text_col)))).alias("_toks"),
-    ).filter(F.size("_toks") > 0)  # token-less docs get no signature -> no pairs
-    # ONE materialization instead of three (members / sets / mem): the
-    # set-representative is a min over the identical-token-set group, so a
-    # single window shuffle keyed on _toks yields both the doc->rep map and
-    # (filtered to _id == _rep) the distinct-set relation; the old
-    # groupBy + re-join re-shuffled the token arrays twice and paid three
-    # eager persist barriers. Repartitioned so the downstream signature
-    # explode keeps full CPU parallelism (AQE would coalesce the tiny window
-    # exchange to one partition and single-thread the hash stage).
-    memb = members.withColumn("_rep", F.min("_id").over(Window.partitionBy("_toks")))
-    if tokens:
-        # shingle path: keep full CPU parallelism for the downstream signature
-        # explode (AQE coalesces the tiny window exchange to ~1 partition,
-        # which would single-thread the hash stage; word tokens are too cheap
-        # for the extra shuffle to pay)
-        memb = memb.repartition(df.sparkSession.sparkContext.defaultParallelism)
-    memb = memb.persist(StorageLevel.MEMORY_AND_DISK)
-    memb.count()
-    mem = memb.select("_id", "_rep")
-    sets = memb.filter(F.col("_id") == F.col("_rep")).select("_toks", "_rep")
-
-    # token_num: how to derive the numeric token id the (a*tn+b) mod p
-    # permutations consume. Default = portable string hash; pass "token" when
-    # `tokens` already yields hashed BIGINTs (text.hashed_shingles_expr) so
-    # the fold isn't re-applied to a number's digits.
-    tok = sets.select("_rep", F.explode("_toks").alias("token")).withColumn(
-        "tn", F.expr(token_num or _token_num())
-    )
-    aggs = [
-        F.min(
-            F.expr(f"(CAST({MINHASH_A[i]} AS BIGINT) * tn + {MINHASH_B[i]}) % {PORTABLE_HASH_P}")
-        ).alias(f"m_{i}")
-        for i in range(N_HASHES)
-    ]
-    sigs = tok.groupBy("_rep").agg(*aggs).persist(StorageLevel.MEMORY_AND_DISK)
+    members, sets = _collapse_sets(df, id_col, text_col, tokens)
+    sigs = _minhash_signatures(sets, token_num, N_HASHES).persist(StorageLevel.MEMORY_AND_DISK)
     sigs.count()
-    n_bands, rows_per_band = banding_for(threshold)
-    band_rows = []
-    for i in range(n_bands):
-        band_rows.append(
-            sigs.select("_rep", F.lit(i).alias("band"), F.expr(_band_hash(i, rows_per_band)).alias("bh"))
-        )
-    bands = band_rows[0]
-    for br in band_rows[1:]:
-        bands = bands.unionByName(br)
-    a = bands.select(F.col("_rep").alias("rep_a"), "band", "bh")
-    b = bands.select(F.col("_rep").alias("rep_b"), "band", "bh")
-    candidates = (
-        a.join(b, ["band", "bh"])
-        .filter(F.col("rep_a") < F.col("rep_b"))
-        .select("rep_a", "rep_b")
-        .distinct()
+    candidates = _band_collisions(_bands_of(sigs, *banding_for(threshold)), ["band", "bh"], "rep").distinct()
+    return _expand_pairs(
+        members, _verify_jaccard(candidates, sets, threshold), [F.lit(1.0).alias("jaccard")], ["jaccard"]
     )
-    toks_a = sets.select(F.col("_rep").alias("rep_a"), F.col("_toks").alias("toks_a"))
-    toks_b = sets.select(F.col("_rep").alias("rep_b"), F.col("_toks").alias("toks_b"))
-    set_pairs = (
-        candidates.join(toks_a, "rep_a")
-        .join(toks_b, "rep_b")
-        .withColumn("shared", F.size(F.array_intersect("toks_a", "toks_b")))
-        .withColumn(
-            "jaccard",
-            F.col("shared").cast("double")
-            / (F.size("toks_a") + F.size("toks_b") - F.col("shared")).cast("double"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("rep_a", "rep_b", "jaccard")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    set_pairs.count()
-
-    # expand back to doc pairs: (a) within a set group every pair is J=1
-    ma, mb = mem.alias("ma"), mem.alias("mb")
-    within = (
-        ma.join(mb, F.col("ma._rep") == F.col("mb._rep"))
-        .filter(F.col("ma._id") < F.col("mb._id"))
-        .select(
-            F.col("ma._id").alias("id_a"),
-            F.col("mb._id").alias("id_b"),
-            F.lit(1.0).alias("jaccard"),
-        )
-    )
-    # (b) cross-group: group cross product, normalized to id_a < id_b
-    cross = (
-        set_pairs.join(mem.select(F.col("_rep").alias("rep_a"), F.col("_id").alias("ia")), "rep_a")
-        .join(mem.select(F.col("_rep").alias("rep_b"), F.col("_id").alias("ib")), "rep_b")
-        .select(
-            F.least("ia", "ib").alias("id_a"),
-            F.greatest("ia", "ib").alias("id_b"),
-            "jaccard",
-        )
-    )
-    return within.unionByName(cross)
 
 
 def _single_task_labels(und: DataFrame, id_type) -> DataFrame:
@@ -1157,37 +1212,21 @@ def simhash_pairs(
         )
         bands = part if bands is None else bands.unionByName(part)
         offset += width
-    a = bands.select(F.col("simhash").alias("sh_a"), "band", "bv")
-    b = bands.select(F.col("simhash").alias("sh_b"), "band", "bv")
     val_pairs = (
-        a.join(b, ["band", "bv"])
-        .filter(F.col("sh_a") < F.col("sh_b"))
-        .select("sh_a", "sh_b", F.expr("bit_count(sh_a ^ sh_b)").alias("hamming"))
+        _band_collisions(bands, ["band", "bv"], "simhash")
+        .select(
+            F.col("simhash_a").alias("rep_a"),
+            F.col("simhash_b").alias("rep_b"),
+            F.expr("bit_count(simhash_a ^ simhash_b)").alias("hamming"),
+        )
         .distinct()
         .filter(F.col("hamming") <= max_hamming)
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     val_pairs.count()
-
-    # expand: (a) same fingerprint -> Hamming 0 (always <= max_hamming >= 0)
-    ma = sh.select(F.col(id_col).alias("id_a"), F.col("simhash").alias("sh_a"))
-    mb = sh.select(F.col(id_col).alias("id_b"), F.col("simhash").alias("sh_b"))
-    within = (
-        ma.join(mb, F.col("sh_a") == F.col("sh_b"))
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", F.lit(0).alias("hamming"))
-    )
-    # (b) cross-fingerprint: group cross product, normalized to id_a < id_b
-    cross = (
-        val_pairs.join(ma, "sh_a")
-        .join(mb, "sh_b")
-        .select(
-            F.least("id_a", "id_b").alias("id_a"),
-            F.greatest("id_a", "id_b").alias("id_b"),
-            "hamming",
-        )
-    )
-    return within.unionByName(cross.select("id_a", "id_b", "hamming"))
+    # same fingerprint -> Hamming 0 (always <= max_hamming >= 0)
+    members = sh.select(F.col(id_col).alias("_id"), F.col("simhash").alias("_rep"))
+    return _expand_pairs(members, val_pairs, [F.lit(0).alias("hamming")], ["hamming"])
 
 
 # ---------------------------------------------------------------------------
@@ -1227,49 +1266,11 @@ def minhash_index(
     (new doc, indexed doc) surfaces iff the full-corpus pipeline would
     surface it.
     """
-    src = _fan_out(df) if tokens else df  # same conditional as minhash_lsh_pairs
-    members = (
-        src.select(
-            F.col(id_col).alias("_id"),
-            F.array_sort(F.array_distinct(F.expr(tokens or tokens_expr(text_col)))).alias("_toks"),
-        )
-        .filter(F.size("_toks") > 0)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    members.count()
-    sets = members.groupBy("_toks").agg(F.min("_id").alias("_rep"))
-    if tokens:
-        sets = sets.repartition(df.sparkSession.sparkContext.defaultParallelism)
-    sets = sets.persist(StorageLevel.MEMORY_AND_DISK)
-    sets.count()
-    mem = members.join(sets, "_toks").select("_id", "_rep")
-    # token_num mirrors minhash_lsh_pairs: pass "token" for pre-hashed
-    # BIGINT tokens (hashed_shingles_expr) — an incremental pass MUST derive
-    # tn the same way its full-corpus run did or the signatures (and thus
-    # the pairs) diverge
-    tok = sets.select("_rep", F.explode("_toks").alias("token")).withColumn(
-        "tn", F.expr(token_num or _token_num())
-    )
-    aggs = [
-        F.min(
-            F.expr(f"(CAST({MINHASH_A[i]} AS BIGINT) * tn + {MINHASH_B[i]}) % {PORTABLE_HASH_P}")
-        ).alias(f"m_{i}")
-        for i in range(n_hashes)
-    ]
-    sigs = tok.groupBy("_rep").agg(*aggs)
-    indexed = sets.join(sigs, "_rep").persist(StorageLevel.MEMORY_AND_DISK)
+    members, sets = _collapse_sets(df, id_col, text_col, tokens)
+    indexed = sets.select("_rep", "_toks").join(_minhash_signatures(sets, token_num, n_hashes), "_rep")
+    indexed = indexed.persist(StorageLevel.MEMORY_AND_DISK)
     indexed.count()
-    return indexed, mem.persist(StorageLevel.MEMORY_AND_DISK)
-
-
-def _bands_of(sigs: DataFrame, n_bands: int, rows_per_band: int) -> DataFrame:
-    bands = None
-    for i in range(n_bands):
-        part = sigs.select(
-            "_rep", F.lit(i).alias("band"), F.expr(_band_hash(i, rows_per_band)).alias("bh")
-        )
-        bands = part if bands is None else bands.unionByName(part)
-    return bands
+    return indexed, members.select("_id", "_rep")
 
 
 def minhash_incremental_pairs(
@@ -1317,77 +1318,25 @@ def minhash_incremental_pairs(
         new_df, id_col, text_col, tokens, token_num, n_hashes=needed
     )
 
-    old_bands = _bands_of(old_sets, n_bands, rows_per_band)
-    new_bands = _bands_of(new_sets, n_bands, rows_per_band)
-    all_bands = old_bands.unionByName(new_bands)
-    a = new_bands.select(F.col("_rep").alias("rep_n"), "band", "bh")
-    b = all_bands.select(F.col("_rep").alias("rep_o"), "band", "bh")
-    candidates = (
-        a.join(b, ["band", "bh"])
-        .filter(F.col("rep_n") != F.col("rep_o"))
-        .select(
-            F.least("rep_n", "rep_o").alias("rep_a"),
-            F.greatest("rep_n", "rep_o").alias("rep_b"),
-        )
-        .distinct()
-    )
+    candidates = _band_collisions(
+        _bands_of(new_sets, n_bands, rows_per_band),
+        ["band", "bh"],
+        "rep",
+        index=_bands_of(old_sets, n_bands, rows_per_band),
+    ).distinct()
     all_sets = old_sets.select("_rep", "_toks").unionByName(new_sets.select("_rep", "_toks"))
-    toks_a = all_sets.select(F.col("_rep").alias("rep_a"), F.col("_toks").alias("toks_a"))
-    toks_b = all_sets.select(F.col("_rep").alias("rep_b"), F.col("_toks").alias("toks_b"))
-    set_pairs = (
-        candidates.join(toks_a, "rep_a")
-        .join(toks_b, "rep_b")
-        .withColumn("shared", F.size(F.array_intersect("toks_a", "toks_b")))
-        .withColumn(
-            "jaccard",
-            F.col("shared").cast("double")
-            / (F.size("toks_a") + F.size("toks_b") - F.col("shared")).cast("double"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("rep_a", "rep_b", "jaccard")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    set_pairs.count()
-
+    set_pairs = _verify_jaccard(candidates, all_sets, threshold)
     all_mem = old_mem.withColumn("_new", F.lit(False)).unionByName(
         new_mem.withColumn("_new", F.lit(True))
     ).persist(StorageLevel.MEMORY_AND_DISK)
     all_mem.count()
-
-    # (a) identical-set pairs touching the new batch. A new doc with a set
-    # already indexed lives under the NEW rep too (reps are per-build), so
-    # identical sets across builds meet as a rep pair at J=1 via banding
-    # (equal signatures collide in every band); within one build's rep group
-    # the membership cross product below covers it.
-    ma, mb = all_mem.alias("ma"), all_mem.alias("mb")
-    within = (
-        ma.join(mb, F.col("ma._rep") == F.col("mb._rep"))
-        .filter(F.col("ma._id") < F.col("mb._id"))
-        .filter(F.col("ma._new") | F.col("mb._new"))
-        .select(
-            F.col("ma._id").alias("id_a"),
-            F.col("mb._id").alias("id_b"),
-            F.lit(1.0).alias("jaccard"),
-        )
-    )
-    # (b) cross-set pairs: expand rep pairs to doc pairs touching the new batch
-    cross = (
-        set_pairs.join(
-            all_mem.select(F.col("_rep").alias("rep_a"), F.col("_id").alias("ia"), F.col("_new").alias("na")),
-            "rep_a",
-        )
-        .join(
-            all_mem.select(F.col("_rep").alias("rep_b"), F.col("_id").alias("ib"), F.col("_new").alias("nb")),
-            "rep_b",
-        )
-        .filter(F.col("na") | F.col("nb"))
-        .select(
-            F.least("ia", "ib").alias("id_a"),
-            F.greatest("ia", "ib").alias("id_b"),
-            "jaccard",
-        )
-    )
-    return within.unionByName(cross).distinct()
+    # A new doc with a set already indexed lives under the NEW rep too (reps
+    # are per-build), so identical sets across builds meet as a rep pair at
+    # J=1 via banding (equal signatures collide in every band); within one
+    # build's rep group the membership cross product covers it.
+    return _expand_pairs(
+        all_mem, set_pairs, [F.lit(1.0).alias("jaccard")], ["jaccard"], touching="_new"
+    ).distinct()
 
 
 def substring_index(

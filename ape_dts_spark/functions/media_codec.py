@@ -2993,6 +2993,53 @@ def phash64(px: np.ndarray) -> int:
     return bits  # top bit always 0 -> fits a signed 64-bit long as-is
 
 
+def _quarantine_policy(errors: str) -> None:
+    if errors not in ("raise", "null", "skip"):
+        raise ValueError(f"errors must be raise/null/skip, got {errors!r}")
+
+
+def _quarantine_map(
+    df: DataFrame,
+    payload_col: str,
+    id_col: str,
+    decode,
+    columns: list[str],
+    schema: str,
+    errors: str,
+) -> DataFrame:
+    """The per-payload kernel of every media decoder with an ``errors``
+    policy: one Arrow-batched mapInPandas pass, no shuffle, in which
+    ``decode(payload bytes)`` returns that payload's output rows (tuples
+    over ``columns``; the id is prepended). A payload whose decode raises
+    ValueError or NotImplementedError (MediaCodecError is a ValueError)
+    fails the job under ``"raise"``, is dropped under ``"skip"``, and under
+    ``"null"`` becomes one dead-letter row: null fields, the message in an
+    extra ``error`` column. ``schema`` is the raise-mode output; both
+    tolerant modes add ``error string`` (NULL on good rows), so they share
+    one schema."""
+    _quarantine_policy(errors)
+    names = ["id", *columns, "error"]
+    dead = (None,) * len(columns)
+
+    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows: list[tuple] = []
+            for rid, raw in zip(pdf[id_col], pdf[payload_col]):
+                try:
+                    out = decode(bytes(raw))
+                except (ValueError, NotImplementedError) as exc:
+                    if errors == "raise":
+                        raise
+                    if errors == "null":
+                        rows.append((rid, *dead, f"{type(exc).__name__}: {exc}"))
+                    continue
+                rows.extend((rid, *r, None) for r in out)
+            frame = pd.DataFrame(rows, columns=names)
+            yield frame.drop(columns=["error"]) if errors == "raise" else frame
+
+    return df.mapInPandas(_run, schema=schema if errors == "raise" else schema + ", error string")
+
+
 def decode_image(
     df: DataFrame,
     payload_col: str = "payload",
@@ -3016,35 +3063,12 @@ def decode_image(
 
     A 100 TB crawl corpus WILL contain truncated files; the tolerant modes
     are why one bad byte never loses the other 99.999% of a batch."""
-    if errors not in ("raise", "null", "skip"):
-        raise ValueError(f"errors must be raise/null/skip, got {errors!r}")
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if errors == "raise":
-                recs = [parse_image(bytes(b)) for b in pdf[payload_col]]
-                out = pd.DataFrame(recs)
-                out.insert(0, "id", pdf[id_col].values)
-                yield out
-                continue
-            rows, ids = [], []
-            for rid, b in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    rec = parse_image(bytes(b))
-                    rec["error"] = None
-                except (ValueError, NotImplementedError) as exc:
-                    if errors == "skip":
-                        continue
-                    rec = dict.fromkeys(_IMAGE_FIELDS)
-                    rec["error"] = f"{type(exc).__name__}: {exc}"
-                rows.append(rec)
-                ids.append(rid)
-            out = pd.DataFrame(rows, columns=_IMAGE_FIELDS + ["error"])
-            out.insert(0, "id", ids)
-            yield out
+    def _decode(payload: bytes) -> list[tuple]:
+        rec = parse_image(payload)
+        return [tuple(rec[f] for f in _IMAGE_FIELDS)]
 
-    schema = IMAGE_DECODED_SCHEMA if errors == "raise" else IMAGE_DECODED_SCHEMA + ", error string"
-    return df.mapInPandas(_decode, schema=schema)
+    return _quarantine_map(df, payload_col, id_col, _decode, _IMAGE_FIELDS, IMAGE_DECODED_SCHEMA, errors)
 
 
 JPEG_META_SCHEMA = (

@@ -19,15 +19,31 @@ external codec libraries (ffmpeg video, progressive JPEG, model-based
 embeddings): deterministic stand-ins that keep the distributed plumbing
 (schema, batching, UDF signatures) testable; without fake such payloads
 raise honestly.
+
+Every payload kernel with an ``errors`` raise/null/skip policy (GIF and AVI
+frame sampling, audio features and fingerprints, image pHashes, video
+fingerprints) runs on media_codec's one quarantine runner,
+``_quarantine_map``, as does media_codec.decode_image.
+
+The near-duplicate kernels — image ``phash_dup_pairs`` / ``phash_index`` +
+``phash_incremental_pairs``, video ``video_dup_pairs`` / ``video_fp_index`` +
+``video_incremental_pairs``, and audio ``audio_dup_pairs`` — share their
+steps: ``_phash_band_rows`` (64-bit pHash bit bands), dedup's
+``_band_collisions`` (band self-join or incremental probe), ``_hamming_hits``
+(full-hash Hamming verify) and ``_offset_vote`` (per time-shift vote).
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ape_dts_spark.functions import media_codec as mc
+from ape_dts_spark.functions.dedup import _band_collisions
 
 BINARY_META_SCHEMA = (
     "id long, n_bytes int, magic string, sha_prefix string"
@@ -57,8 +73,6 @@ def binary_meta(df: DataFrame, payload_col: str = "payload") -> DataFrame:
 def _sniff_image(payload: bytes) -> bool:
     import struct
 
-    from ape_dts_spark.functions import media_codec as mc
-
     if payload[:8] == mc.PNG_SIGNATURE or payload[:2] == b"\xff\xd8":
         return True  # 0x89 / 0xFF lead bytes can never open valid UTF-8
     if payload[:6] in (b"GIF87a", b"GIF89a"):
@@ -85,8 +99,6 @@ def decode_image_meta(df: DataFrame, payload_col: str = "payload", fake: bool = 
     """
 
     def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ape_dts_spark.functions import media_codec as mc
-
         for pdf in batches:
             ids, widths, heights, chans, oks = [], [], [], [], []
             for rid, raw in zip(pdf["id"], pdf[payload_col]):
@@ -165,10 +177,6 @@ def extract_features(
     wiring the multimodal path into the ANN stack."""
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from ape_dts_spark.functions import media_codec as mc
-
         for pdf in batches:
             feats = []
             for b in pdf[payload_col]:
@@ -240,10 +248,6 @@ def resize_payload(
     ``target_bytes`` (deterministic plumbing stand-in), else raise."""
 
     def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from ape_dts_spark.functions import media_codec as mc
-
         for pdf in batches:
             ids, blobs, oks = [], [], []
             for rid, raw in zip(pdf["id"], pdf[payload_col]):
@@ -299,11 +303,6 @@ def resize_payload(
     return df.mapInPandas(_resize, schema=RESIZED_SCHEMA)
 
 
-def _quarantine_policy(errors: str) -> None:
-    if errors not in ("raise", "null", "skip"):
-        raise ValueError(f"errors must be raise/null/skip, got {errors!r}")
-
-
 def sample_gif_frames(
     df: DataFrame,
     payload_col: str = "payload",
@@ -324,44 +323,25 @@ def sample_gif_frames(
     media_codec.decode_image: ``"raise"`` fails the job, ``"skip"`` drops
     the bad payload, ``"null"`` keeps one dead-letter row per bad payload
     (null frame fields, message in an extra ``error`` column)."""
-    import numpy as np
 
-    from ape_dts_spark.functions import media_codec as mc
+    def _frames(payload: bytes) -> list[tuple]:
+        frames = mc.parse_gif(payload, return_frames=True)["frames"]
+        return [
+            (i, len(frames), frames[i].shape[0], frames[i].shape[1], int(frames[i].astype(np.int64).sum()))
+            for i in range(0, len(frames), every_n)
+        ]
 
-    _quarantine_policy(errors)
+    return mc._quarantine_map(
+        df, payload_col, id_col, _frames,
+        ["frame_idx", "n_frames", "height", "width", "idx_sum"],
+        "id long, frame_idx int, n_frames int, height int, width int, idx_sum long",
+        errors,
+    )
 
-    def _frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[tuple] = []
-            for rid, raw in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    rec = mc.parse_gif(bytes(raw), return_frames=True)
-                except (ValueError, NotImplementedError) as exc:
-                    if errors == "raise":
-                        raise
-                    if errors == "null":
-                        rows.append((rid, None, None, None, None, None,
-                                     f"{type(exc).__name__}: {exc}"))
-                    continue
-                frames = rec["frames"]
-                for i in range(0, len(frames), every_n):
-                    rows.append(
-                        (rid, i, len(frames), frames[i].shape[0],
-                         frames[i].shape[1],
-                         int(frames[i].astype(np.int64).sum()), None)
-                    )
-            out = pd.DataFrame(
-                rows, columns=["id", "frame_idx", "n_frames", "height",
-                               "width", "idx_sum", "error"]
-            )
-            if errors == "raise":
-                out = out.drop(columns=["error"])
-            yield out
 
-    schema = "id long, frame_idx int, n_frames int, height int, width int, idx_sum long"
-    if errors != "raise":
-        schema += ", error string"
-    return df.mapInPandas(_frames, schema=schema)
+def _fields(schema: str) -> list[str]:
+    """The column names of a DDL schema string, less its leading id."""
+    return [f.split()[0] for f in schema.split(", ")][1:]
 
 
 VIDEO_FRAMES_SCHEMA = (
@@ -390,42 +370,22 @@ def sample_video_frames(
     extension surface. ``errors`` (r13): raise/skip/null corrupt-payload
     policy, same contract as decode_image (null = one dead-letter row per
     bad payload with the message in an ``error`` column)."""
-    import numpy as np
 
-    from ape_dts_spark.functions import media_codec as mc
+    def _frames(payload: bytes) -> list[tuple]:
+        rec = mc.parse_avi(payload, return_frames=True)
+        frames = rec["frames"]
+        rows = []
+        for i in range(0, len(frames), every_n):
+            px = frames[i].astype(np.int64)
+            rows.append(
+                (i, len(frames), rec["codec"], rec["width"], rec["height"],
+                 int(px.size), int(px.sum()), int(px.min()), int(px.max()))
+            )
+        return rows
 
-    _quarantine_policy(errors)
-    cols = ["id", "frame_idx", "n_frames", "codec", "width",
-            "height", "n_px", "px_sum", "px_min", "px_max", "error"]
-
-    def _frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[tuple] = []
-            for rid, raw in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    rec = mc.parse_avi(bytes(raw), return_frames=True)
-                except (ValueError, NotImplementedError) as exc:
-                    if errors == "raise":
-                        raise
-                    if errors == "null":
-                        rows.append((rid,) + (None,) * 9
-                                    + (f"{type(exc).__name__}: {exc}",))
-                    continue
-                frames = rec["frames"]
-                for i in range(0, len(frames), every_n):
-                    px = frames[i].astype(np.int64)
-                    rows.append(
-                        (rid, i, len(frames), rec["codec"], rec["width"],
-                         rec["height"], int(px.size), int(px.sum()),
-                         int(px.min()), int(px.max()), None)
-                    )
-            out = pd.DataFrame(rows, columns=cols)
-            if errors == "raise":
-                out = out.drop(columns=["error"])
-            yield out
-
-    schema = VIDEO_FRAMES_SCHEMA + (", error string" if errors != "raise" else "")
-    return df.mapInPandas(_frames, schema=schema)
+    return mc._quarantine_map(
+        df, payload_col, id_col, _frames, _fields(VIDEO_FRAMES_SCHEMA), VIDEO_FRAMES_SCHEMA, errors
+    )
 
 
 AUDIO_FEATURES_SCHEMA = (
@@ -456,35 +416,13 @@ def extract_audio_features(
     extension surface). ``errors`` (r13): raise/skip/null corrupt-payload
     policy, same contract as decode_image (null = dead-letter row with null
     features and the message in an ``error`` column)."""
-    from ape_dts_spark.functions import media_codec as mc
+    fields = _fields(AUDIO_FEATURES_SCHEMA)
 
-    _quarantine_policy(errors)
-    fields = [f.split()[0] for f in AUDIO_FEATURES_SCHEMA.split(", ")][1:]
+    def _features(payload: bytes) -> list[tuple]:
+        rec = mc.audio_spectrum(payload, n_fft=n_fft)
+        return [tuple(rec[f] for f in fields)]
 
-    def _features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs, ids = [], []
-            for rid, raw in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    rec = mc.audio_spectrum(bytes(raw), n_fft=n_fft)
-                    rec["error"] = None
-                except (ValueError, NotImplementedError) as exc:
-                    if errors == "raise":
-                        raise
-                    if errors == "skip":
-                        continue
-                    rec = dict.fromkeys(fields)
-                    rec["error"] = f"{type(exc).__name__}: {exc}"
-                recs.append(rec)
-                ids.append(rid)
-            out = pd.DataFrame(recs, columns=fields + ["error"])
-            if errors == "raise":
-                out = out.drop(columns=["error"])
-            out.insert(0, "id", ids)
-            yield out
-
-    schema = AUDIO_FEATURES_SCHEMA + (", error string" if errors != "raise" else "")
-    return df.mapInPandas(_features, schema=schema)
+    return mc._quarantine_map(df, payload_col, id_col, _features, fields, AUDIO_FEATURES_SCHEMA, errors)
 
 
 def audio_fingerprints(
@@ -505,39 +443,22 @@ def audio_fingerprints(
     :func:`audio_dup_pairs` matches on. One Arrow pass, no shuffle.
     ``errors``: the standard raise/skip/null corrupt-payload policy (null
     keeps one dead-letter row with a NULL fp and the message)."""
-    from ape_dts_spark.functions import media_codec as mc
-
-    _quarantine_policy(errors)
     n_bins = n_fft // 2 + 1
 
-    def _fp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[tuple] = []
-            for rid, raw in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    seq = mc.audio_peak_sequence(bytes(raw), n_fft)
-                except (ValueError, NotImplementedError) as exc:
-                    if errors == "raise":
-                        raise
-                    if errors == "null":
-                        rows.append((rid, None, None, f"{type(exc).__name__}: {exc}"))
+    def _fp(payload: bytes) -> list[tuple]:
+        seq = mc.audio_peak_sequence(payload, n_fft)
+        at = dict(seq)
+        rows = []
+        for t, b1 in seq:
+            for di, d in enumerate(deltas):
+                b2 = at.get(t + d)
+                b3 = at.get(t + 2 * d)
+                if b2 is None or b3 is None:
                     continue
-                at = dict(seq)
-                for t, b1 in seq:
-                    for di, d in enumerate(deltas):
-                        b2 = at.get(t + d)
-                        b3 = at.get(t + 2 * d)
-                        if b2 is None or b3 is None:
-                            continue
-                        fp = ((b1 * n_bins + b2) * n_bins + b3) * len(deltas) + di
-                        rows.append((rid, t, fp, None))
-            out = pd.DataFrame(rows, columns=["id", "t", "fp", "error"])
-            if errors == "raise":
-                out = out.drop(columns=["error"])
-            yield out
+                rows.append((t, ((b1 * n_bins + b2) * n_bins + b3) * len(deltas) + di))
+        return rows
 
-    schema = "id long, t int, fp long" + (", error string" if errors != "raise" else "")
-    return df.mapInPandas(_fp, schema=schema)
+    return mc._quarantine_map(df, payload_col, id_col, _fp, ["t", "fp"], "id long, t int, fp long", errors)
 
 
 def audio_dup_pairs(fps: DataFrame, min_matches: int = 10) -> DataFrame:
@@ -552,12 +473,16 @@ def audio_dup_pairs(fps: DataFrame, min_matches: int = 10) -> DataFrame:
     clusters, so the join output is linear in corpus size plus the true
     duplicate mass. Returns (id_a, id_b, dt, n_matches) with id_a < id_b
     and n_matches >= min_matches."""
-    a = fps.select(F.col("id").alias("id_a"), F.col("t").alias("t_a"), "fp")
-    b = fps.select(F.col("id").alias("id_b"), F.col("t").alias("t_b"), "fp")
+    return _offset_vote(_band_collisions(fps, ["fp"], "id", ("t",)), min_matches)
+
+
+def _offset_vote(matches: DataFrame, min_matches: int) -> DataFrame:
+    """Offset-consistent vote over time-stamped matches (id_a, id_b, t_a,
+    t_b): group by (id_a, id_b, dt = t_a - t_b) so only matches agreeing on
+    ONE time shift accumulate; keep groups with >= min_matches. Returns
+    (id_a, id_b, dt, n_matches)."""
     return (
-        a.join(b, "fp")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b", (F.col("t_a") - F.col("t_b")).alias("dt"))
+        matches.groupBy("id_a", "id_b", (F.col("t_a") - F.col("t_b")).alias("dt"))
         .agg(F.count(F.lit(1)).alias("n_matches"))
         .filter(F.col("n_matches") >= min_matches)
     )
@@ -575,28 +500,11 @@ def image_phashes(
     shuffle before decode (the media-pipeline plan shape). Returns
     (id, phash long). ``errors``: the standard raise/null/skip per-row
     quarantine policy."""
-    from ape_dts_spark.functions import media_codec as mc
 
-    _quarantine_policy(errors)
+    def _hash(payload: bytes) -> list[tuple]:
+        return [(mc.phash64(mc.parse_image_pixels(payload)),)]
 
-    def _hash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[tuple] = []
-            for rid, raw in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    rows.append((rid, mc.phash64(mc.parse_image_pixels(bytes(raw))), None))
-                except (ValueError, NotImplementedError) as exc:
-                    if errors == "raise":
-                        raise
-                    if errors == "null":
-                        rows.append((rid, None, f"{type(exc).__name__}: {exc}"))
-            out = pd.DataFrame(rows, columns=["id", "phash", "error"])
-            if errors == "raise":
-                out = out.drop(columns=["error"])
-            yield out
-
-    schema = "id long, phash long" + (", error string" if errors != "raise" else "")
-    return df.mapInPandas(_hash, schema=schema)
+    return mc._quarantine_map(df, payload_col, id_col, _hash, ["phash"], "id long, phash long", errors)
 
 
 def phash_dup_pairs(
@@ -613,38 +521,57 @@ def phash_dup_pairs(
     ~n_bands * 2^-16 per pair, so the join output stays linear in corpus
     size plus the true duplicate mass (the same argument as minhash_lsh's
     band join). Returns (id_a, id_b, hamming) with id_a < id_b."""
-    if not 64 % n_bands == 0:
-        raise ValueError(f"n_bands must divide 64, got {n_bands}")
-    width = 64 // n_bands
-    mask = (1 << width) - 1
-    band_key = F.explode(
-        F.array(
-            *[
-                F.shiftrightunsigned(F.col("phash"), b * width)
-                .bitwiseAND(F.lit(mask))
-                .bitwiseOR(F.lit(b << width))
-                for b in range(n_bands)
-            ]
-        )
-    ).alias("band_key")
-    banded = hashes.select("id", "phash", band_key)
-    a = banded.select(
-        F.col("id").alias("id_a"), F.col("phash").alias("ph_a"), "band_key"
-    )
-    b = banded.select(
-        F.col("id").alias("id_b"), F.col("phash").alias("ph_b"), "band_key"
-    )
+    return _near_phash_pairs(_phash_band_rows(hashes, n_bands), n_bands, max_hamming)
+
+
+def _hamming_hits(
+    bands: DataFrame,
+    n_bands: int,
+    max_hamming: int,
+    carry: tuple[str, ...] = (),
+    index: DataFrame | None = None,
+) -> DataFrame:
+    """Band collisions of a pHash band relation (``index``: the incremental
+    probe), verified on TRUE Hamming distance over the full 64-bit hash:
+    (id_a, id_b, carry_a/_b..., phash_a, phash_b, hamming <= max_hamming),
+    one row per matching band."""
+    hits = _band_collisions(bands, ["band", f"bh{64 // n_bands}"], "id", (*carry, "phash"), index)
+    return hits.withColumn(
+        "hamming", F.bit_count(F.col("phash_a").bitwiseXOR(F.col("phash_b")))
+    ).filter(F.col("hamming") <= max_hamming)
+
+
+def _near_phash_pairs(
+    bands: DataFrame, n_bands: int, max_hamming: int, index: DataFrame | None = None
+) -> DataFrame:
+    """Image pairs (id_a, id_b, hamming) from the verified band hits, one
+    row per pair however many bands matched."""
     return (
-        a.join(b, "band_key")
-        .filter(F.col("id_a") < F.col("id_b"))
+        _hamming_hits(bands, n_bands, max_hamming, index=index)
         .groupBy("id_a", "id_b")  # dedup pairs matching in several bands
-        .agg(
-            F.bit_count(
-                F.first("ph_a").bitwiseXOR(F.first("ph_b"))
-            ).alias("hamming")
-        )
-        .filter(F.col("hamming") <= max_hamming)
+        .agg(F.first("hamming").alias("hamming"))
     )
+
+
+def _near_frame_votes(
+    bands: DataFrame, n_bands: int, max_hamming: int, min_matches: int, index: DataFrame | None = None
+) -> DataFrame:
+    """Video pairs (id_a, id_b, dt, n_matches): the verified frame band
+    hits, one per frame pair however many bands matched, voted per time
+    shift."""
+    frames = _hamming_hits(bands, n_bands, max_hamming, ("t",), index)
+    return _offset_vote(frames.select("id_a", "id_b", "t_a", "t_b").distinct(), min_matches)
+
+
+def _check_index_width(index: DataFrame, n_bands: int, kind: str) -> None:
+    """Raise unless a stored band index was built at ``n_bands``: the band
+    bit width is part of the index format (its ``bh{width}`` column)."""
+    width = 64 // n_bands
+    if f"bh{width}" not in index.columns:
+        raise ValueError(
+            f"stored {kind} index has columns {index.columns} but n_bands={n_bands} "
+            f"needs bh{width} — band width is part of the index format"
+        )
 
 
 def _phash_band_rows(
@@ -710,32 +637,8 @@ def phash_incremental_pairs(
     bands equi-joined against (index UNION new bands) on (band, bh) — cost
     scales with |new batch| + collision volume, never with corpus size.
     One shuffle on the band key + one pair-dedup agg."""
-    width = 64 // n_bands
-    if f"bh{width}" not in index.columns:
-        raise ValueError(
-            f"stored phash index has columns {index.columns} but n_bands={n_bands} "
-            f"needs bh{width} — band width is part of the index format"
-        )
-    new_bands = _phash_band_rows(new_hashes, n_bands)
-    all_bands = index.unionByName(new_bands)
-    a = new_bands.select(
-        F.col("id").alias("id_a"), F.col("phash").alias("ph_a"), "band", f"bh{width}"
-    )
-    b = all_bands.select(
-        F.col("id").alias("id_b"), F.col("phash").alias("ph_b"), "band", f"bh{width}"
-    )
-    return (
-        a.join(b, ["band", f"bh{width}"])
-        .filter(F.col("id_a") != F.col("id_b"))
-        .select(
-            F.least("id_a", "id_b").alias("id_a"),
-            F.greatest("id_a", "id_b").alias("id_b"),
-            F.bit_count(F.col("ph_a").bitwiseXOR(F.col("ph_b"))).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .groupBy("id_a", "id_b")  # dedup pairs matching in several bands
-        .agg(F.first("hamming").alias("hamming"))
-    )
+    _check_index_width(index, n_bands, "phash")
+    return _near_phash_pairs(_phash_band_rows(new_hashes, n_bands), n_bands, max_hamming, index)
 
 
 def video_fingerprints(
@@ -753,32 +656,14 @@ def video_fingerprints(
     JFIF decoder) and phash64 it — all in ONE Arrow pass, no shuffle before
     decode. Returns (id, t [frame index], phash). ``errors``: the standard
     raise/null/skip per-payload quarantine."""
-    from ape_dts_spark.functions import media_codec as mc
 
-    _quarantine_policy(errors)
+    def _fp(payload: bytes) -> list[tuple]:
+        frames = mc.parse_avi(payload, return_frames=True)["frames"]
+        return [(t, mc.phash64(frames[t])) for t in range(0, len(frames), every_n)]
 
-    def _fp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[tuple] = []
-            for rid, raw in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    frames = mc.parse_avi(bytes(raw), return_frames=True)["frames"]
-                    for t in range(0, len(frames), every_n):
-                        rows.append((rid, t, mc.phash64(frames[t]), None))
-                except (ValueError, NotImplementedError) as exc:
-                    if errors == "raise":
-                        raise
-                    if errors == "null":
-                        rows.append((rid, None, None, f"{type(exc).__name__}: {exc}"))
-            out = pd.DataFrame(rows, columns=["id", "t", "phash", "error"])
-            if errors == "raise":
-                out = out.drop(columns=["error"])
-            yield out
-
-    schema = "id long, t long, phash long" + (
-        ", error string" if errors != "raise" else ""
+    return mc._quarantine_map(
+        df, payload_col, id_col, _fp, ["t", "phash"], "id long, t long, phash long", errors
     )
-    return df.mapInPandas(_fp, schema=schema)
 
 
 def video_dup_pairs(
@@ -799,45 +684,8 @@ def video_dup_pairs(
     16-bit band collisions are ~n_bands * 2^-16 per frame pair, so join
     output stays linear in total frame count plus true duplicate mass.
     Returns (id_a, id_b, dt, n_matches), id_a < id_b."""
-    if not 64 % n_bands == 0:
-        raise ValueError(f"n_bands must divide 64, got {n_bands}")
-    width = 64 // n_bands
-    mask = (1 << width) - 1
-    band_key = F.explode(
-        F.array(
-            *[
-                F.shiftrightunsigned(F.col("phash"), b * width)
-                .bitwiseAND(F.lit(mask))
-                .bitwiseOR(F.lit(b << width))
-                for b in range(n_bands)
-            ]
-        )
-    ).alias("band_key")
-    banded = fps.select("id", "t", "phash", band_key)
-    a = banded.select(
-        F.col("id").alias("id_a"), F.col("t").alias("t_a"),
-        F.col("phash").alias("ph_a"), "band_key",
-    )
-    b = banded.select(
-        F.col("id").alias("id_b"), F.col("t").alias("t_b"),
-        F.col("phash").alias("ph_b"), "band_key",
-    )
-    frame_matches = (
-        a.join(b, "band_key")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(
-            F.bit_count(F.col("ph_a").bitwiseXOR(F.col("ph_b"))) <= max_hamming
-        )
-        .groupBy("id_a", "id_b", "t_a", "t_b")  # dedup multi-band matches
-        .agg(F.count(F.lit(1)).alias("_nb"))
-    )
-    return (
-        frame_matches.groupBy(
-            "id_a", "id_b", (F.col("t_a") - F.col("t_b")).alias("dt")
-        )
-        .agg(F.count(F.lit(1)).alias("n_matches"))
-        .filter(F.col("n_matches") >= min_matches)
-    )
+    bands = _phash_band_rows(fps, n_bands, carry=("id", "t"))
+    return _near_frame_votes(bands, n_bands, max_hamming, min_matches)
 
 
 def video_fp_index(fps: DataFrame, n_bands: int = 4) -> DataFrame:
@@ -870,52 +718,9 @@ def video_incremental_pairs(
     each frame match counted once, so within-batch vote counts equal the
     full run's). Batch ids must be disjoint from indexed ids. Cost scales
     with |batch| frames + collision volume, never corpus size."""
-    width = 64 // n_bands
-    if f"bh{width}" not in index.columns:
-        raise ValueError(
-            f"stored video index has columns {index.columns} but n_bands={n_bands} "
-            f"needs bh{width} — band width is part of the index format"
-        )
+    _check_index_width(index, n_bands, "video")
     new_bands = _phash_band_rows(new_fps, n_bands, carry=("id", "t"))
-    all_bands = index.withColumn("_new", F.lit(False)).unionByName(
-        new_bands.withColumn("_new", F.lit(True))
-    )
-    a = new_bands.select(
-        F.col("id").alias("id_n"), F.col("t").alias("t_n"),
-        F.col("phash").alias("ph_n"), "band", f"bh{width}",
-    )
-    b = all_bands.select(
-        F.col("id").alias("id_o"), F.col("t").alias("t_o"),
-        F.col("phash").alias("ph_o"), "band", f"bh{width}", "_new",
-    )
-    frame_matches = (
-        a.join(b, ["band", f"bh{width}"])
-        # each unordered frame match exactly once, as in the full run:
-        # new-vs-old only from the new probe side, new-vs-new only
-        # lesser-probes-greater
-        .filter((~F.col("_new")) | (F.col("id_n") < F.col("id_o")))
-        .filter(F.col("id_n") != F.col("id_o"))
-        .filter(
-            F.bit_count(F.col("ph_n").bitwiseXOR(F.col("ph_o"))) <= max_hamming
-        )
-        .select(
-            F.least("id_n", "id_o").alias("id_a"),
-            F.greatest("id_n", "id_o").alias("id_b"),
-            F.when(F.col("id_n") < F.col("id_o"), F.col("t_n"))
-            .otherwise(F.col("t_o")).alias("t_a"),
-            F.when(F.col("id_n") < F.col("id_o"), F.col("t_o"))
-            .otherwise(F.col("t_n")).alias("t_b"),
-        )
-        .groupBy("id_a", "id_b", "t_a", "t_b")  # dedup multi-band matches
-        .agg(F.count(F.lit(1)).alias("_nb"))
-    )
-    return (
-        frame_matches.groupBy(
-            "id_a", "id_b", (F.col("t_a") - F.col("t_b")).alias("dt")
-        )
-        .agg(F.count(F.lit(1)).alias("n_matches"))
-        .filter(F.col("n_matches") >= min_matches)
-    )
+    return _near_frame_votes(new_bands, n_bands, max_hamming, min_matches, index)
 
 
 def sample_frames(df: DataFrame, payload_col: str = "payload", every_n_bytes: int = 1024) -> DataFrame:

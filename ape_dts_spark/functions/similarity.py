@@ -214,15 +214,20 @@ def cosine_topk_np(
     return _topk(_scan(corpus.select(id_col, vec_col), _score), k)
 
 
-def _train_sample(corpus: DataFrame, id_col: str, vec_col: str, target: int, empty_msg: str):
+def _train_sample(
+    corpus: DataFrame, id_col: str, vec_col: str, target: int, empty_msg: str, n: int | None = None
+):
     """The driver-side training sample of every quantizer, as unit rows.
 
     A hash-mod filter (``xxhash64(id) % mod == 0``) sized to about
     ``target`` rows — unbiased across the id space, no global sort — is
     collected (bounded regardless of corpus size) and put in id order, so
     the strided init is reproducible. An empty sample raises ValueError
-    with ``empty_msg`` (formatted with the corpus rows ``n`` and ``mod``)."""
-    n = corpus.count()
+    with ``empty_msg`` (formatted with the corpus rows ``n`` and ``mod``).
+    ``n`` is the corpus row count when the caller already has it (IVF-PQ
+    draws two samples from one count); otherwise it is counted here."""
+    if n is None:
+        n = corpus.count()
     mod = max(1, n // max(1, target))
     sample = (
         corpus.select(id_col, vec_col)
@@ -242,6 +247,7 @@ def _train_centroids(
     n_lists: int,
     sample_per_list: int = 50,
     iters: int = 8,
+    n: int | None = None,
 ):
     """Deterministic spherical-k-means centroids for IVF.
 
@@ -257,6 +263,7 @@ def _train_centroids(
     mat = _train_sample(
         corpus, id_col, vec_col, n_lists * sample_per_list,
         "IVF centroid training sample is empty (corpus rows={n}, hash mod={mod})",
+        n,
     )
     k_eff = min(n_lists, len(mat))
     step = max(1, len(mat) // k_eff)
@@ -925,14 +932,16 @@ def pq_index_topk(
 
     return _topk(_scan(encoded, _score), k)
 
-def _train_residual_books(corpus, id_col, vec_col, cent, m, ks, sample_per_code=40, iters=10):
+def _train_residual_books(corpus, id_col, vec_col, cent, m, ks, n, sample_per_code=40, iters=10):
     """Residual PQ codebooks for IVF-PQ (Jegou et al. 2011 SIV, IVFADC):
     hash-mod sample -> unit rows -> subtract each vector's nearest coarse
     centroid -> shared per-subspace k-means over the residuals. One codebook
-    set is shared across all cells (the paper's memory-efficient variant)."""
+    set is shared across all cells (the paper's memory-efficient variant).
+    ``n`` is the corpus row count the centroid sample was drawn from."""
     mat = _train_sample(
         corpus, id_col, vec_col, ks * sample_per_code,
         "IVF-PQ residual training sample is empty (corpus rows={n}, hash mod={mod})",
+        n,
     )
     resid = mat - cent[_nearest(mat, cent)]
     return _kmeans_subspaces(resid, m, ks, iters)
@@ -1000,8 +1009,9 @@ def ivfpq_topk(
     (absent 16^8-space code collisions) and exact re-rank pins cosine=1 at
     rank 1. Output: (query_id, neighbor_id, rank).
     """
-    cent = _train_centroids(corpus, id_col, vec_col, n_lists)
-    books = _train_residual_books(corpus, id_col, vec_col, cent, m, ks)
+    n = corpus.count()
+    cent = _train_centroids(corpus, id_col, vec_col, n_lists, n=n)
+    books = _train_residual_books(corpus, id_col, vec_col, cent, m, ks, n)
     q_ids, q_mat = _load_queries(queries, id_col, vec_col)
     probing = _probe(q_mat, cent, n_probe)
     tabs = _adc_tables(q_mat, cent, probing, books)
@@ -1033,8 +1043,9 @@ def ivfpq_index(
     """
     from pyspark import StorageLevel
 
-    cent = _train_centroids(corpus, id_col, vec_col, n_lists)
-    books = _train_residual_books(corpus, id_col, vec_col, cent, m, ks)
+    n = corpus.count()
+    cent = _train_centroids(corpus, id_col, vec_col, n_lists, n=n)
+    books = _train_residual_books(corpus, id_col, vec_col, cent, m, ks, n)
 
     encoded = (
         corpus.select(id_col, vec_col)

@@ -38,6 +38,10 @@ _H2_JAR_GLOBS = [
 ]
 
 
+# the directory that holds the imported ape_dts_spark package
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def _find_jar(globs: list[str]) -> str | None:
     for pat in globs:
         hits = sorted(glob.glob(pat, recursive=True))
@@ -86,6 +90,10 @@ def get_spark(app_name: str = "ape_dts_spark", shuffle_partitions: int | None = 
         # query 3-10x (the container has 128 GiB)
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
         .config("spark.ui.enabled", "false")
+        # Arrow kernels pickle the package's module-level helpers by
+        # reference, so each Python worker imports ape_dts_spark itself: give
+        # the workers the tree this process imported, whatever their cwd
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     jars = [j for j in (find_jdbc_jar(), find_h2_jar()) if j]
     if jars:

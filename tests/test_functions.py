@@ -46,6 +46,90 @@ def test_simhash_identical_docs_zero_hamming(spark, sf_dir):
     assert planted <= found
 
 
+def _edge_twins(base: int, widths: list[int]) -> list[int]:
+    """Near-twins of ``base`` at Hamming ``len(widths) - 1`` that share
+    exactly one band each: for every band j, one flip in each other band, at
+    that band's bit nearest to band j. Shifting any band edge by one bit
+    pulls a flip into band j, so the pair then shares no band at all."""
+    starts = [sum(widths[:k]) for k in range(len(widths))]
+    twins = []
+    for j in range(len(widths)):
+        v = base
+        for k, (s, w) in enumerate(zip(starts, widths)):
+            if k != j:
+                v ^= 1 << (s + w - 1 if k < j else s)
+        twins.append(v)
+    return twins
+
+
+def _hamming_corpus(n_bits: int, widths: list[int]) -> list[tuple[int, int]]:
+    """(id, hash) rows: edge twins at the recall limit, twins one flip past
+    it, an exact duplicate under a second id, and unrelated hashes."""
+    import random
+
+    rng = random.Random(4211)
+    top = n_bits - 1  # the pHash top bit is always clear
+    hashes = []
+    for _ in range(3):
+        base = rng.getrandbits(top)
+        hashes += [base, base] + _edge_twins(base, widths)
+        far = base
+        for bit in rng.sample(range(top), len(widths)):
+            far ^= 1 << bit
+        hashes.append(far)
+    hashes += [rng.getrandbits(top) for _ in range(10)]
+    return list(enumerate(hashes))
+
+
+def _all_pairs_within(rows, max_hamming, ids=None):
+    import itertools
+
+    return {
+        (a, b, bin(x ^ y).count("1"))
+        for (a, x), (b, y) in itertools.combinations(rows, 2)
+        if bin(x ^ y).count("1") <= max_hamming and (ids is None or a in ids or b in ids)
+    }
+
+
+@pytest.mark.parametrize(
+    "kernel, param",
+    [("simhash", 3), ("simhash", 6), ("phash", 4), ("phash", 8), ("phash_incremental", 8)],
+)
+def test_banded_hamming_joins_match_all_pairs(spark, monkeypatch, kernel, param):
+    """The banded Hamming joins are recall-exact at their documented
+    distances: simhash_pairs splits 32 bits into max(4, h + 1) bands, the
+    pHash joins split 64 bits into n_bands equal bands with h < n_bands.
+    Each result equals all-pairs Hamming over planted near-twins that share
+    only one band; the incremental join equals it over pairs touching the
+    new batch."""
+    from ape_dts_spark.functions import multimodal as mm
+
+    if kernel == "simhash":
+        n_bands = max(4, param + 1)
+        base, extra = divmod(dd.SIMHASH_BITS, n_bands)
+        widths = [base + (1 if i < extra else 0) for i in range(n_bands)]
+        rows = _hamming_corpus(dd.SIMHASH_BITS, widths)
+        hashes = spark.createDataFrame(rows, "doc_id long, simhash long")
+        monkeypatch.setattr(dd, "simhash_values", lambda df, id_col, text_col: hashes)
+        got = dd.simhash_pairs(hashes, "doc_id", max_hamming=param).collect()
+        assert {tuple(r) for r in got} == _all_pairs_within(rows, param)
+        return
+    rows = _hamming_corpus(64, [64 // param] * param)
+    hashes = spark.createDataFrame(rows, "id long, phash long")
+    if kernel == "phash":
+        got = mm.phash_dup_pairs(hashes, max_hamming=param - 1, n_bands=param).collect()
+        assert {tuple(r) for r in got} == _all_pairs_within(rows, param - 1)
+        return
+    new_ids = {i for i, _ in rows if i % 3 == 0}
+    index = mm.phash_index(hashes.filter(F.col("id") % 3 != 0), n_bands=param)
+    new = hashes.filter(F.col("id") % 3 == 0)
+    inc = mm.phash_incremental_pairs(index, new, max_hamming=param - 1, n_bands=param)
+    got = {tuple(r) for r in inc.collect()}
+    full = mm.phash_dup_pairs(hashes, max_hamming=param - 1, n_bands=param).collect()
+    assert got == {tuple(r) for r in full if r["id_a"] in new_ids or r["id_b"] in new_ids}
+    assert got == _all_pairs_within(rows, param - 1, new_ids)
+
+
 def test_ann_lsh_finds_planted_twins(spark, sf_dir):
     """Random embeddings have no neighbor structure, so recall@k of 'nearest
     random vector' is meaningless; plant exact twins instead — a twin shares
@@ -322,7 +406,8 @@ def test_jaccard_pairs_matches_bruteforce_randomized(spark):
     prune before the pair shuffle + ACCUMULATED per-pair positional bound
     over the surviving rows) must be jointly LOSSLESS: on a random corpus
     with a skewed shared vocabulary, the kernel's output equals the brute
-    -force all-pairs Jaccard at several thresholds."""
+    -force all-pairs Jaccard at several thresholds, pairs at J == t
+    included."""
     import itertools
     import random
 
@@ -335,9 +420,15 @@ def test_jaccard_pairs_matches_bruteforce_randomized(spark):
         # is exactly where the positional filters do their pruning
         toks = {vocab[min(rng.randint(0, 29), rng.randint(0, 29))] for _ in range(k)}
         rows.append((i, " ".join(sorted(toks))))
+    # planted pairs at J == t exactly, where the double bound overshoots its
+    # integer (0.8 / 1.8 * 63 = 28.000000000000004, 0.55 * 100 =
+    # 55.00000000000001): 28 of 35 tokens and 55 of 100 tokens
+    for i, (n_sub, n_sup) in enumerate([(28, 35), (55, 100)]):
+        rows.append((100 + 2 * i, " ".join(f"p{i}x{k}" for k in range(n_sub))))
+        rows.append((101 + 2 * i, " ".join(f"p{i}x{k}" for k in range(n_sup))))
     df = spark.createDataFrame(rows, "doc_id long, text string")
     sets = {i: set(t.split()) for i, t in rows if t}
-    for t in (0.5, 0.7, 0.9):
+    for t in (0.5, 0.55, 0.7, 0.8, 0.9):
         got = {
             (r["id_a"], r["id_b"], round(r["jaccard"], 9))
             for r in dd.jaccard_pairs(
@@ -1115,6 +1206,18 @@ def test_dsir_weights_cover_all_docs(spark):
     )
     w = {r["doc_id"]: r["dsir_weight"] for r in tx.dsir_weights(d, d.limit(1)).collect()}
     assert set(w) == {1, 2, 3} and w[2] == 0 and w[3] == 0
+
+
+def test_ivfpq_training_counts_the_corpus_once(spark, sf_dir, spark_jobs):
+    """IVF-PQ draws its centroid and residual-codebook samples from one
+    corpus count: building an ivfpq_topk plan runs that count, the two
+    sample collects and the query load, and no other job."""
+    emb = demo.load(spark, sf_dir, "embeddings")
+    with spark_jobs() as one_count:
+        emb.count()
+    with spark_jobs() as jobs:
+        sim.ivfpq_topk(emb.filter(F.col("vec_id") % 50 == 0), emb, "vec_id", "embedding")
+    assert jobs.n == one_count.n + 3
 
 
 def test_ivfpq_index_append_matches_full_build_and_signals_staleness(spark, sf_dir):
