@@ -3644,26 +3644,33 @@ def q_binlog_file_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ape_dts_spark.sources import binlog_file as bf
 
     log_dir, tables = _ensure_binlog_fixture(spark, sf_dir)
-    dml = bf.read_binlog_files(spark, log_dir, tables).filter(
-        F.col("row_type").isin("insert", "update", "delete")
-    )
-    k = F.coalesce(F.col("after")["o_orderkey"], F.col("before")["o_orderkey"]).cast("bigint")
+    return _binlog_orders_state(bf.read_binlog_files(spark, log_dir, tables), F.col("seq"))
+
+
+def _binlog_orders_state(changes: DataFrame, *order) -> DataFrame:
+    """Final orders state of a binlog change relation of the
+    _ensure_binlog_fixture chain: per o_orderkey the last DML row by
+    ``order`` (descending) wins, deletes drop the key, and the after image
+    is projected to the 9 typed columns the shared oracle restates."""
+    after = F.col("after")
+    k = F.coalesce(after["o_orderkey"], F.col("before")["o_orderkey"]).cast("bigint")
     last = (
-        dml.withColumn("k", k)
-        .withColumn("rn", F.row_number().over(W.partitionBy("k").orderBy(F.col("seq").desc())))
+        changes.filter(F.col("row_type").isin("insert", "update", "delete"))
+        .withColumn("k", k)
+        .withColumn("rn", F.row_number().over(W.partitionBy("k").orderBy(*[o.desc() for o in order])))
         .filter(F.col("rn") == 1)
         .filter(F.col("row_type") != "delete")
     )
     return last.select(
-        F.col("after")["o_orderkey"].cast("bigint").alias("o_orderkey"),
-        F.col("after")["o_custkey"].cast("bigint").alias("o_custkey"),
-        F.col("after")["o_orderstatus"].alias("o_orderstatus"),
-        F.col("after")["o_totalprice"].cast("double").alias("o_totalprice"),
-        F.col("after")["o_orderdate_us"].cast("bigint").alias("o_orderdate_us"),
-        F.col("after")["o_orderpriority"].alias("o_orderpriority"),
-        F.col("after")["o_ukey"].alias("o_ukey"),
-        F.col("after")["o_flags"].cast("bigint").alias("o_flags"),
-        F.col("after")["o_geo"].alias("o_geo"),
+        after["o_orderkey"].cast("bigint").alias("o_orderkey"),
+        after["o_custkey"].cast("bigint").alias("o_custkey"),
+        after["o_orderstatus"].alias("o_orderstatus"),
+        after["o_totalprice"].cast("double").alias("o_totalprice"),
+        after["o_orderdate_us"].cast("bigint").alias("o_orderdate_us"),
+        after["o_orderpriority"].alias("o_orderpriority"),
+        after["o_ukey"].alias("o_ukey"),
+        after["o_flags"].cast("bigint").alias("o_flags"),
+        after["o_geo"].alias("o_geo"),
     )
 
 
@@ -3909,8 +3916,7 @@ def q_mysql_binlog_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     session setup, REGISTER_SLAVE and BINLOG_DUMP, reassembles the event
     stream and decodes it with the shared gated parser; the replayed final
     state is graded against the identical oracle the at-rest scan is graded
-    on. JSON-flattened images are projected back per column (the transport
-    relation is wire-stable strings). The server is a FakeMysqlServer
+    on, through the same projection of the map images. The server is a FakeMysqlServer
     (sources/fake_servers.py) holding every file of the chain."""
     from ape_dts_spark.sources.fake_servers import FakeMysqlServer
     from ape_dts_spark.sources.mysql_binlog_client import read_binlog_changes
@@ -3919,37 +3925,13 @@ def q_mysql_binlog_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     blobs = _dir_blobs(log_dir)
     host, port = _endpoint(FakeMysqlServer(blobs))
     endpoints = [(host, port, fname) for fname in blobs]
-    dml = read_binlog_changes(spark, endpoints, tables, timeout=30).filter(
-        F.col("row_type").isin("insert", "update", "delete")
-    )
-    jg = lambda col, field: F.get_json_object(F.col(col), f"$.{field}")  # noqa: E731
-    k = F.coalesce(jg("after", "o_orderkey"), jg("before", "o_orderkey")).cast("bigint")
     # apply order: the rotation chain's file order, then in-file parse seq
     # (strictly increasing per dump session — pos would TIE for rows inside
     # one TRANSACTION_PAYLOAD txn, whose inner events all carry the
     # wrapping event's position); (file, seq) is the same total order the
     # at-rest reader globalizes
-    last = (
-        dml.withColumn("k", k)
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                W.partitionBy("k").orderBy(F.col("file").desc(), F.col("seq").desc())
-            ),
-        )
-        .filter(F.col("rn") == 1)
-        .filter(F.col("row_type") != "delete")
-    )
-    return last.select(
-        jg("after", "o_orderkey").cast("bigint").alias("o_orderkey"),
-        jg("after", "o_custkey").cast("bigint").alias("o_custkey"),
-        jg("after", "o_orderstatus").alias("o_orderstatus"),
-        jg("after", "o_totalprice").cast("double").alias("o_totalprice"),
-        jg("after", "o_orderdate_us").cast("bigint").alias("o_orderdate_us"),
-        jg("after", "o_orderpriority").alias("o_orderpriority"),
-        jg("after", "o_ukey").alias("o_ukey"),
-        jg("after", "o_flags").cast("bigint").alias("o_flags"),
-        jg("after", "o_geo").alias("o_geo"),
+    return _binlog_orders_state(
+        read_binlog_changes(spark, endpoints, tables, timeout=30), F.col("file"), F.col("seq")
     )
 
 
@@ -3984,35 +3966,9 @@ def q_binlog_gtid_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         eps.append((host, port, fname,
                     f"{uuid}:{mid + 1}-{hi}" if hi > mid else ""))
         eps.append((host, port, fname, f"{uuid}:{lo}-{mid}"))
-    dml = read_binlog_changes(
-        spark, eps, tables, timeout=30, gtid_mode=True
-    ).filter(F.col("row_type").isin("insert", "update", "delete"))
-    jg = lambda col, field: F.get_json_object(F.col(col), f"$.{field}")  # noqa: E731
-    k = F.coalesce(jg("after", "o_orderkey"), jg("before", "o_orderkey")).cast("bigint")
+    changes = read_binlog_changes(spark, eps, tables, timeout=30, gtid_mode=True)
     gno = F.split(F.col("gtid"), ":").getItem(1).cast("long")
-    last = (
-        dml.withColumn("k", k)
-        .withColumn("gno", gno)
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                W.partitionBy("k").orderBy(F.col("gno").desc(), F.col("seq").desc())
-            ),
-        )
-        .filter(F.col("rn") == 1)
-        .filter(F.col("row_type") != "delete")
-    )
-    return last.select(
-        jg("after", "o_orderkey").cast("bigint").alias("o_orderkey"),
-        jg("after", "o_custkey").cast("bigint").alias("o_custkey"),
-        jg("after", "o_orderstatus").alias("o_orderstatus"),
-        jg("after", "o_totalprice").cast("double").alias("o_totalprice"),
-        jg("after", "o_orderdate_us").cast("bigint").alias("o_orderdate_us"),
-        jg("after", "o_orderpriority").alias("o_orderpriority"),
-        jg("after", "o_ukey").alias("o_ukey"),
-        jg("after", "o_flags").cast("bigint").alias("o_flags"),
-        jg("after", "o_geo").alias("o_geo"),
-    )
+    return _binlog_orders_state(changes, gno, F.col("seq"))
 
 
 def _ensure_oplog_fixture(spark: SparkSession, sf_dir: str) -> str:

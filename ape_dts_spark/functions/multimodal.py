@@ -323,6 +323,7 @@ def sample_gif_frames(
     media_codec.decode_image: ``"raise"`` fails the job, ``"skip"`` drops
     the bad payload, ``"null"`` keeps one dead-letter row per bad payload
     (null frame fields, message in an extra ``error`` column)."""
+    _check_every_n(every_n)
 
     def _frames(payload: bytes) -> list[tuple]:
         frames = mc.parse_gif(payload, return_frames=True)["frames"]
@@ -337,6 +338,14 @@ def sample_gif_frames(
         "id long, frame_idx int, n_frames int, height int, width int, idx_sum long",
         errors,
     )
+
+
+def _check_every_n(every_n: int) -> None:
+    """Raise unless ``every_n`` is a frame stride: below 1, ``range`` yields
+    no frame (negative) or raises inside every payload's decode (0), where
+    ``errors=null/skip`` would turn an argument error into dead letters."""
+    if every_n < 1:
+        raise ValueError(f"every_n must be >= 1, got {every_n}")
 
 
 def _fields(schema: str) -> list[str]:
@@ -370,6 +379,7 @@ def sample_video_frames(
     extension surface. ``errors`` (r13): raise/skip/null corrupt-payload
     policy, same contract as decode_image (null = one dead-letter row per
     bad payload with the message in an ``error`` column)."""
+    _check_every_n(every_n)
 
     def _frames(payload: bytes) -> list[tuple]:
         rec = mc.parse_avi(payload, return_frames=True)
@@ -656,6 +666,7 @@ def video_fingerprints(
     JFIF decoder) and phash64 it — all in ONE Arrow pass, no shuffle before
     decode. Returns (id, t [frame index], phash). ``errors``: the standard
     raise/null/skip per-payload quarantine."""
+    _check_every_n(every_n)
 
     def _fp(payload: bytes) -> list[tuple]:
         frames = mc.parse_avi(payload, return_frames=True)["frames"]

@@ -10,8 +10,10 @@ from __future__ import annotations
 
 import glob
 import os
+import re
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DataType
 
 # Public JDBC driver jars that may be present in the environment; when found,
 # they are put on the session classpath so the live JDBC snapshot/sink
@@ -109,9 +111,133 @@ def get_spark(app_name: str = "ape_dts_spark", shuffle_partitions: int | None = 
     return spark
 
 
+# ---------------------------------------------------------------------------
+# transport runners: every source module supplies only its per-file decode or
+# its per-endpoint pull; the Spark plumbing around it lives here, once
+# ---------------------------------------------------------------------------
+
+_BINARY_FILE_SCHEMA = "path string, modificationTime timestamp, length long, content binary"
+
+
+def _scan_files(
+    spark: SparkSession,
+    path,
+    decode,
+    schema: str,
+    stream: bool = False,
+    max_files_per_trigger: int | None = None,
+    prune=None,
+) -> DataFrame:
+    """Whole-file scan of the at-rest change files under ``path``:
+    ``binaryFile`` (or its Structured-Streaming tail when ``stream``, with
+    ``max_files_per_trigger`` files per micro-batch) read one file per task,
+    then one Arrow-batched pass in which ``decode(path, content) -> rows``
+    turns each file's bytes into rows (dicts or tuples) and each Arrow batch
+    becomes one pandas frame with the columns of ``schema``.
+
+    ``prune(paths) -> kept paths`` (batch only) filters the file listing on
+    the driver from the names alone, before any content is read."""
+    import pandas as pd
+
+    cols = DataType.fromDDL(schema).names
+    if stream:
+        reader = spark.readStream.format("binaryFile").schema(_BINARY_FILE_SCHEMA)
+        if max_files_per_trigger:
+            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+        files = reader.load(path)
+    else:
+        files = spark.read.format("binaryFile").load(path)
+        if prune is not None:
+            listing = [r["path"] for r in files.select("path").collect()]
+            files = files.filter(files["path"].isin(list(prune(listing))))
+
+    def _decode(batches):
+        for pdf in batches:
+            rows = []
+            for p, content in zip(pdf["path"], pdf["content"]):
+                rows.extend(decode(p, bytes(content)))
+            yield pd.DataFrame(rows, columns=cols)
+
+    return files.select("path", "content").mapInPandas(_decode, schema=schema)
+
+
+def _pull_endpoints(
+    spark: SparkSession, endpoints: list, ddl: str, pull, schema: str
+) -> DataFrame:
+    """Bounded pull over live endpoints, one Arrow task each: the endpoint
+    tuples (columns ``ddl``) are laid out one per partition, and each task
+    calls ``pull(*endpoint) -> rows`` on the endpoint's Python values. The
+    pull opens and closes its own client; its rows (dicts or tuples) become
+    one pandas frame with the columns of ``schema``."""
+    import pandas as pd
+
+    cols = DataType.fromDDL(schema).names
+
+    def _pull(batches):
+        for pdf in batches:
+            rows = []
+            for ep in pdf.itertuples(index=False, name=None):
+                rows.extend(pull(*ep))
+            yield pd.DataFrame(rows, columns=cols)
+
+    return one_row_per_partition(spark, endpoints, ddl).mapInPandas(_pull, schema)
+
+
+_CHAIN_INDEX = re.compile(r"\.(\d+)(?:\.bson)?$")
+
+
+def _chain_seq(index: int, seq=0):
+    """Global sequence of event ``seq`` of the ``index``-th file of a change
+    chain: ``(index << 33) | seq`` (in-file seqs stay below 2**33), so one
+    ORDER BY seq replays the chain in order. ``seq`` may be a Column."""
+    return index * (1 << 33) + seq
+
+
+def _chain_decode(parse):
+    """Per-file decode for a numbered change chain (``binlog.000003``,
+    ``pgwal.000002``, ``oplog.000001.bson``): the numeric suffix is the
+    file's place in the chain (0 without one); ``parse(name, index,
+    content)`` decodes the file and each row's in-file ``seq`` is
+    globalized with ``_chain_seq``."""
+
+    def decode(path, content):
+        name = path.rsplit("/", 1)[-1]
+        m = _CHAIN_INDEX.search(name)
+        index = int(m.group(1)) if m else 0
+        rows = parse(name, index, content)
+        base = _chain_seq(index)
+        for r in rows:
+            r["seq"] += base
+        return rows
+
+    return decode
+
+
+def _write_chain(
+    items: list, per_file: int, out_dir: str, base_name: str, suffix: str, encode
+) -> list[str]:
+    """Write ``items`` as a numbered chain of files of ``per_file`` items
+    each (0 = one file): the i-th file is ``<base_name>.<i+1, 6 digits>
+    <suffix>`` in ``out_dir`` and holds ``encode(i, chunk, names)``
+    (``names`` is the whole chain, so a file can point at its successor).
+    Returns the paths."""
+    chunks = [items] if not per_file else [
+        items[i : i + per_file] for i in range(0, len(items), per_file)
+    ]
+    names = [f"{base_name}.{i + 1:06d}{suffix}" for i in range(len(chunks))]
+    paths = []
+    for i, chunk in enumerate(chunks):
+        p = os.path.join(out_dir, names[i])
+        with open(p, "wb") as f:
+            f.write(encode(i, chunk, names))
+        paths.append(p)
+    return paths
+
+
 def one_row_per_partition(spark: SparkSession, rows: list, schema: str):
     """Small dispatch relation with EXACTLY one row per partition — the
-    session-per-Arrow-task layout the live wire readers rely on.
+    session-per-Arrow-task layout ``_pull_endpoints`` runs the live wire
+    readers on.
 
     ``createDataFrame(rows).repartition(n)`` round-robins each input split
     from a RANDOM start position, so two endpoints regularly land in one

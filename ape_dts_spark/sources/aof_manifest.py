@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ape_dts_spark.session import _chain_seq
+
 # base entries sort before every incr entry but must sit ABOVE
 # compact_entries' tombstone floor of -1 (a seq <= -1 reads as pre-history
 # and is swallowed by the default tombstone); expire rows postdate the base
@@ -203,7 +205,7 @@ def read_aof_manifest(spark: SparkSession, aof_dir: str, expire_base_ms: int | N
         if n_spread > 1:
             cmds = cmds.repartition(n_spread)
         entries = commands_to_entries(cmds).withColumn(
-            "seq", F.lit(INCR_SEQ_OFFSET).cast("long") + (F.lit(order).cast("long") * F.lit(1 << 33)) + F.col("seq")
+            "seq", F.lit(INCR_SEQ_OFFSET).cast("long") + _chain_seq(order, F.col("seq"))
         )
         parts.append(entries)
     out = parts[0]

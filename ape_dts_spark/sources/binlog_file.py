@@ -12,10 +12,12 @@ the fixture generator for the gate and tests.
 
 Scale shape: a binlog file is one server's serialized transaction log — an
 inherently sequential byte stream — so the unit of parallelism is the FILE
-(rotation produces many): scanned with ``binaryFile`` and decoded inside an
-Arrow-batched ``mapInPandas`` (each task parses whole files; no driver-side
-byte handling). Total order across files = (file index, event position),
-exactly ``model/position.MysqlCdcPosition.sort_key``.
+(rotation produces many): read by the shared file scan runner
+(``session._scan_files``: ``binaryFile``, one Arrow-batched ``mapInPandas``
+pass, or its streaming tail) with this module's whole-file decode (each task
+parses whole files; no driver-side byte handling). Total order across
+files = (file index, event position), exactly
+``model/position.MysqlCdcPosition.sort_key``.
 
 Reference parity: the reference consumes this same event stream over a live
 socket (dt-connector/src/extractor/mysql/mysql_cdc_extractor.rs:195-394 —
@@ -32,6 +34,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ape_dts_spark.session import _chain_decode, _scan_files, _write_chain
 from ape_dts_spark.sources.compression import compress, decompress
 
 BINLOG_MAGIC = b"\xfebin"
@@ -1382,50 +1385,22 @@ def read_binlog_files(
     ``start_file`` in rotation order are skipped entirely (partition pruning
     on the file index), and within ``start_file`` only events past
     ``start_pos`` are emitted."""
-    import re
-
-    import pandas as pd
-
     from ape_dts_spark.model.position import MysqlCdcPosition
 
     start_idx = MysqlCdcPosition(start_file, start_pos).file_index() if start_file else -1
-
-    files = spark.read.format("binaryFile").load(path).select("path", "content")
-    return files.mapInPandas(
-        _make_file_parser(tables, start_idx, start_pos), schema=CHANGE_SCHEMA
-    )
+    return _scan_files(spark, path, _file_decoder(tables, start_idx, start_pos), CHANGE_SCHEMA)
 
 
-def _make_file_parser(tables: dict, start_idx: int, start_pos: int):
-    """The shared whole-file decode kernel for the batch and streaming scans."""
-    import re
+def _file_decoder(tables: dict, start_idx: int, start_pos: int):
+    """The shared whole-file decode of the batch and streaming scans."""
 
-    import pandas as pd
+    def parse(name, idx, content):
+        if idx < start_idx:
+            return []
+        pos0 = start_pos if idx == start_idx else 0
+        return parse_binlog_bytes(content, tables, file_name=name, start_pos=pos0)
 
-    def _parse(batches):
-        for pdf in batches:
-            rows = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                name = p.rsplit("/", 1)[-1]
-                m = re.search(r"\.(\d+)$", name)
-                fidx = int(m.group(1)) if m else 0
-                if fidx < start_idx:
-                    continue
-                pos0 = start_pos if fidx == start_idx else 0
-                for r in parse_binlog_bytes(
-                    bytes(content), tables, file_name=name, start_pos=pos0
-                ):
-                    r["seq"] = (fidx << 33) | r["seq"]
-                    rows.append(r)
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "file", "pos", "seq", "ts", "gtid", "xid",
-                    "schema", "tb", "row_type", "before", "after",
-                ],
-            )
-
-    return _parse
+    return _chain_decode(parse)
 
 
 def stream_binlog_files(
@@ -1442,13 +1417,10 @@ def stream_binlog_files(
     StartPosition. This is how the reference's always-on binlog client maps
     onto Spark's execution model: file arrival = event-stream progress,
     micro-batch = transaction batch (mysql_cdc_extractor.rs:195-216)."""
-    reader = spark.readStream.format("binaryFile").schema(
-        "path string, modificationTime timestamp, length long, content binary"
+    return _scan_files(
+        spark, path, _file_decoder(tables, -1, 0), CHANGE_SCHEMA,
+        stream=True, max_files_per_trigger=max_files_per_trigger,
     )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    files = reader.load(path).select("path", "content")
-    return files.mapInPandas(_make_file_parser(tables, -1, 0), schema=CHANGE_SCHEMA)
 
 
 def write_binlog_files(
@@ -1467,23 +1439,16 @@ def write_binlog_files(
     — lets a chain mix plain event files with TRANSACTION_PAYLOAD files
     (True = uncompressed wrap, 'zstd' = compressed), the shape of a server
     whose binlog_transaction_compression setting changed mid-chain."""
-    import os
-
-    chunks = [txns] if not per_file else [
-        txns[i : i + per_file] for i in range(0, len(txns), per_file)
-    ]
-    names = [f"{base_name}.{i + 1:06d}" for i in range(len(chunks))]
-    paths = []
     gno = 1
-    for i, chunk in enumerate(chunks):
+
+    def encode(i, chunk, names):
+        nonlocal gno
         nxt = names[i + 1] if i + 1 < len(names) else None
         data = encode_binlog_file(
             chunk, tables, names[i], next_file=nxt, start_gno=gno, base_ts=1_700_000_000 + gno,
             payload_wrap=(payload_wrap_files or {}).get(i, False),
         )
         gno += len(chunk)
-        p = os.path.join(out_dir, names[i])
-        with open(p, "wb") as f:
-            f.write(data)
-        paths.append(p)
-    return paths
+        return data
+
+    return _write_chain(txns, per_file, out_dir, base_name, "", encode)

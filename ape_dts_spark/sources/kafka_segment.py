@@ -32,9 +32,10 @@ Wire format parity (per the public spec):
 - segment file name = 20-digit base offset + ".log"; directory name =
   "<topic>-<partition>" (the broker's on-disk layout).
 
-Scale shape: partitions × segments are the parallelism grid — ``binaryFile``
-over the topic directory, one whole segment per task, batch-level CRC
-verification inside an Arrow-batched ``mapInPandas``. Resume-from-offset
+Scale shape: partitions × segments are the parallelism grid — the shared
+file scan runner (``session._scan_files``: ``binaryFile`` over the topic
+directory, one Arrow-batched ``mapInPandas`` pass) decodes one whole segment
+per task, with batch-level CRC verification. Resume-from-offset
 does segment-level pruning on the driver from file NAMES only (the 20-digit
 base offset is the index — no data read), then batch/record-level filtering
 inside the task: exactly a consumer's seek(offset).
@@ -42,11 +43,13 @@ inside the task: exactly a consumer's seek(offset).
 
 from __future__ import annotations
 
+import re
 import struct
 from zlib import error as _zlib_error
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ape_dts_spark.session import _scan_files
 from ape_dts_spark.sources.compression import compress, decompress
 
 MESSAGE_SCHEMA = (
@@ -329,27 +332,16 @@ def read_kafka_segments(
     two-level: segments whose SUCCESSOR's base offset is <= the checkpoint
     are dropped on the driver from file names alone (the broker's segment
     index), and surviving tasks batch-filter on the offset."""
-    import os
-    import re
-
-    import pandas as pd
-
     start_offsets = start_offsets or {}
 
-    files = spark.read.format("binaryFile").load(path + "/*/*.log").select("path", "content")
-    if start_offsets:
-        # name-only segment pruning: list files per partition (metadata op),
+    def prune(listing):
         # keep a segment iff its successor's base > checkpoint
-        listing = [r["path"] for r in files.select("path").collect()]
         by_part: dict = {}
         for p in listing:
-            d, f = p.rsplit("/", 2)[-2:]
-            m = re.match(r"^(.*)-(\d+)$", d)
-            if not m:
+            tp = _topic_partition(p)
+            if tp is None:
                 continue
-            by_part.setdefault((m.group(1), int(m.group(2))), []).append(
-                (int(f.split(".")[0]), p)
-            )
+            by_part.setdefault(tp, []).append((int(p.rsplit("/", 1)[-1].split(".")[0]), p))
         keep = set()
         for tp, segs in by_part.items():
             segs.sort()
@@ -359,34 +351,32 @@ def read_kafka_segments(
                 if nxt is not None and ck >= nxt - 1:
                     continue  # fully consumed: every offset here is <= ck
                 keep.add(p)
-        files = files.filter(files["path"].isin(list(keep)))
+        return keep
 
-    return files.mapInPandas(_make_segment_parser(start_offsets), schema=MESSAGE_SCHEMA)
+    return _scan_files(
+        spark, path + "/*/*.log", _segment_decoder(start_offsets), MESSAGE_SCHEMA,
+        prune=prune if start_offsets else None,
+    )
 
 
-def _make_segment_parser(start_offsets: dict):
-    """The shared whole-segment decode kernel for batch and streaming scans."""
-    import re
+def _topic_partition(path: str) -> tuple | None:
+    """(topic, partition) of a segment from its ``<topic>-<partition>``
+    directory name; None when the directory does not have that shape."""
+    m = re.match(r"^(.*)-(\d+)$", path.rsplit("/", 2)[-2])
+    return (m.group(1), int(m.group(2))) if m else None
 
-    import pandas as pd
 
-    def _parse(batches):
-        for pdf in batches:
-            rows = []
-            for pth, content in zip(pdf["path"], pdf["content"]):
-                d, f = pth.rsplit("/", 2)[-2:]
-                m = re.match(r"^(.*)-(\d+)$", d)
-                topic, part = (m.group(1), int(m.group(2))) if m else (d, 0)
-                ck = start_offsets.get((topic, part), -1)
-                rows.extend(parse_segment_bytes(
-                    bytes(content), topic=topic, partition=part, start_offset=ck
-                ))
-            yield pd.DataFrame(
-                rows,
-                columns=["topic", "partition", "offset", "ts", "key", "value", "headers"],
-            )
+def _segment_decoder(start_offsets: dict):
+    """The shared whole-segment decode of the batch and streaming scans."""
 
-    return _parse
+    def decode(path, content):
+        topic, part = _topic_partition(path) or (path.rsplit("/", 2)[-2], 0)
+        return parse_segment_bytes(
+            content, topic=topic, partition=part,
+            start_offset=start_offsets.get((topic, part), -1),
+        )
+
+    return decode
 
 
 def stream_kafka_segments(
@@ -400,10 +390,7 @@ def stream_kafka_segments(
     the batch scan. The stream checkpoint replaces the consumer-group
     offset commit (Position::Kafka, kafka_extractor.rs:43-52) at segment
     granularity."""
-    reader = spark.readStream.format("binaryFile").schema(
-        "path string, modificationTime timestamp, length long, content binary"
+    return _scan_files(
+        spark, path + "/*/*.log", _segment_decoder({}), MESSAGE_SCHEMA,
+        stream=True, max_files_per_trigger=max_files_per_trigger,
     )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    files = reader.load(path + "/*/*.log").select("path", "content")
-    return files.mapInPandas(_make_segment_parser({}), schema=MESSAGE_SCHEMA)

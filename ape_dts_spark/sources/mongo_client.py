@@ -34,8 +34,9 @@ Protocol" + the SCRAM RFCs 5802/7677):
 
 Scale shape: one cursor serves one collection's (or the oplog's) serialized
 document stream — inherently sequential — so the unit of parallelism is the
-COLLECTION (snapshot) or the replica set (CDC): the ``read_*`` wrappers map
-an endpoint relation through an Arrow kernel, one client session per task,
+COLLECTION (snapshot) or the replica set (CDC): the ``read_*`` wrappers run
+one client session per endpoint through the shared endpoint pull runner
+(``session._pull_endpoints``, one Arrow task each),
 mirroring the reference's table-worker-per-collection dispatch
 (mongo_snapshot_extractor.rs:59-69).
 
@@ -53,10 +54,12 @@ import json
 import secrets
 import socket
 import struct
+from contextlib import contextmanager
 from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ape_dts_spark.session import _pull_endpoints
 from ape_dts_spark.sources import bson_codec as bc
 from ape_dts_spark.sources.kafka_segment import crc32c
 from ape_dts_spark.sources.oplog_file import CHANGE_SCHEMA, parse_oplog_bytes
@@ -679,6 +682,19 @@ def _jrender(v) -> str:
     return json.dumps(bc.to_jsonable(v), sort_keys=True)
 
 
+@contextmanager
+def _session(host, port, username, password, timeout):
+    """A connected client for one endpoint's pull, closed on exit."""
+    client = MongoWireClient(
+        host, port, username=username, password=password, timeout=timeout
+    )
+    try:
+        client.connect()
+        yield client
+    finally:
+        client.close()
+
+
 def read_mongo_collections(
     spark: SparkSession,
     sources: list[tuple[str, int, str, str]],
@@ -697,48 +713,24 @@ def read_mongo_collections(
     chunk position basis). ``resume_keys``: {(db, tb): key} keyset
     checkpoints, applied as the $expr filter — the collection-per-task
     mirror of the reference's table-worker dispatch."""
-    import pandas as pd
-
-    from ape_dts_spark.session import one_row_per_partition
-
-    src_df = one_row_per_partition(
-        spark, sources, "host string, port int, db string, coll string"
-    )
     rk = dict(resume_keys or {})
 
-    def _pull(batches):
-        for pdf in batches:
-            rows = []
-            for host, port, db, coll in zip(
-                pdf["host"], pdf["port"], pdf["db"], pdf["coll"]
-            ):
-                client = MongoWireClient(
-                    str(host), int(port), username=username, password=password,
-                    timeout=timeout,
-                )
-                try:
-                    client.connect()
-                    for seq, doc in enumerate(
-                        client.snapshot_collection(
-                            str(db), str(coll), batch_size=batch_size,
-                            resume_key=rk.get((str(db), str(coll))),
-                            sample_rate=sample_rate,
-                        )
-                    ):
-                        if "_id" not in doc:
-                            continue  # reference skips keyless docs (rs:178)
-                        rows.append({
-                            "schema": str(db), "tb": str(coll),
-                            "id": _jrender(doc["_id"]), "doc": _jrender(doc),
-                            "seq": seq,
-                        })
-                finally:
-                    client.close()
-            yield pd.DataFrame(
-                rows, columns=["schema", "tb", "id", "doc", "seq"]
-            )
+    def pull(host, port, db, coll):
+        with _session(host, port, username, password, timeout) as client:
+            # the reference skips keyless docs (rs:178)
+            return [
+                (db, coll, _jrender(doc["_id"]), _jrender(doc), seq)
+                for seq, doc in enumerate(client.snapshot_collection(
+                    db, coll, batch_size=batch_size,
+                    resume_key=rk.get((db, coll)), sample_rate=sample_rate,
+                ))
+                if "_id" in doc
+            ]
 
-    return src_df.mapInPandas(_pull, SNAPSHOT_SCHEMA)
+    return _pull_endpoints(
+        spark, sources, "host string, port int, db string, coll string", pull,
+        SNAPSHOT_SCHEMA,
+    )
 
 
 def read_change_stream_changes(
@@ -756,34 +748,14 @@ def read_change_stream_changes(
     CHANGE_SCHEMA rows — the SAME shape as the oplog mode, so
     fold_oplog_state and the downstream compaction take either CDC source
     (MongoCdcSource::OpLog / ::ChangeStream) interchangeably."""
-    import pandas as pd
 
-    from ape_dts_spark.session import one_row_per_partition
+    def pull(host, port):
+        with _session(host, port, username, password, timeout) as client:
+            return client.change_stream_events(
+                start_time=start_time, start_inc=start_inc, max_events=max_events,
+            )[0]
 
-    ep_df = one_row_per_partition(spark, endpoints, "host string, port int")
-    cols = ["file", "seq", "op_time", "op_inc", "schema", "tb", "row_type",
-            "id", "doc", "diff"]
-
-    def _pull(batches):
-        for pdf in batches:
-            rows = []
-            for host, port in zip(pdf["host"], pdf["port"]):
-                client = MongoWireClient(
-                    str(host), int(port), username=username, password=password,
-                    timeout=timeout,
-                )
-                try:
-                    client.connect()
-                    got, _token = client.change_stream_events(
-                        start_time=start_time, start_inc=start_inc,
-                        max_events=max_events,
-                    )
-                    rows.extend(got)
-                finally:
-                    client.close()
-            yield pd.DataFrame(rows, columns=cols)
-
-    return ep_df.mapInPandas(_pull, CHANGE_SCHEMA)
+    return _pull_endpoints(spark, endpoints, "host string, port int", pull, CHANGE_SCHEMA)
 
 
 def read_live_oplog_changes(
@@ -800,30 +772,11 @@ def read_live_oplog_changes(
     runs the tailable cursor and emits the at-rest CHANGE_SCHEMA rows
     (file = endpoint tag), so fold_oplog_state and the downstream compaction
     work unchanged on live capture."""
-    import pandas as pd
 
-    from ape_dts_spark.session import one_row_per_partition
+    def pull(host, port):
+        with _session(host, port, username, password, timeout) as client:
+            return client.oplog_changes(
+                start_time=start_time, start_inc=start_inc, max_entries=max_entries,
+            )
 
-    ep_df = one_row_per_partition(spark, endpoints, "host string, port int")
-    cols = ["file", "seq", "op_time", "op_inc", "schema", "tb", "row_type",
-            "id", "doc", "diff"]
-
-    def _pull(batches):
-        for pdf in batches:
-            rows = []
-            for host, port in zip(pdf["host"], pdf["port"]):
-                client = MongoWireClient(
-                    str(host), int(port), username=username, password=password,
-                    timeout=timeout,
-                )
-                try:
-                    client.connect()
-                    rows.extend(client.oplog_changes(
-                        start_time=start_time, start_inc=start_inc,
-                        max_entries=max_entries,
-                    ))
-                finally:
-                    client.close()
-            yield pd.DataFrame(rows, columns=cols)
-
-    return ep_df.mapInPandas(_pull, CHANGE_SCHEMA)
+    return _pull_endpoints(spark, endpoints, "host string, port int", pull, CHANGE_SCHEMA)

@@ -26,8 +26,9 @@ layer adds transport, not a second decoder.
 
 Scale shape: one dump connection serves one server's serialized binlog —
 inherently sequential — so the unit of parallelism is the SERVER:
-``read_binlog_changes`` maps an endpoint relation through an Arrow kernel,
-one replica session per task.
+``read_binlog_changes`` runs one replica session per endpoint through the
+shared endpoint pull runner (``session._pull_endpoints``, one Arrow task per
+endpoint) and emits the at-rest scan's change schema.
 
 Tested end-to-end in tests/test_mysql_binlog_client.py against a loopback
 fake server speaking these exact bytes (handshake/auth vectors, register +
@@ -42,9 +43,9 @@ import struct
 from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ape_dts_spark.sources.binlog_file import BINLOG_MAGIC, parse_binlog_bytes
+from ape_dts_spark.session import _pull_endpoints
+from ape_dts_spark.sources.binlog_file import BINLOG_MAGIC, CHANGE_SCHEMA, parse_binlog_bytes
 
 CLIENT_LONG_PASSWORD = 0x1
 CLIENT_PROTOCOL_41 = 0x200
@@ -387,72 +388,39 @@ def read_binlog_changes(
     gtid_mode: bool = False,
 ) -> DataFrame:
     """Distributed bounded pull over live servers: one Arrow task per
-    (host, port, binlog_file) runs the replica session and emits canonical
-    change rows — the server-per-task layout of a multi-source capture.
-    Maps/payloads are JSON-flattened to the wire-stable string columns the
-    at-rest binlog scan emits.
+    (host, port, binlog_file) runs the replica session and emits the change
+    rows ``stream_changes`` decodes, in the at-rest scan's
+    ``binlog_file.CHANGE_SCHEMA`` (map images, ``xid``) — so live rows go
+    through ``fluid_to_typed`` like the at-rest ones; ``seq`` is the
+    event's ordinal within its dump session.
 
     ``gtid_mode``: endpoints are (host, port, binlog_file, gtid_set) and
     the dump is COM_BINLOG_DUMP_GTID — the server skips transactions whose
     GTIDs the set already covers (the reference's gtid_enabled resume)."""
-    import json
 
-    import pandas as pd
-
-    from ape_dts_spark.session import one_row_per_partition
+    def pull(host, port, fname, gset):
+        client = MysqlBinlogClient(
+            host, port, user=user, password=password, server_id=server_id,
+            timeout=timeout,
+        )
+        try:
+            client.connect()
+            client.query_ok("SET @master_binlog_checksum = @@global.binlog_checksum")
+            client.register_slave()
+            if gset is None:
+                client.binlog_dump(fname)
+            else:
+                client.binlog_dump_gtid(gset, fname)
+            return client.stream_changes(tables, file_name=fname, max_events=max_events)
+        finally:
+            client.close()
 
     rows = (
         [tuple(e) for e in endpoints]
         if gtid_mode
         else [tuple(e[:3]) + (None,) for e in endpoints]
     )
-    ep_df = one_row_per_partition(
-        spark, rows, "host string, port int, binlog_file string, gtid_set string"
-    )
-    cols = ["file", "pos", "seq", "ts", "gtid", "schema", "tb", "row_type",
-            "before", "after"]
-
-    def _pull(batches):
-        for pdf in batches:
-            rows = []
-            for host, port, fname, gset in zip(
-                pdf["host"], pdf["port"], pdf["binlog_file"], pdf["gtid_set"]
-            ):
-                client = MysqlBinlogClient(
-                    str(host), int(port), user=user, password=password,
-                    server_id=server_id, timeout=timeout,
-                )
-                try:
-                    client.connect()
-                    client.query_ok(
-                        "SET @master_binlog_checksum = @@global.binlog_checksum"
-                    )
-                    client.register_slave()
-                    if gset is not None and not (
-                        isinstance(gset, float) and gset != gset
-                    ):
-                        client.binlog_dump_gtid(str(gset), str(fname))
-                    else:
-                        client.binlog_dump(str(fname))
-                    for r in client.stream_changes(
-                        tables, file_name=str(fname), max_events=max_events
-                    ):
-                        rows.append(
-                            {
-                                **{k: r.get(k) for k in cols},
-                                "before": None if r.get("before") is None
-                                else json.dumps(r["before"], sort_keys=True, default=str),
-                                "after": None if r.get("after") is None
-                                else json.dumps(r["after"], sort_keys=True, default=str),
-                            }
-                        )
-                finally:
-                    client.close()
-            yield pd.DataFrame(rows, columns=cols)
-
-    return ep_df.mapInPandas(
-        _pull,
-        "file string, pos long, seq long, ts long, gtid string, "
-        "schema string, tb string, row_type string, before string, "
-        "after string",
+    return _pull_endpoints(
+        spark, rows, "host string, port int, binlog_file string, gtid_set string",
+        pull, CHANGE_SCHEMA,
     )

@@ -26,8 +26,9 @@ Reference parity (mongo_cdc_extractor.rs):
   (collection names may themselves contain dots).
 
 Scale shape: the oplog is one replica set's serialized op log — inherently
-sequential — so the unit of parallelism is the dump FILE: scanned with
-``binaryFile`` and decoded inside an Arrow-batched ``mapInPandas``. Total
+sequential — so the unit of parallelism is the dump FILE: read by the shared
+file scan runner (``session._scan_files``: ``binaryFile``, one Arrow-batched
+``mapInPandas`` pass, or its streaming tail) with this module's decode. Total
 order = (file index, ts.time, ts.inc, in-file seq). State replay
 (``fold_oplog_state``) groups by (db, tb, _id) — per-document history is
 small and keyed, so the fold is one shuffle keyed on the id, no driver
@@ -41,6 +42,7 @@ import struct
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ape_dts_spark.session import _chain_decode, _scan_files, _write_chain
 from ape_dts_spark.sources import bson_codec as bc
 
 CHANGE_SCHEMA = (
@@ -107,20 +109,10 @@ def write_oplog_files(
 ) -> list[str]:
     """Write entries (builder dicts above, already carrying Timestamps) as a
     chain of concatenated-BSON dump files."""
-    import os
-
-    chunks = [entries] if not per_file else [
-        entries[i : i + per_file] for i in range(0, len(entries), per_file)
-    ]
-    names = [f"{base_name}.{i + 1:06d}.bson" for i in range(len(chunks))]
-    paths = []
-    for name, chunk in zip(names, chunks):
-        p = os.path.join(out_dir, name)
-        with open(p, "wb") as f:
-            for e in chunk:
-                f.write(bc.encode_document(e))
-        paths.append(p)
-    return paths
+    return _write_chain(
+        entries, per_file, out_dir, base_name, ".bson",
+        lambda _i, chunk, _names: b"".join(bc.encode_document(e) for e in chunk),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -281,42 +273,16 @@ def read_oplog_files(
     """Distributed dump scan: ``binaryFile`` over oplog dump files, one whole
     file per task; ``seq`` globalized as (file index << 33) | in-file seq so
     ORDER BY (op_time, op_inc, seq) is a total replay order."""
-    import re
+    return _scan_files(spark, path, _file_decoder(start_time, start_inc), CHANGE_SCHEMA)
 
-    import pandas as pd
 
-    files = spark.read.format("binaryFile").load(path).select("path", "content")
-    return files.mapInPandas(
-        _make_file_parser(start_time, start_inc), schema=CHANGE_SCHEMA
+def _file_decoder(start_time: int, start_inc: int):
+    """The shared whole-file decode of the batch and streaming scans."""
+    return _chain_decode(
+        lambda name, _idx, content: parse_oplog_bytes(
+            content, file_name=name, start_time=start_time, start_inc=start_inc
+        )
     )
-
-
-def _make_file_parser(start_time: int, start_inc: int):
-    """The shared whole-file decode kernel for the batch and streaming scans."""
-    import re
-
-    import pandas as pd
-
-    def _parse(batches):
-        for pdf in batches:
-            rows = []
-            for pth, content in zip(pdf["path"], pdf["content"]):
-                name = pth.rsplit("/", 1)[-1]
-                m = re.search(r"\.(\d+)\.bson$", name)
-                fidx = int(m.group(1)) if m else 0
-                for r in parse_oplog_bytes(
-                    bytes(content), file_name=name,
-                    start_time=start_time, start_inc=start_inc,
-                ):
-                    r["seq"] = (fidx << 33) | r["seq"]
-                    rows.append(r)
-            yield pd.DataFrame(
-                rows,
-                columns=["file", "seq", "op_time", "op_inc", "schema", "tb",
-                         "row_type", "id", "doc", "diff"],
-            )
-
-    return _parse
 
 
 def stream_oplog_files(
@@ -329,13 +295,10 @@ def stream_oplog_files(
     batch scan — the at-rest analogue of the reference's TailableAwait
     cursor (mongo_cdc_extractor.rs:350-353), with the stream checkpoint as
     the resume token."""
-    reader = spark.readStream.format("binaryFile").schema(
-        "path string, modificationTime timestamp, length long, content binary"
+    return _scan_files(
+        spark, path, _file_decoder(0, 0), CHANGE_SCHEMA,
+        stream=True, max_files_per_trigger=max_files_per_trigger,
     )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    files = reader.load(path).select("path", "content")
-    return files.mapInPandas(_make_file_parser(0, 0), schema=CHANGE_SCHEMA)
 
 
 def _apply_set_unset(state: dict, upd: dict) -> None:

@@ -23,8 +23,9 @@ layer adds transport, not a second decoder.
 
 Scale shape: one replication slot serves one database's serialized WAL —
 inherently sequential — so the unit of parallelism is the SLOT/database:
-``read_replication_changes`` maps a (host, port, slot) relation through an
-Arrow kernel, one walsender session per task.
+``read_replication_changes`` runs one walsender session per (host, port,
+slot) through the shared endpoint pull runner (``session._pull_endpoints``,
+one Arrow task per endpoint).
 
 Tested end-to-end in tests/test_pg_replication.py against a loopback fake
 walsender speaking these exact bytes (startup, auth variants, CopyBoth,
@@ -40,7 +41,8 @@ from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ape_dts_spark.sources.pgoutput_file import lsn_text, parse_pgoutput_bytes
+from ape_dts_spark.session import _pull_endpoints
+from ape_dts_spark.sources.pgoutput_file import CHANGE_SCHEMA, lsn_text, parse_pgoutput_bytes
 
 PG_PROTO_V3 = 196608  # 3.0
 PG_EPOCH_US = 946_684_800_000_000  # 2000-01-01 in unix µs
@@ -354,44 +356,24 @@ def read_replication_changes(
     (host, port, slot) runs the replication session and emits the canonical
     change rows (the pgoutput_file schema) — the slot-per-task layout of a
     multi-database capture."""
-    import pandas as pd
 
-    from ape_dts_spark.session import one_row_per_partition
+    def pull(host, port, slot):
+        client = PgReplicationClient(
+            host, port, user=user, database=database, password=password,
+            slot=slot, publication=publication, timeout=timeout,
+        )
+        try:
+            client.connect()
+            client.start_replication(start_lsn)
+            # per-chunk parses restart seq; the live stream's apply order IS
+            # arrival order — stamp it per slot
+            return [
+                {**r, "file": f"{host}:{port}/{slot}", "seq": seq}
+                for seq, r in enumerate(client.stream(max_changes=max_changes))
+            ]
+        finally:
+            client.close()
 
-    slot_df = one_row_per_partition(spark, slots, "host string, port int, slot string")
-    cols = ["file", "lsn", "seq", "ts", "xid", "schema", "tb", "row_type",
-            "before", "after"]
-
-    def _pull(batches):
-        for pdf in batches:
-            rows = []
-            for host, port, slot in zip(pdf["host"], pdf["port"], pdf["slot"]):
-                client = PgReplicationClient(
-                    str(host), int(port), user=user, database=database,
-                    password=password, slot=str(slot),
-                    publication=publication, timeout=timeout,
-                )
-                slot_seq = 0  # per-slot, so a second slot in this partition
-                # restarts at 0 (apply order is per-slot arrival order)
-                try:
-                    client.connect()
-                    client.start_replication(start_lsn)
-                    for r in client.stream(max_changes=max_changes):
-                        r = dict(r)
-                        r["file"] = f"{host}:{port}/{slot}"
-                        rec = {k: r.get(k) for k in cols}
-                        # per-chunk parses restart seq; the live stream's
-                        # apply order IS arrival order — stamp it per slot
-                        rec["seq"] = slot_seq
-                        slot_seq += 1
-                        rows.append(rec)
-                finally:
-                    client.close()
-            yield pd.DataFrame(rows, columns=cols)
-
-    return slot_df.mapInPandas(
-        _pull,
-        "file string, lsn string, seq long, ts long, xid long, schema string, "
-        "tb string, row_type string, before map<string,string>, "
-        "after map<string,string>",
+    return _pull_endpoints(
+        spark, slots, "host string, port int, slot string", pull, CHANGE_SCHEMA
     )

@@ -26,10 +26,12 @@ its meta_manager for exactly this reason).
 
 Scale shape: a replication stream is one server's serialized transaction
 log — inherently sequential — so the unit of parallelism is the SEGMENT
-(confirmed-flush checkpoints produce many): scanned with ``binaryFile`` and
-decoded inside an Arrow-batched ``mapInPandas`` (each task parses whole
-segments; no driver-side byte handling). Total order across segments =
-(segment index, commit LSN, seq) — ``model/position.PgCdcPosition.sort_key``.
+(confirmed-flush checkpoints produce many): read by the shared file scan
+runner (``session._scan_files``: ``binaryFile``, one Arrow-batched
+``mapInPandas`` pass, or its streaming tail) with this module's whole-segment
+decode (each task parses whole segments; no driver-side byte handling).
+Total order across segments = (segment index, commit LSN, seq) —
+``model/position.PgCdcPosition.sort_key``.
 
 Reference parity (dt-connector/src/extractor/pg/pg_cdc_extractor.rs):
 - event dispatch loop 169-224 (Relation/Begin/Commit/Insert/Update/Delete;
@@ -50,6 +52,8 @@ import struct
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ape_dts_spark.session import _chain_decode, _scan_files, _write_chain
 
 # seconds between the Unix epoch and the PostgreSQL epoch (2000-01-01)
 SECS_FROM_1970_TO_2000 = 946_684_800
@@ -668,46 +672,19 @@ def read_pgoutput_files(
     self-describing, so later segments never depend on suppressed ones for
     Relation state beyond what they re-send; encode_segment re-sends Relation
     per segment)."""
-    import re
-
-    import pandas as pd
-
     from ape_dts_spark.model.position import PgCdcPosition
 
     start_v = PgCdcPosition(start_lsn).lsn_value() if start_lsn else 0
-
-    files = spark.read.format("binaryFile").load(path).select("path", "content")
-    return files.mapInPandas(_make_file_parser(start_v), schema=CHANGE_SCHEMA)
+    return _scan_files(spark, path, _file_decoder(start_v), CHANGE_SCHEMA)
 
 
-def _make_file_parser(start_v: int):
-    """The shared whole-segment decode kernel for the batch and streaming
-    scans."""
-    import re
-
-    import pandas as pd
-
-    def _parse(batches):
-        for pdf in batches:
-            rows = []
-            for pth, content in zip(pdf["path"], pdf["content"]):
-                name = pth.rsplit("/", 1)[-1]
-                m = re.search(r"\.(\d+)$", name)
-                fidx = int(m.group(1)) if m else 0
-                for r in parse_pgoutput_bytes(
-                    bytes(content), file_name=name, start_lsn=start_v
-                ):
-                    r["seq"] = (fidx << 33) | r["seq"]
-                    rows.append(r)
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "file", "lsn", "seq", "ts", "xid",
-                    "schema", "tb", "row_type", "before", "after",
-                ],
-            )
-
-    return _parse
+def _file_decoder(start_v: int):
+    """The shared whole-segment decode of the batch and streaming scans."""
+    return _chain_decode(
+        lambda name, _idx, content: parse_pgoutput_bytes(
+            content, file_name=name, start_lsn=start_v
+        )
+    )
 
 
 def stream_pgoutput_files(
@@ -721,13 +698,10 @@ def stream_pgoutput_files(
     CdcPipeline via foreachBatch; the stream checkpoint is the
     confirmed-flush cursor (keep_alive_ack parity,
     pg_cdc_extractor.rs:246-276)."""
-    reader = spark.readStream.format("binaryFile").schema(
-        "path string, modificationTime timestamp, length long, content binary"
+    return _scan_files(
+        spark, path, _file_decoder(0), CHANGE_SCHEMA,
+        stream=True, max_files_per_trigger=max_files_per_trigger,
     )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    files = reader.load(path).select("path", "content")
-    return files.mapInPandas(_make_file_parser(0), schema=CHANGE_SCHEMA)
 
 
 def write_pgoutput_files(
@@ -741,23 +715,16 @@ def write_pgoutput_files(
     """Write a segment chain: ``txns`` split into files of ``per_file``
     transactions (0 = single segment), LSNs and xids continuous across the
     chain (each segment re-sends Relation so every file is self-describing)."""
-    import os
-
-    chunks = [txns] if not per_file else [
-        txns[i : i + per_file] for i in range(0, len(txns), per_file)
-    ]
-    names = [f"{base_name}.{i + 1:06d}" for i in range(len(chunks))]
-    paths = []
     lsn = start_lsn
     xid = 1000
-    for i, chunk in enumerate(chunks):
+
+    def encode(_i, chunk, _names):
+        nonlocal lsn, xid
         data, lsn = encode_segment(
             chunk, tables, start_lsn=lsn, start_xid=xid,
             base_ts_us=760_000_000_000_000 + xid * 1_000_000,
         )
         xid += len(chunk)
-        p = os.path.join(out_dir, names[i])
-        with open(p, "wb") as f:
-            f.write(data)
-        paths.append(p)
-    return paths
+        return data
+
+    return _write_chain(txns, per_file, out_dir, base_name, "", encode)

@@ -21,13 +21,10 @@ expressions — one shuffle per aggregation level, map-side combined.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+from ape_dts_spark.session import _scan_files
 
 SLOTS = 16384  # Redis Cluster slot count (key_parser.rs:193-202)
 
@@ -165,30 +162,20 @@ def parse_resp_bytes(data: bytes) -> list[list[str]]:
     return cmds
 
 
-_RESP_CMD_SCHEMA = T.StructType(
-    [
-        T.StructField("file", T.StringType()),
-        T.StructField("seq", T.LongType()),
-        T.StructField("argv", T.ArrayType(T.StringType())),
-    ]
-)
+_RESP_CMD_SCHEMA = "file string, seq long, argv array<string>"
 
 
 def read_resp_files(spark: SparkSession, path: str) -> DataFrame:
     """RESP/AOF files -> (file, seq, argv) commands. Whole-file parse (RESP
     length prefixes straddle arbitrary splits), so files are the unit of
     parallelism; ``seq`` is the command's ordinal within its file."""
-    raw = spark.read.format("binaryFile").load(path).select("path", "content")
-
-    def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for path_, content in zip(pdf["path"], pdf["content"]):
-                for seq, argv in enumerate(parse_resp_bytes(bytes(content))):
-                    rows.append((path_, seq, argv))
-            yield pd.DataFrame(rows, columns=["file", "seq", "argv"])
-
-    return raw.mapInPandas(_parse, schema=_RESP_CMD_SCHEMA)
+    return _scan_files(
+        spark, path,
+        lambda file, content: [
+            (file, seq, argv) for seq, argv in enumerate(parse_resp_bytes(content))
+        ],
+        _RESP_CMD_SCHEMA,
+    )
 
 
 def commands_from_lines(df: DataFrame, line_col: str = "line", seq_col: str = "seq") -> DataFrame:

@@ -26,9 +26,10 @@ adds transport, not a second decoder.
 
 Scale shape: one PSYNC connection serves ONE node's keyspace (an inherently
 sequential byte stream, like an RDB file) — the unit of parallelism is the
-NODE: ``read_psync_snapshots`` maps a node relation through an Arrow kernel,
-one task per master, mirroring the cluster extractor's
-one-extractor-per-node layout (redis_cluster_psync_extractor.rs).
+NODE: ``read_psync_snapshots`` runs one session per master through the shared
+endpoint pull runner (``session._pull_endpoints``, one Arrow task each),
+mirroring the cluster extractor's one-extractor-per-node layout
+(redis_cluster_psync_extractor.rs).
 
 Tested end-to-end in tests/test_redis_psync.py against a loopback fake
 master that speaks these exact bytes (handshake, RDB framing in both forms,
@@ -42,6 +43,7 @@ from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ape_dts_spark.session import _pull_endpoints
 from ape_dts_spark.sources.aof_manifest import encode_resp
 from ape_dts_spark.sources.redis_rdb import ENTRY_SCHEMA
 
@@ -398,31 +400,17 @@ def read_psync_tails(
     argv array the command->entry model consumes, ``seq`` the per-node
     arrival ordinal (replication apply order), ``offset`` the replication
     offset AFTER the command (checkpoint currency)."""
-    import pandas as pd
 
-    from ape_dts_spark.session import one_row_per_partition
+    def pull(host, port):
+        tailed, _rdb, resumes = tail_with_resume(
+            host, port, password=password, timeout=timeout,
+            max_commands=max_commands, max_resumes=max_resumes,
+        )
+        return [(host, port, seq, db_id, argv, off, resumes)
+                for seq, db_id, argv, off in tailed]
 
-    node_df = one_row_per_partition(spark, nodes, "host string, port int")
-    cols = ["host", "port", "seq", "db_id", "cmd", "offset", "resumes"]
-
-    def _pull(batches):
-        for pdf in batches:
-            rows = []
-            for host, port in zip(pdf["host"], pdf["port"]):
-                tailed, _rdb, resumes = tail_with_resume(
-                    str(host), int(port), password=password, timeout=timeout,
-                    max_commands=max_commands, max_resumes=max_resumes,
-                )
-                for seq, db_id, argv, off in tailed:
-                    rows.append({
-                        "host": str(host), "port": int(port), "seq": seq,
-                        "db_id": db_id, "cmd": argv, "offset": off,
-                        "resumes": resumes,
-                    })
-            yield pd.DataFrame(rows, columns=cols)
-
-    return node_df.mapInPandas(
-        _pull,
+    return _pull_endpoints(
+        spark, nodes, "host string, port int", pull,
         "host string, port int, seq long, db_id long, cmd array<string>, "
         "offset long, resumes int",
     )
@@ -442,46 +430,28 @@ def read_psync_snapshots(
     consumes), and emits typed entry rows. The node relation is repartitioned
     so each connection lives in its own task — the cluster extractor's
     one-extractor-per-node layout at DataFrame altitude."""
-    import pandas as pd
-
     from ape_dts_spark.sources.redis_rdb import parse_rdb_bytes
 
-    from ape_dts_spark.session import one_row_per_partition
+    def pull(host, port):
+        client = PsyncClient(host, port, password=password, timeout=timeout)
+        try:
+            if not client.start_psync():
+                raise ValueError("resume requested on a snapshot pull")
+            rows = parse_rdb_bytes(client.receive_rdb())
+            for db_id, argv, _off in client.tail(max_commands=tail_commands):
+                rows.append(
+                    {
+                        "db_id": db_id,
+                        "key": argv[1] if len(argv) > 1 else "",
+                        "entry_type": "resp_command",
+                        "member": argv[0],
+                        "value": " ".join(argv),
+                        "ord": 0,
+                        "expire_ms": None,
+                    }
+                )
+            return rows
+        finally:
+            client.close()
 
-    node_df = one_row_per_partition(spark, nodes, "host string, port int")
-
-    def _pull(batches):
-        for pdf in batches:
-            rows: list[dict] = []
-            for host, port in zip(pdf["host"], pdf["port"]):
-                client = PsyncClient(str(host), int(port), password=password,
-                                     timeout=timeout)
-                try:
-                    if not client.start_psync():
-                        raise ValueError("resume requested on a snapshot pull")
-                    rdb = client.receive_rdb()
-                    for e in parse_rdb_bytes(rdb):
-                        rows.append(e)
-                    for db_id, argv, _off in client.tail(max_commands=tail_commands):
-                        rows.append(
-                            {
-                                "db_id": db_id,
-                                "key": argv[1] if len(argv) > 1 else "",
-                                "entry_type": "resp_command",
-                                "member": argv[0],
-                                "value": " ".join(argv),
-                                "ord": 0,
-                                "expire_ms": None,
-                            }
-                        )
-                finally:
-                    client.close()
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "db_id", "key", "entry_type", "member", "value", "ord",
-                    "expire_ms",
-                ],
-            )
-
-    return node_df.mapInPandas(_pull, ENTRY_SCHEMA)
+    return _pull_endpoints(spark, nodes, "host string, port int", pull, ENTRY_SCHEMA)

@@ -11,9 +11,10 @@ intsets.
 
 Scale shape: an RDB file is one node's serialized keyspace — an inherently
 sequential byte stream — so the unit of parallelism is the FILE: one dump
-per shard/node at scale, scanned with ``binaryFile`` and decoded inside an
-Arrow-batched ``mapInPandas`` (each task parses whole files; no driver-side
-byte handling).
+per shard/node at scale, read by the shared file scan runner
+(``session._scan_files``: ``binaryFile``, one Arrow-batched ``mapInPandas``
+pass) with this module's decode (each task parses whole files; no
+driver-side byte handling).
 
 Reference parity: dt-connector/src/extractor/redis/redis_psync_extractor.rs
 streams this same format over PSYNC; the object decoders mirror
@@ -27,6 +28,8 @@ import os
 import struct
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ape_dts_spark.session import _scan_files
 
 RDB_HEADER = b"REDIS0011"
 
@@ -1124,22 +1127,9 @@ def parse_dump_payload(key: str, payload: bytes, db_id: int = 0) -> list[dict]:
 def read_rdb_files(spark: SparkSession, path: str) -> DataFrame:
     """Distributed RDB scan: ``binaryFile`` over a directory of dumps, one
     Arrow task per file (the per-node dump layout at scale)."""
-    import pandas as pd
-
-    files = spark.read.format("binaryFile").load(path).select("content")
-
-    def _parse(batches):
-        for pdf in batches:
-            for blob in pdf["content"]:
-                rows = parse_rdb_bytes(bytes(blob))
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "db_id", "key", "entry_type", "member", "value", "ord", "expire_ms",
-                    ],
-                )
-
-    return files.mapInPandas(_parse, schema=ENTRY_SCHEMA)
+    return _scan_files(
+        spark, path, lambda _path, content: parse_rdb_bytes(content), ENTRY_SCHEMA
+    )
 
 
 def write_rdb_file(entries: list[dict], path: str, **kwargs) -> str:

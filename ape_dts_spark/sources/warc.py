@@ -13,7 +13,8 @@ distributed Arrow-batched PARSER, an oracle gate that restates the record
 fields, and hand-built byte vectors in tests. Scale shape: whole-file decode
 per payload in one mapInPandas pass (WARC.gz is not splittable mid-member —
 the standard move is many files, partition = file, exactly what
-``binaryFile`` + this kernel gives); no shuffle.
+``binaryFile`` + this kernel gives; the streaming tail reads through the
+shared file scan runner, ``session._scan_files``); no shuffle.
 
 Spec: https://iipc.github.io/warc-specifications/ (WARC/1.0, ISO 28500).
 """
@@ -21,11 +22,14 @@ Spec: https://iipc.github.io/warc-specifications/ (WARC/1.0, ISO 28500).
 from __future__ import annotations
 
 import gzip
+import re
 import zlib
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
+
+from ape_dts_spark.session import _scan_files
 
 CRLF = b"\r\n"
 
@@ -161,6 +165,37 @@ WARC_RECORD_SCHEMA = (
 )
 
 WARC_RECORD_RAW_SCHEMA = WARC_RECORD_SCHEMA.replace("body string", "body binary")
+_WARC_COLUMNS = ["id", "rec_idx", "warc_type", "record_id", "warc_date",
+                 "target_uri", "http_status", "http_content_type", "body"]
+
+
+def _warc_rows(fid, blob: bytes, raw_body: bool) -> list[dict]:
+    """The records of one WARC file as WARC_RECORD_SCHEMA rows: response
+    records additionally unwrap the HTTP envelope (status, Content-Type,
+    body); others carry their raw payload as the body with NULL http
+    fields."""
+    rows = []
+    for i, rec in enumerate(parse_warc(bytes(blob))):
+        h = rec["headers"]
+        row = {
+            "id": int(fid),
+            "rec_idx": i,
+            "warc_type": h.get("warc-type"),
+            "record_id": h.get("warc-record-id"),
+            "warc_date": h.get("warc-date"),
+            "target_uri": h.get("warc-target-uri"),
+            "http_status": None,
+            "http_content_type": None,
+            "body": None,
+        }
+        body = rec["payload"]
+        if h.get("warc-type") == "response":
+            status, hh, body = parse_http_response(body)
+            row["http_status"] = status
+            row["http_content_type"] = hh.get("content-type")
+        row["body"] = body if raw_body else body.decode("utf-8", errors="replace")
+        rows.append(row)
+    return rows
 
 
 def read_warc(
@@ -168,49 +203,20 @@ def read_warc(
     raw_body: bool = False,
 ) -> DataFrame:
     """Distributed WARC decode: one Arrow-batched pass exploding each file
-    payload into its records; response records additionally unwrap the HTTP
-    envelope (status, Content-Type, body). Non-response records carry their
-    raw payload as the body with NULL http fields. With ``raw_body`` the body
+    payload into its records (``_warc_rows``). With ``raw_body`` the body
     column stays BINARY — required when downstream transcoding picks the
     charset from the Content-Type header (functions/web.decode_charset);
     otherwise the body decodes as utf-8 text."""
+    schema = WARC_RECORD_RAW_SCHEMA if raw_body else WARC_RECORD_SCHEMA
 
     def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for fid, blob in zip(pdf[id_col], pdf[payload_col]):
-                for i, rec in enumerate(parse_warc(bytes(blob))):
-                    h = rec["headers"]
-                    row = {
-                        "id": int(fid),
-                        "rec_idx": i,
-                        "warc_type": h.get("warc-type"),
-                        "record_id": h.get("warc-record-id"),
-                        "warc_date": h.get("warc-date"),
-                        "target_uri": h.get("warc-target-uri"),
-                        "http_status": None,
-                        "http_content_type": None,
-                        "body": None,
-                    }
-                    body = rec["payload"]
-                    if h.get("warc-type") == "response":
-                        status, hh, body = parse_http_response(body)
-                        row["http_status"] = status
-                        row["http_content_type"] = hh.get("content-type")
-                    row["body"] = body if raw_body else body.decode("utf-8", errors="replace")
-                    rows.append(row)
-            yield pd.DataFrame(
-                rows,
-                columns=["id", "rec_idx", "warc_type", "record_id", "warc_date",
-                         "target_uri", "http_status", "http_content_type", "body"],
-            )
+                rows.extend(_warc_rows(fid, blob, raw_body))
+            yield pd.DataFrame(rows, columns=_WARC_COLUMNS)
 
-    return df.mapInPandas(
-        _decode, schema=WARC_RECORD_RAW_SCHEMA if raw_body else WARC_RECORD_SCHEMA
-    )
-
-
-BINARY_FILE_SCHEMA = "path string, modificationTime timestamp, length long, content binary"
+    return df.mapInPandas(_decode, schema=schema)
 
 
 def stream_warc_files(
@@ -218,22 +224,20 @@ def stream_warc_files(
 ) -> DataFrame:
     """Structured-Streaming tail over a directory of WARC files (the same
     shape as the binlog/pgoutput/oplog tails): new `.warc` / `.warc.gz`
-    files land, each micro-batch explodes them into records via read_warc.
-    Checkpoint/resume comes free from the file-source log."""
-    files = (
-        spark.readStream.format("binaryFile")
-        .schema(BINARY_FILE_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .load(glob_path)
-        .selectExpr("path", "content AS payload")
-        .withColumn("id", _path_seq("path"))
+    files land, each micro-batch explodes them into records with the row
+    builder of read_warc; a file's id is the number in its `<n>.warc[.gz]`
+    basename. Checkpoint/resume comes free from the file-source log."""
+    return _scan_files(
+        spark, glob_path,
+        lambda path, content: _warc_rows(_file_id(path), content, raw_body),
+        WARC_RECORD_RAW_SCHEMA if raw_body else WARC_RECORD_SCHEMA,
+        stream=True, max_files_per_trigger=max_files_per_trigger,
     )
-    return read_warc(files, raw_body=raw_body)
 
 
-def _path_seq(path_col: str):
-    """Numeric file sequence from a `<n>.warc[.gz]` basename, for stable
-    per-file ids in the streaming tail."""
-    from pyspark.sql import functions as F
-
-    return F.regexp_extract(path_col, r"(\d+)\.warc(?:\.gz)?$", 1).cast("long")
+def _file_id(path: str) -> int:
+    """The number in a `<n>.warc[.gz]` basename: the tail's per-file id."""
+    m = re.search(r"(\d+)\.warc(?:\.gz)?$", path)
+    if m is None:
+        raise ValueError(f"WARC file name carries no <n>.warc[.gz] id: {path}")
+    return int(m.group(1))

@@ -233,3 +233,18 @@ def test_audio_video_gif_quarantine_modes(spark):
     assert {r["id"] for r in grows if r["error"] is None} == {1}
     assert sorted(r["id"] for r in grows if r["error"] is not None) == [2, 3]
     assert {r["id"] for r in mm.sample_gif_frames(gdf, errors="skip").collect()} == {1}
+
+
+@pytest.mark.parametrize("every_n", [0, -1])
+@pytest.mark.parametrize(
+    "sampler", [mm.sample_gif_frames, mm.sample_video_frames, mm.video_fingerprints]
+)
+@pytest.mark.parametrize("errors", ["raise", "null"])
+def test_frame_stride_below_one_is_an_argument_error(spark, sampler, every_n, errors):
+    """A frame stride below 1 raises ValueError when the sampler is called,
+    before any payload decodes: a negative stride would yield no frame rows
+    and 0 would fail inside each payload, where errors=null/skip turn it
+    into dead letters."""
+    df = spark.createDataFrame([(1, b"GIF89a")], "id long, payload binary")
+    with pytest.raises(ValueError, match="every_n"):
+        sampler(df, every_n=every_n, errors=errors)

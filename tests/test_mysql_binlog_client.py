@@ -190,10 +190,42 @@ def test_distributed_two_server_pull(spark):
         assert sorted(r["row_type"] for r in by_file["b.000001"]) == [
             "commit", "commit", "delete", "update"]
         upd = next(r for r in by_file["b.000001"] if r["row_type"] == "update")
-        assert '"name": "al2"' in upd["after"] and ":50" in upd["gtid"]
+        assert upd["after"]["name"] == "al2" and ":50" in upd["gtid"]
         assert df.rdd.getNumPartitions() == 2
     finally:
         s_a.stop(), s_b.stop()
+
+
+def test_live_rows_apply_through_fluid_to_typed(spark, tmp_path):
+    """read_binlog_changes emits the at-rest scan's CHANGE_SCHEMA (map
+    images, xid), so a live pull goes through fluid_to_typed and
+    CdcPipeline.apply_batch exactly like read_binlog_files output."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from ape_dts_spark.sinks.parquet_table import ParquetTable
+    from ape_dts_spark.streaming.cdc import CdcPipeline, fluid_to_typed
+
+    payload = T.StructType(
+        [T.StructField("id", T.LongType()), T.StructField("name", T.StringType())]
+    )
+    srv = FakeMysqlServer({FILE: bf.encode_binlog_file(TXNS, TABLES, FILE)})
+    srv.start()
+    try:
+        changes = read_binlog_changes(spark, [("127.0.0.1", srv.port, FILE)], TABLES, timeout=5)
+        batch = fluid_to_typed(
+            changes.filter(F.col("row_type").isin("insert", "update", "delete")).select(
+                "schema", "tb", "row_type", "before", "after", "seq",
+                F.col("ts").cast("timestamp").alias("ts"),
+            ),
+            payload,
+        )
+        table = ParquetTable(spark, str(tmp_path / "tgt"), payload)
+        CdcPipeline(spark, table, ["id"], stream_id="live").apply_batch(batch, 0)
+    finally:
+        srv.stop()
+    assert [(r["id"], r["name"]) for r in table.current().collect()] == [(1, "al2")]
+    assert changes.schema.simpleString() == T.DataType.fromDDL(bf.CHANGE_SCHEMA).simpleString()
 
 
 @pytest.mark.parametrize("size", [0xFFFFFF - 1, 0xFFFFFF, 0xFFFFFF + 5])
@@ -314,7 +346,9 @@ def test_gtid_distributed_complementary_pull(spark):
         full = read_binlog_changes(
             spark, [("127.0.0.1", srv.port, FILE)], TABLES, timeout=5
         ).collect()
-        key = lambda r: (r["pos"], r["gtid"], r["row_type"], r["before"], r["after"])  # noqa: E731
+        key = lambda r: (r["pos"], r["gtid"], r["row_type"],  # noqa: E731
+                         sorted((r["before"] or {}).items()),
+                         sorted((r["after"] or {}).items()))
         assert sorted(map(key, rows)) == sorted(map(key, full))
     finally:
         srv.stop()

@@ -1,4 +1,5 @@
-"""Every public def in the package has a production caller, or a reason.
+"""Every public def in the package has a production caller, or a reason;
+every shared transport step runs in its one runner.
 
 A name-grep probe, run without Spark. The names are the public top-level
 defs in ``ape_dts_spark/`` and the public methods of its classes. Each must
@@ -17,6 +18,10 @@ one that a production line outside the ``KEEP`` defs now reaches.
 The same walk guards the package's environment reads: each must name a
 deployment setting in ``DEPLOYMENT_ENV``. A value that picks a route or tunes
 an operator is worked out from the input or is a module constant, not a knob.
+
+A third walk keeps the transport plumbing in one place: a ``binaryFile``
+read (batch or stream) happens only in ``session._scan_files`` and a
+one-endpoint-per-partition layout only in ``session._pull_endpoints``.
 """
 
 from __future__ import annotations
@@ -188,3 +193,46 @@ def test_environment_reads_are_deployment_settings():
     )
     gone = sorted(set(DEPLOYMENT_ENV) - {name for _, name in reads})
     assert not gone, f"DEPLOYMENT_ENV names variables the package no longer reads: {gone}"
+
+
+# The transport steps each source shares, and the one function that may run
+# each: a source supplies only its per-file decode or per-endpoint pull.
+TRANSPORT_RUNNERS = {
+    "binaryFile": ("session.py", "_scan_files"),
+    "one_row_per_partition": ("session.py", "_pull_endpoints"),
+}
+
+
+def _transport_calls() -> list[tuple[str, str, str]]:
+    """(step, "file:line", enclosing top-level def) for every package call
+    that reads ``binaryFile`` (``.format("binaryFile")``, batch or
+    ``readStream``) or lays endpoints out with ``one_row_per_partition``."""
+    calls = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        for top in ast.parse(path.read_text()).body:
+            for node in ast.walk(top):
+                if not isinstance(node, ast.Call):
+                    continue
+                f = node.func
+                name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+                step = None
+                if name == "format" and node.args and isinstance(node.args[0], ast.Constant) \
+                        and node.args[0].value == "binaryFile":
+                    step = "binaryFile"
+                elif name == "one_row_per_partition":
+                    step = name
+                if step:
+                    calls.append((step, f"{path.relative_to(PACKAGE)}:{node.lineno}",
+                                  getattr(top, "name", "<module>")))
+    return calls
+
+
+def test_transport_steps_run_only_in_their_runner():
+    calls = _transport_calls()
+    stray = [(step, where) for step, where, fn in calls
+             if (where.split(":")[0], fn) != TRANSPORT_RUNNERS[step]]
+    assert not stray, (
+        f"transport steps outside their runner: {stray}. Read change files through "
+        "session._scan_files and live endpoints through session._pull_endpoints."
+    )
+    assert {step for step, _, _ in calls} == set(TRANSPORT_RUNNERS)

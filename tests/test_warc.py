@@ -159,3 +159,15 @@ def test_stream_warc_files_tail(spark, tmp_path):
     before = len(got)
     drain()
     assert got[before:] == [(9, "page 9")]
+
+
+def test_stream_file_id_from_name():
+    """The tail's per-file id is the number in the `<n>.warc[.gz]` basename;
+    a file without one is refused with ValueError, not an AttributeError
+    from inside the decode."""
+    from ape_dts_spark.sources.warc import _file_id
+
+    assert _file_id("/in/00012.warc.gz") == 12
+    assert _file_id("file:/in/7.warc") == 7
+    with pytest.raises(ValueError, match="no <n>.warc"):
+        _file_id("/in/crawl.warc")
