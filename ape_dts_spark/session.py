@@ -11,6 +11,7 @@ from __future__ import annotations
 import glob
 import os
 import re
+from urllib.parse import unquote, urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import DataType
@@ -136,7 +137,9 @@ def _scan_files(
     becomes one pandas frame with the columns of ``schema``.
 
     ``prune(paths) -> kept paths`` (batch only) filters the file listing on
-    the driver from the names alone, before any content is read."""
+    the driver from the names alone, before any content is read. The listing
+    is the relation's file index (``inputFiles``, no Spark job), its URIs
+    turned into the decoded ``scheme:/path`` form the ``path`` column holds."""
     import pandas as pd
 
     cols = DataType.fromDDL(schema).names
@@ -148,7 +151,7 @@ def _scan_files(
     else:
         files = spark.read.format("binaryFile").load(path)
         if prune is not None:
-            listing = [r["path"] for r in files.select("path").collect()]
+            listing = [_file_path(u) for u in files.inputFiles()]
             files = files.filter(files["path"].isin(list(prune(listing))))
 
     def _decode(batches):
@@ -159,6 +162,13 @@ def _scan_files(
             yield pd.DataFrame(rows, columns=cols)
 
     return files.select("path", "content").mapInPandas(_decode, schema=schema)
+
+
+def _file_path(uri: str) -> str:
+    """A file URI (``file:///a%20b``) as Hadoop's ``Path.toString`` writes
+    it (``file:/a b``), the form of ``binaryFile``'s ``path`` column."""
+    u = urlsplit(uri)
+    return f"{u.scheme}:{'//' + unquote(u.netloc) if u.netloc else ''}{unquote(u.path)}"
 
 
 def _pull_endpoints(

@@ -1342,11 +1342,14 @@ def test_bpe_learn_sennrich_corpus(spark):
 def test_tokenizer_single_task_matches_distributed(spark, monkeypatch):
     """The vocab-bounded single-task trainer route must be bit-identical to
     the distributed K-step loops for every tokenizer family (the same
-    contract as the connected-components engine-equivalence tests)."""
-    rows = [(i, w) for i, w in enumerate(
-        ["low"] * 5 + ["lower"] * 2 + ["newest"] * 6 + ["widest"] * 3
-        + ["aaaa"] * 2 + ["wide widest low99"] * 2)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    contract as the connected-components engine-equivalence tests), also
+    on a NULL text, a text with no tokens, one-character words (no
+    WordPiece pair) and a corpus whose every step-1 candidate ties, so the
+    lexicographic tie-break alone picks the winner."""
+    words = (["low"] * 5 + ["lower"] * 2 + ["newest"] * 6 + ["widest"] * 3
+             + ["aaaa"] * 2 + ["wide widest low99"] * 2
+             + [None, "", "!!! ???", "a b c x"])
+    corpora = [words, ["ab ba"]]
 
     def both(fn):
         monkeypatch.setattr(tx, "_TOKENIZER_SINGLE_TASK_WORDS", 0)
@@ -1355,13 +1358,20 @@ def test_tokenizer_single_task_matches_distributed(spark, monkeypatch):
         single = sorted(tuple(r) for r in fn().collect())
         assert dist == single
 
-    both(lambda: tx.bpe_learn(docs, "text", k=5))
-    both(lambda: tx.bpe_encode(docs, "text", k=5))
-    both(lambda: tx.wordpiece_learn(docs, "text", k=5))
-    both(lambda: tx.wordpiece_encode(docs, "text", k=5))
-    both(lambda: tx.unigram_learn(docs, "text"))
-    both(lambda: tx.unigram_encode(docs, "text"))
-    both(lambda: tx.unigram_doc_tokens(docs, "text"))
+    for texts in corpora:
+        docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+        both(lambda: tx.bpe_learn(docs, "text", k=5))
+        both(lambda: tx.bpe_encode(docs, "text", k=5))
+        both(lambda: tx.wordpiece_learn(docs, "text", k=5))
+        both(lambda: tx.wordpiece_encode(docs, "text", k=5))
+        both(lambda: tx.unigram_learn(docs, "text"))
+        both(lambda: tx.unigram_encode(docs, "text"))
+        both(lambda: tx.unigram_doc_tokens(docs, "text"))
+    # the tie corpus: every BPE pair has freq 1 and both WordPiece pairs
+    # score 10^8, so step 1 is the lexicographically least pair
+    tie = spark.createDataFrame([(0, "ab ba")], "doc_id long, text string")
+    assert tx.bpe_learn(tie, "text", k=1).collect()[0][1:3] == ("a", "</w>")
+    assert tx.wordpiece_learn(tie, "text", k=1).collect()[0][1:3] == ("a", "##b")
 
 
 def test_perceptron_single_task_matches_distributed(spark, monkeypatch):
@@ -1374,6 +1384,10 @@ def test_perceptron_single_task_matches_distributed(spark, monkeypatch):
         (4, "la casa de la abuela", "es"),
         (5, "der hund und die katze", "de"),
         (6, "je ne parle pas", "fr"),
+        (7, None, "en"),               # NULL text: no features
+        (8, "the end of it", None),    # NULL label: -1 for every class
+        (9, "!!! ???", "es"),          # no tokens
+        (10, "a b c", "fr"),           # one-character words
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string, lang string")
 
@@ -1387,6 +1401,35 @@ def test_perceptron_single_task_matches_distributed(spark, monkeypatch):
 
     both(lambda: tx.perceptron_train(docs, "lang = 'en'"))
     both(lambda: tx.langid_train(docs, ("de", "en", "es", "fr")))
+
+
+def test_trainer_job_counts(spark, spark_jobs):
+    """The default (single-task) route of every trainer runs a fixed number
+    of Spark jobs: the route count that materializes the reduced relation,
+    the one task, and the readout. Pinned so a shared step adds no job."""
+    rows = [
+        (1, "the low lower newest widest", "en"),
+        (2, "el gato y la casa y el rio", "es"),
+        (3, "the dog and the cat sat", "en"),
+        (4, "la casa de la abuela", "es"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string, lang string")
+    runs = {
+        "bpe_learn": lambda: tx.bpe_learn(docs, "text", k=4),
+        "wordpiece_learn": lambda: tx.wordpiece_learn(docs, "text", k=4),
+        "unigram_learn": lambda: tx.unigram_learn(docs, "text"),
+        "perceptron_train": lambda: tx.perceptron_train(docs, "lang = 'en'"),
+        "langid_train": lambda: tx.langid_train(docs, ("en", "es")),
+    }
+    got = {}
+    for name, fn in runs.items():
+        with spark_jobs() as jobs:
+            fn().collect()
+        got[name] = jobs.n
+    assert got == {
+        "bpe_learn": 5, "wordpiece_learn": 5, "unigram_learn": 5,
+        "perceptron_train": 4, "langid_train": 4,
+    }
 
 
 def test_bpe_learn_empty_and_greedy_runs(spark):

@@ -106,6 +106,24 @@ def test_distributed_scan_layout_and_resume(spark, tmp_path):
     assert vals[200] == b"v200"
 
 
+def test_resume_lists_segments_without_a_job(spark, tmp_path, spark_jobs):
+    """The resume's name-only pruning reads the file index, not the files:
+    building the resumed relation starts no Spark job, and it keeps the
+    segments the full scan's offset filter would, also under a directory
+    whose name a file URI escapes."""
+    out = str(tmp_path / "seg dir")
+    ks.write_segment_files(_msgs(250), out, "orders", 0, per_batch=50, per_segment=100)
+    ck = {("orders", 0): 149}
+    with spark_jobs() as jobs:
+        resumed = ks.read_kafka_segments(spark, out, start_offsets=ck)
+    assert jobs.n == 0
+    got = sorted((r["offset"], bytes(r["value"])) for r in resumed.collect())
+    full = ks.read_kafka_segments(spark, out).filter(F.col("offset") > 149)
+    assert got == sorted((r["offset"], bytes(r["value"])) for r in full.collect())
+    assert [o for o, _ in got] == list(range(150, 250))
+    assert resumed.select(F.input_file_name()).distinct().count() == 2
+
+
 def test_chains_into_envelope_decode(spark, tmp_path):
     """Segment value bytes -> wire_format.decode_events reproduces typed
     change rows: the at-rest transport chains into the same envelope path

@@ -22,6 +22,9 @@ an operator is worked out from the input or is a module constant, not a knob.
 A third walk keeps the transport plumbing in one place: a ``binaryFile``
 read (batch or stream) happens only in ``session._scan_files`` and a
 one-endpoint-per-partition layout only in ``session._pull_endpoints``.
+A fourth keeps the single-task route of the text trainers in one place: in
+``functions/text.py`` a ``coalesce(1)`` happens only in ``_single_task``, and
+so does a ``mapInPandas``, apart from the listed per-batch passes.
 """
 
 from __future__ import annotations
@@ -236,3 +239,35 @@ def test_transport_steps_run_only_in_their_runner():
         "session._scan_files and live endpoints through session._pull_endpoints."
     )
     assert {step for step, _, _ in calls} == set(TRANSPORT_RUNNERS)
+
+
+# The per-batch Arrow passes of functions/text.py: they run on every
+# partition, so they are not a single-task route.
+TEXT_PER_BATCH_PASSES = {"ngram_overlap_bloom", "nfc_normalize_text"}
+
+
+def _text_task_calls() -> list[tuple[str, str, str]]:
+    """(step, "line", enclosing top-level def) for every ``coalesce(1)`` and
+    ``mapInPandas`` call in functions/text.py."""
+    calls = []
+    for top in ast.parse((PACKAGE / "functions" / "text.py").read_text()).body:
+        for node in ast.walk(top):
+            if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+                continue
+            step = node.func.attr
+            one = [a.value for a in node.args if isinstance(a, ast.Constant)] == [1]
+            if step == "mapInPandas" or (step == "coalesce" and one):
+                calls.append((step, str(node.lineno), getattr(top, "name", "<module>")))
+    return calls
+
+
+def test_text_single_task_route_runs_only_in_its_runner():
+    calls = _text_task_calls()
+    stray = [(step, line, fn) for step, line, fn in calls
+             if fn != "_single_task"
+             and not (step == "mapInPandas" and fn in TEXT_PER_BATCH_PASSES)]
+    assert not stray, (
+        f"single-task steps outside text._single_task: {stray}. Run a trainer's "
+        "single-task route through _single_task."
+    )
+    assert {fn for _, _, fn in calls} == {"_single_task"} | TEXT_PER_BATCH_PASSES
