@@ -1,16 +1,16 @@
-"""REAL media decoders for the container-decodable formats: PNG, BMP, WAV,
-and JPEG header metadata.
+"""REAL media codecs, stdlib + numpy only: PNG, BMP, GIF, baseline and
+progressive JPEG, TIFF, Netpbm, WAV (PCM, IMA-ADPCM, G.711) and AVI (raw
+DIB or MJPG frames, PCM/G.711/IMA-ADPCM audio).
 
-The multimodal module (functions/multimodal.py) keeps honest stubs for
-formats that need external codec libraries (JPEG entropy decode, ffmpeg
-video). PNG and WAV need none of that: PNG is zlib (stdlib) + per-scanline
-filter reconstruction, WAV PCM is raw little-endian samples — both fully
-decodable with the Python stdlib + numpy. This module implements them for
-real, following the repo's at-rest parser pattern (binlog/pgoutput/oplog/
-RDB): a deterministic spec-conformant WRITER (doubles as the fixture
+Each format follows the repo's at-rest parser pattern (binlog/pgoutput/
+oplog/RDB): a deterministic spec-conformant WRITER (doubles as the fixture
 generator), a distributed Arrow-batched PARSER over `mapInPandas`, oracle
 gates on exact integer pixel/sample statistics, and hand-computed spec
-vectors in tests (every PNG filter type reconstructed by hand).
+vectors in tests (every PNG filter type reconstructed by hand). Shared
+steps have one implementation each: the JPEG marker walk
+(``_jpeg_segments``), the SOF reader and MCU geometry, the scan-unit walk
+of encoder and decoder, the LZW core of GIF and TIFF, the RIFF chunk walk
+of WAV and AVI, and the per-payload runner ``_quarantine_map``.
 
 Scale shape: one mapInPandas pass, no shuffle — partition count = files /
 batch size; each executor decodes whole Arrow batches. Real corpora arrive
@@ -406,15 +406,9 @@ def decode_png(df: DataFrame, payload_col: str = "payload", id_col: str = "id") 
     """Distributed PNG decode: one Arrow-batched mapInPandas pass, no
     shuffle. Corrupt payloads raise (route through a dead-letter filter
     upstream if quarantine semantics are wanted — streaming/cdc.py pattern)."""
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = [parse_png(bytes(b)) for b in pdf[payload_col]]
-            out = pd.DataFrame(recs)
-            out.insert(0, "id", pdf[id_col].values)
-            yield out
-
-    return df.mapInPandas(_decode, schema=PNG_DECODED_SCHEMA)
+    return _quarantine_map(
+        df, payload_col, id_col, _record_rows(parse_png, PNG_DECODED_SCHEMA), PNG_DECODED_SCHEMA, "raise"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -446,7 +440,14 @@ def encode_wav(
     fmt = struct.pack(
         "<HHIIHH", 1, n_channels, sample_rate, byte_rate, n_channels * width, bits
     )
-    body = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt + b"data" + struct.pack("<I", len(data)) + data
+    return _wav_file(fmt, data)
+
+
+def _wav_file(fmt: bytes, data: bytes) -> bytes:
+    """The RIFF/WAVE envelope of every WAV writer: a 'fmt ' chunk, then the
+    'data' chunk, written without the pad byte an odd-length body would
+    take (the RIFF size counts exactly the bytes written)."""
+    body = b"WAVE" + _riff_chunk(b"fmt ", fmt) + b"data" + struct.pack("<I", len(data)) + data
     return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
@@ -465,11 +466,7 @@ def encode_wav_ima(
         "<HHIIHHHH", 0x11, n_channels, sample_rate, byte_rate, block_align, 4,
         2, samples_per_block,  # cbSize + wSamplesPerBlock extension
     )
-    body = (
-        b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", len(data)) + bytes(data)
-    )
-    return b"RIFF" + struct.pack("<I", len(body)) + body, recon
+    return _wav_file(fmt, data), recon
 
 
 def _ima_encode_blocks(
@@ -621,12 +618,8 @@ def wav_samples(payload: bytes) -> tuple[dict, np.ndarray]:
     (riff_len,) = struct.unpack_from("<I", payload, 4)
     if riff_len != len(payload) - 8:
         raise ValueError("RIFF length mismatch")
-    pos, fmt, data = 12, None, None
-    while pos + 8 <= len(payload):
-        tag = payload[pos : pos + 4]
-        (length,) = struct.unpack_from("<I", payload, pos + 4)
-        body = payload[pos + 8 : pos + 8 + length]
-        pos += 8 + length + (length & 1)  # chunks are word-aligned
+    fmt, data = None, None
+    for tag, _off, body in _riff_chunks(payload, 12):
         if tag == b"fmt ":
             fmt = struct.unpack_from("<HHIIHH", body, 0)
         elif tag == b"data":
@@ -738,16 +731,11 @@ def encode_wav_g711(
         recon = _alaw_decode(codes.astype(np.int64))
     else:
         raise ValueError(f"law must be 'ulaw' or 'alaw', got {law!r}")
-    data = codes.tobytes()
     fmt = struct.pack(
         "<HHIIHH", fmt_code, n_channels, sample_rate,
         sample_rate * n_channels, n_channels, 8,
     )
-    body = (
-        b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", len(data)) + data
-    )
-    return b"RIFF" + struct.pack("<I", len(body)) + body, recon
+    return _wav_file(fmt, codes.tobytes()), recon
 
 
 @_codec_guard("wav")
@@ -885,15 +873,9 @@ def audio_peak_sequence(payload: bytes, n_fft: int = 256) -> list[tuple[int, int
 def decode_wav(df: DataFrame, payload_col: str = "payload", id_col: str = "id") -> DataFrame:
     """Distributed WAV decode — same single-pass mapInPandas shape as
     decode_png."""
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = [parse_wav(bytes(b)) for b in pdf[payload_col]]
-            out = pd.DataFrame(recs)
-            out.insert(0, "id", pdf[id_col].values)
-            yield out
-
-    return df.mapInPandas(_decode, schema=WAV_DECODED_SCHEMA)
+    return _quarantine_map(
+        df, payload_col, id_col, _record_rows(parse_wav, WAV_DECODED_SCHEMA), WAV_DECODED_SCHEMA, "raise"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1153,10 +1135,25 @@ def parse_bmp(payload: bytes, return_pixels: bool = False) -> dict:
 # ---------------------------------------------------------------------------
 
 
-def _lzw_encode_gif(indices: np.ndarray, mcs: int) -> bytes:
-    """GIF variable-width LZW: emit clear, build the string table greedily,
-    grow the code width when the next free code would not fit (early
-    change), reset the table at 4096 entries, end with EOI."""
+# LZW dialects as (msb_first, early, full, reads_eoi). GIF packs codes
+# LSB-first; TIFF 6.0 §13 packs them MSB-first and widens its codes two
+# table slots sooner ("early change"). A GIF writer emits Clear once the
+# 12-bit table is full (code 4096); a TIFF writer emits it when the table
+# reaches 4094 entries, i.e. in place of entry 4093 (an entry added just
+# before a Clear is never referenced, so the bytes are the same). A GIF
+# decoder reads up to the End code, and the length of the frame it
+# declares must agree; a TIFF decoder stops at the strip size, as libtiff
+# does, so the TIFF writer's End code is never read and does not take the
+# width step at the table boundary that GIF's does.
+_GIF_LZW = (False, 0, 4096, True)
+_TIFF_LZW = (True, 2, 4093, False)
+
+
+def _lzw_encode(data: bytes, mcs: int, dialect: tuple) -> bytes:
+    """Variable-width LZW over ``data`` (symbols below 2^mcs): Clear, the
+    greedy string-table walk, End. Codes start mcs + 1 bits wide and widen
+    (to 12 at most) when the next free code reaches 2^width + 1 - early."""
+    msb, early, full, reads_eoi = dialect
     clear, end = 1 << mcs, (1 << mcs) + 1
     out = bytearray()
     acc = 0
@@ -1164,75 +1161,90 @@ def _lzw_encode_gif(indices: np.ndarray, mcs: int) -> bytes:
 
     def emit(code: int, width: int) -> None:
         nonlocal acc, nbits
-        acc |= code << nbits  # LSB-first packing
+        if msb:
+            acc = (acc << width) | code
+        else:
+            acc |= code << nbits
         nbits += width
         while nbits >= 8:
-            out.append(acc & 0xFF)
-            acc >>= 8
             nbits -= 8
+            if msb:
+                out.append((acc >> nbits) & 0xFF)
+                acc &= (1 << nbits) - 1
+            else:
+                out.append(acc & 0xFF)
+                acc >>= 8
 
-    width = mcs + 1
-    table: dict[bytes, int] = {bytes([i]): i for i in range(clear)}
-    next_code = end + 1
+    def fresh() -> tuple[dict[bytes, int], int, int]:
+        return {bytes([i]): i for i in range(clear)}, end + 1, mcs + 1
+
+    table, nxt, width = fresh()
     emit(clear, width)
     w = b""
-    for v in indices.tolist():
+    for v in data:
         c = bytes([v])
         if w + c in table:
             w += c
             continue
         emit(table[w], width)
-        if next_code < 4096:
-            table[w + c] = next_code
-            next_code += 1
-            if next_code == (1 << width) + 1 and width < 12:
-                width += 1
-        else:  # table full: clear and restart
+        if nxt == full:
             emit(clear, width)
-            table = {bytes([i]): i for i in range(clear)}
-            next_code = end + 1
-            width = mcs + 1
+            table, nxt, width = fresh()
+        else:
+            table[w + c] = nxt
+            nxt += 1
+            if nxt == (1 << width) + 1 - early and width < 12:
+                width += 1
         w = c
     if w:
         emit(table[w], width)
     # Boundary early-change: the decoder appends a table entry for the FINAL
     # data code too (the encoder has nothing to append — no following char),
-    # so when that append lands exactly on the width boundary
-    # (decoder len(table) == 1 << width, i.e. next_code here == 1 << width)
-    # the decoder reads EOI one bit wider than the body was written.
-    if next_code == (1 << width) and width < 12:
+    # so when that append lands exactly on the width boundary the decoder
+    # reads End one bit wider than the body was written.
+    if reads_eoi and nxt == (1 << width) - early and width < 12:
         width += 1
     emit(end, width)
     if nbits:
-        out.append(acc & 0xFF)
+        out.append((acc << (8 - nbits)) & 0xFF if msb else acc & 0xFF)
     return bytes(out)
 
 
-def _lzw_decode_gif(data: bytes, mcs: int, expected: int) -> bytes:
-    """Decode exactly ``expected`` GIF-LZW indices; raises on truncation,
-    bad codes, or a stream that disagrees about its own length."""
+def _lzw_decode(data: bytes, mcs: int, expected: int, dialect: tuple) -> bytes:
+    """Decode ``expected`` bytes of an LZW stream written by
+    :func:`_lzw_encode`, reading on to the End code when the dialect reads
+    it. The decoder's table trails the encoder's by one entry, so it
+    widens one slot later. Raises on truncation, bad codes, or a stream
+    that disagrees about its length."""
+    msb, early, _full, reads_eoi = dialect
     clear, end = 1 << mcs, (1 << mcs) + 1
     width = mcs + 1
     table: list[bytes] = [bytes([i]) for i in range(clear)] + [b"", b""]
     out = bytearray()
     prev: bytes | None = None
-    # LSB-first sliding bit buffer: each input byte is loaded exactly once
-    # (the old per-code `int.from_bytes(data[bi:bi+3])` sliced + allocated a
-    # fresh int per code — ~40% of the decode loop on small frames)
+    # sliding bit buffer: each input byte is loaded exactly once (a per-code
+    # slice + int.from_bytes allocated a fresh int per code)
     buf = 0
     nbits = 0
     bytepos = 0
     nbytes = len(data)
-    while True:
+    while reads_eoi or len(out) < expected:
         while nbits < width:
             if bytepos >= nbytes:
-                raise ValueError("gif: LZW stream truncated before end code")
-            buf |= data[bytepos] << nbits
+                raise ValueError("LZW stream truncated mid-code")
+            if msb:
+                buf = (buf << 8) | data[bytepos]
+            else:
+                buf |= data[bytepos] << nbits
             bytepos += 1
             nbits += 8
-        code = buf & ((1 << width) - 1)
-        buf >>= width
         nbits -= width
+        if msb:
+            code = buf >> nbits
+            buf &= (1 << nbits) - 1
+        else:
+            code = buf & ((1 << width) - 1)
+            buf >>= width
         if code == clear:
             table = [bytes([i]) for i in range(clear)] + [b"", b""]
             width = mcs + 1
@@ -1240,29 +1252,22 @@ def _lzw_decode_gif(data: bytes, mcs: int, expected: int) -> bytes:
             continue
         if code == end:
             break
-        if prev is None:
-            if code >= len(table):
-                raise ValueError("gif: first LZW code after clear out of range")
+        if code < len(table):
             entry = table[code]
-        elif code < len(table):
-            entry = table[code]
-        elif code == len(table):
+        elif code == len(table) and prev is not None:  # the KwKwK case
             entry = prev + prev[:1]
         else:
-            raise ValueError("gif: LZW code beyond string table")
+            raise ValueError(f"LZW code {code} beyond the string table ({len(table)})")
         out += entry
         if prev is not None and len(table) < 4096:
             table.append(prev + entry[:1])
-            # early change: grow when the NEXT code would not fit
-            if len(table) == (1 << width) and width < 12:
+            if len(table) == (1 << width) - early and width < 12:
                 width += 1
         prev = entry
         if len(out) > expected:
-            raise ValueError("gif: LZW decoded more pixels than the frame holds")
+            raise ValueError("LZW stream decodes past its expected size")
     if len(out) != expected:
-        raise ValueError(
-            f"gif: LZW decoded {len(out)} pixels, frame declares {expected}"
-        )
+        raise ValueError(f"LZW decoded {len(out)} bytes, expected {expected}")
     return bytes(out)
 
 
@@ -1316,7 +1321,7 @@ def encode_gif(
         mcs = max(2, gct_bits)
         out.append(mcs)
         idx = f[_interlace_order(fh)] if interlace else f
-        lzw = _lzw_encode_gif(idx.reshape(-1), mcs)
+        lzw = _lzw_encode(idx.tobytes(), mcs, _GIF_LZW)
         for off in range(0, len(lzw), 255):
             chunk = lzw[off : off + 255]
             out.append(len(chunk))
@@ -1395,7 +1400,7 @@ def parse_gif(payload: bytes, return_frames: bool = False) -> dict:
                 raise ValueError("gif: truncated image data sub-block")
             pos += 1
             idx = np.frombuffer(
-                _lzw_decode_gif(bytes(lzw), mcs, fw * fh), dtype=np.uint8
+                _lzw_decode(bytes(lzw), mcs, fw * fh, _GIF_LZW), dtype=np.uint8
             ).reshape(fh, fw)
             if fpacked & 0x40:  # de-interlace
                 de = np.empty_like(idx)
@@ -1441,119 +1446,194 @@ GIF_DECODED_SCHEMA = (
 def decode_gif(df: DataFrame, payload_col: str = "payload", id_col: str = "id") -> DataFrame:
     """Distributed GIF decode -> exact index/RGB statistics per file. One
     Arrow-batched mapInPandas pass, no shuffle (partition = files)."""
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = [parse_gif(bytes(b)) for b in pdf[payload_col]]
-            out = pd.DataFrame(recs)
-            out.insert(0, "id", pdf[id_col].values)
-            yield out
-
-    return df.mapInPandas(_decode, schema=GIF_DECODED_SCHEMA)
+    return _quarantine_map(
+        df, payload_col, id_col, _record_rows(parse_gif, GIF_DECODED_SCHEMA), GIF_DECODED_SCHEMA, "raise"
+    )
 
 
 # ---------------------------------------------------------------------------
-# JPEG header metadata (marker walk; NO entropy decode — that needs a codec
-# library, so pixel recovery stays honestly out of scope here)
+# JPEG (ITU-T T.81 / ISO 10918-1, public): sequential (SOF0 baseline, SOF1
+# extended) and progressive (SOF2) Huffman coding — full encoder + pixel
+# decoder, stdlib + numpy.
+#
+# One marker walk (_jpeg_segments) serves header metadata, pixel decode and
+# the TIFF JPEGTables split; one SOF reader (_jpeg_frame) gives each of them
+# the same frame and MCU geometry; one scan-unit walk (_scan_units) orders
+# the data units of a scan for the encoders and the decoder alike.
+#
+# The encoder is the fixture generator (writer-as-fixture-generator
+# pattern): real FDCT, quantization, canonical Huffman DC/AC coding, 0xFF
+# byte stuffing, optional restart markers, grayscale / 4:4:4 / 4:2:0
+# sampling. The decoder is the genuine article: DQT/DHT/SOF/DRI/SOS marker
+# parse, canonical Huffman decode (F.2.2.3 MINCODE/MAXCODE/VALPTR),
+# DC-predictor restart handling, dequantize + inverse zigzag + float IDCT,
+# nearest-neighbor chroma upsampling, YCbCr->RGB. Rounding at every lossy
+# step is ROUND HALF UP (floor(x + 0.5)) so decode results are stateable as
+# integer formulas in a SQL oracle (the jpeg_decode gate uses
+# per-block-flat images whose DC-only path is closed-form; odd quantizer
+# entries keep every half-up boundary unreachable). Huffman tables are
+# built canonically from the symbols actually used (optimized tables — any
+# spec-valid DHT is legal; the decoder reads whatever tables the stream
+# declares).
+#
+# The reference treats media payloads as opaque bytes; full decode here
+# serves the multimodal curation path (functions/multimodal.py). The
+# lossless and hierarchical processes and arithmetic coding raise
+# NotImplementedError: raise, never guess.
 # ---------------------------------------------------------------------------
+
+_JFIF_APP0 = b"JFIF\x00\x01\x02\x00\x00\x01\x00\x01\x00\x00"
+# every SOFn marker (C4 is DHT, C8 reserved, CC is DAC)
+_SOF_MARKERS = frozenset(range(0xC0, 0xD0)) - {0xC4, 0xC8, 0xCC}
+
+
+def _jpeg_segment(marker: int, body: bytes) -> bytes:
+    return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
 
 
 def encode_jpeg_headers(
     width: int, height: int, n_components: int = 3, scan_bytes: bytes = b"",
     progressive: bool = False,
 ) -> bytes:
-    """Minimal structurally-valid JFIF byte stream: SOI, APP0, DQT, SOF0,
-    SOS + opaque scan bytes, EOI. The scan payload is NOT real entropy-coded
-    data (writing that needs a real encoder); this writer exists to fixture
-    the HEADER parser, which is the honestly-buildable half of JPEG here."""
-    app0 = b"JFIF\x00\x01\x02\x00\x00\x01\x00\x01\x00\x00"
+    """Minimal structurally-valid JFIF byte stream: SOI, APP0, DQT, SOF0
+    (or SOF2), SOS + the given opaque scan bytes, EOI. The scan bytes are
+    not entropy-coded data, and the DQT is all zeros; this writer fixtures
+    the header reader (:func:`parse_jpeg_meta`) at any declared size
+    without encoding pixels — :func:`encode_jpeg` writes decodable
+    streams."""
     dqt = bytes([0]) + bytes(64)
     sof = struct.pack(">BHHB", 8, height, width, n_components) + b"".join(
         struct.pack(">BBB", i + 1, 0x11, 0) for i in range(n_components)
     )
     sos = bytes([n_components]) + b"".join(struct.pack(">BB", i + 1, 0) for i in range(n_components)) + bytes([0, 63, 0])
     sof_marker = 0xC2 if progressive else 0xC0
-
-    def seg(marker, body):
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
     return (
         b"\xff\xd8"  # SOI
-        + seg(0xE0, app0)
-        + seg(0xDB, dqt)
-        + seg(sof_marker, sof)
-        + seg(0xDA, sos)
+        + _jpeg_segment(0xE0, _JFIF_APP0)
+        + _jpeg_segment(0xDB, dqt)
+        + _jpeg_segment(sof_marker, sof)
+        + _jpeg_segment(0xDA, sos)
         + scan_bytes
         + b"\xff\xd9"  # EOI
     )
 
 
-@_codec_guard("jpeg")
-def parse_jpeg_meta(payload: bytes) -> dict:
-    """JPEG HEADER metadata via the marker walk (SOI, length-framed segments,
-    0xFF00 stuffing-aware scan skip, standalone RSTn/EOI): precision, width,
-    height, component count, progressive flag from SOF0/SOF2. This is the
-    stdlib-decodable half of JPEG — pixel recovery needs an entropy decoder
-    (external codec library), and stays honestly unimplemented
-    (functions/multimodal.py contract)."""
+def _jpeg_segments(payload: bytes) -> Iterator[tuple[int, bytes, int]]:
+    """The one JPEG marker walk (T.81 B.1): after SOI, each 0xFF-synced
+    length-framed segment up to EOI as (marker, body, end), ``end`` being
+    the offset just past the segment. After an SOS segment the walk skips
+    the entropy-coded data, stuffed 0xFF00 bytes and RSTn markers included,
+    to the next marker. Raises on a stream cut before EOI, a lost marker
+    sync, or an RSTn between segments."""
     if payload[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG: missing SOI")
     pos = 2
-    while pos + 4 <= len(payload):
+    while True:
+        if pos + 2 > len(payload):
+            raise ValueError("truncated before EOI")
         if payload[pos] != 0xFF:
             raise ValueError(f"marker sync lost at {pos}")
         marker = payload[pos + 1]
         if marker == 0xD9:  # EOI
-            break
-        if 0xD0 <= marker <= 0xD7:  # standalone RSTn
-            pos += 2
-            continue
+            return
+        if 0xD0 <= marker <= 0xD7:
+            raise ValueError("restart marker outside entropy-coded data")
         (seg_len,) = struct.unpack_from(">H", payload, pos + 2)
-        body = payload[pos + 4 : pos + 2 + seg_len]
-        if marker in (0xC0, 0xC2):  # SOF0 baseline / SOF2 progressive
-            precision, height, width, n_comp = struct.unpack_from(">BHHB", body, 0)
-            _check_dims(width, height, "jpeg")
-            return {
-                "precision": precision,
-                "width": width,
-                "height": height,
-                "n_components": n_comp,
-                "progressive": marker == 0xC2,
-            }
-        if marker == 0xDA:  # SOS: skip entropy-coded data to next real marker
-            pos += 2 + seg_len
-            while pos + 1 < len(payload) and not (
-                payload[pos] == 0xFF and payload[pos + 1] != 0 and not (0xD0 <= payload[pos + 1] <= 0xD7)
-            ):
-                pos += 1
-            continue
         pos += 2 + seg_len
-    raise ValueError("no SOF0/SOF2 frame header found")
+        yield marker, payload[pos - seg_len + 2 : pos], pos
+        if marker == 0xDA:
+            while True:
+                pos = payload.find(b"\xff", pos)
+                if pos < 0 or pos + 1 >= len(payload):
+                    raise ValueError("truncated before EOI")
+                if payload[pos + 1] and not 0xD0 <= payload[pos + 1] <= 0xD7:
+                    break
+                pos += 2
 
 
-# ---------------------------------------------------------------------------
-# Baseline JPEG (SOF0): full encoder + pixel decoder, stdlib + numpy.
-#
-# Spec: ITU-T T.81 / ISO 10918-1 (public). The encoder is the fixture
-# generator (writer-as-fixture-generator pattern): real FDCT, quantization,
-# canonical Huffman DC/AC coding, 0xFF byte stuffing, optional restart
-# markers, grayscale / 4:4:4 / 4:2:0 sampling. The decoder is the genuine
-# article: DQT/DHT/SOF0/DRI/SOS marker parse, canonical Huffman decode
-# (F.2.2.3 MINCODE/MAXCODE/VALPTR), DC-predictor restart handling,
-# dequantize + inverse zigzag + float IDCT, nearest-neighbor chroma
-# upsampling, YCbCr->RGB. Rounding at every lossy step is ROUND HALF UP
-# (floor(x + 0.5)) so decode results are stateable as integer formulas in
-# a SQL oracle (the jpeg_decode gate uses per-block-flat images whose
-# DC-only path is closed-form; odd quantizer entries keep every half-up
-# boundary unreachable). Huffman tables are built canonically from the
-# symbols actually used (optimized tables — any spec-valid DHT is legal;
-# the decoder reads whatever tables the stream declares).
-#
-# The reference treats media payloads as opaque bytes; full decode here
-# serves the multimodal curation path (functions/multimodal.py), replacing
-# the last honest media stub. Progressive (SOF2) and arithmetic coding stay
-# out of scope: raise, never guess.
-# ---------------------------------------------------------------------------
+def _frame_geometry(w: int, h: int, samp: list[tuple[int, int]]) -> dict:
+    """MCU geometry of a frame whose components sample at (h, v) (T.81
+    A.1.1, A.2): the MCU grid, and each component's own block grid ``nb``
+    (rows, cols) — the ceil of its scaled dimensions, not the MCU-padded
+    grid — which a non-interleaved scan walks."""
+    hmax = max(sh for sh, _ in samp)
+    vmax = max(sv for _, sv in samp)
+    nb = []
+    for sh, sv in samp:
+        cw, ch = -(-w * sh // hmax), -(-h * sv // vmax)
+        nb.append((-(-ch // 8), -(-cw // 8)))
+    return {
+        "w": w, "h": h, "samp": samp, "hmax": hmax, "vmax": vmax,
+        "mcus_x": -(-w // (8 * hmax)), "mcus_y": -(-h // (8 * vmax)), "nb": nb,
+    }
+
+
+def _jpeg_frame(marker: int, body: bytes) -> dict:
+    """The one SOF reader: precision, dimensions and per-component (id,
+    sampling, quant table) of a SOF0/SOF1 (sequential) or SOF2
+    (progressive) frame, plus its MCU geometry. Any other frame type
+    (lossless, hierarchical, arithmetic) raises NotImplementedError."""
+    if marker not in (0xC0, 0xC1, 0xC2):
+        raise NotImplementedError(
+            f"only baseline (SOF0/1) and progressive (SOF2) supported, "
+            f"got SOF marker {marker:#x}"
+        )
+    precision, h, w, n_comp = struct.unpack_from(">BHHB", body, 0)
+    _check_dims(w, h, "jpeg")
+    specs = [struct.unpack_from(">BBB", body, 6 + 3 * c) for c in range(n_comp)]
+    samp = [(s >> 4, s & 0xF) for _cid, s, _q in specs]
+    if not all(1 <= sh <= 4 and 1 <= sv <= 4 for sh, sv in samp):
+        raise ValueError(f"invalid sampling factors {samp}")
+    frame = _frame_geometry(w, h, samp)
+    frame.update(
+        precision=precision, progressive=marker == 0xC2,
+        ids=[cid for cid, _s, _q in specs], qids=[q for _cid, _s, q in specs],
+    )
+    return frame
+
+
+def _scan_units(frame: dict, comps: list[int]) -> list[list[tuple[int, int, int]]]:
+    """The data units of one scan over components ``comps`` (frame
+    indexes, scan order), grouped per restart-counted unit as (component,
+    block row, block col): an interleaved scan walks the MCU grid, each MCU
+    holding every scan component's v x h blocks in scan order (T.81
+    A.2.3); a one-component scan walks that component's own block grid one
+    block at a time (A.2.2)."""
+    if len(comps) == 1:
+        ci = comps[0]
+        rows, cols = frame["nb"][ci]
+        return [[(ci, by, bx)] for by in range(rows) for bx in range(cols)]
+    units = []
+    for my in range(frame["mcus_y"]):
+        for mx in range(frame["mcus_x"]):
+            unit = []
+            for ci in comps:
+                sh, sv = frame["samp"][ci]
+                for byy in range(sv):
+                    for bxx in range(sh):
+                        unit.append((ci, my * sv + byy, mx * sh + bxx))
+            units.append(unit)
+    return units
+
+
+@_codec_guard("jpeg")
+def parse_jpeg_meta(payload: bytes) -> dict:
+    """JPEG header metadata from the marker walk, which stops at the first
+    frame header: precision, width, height, component count and the
+    progressive flag of a SOF0, SOF1 or SOF2 frame — every frame type
+    :func:`decode_jpeg` decodes — without entropy-decoding any pixels."""
+    for marker, body, _end in _jpeg_segments(payload):
+        if marker in _SOF_MARKERS:
+            frame = _jpeg_frame(marker, body)
+            return {
+                "precision": frame["precision"],
+                "width": frame["w"],
+                "height": frame["h"],
+                "n_components": len(frame["ids"]),
+                "progressive": frame["progressive"],
+            }
+    raise ValueError("no SOF0/SOF1/SOF2 frame header found")
+
 
 _ZIGZAG = np.array([
     0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
@@ -1578,6 +1658,7 @@ _QTABLE_LUMA = np.full((8, 8), 17, dtype=np.int64)
 _QTABLE_LUMA[0, 0] = 11
 _QTABLE_CHROMA = np.full((8, 8), 23, dtype=np.int64)
 _QTABLE_CHROMA[0, 0] = 13
+_QTABLES = {0: _QTABLE_LUMA, 1: _QTABLE_CHROMA}
 
 
 def _round_half_up(x: np.ndarray) -> np.ndarray:
@@ -1657,42 +1738,6 @@ def _canonical_table(symbols: list[int]) -> tuple[list[int], list[int], dict[int
     return bits, syms, codes
 
 
-def _encode_coef_block(qcoef: np.ndarray, pred: int, dc_codes, ac_codes,
-                       bw: _BitWriter) -> int:
-    """Huffman-encode one quantized block (F.1.2): DC difference then AC
-    run-length pairs. Returns the new DC predictor."""
-    zz = qcoef.flatten()[_ZIGZAG]
-    dc = int(zz[0])
-    diff = dc - pred
-    cat = _bit_category(diff)
-    code, ln = dc_codes[cat]
-    bw.write(code, ln)
-    if cat:
-        bw.write(diff if diff >= 0 else diff + (1 << cat) - 1, cat)
-    run = 0
-    last_nz = int(np.max(np.nonzero(zz)[0])) if np.any(zz[1:]) else 0
-    for i in range(1, 64):
-        v = int(zz[i])
-        if i > last_nz:
-            break
-        if v == 0:
-            run += 1
-            continue
-        while run > 15:
-            code, ln = ac_codes[0xF0]  # ZRL
-            bw.write(code, ln)
-            run -= 16
-        cat = _bit_category(v)
-        code, ln = ac_codes[(run << 4) | cat]
-        bw.write(code, ln)
-        bw.write(v if v >= 0 else v + (1 << cat) - 1, cat)
-        run = 0
-    if last_nz < 63:
-        code, ln = ac_codes[0x00]  # EOB
-        bw.write(code, ln)
-    return dc
-
-
 def _rgb_to_ycbcr(px: np.ndarray) -> np.ndarray:
     """JFIF color transform, round half up (decoder inverts with the same
     rounding so both directions are integer-stateable)."""
@@ -1726,14 +1771,12 @@ def _plane_blocks(plane: np.ndarray) -> tuple[int, int, np.ndarray]:
     return by, bx, blocks
 
 
-def _prepare_blocks(
-    pixels: np.ndarray, subsampling: str
-) -> tuple[int, int, list[np.ndarray], list[tuple[int, int]], list[int], int, int]:
+def _prepare_blocks(pixels: np.ndarray, subsampling: str) -> tuple[dict, list[np.ndarray]]:
     """Shared encoder front half (baseline + progressive): color transform,
     chroma decimation, FDCT + quantization, MCU-grid block padding. Returns
-    (h, w, comp_blocks, samp, qids, mcus_x, mcus_y) where comp_blocks[ci]
-    is the (by, bx, 8, 8) quantized-coefficient grid padded to the MCU
-    grid."""
+    (frame, coefs): the frame geometry (:func:`_frame_geometry`) with the
+    quant table ids, and per component the (by, bx, 64) zigzag-ordered
+    quantized coefficient grid padded to the MCU grid."""
     pixels = np.asarray(pixels, dtype=np.uint8)
     gray = pixels.ndim == 2
     h, w = pixels.shape[:2]
@@ -1762,33 +1805,54 @@ def _prepare_blocks(
         else:
             raise ValueError(f"unsupported subsampling {subsampling!r}")
         qids = [0, 1, 1]
-    qtables = {0: _QTABLE_LUMA, 1: _QTABLE_CHROMA}
-
-    # quantized blocks per component
-    comp_blocks = []
-    for plane, qid in zip(planes, qids):
+    frame = _frame_geometry(w, h, samp)
+    frame["qids"] = qids
+    coefs = []
+    for plane, qid, (sh, sv) in zip(planes, qids, samp):
         by, bx, blocks = _plane_blocks(plane)
         q = np.empty((by, bx, 8, 8), dtype=np.int64)
         for i in range(by):
             for j in range(bx):
-                q[i, j] = _fdct_quant(blocks[i, j], qtables[qid])
-        comp_blocks.append(q)
+                q[i, j] = _fdct_quant(blocks[i, j], _QTABLES[qid])
+        # components may need block padding up to the MCU grid
+        need_y, need_x = frame["mcus_y"] * sv, frame["mcus_x"] * sh
+        if by < need_y or bx < need_x:
+            q = np.pad(q, ((0, need_y - by), (0, need_x - bx), (0, 0), (0, 0)), mode="edge")
+        coefs.append(q.reshape(q.shape[0], q.shape[1], 64)[:, :, _ZIGZAG])
+    return frame, coefs
 
-    # MCU geometry
-    hmax = max(s[0] for s in samp)
-    vmax = max(s[1] for s in samp)
-    mcus_x = -(-w // (8 * hmax))
-    mcus_y = -(-h // (8 * vmax))
-    # components may need block padding up to the MCU grid
-    for ci, (sh, sv) in enumerate(samp):
-        need_y, need_x = mcus_y * sv, mcus_x * sh
-        q = comp_blocks[ci]
-        if q.shape[0] < need_y or q.shape[1] < need_x:
-            comp_blocks[ci] = np.pad(
-                q, ((0, need_y - q.shape[0]), (0, need_x - q.shape[1]), (0, 0), (0, 0)),
-                mode="edge",
-            )
-    return h, w, comp_blocks, samp, qids, mcus_x, mcus_y
+
+def _jpeg_frame_header(sof_marker: int, frame: dict) -> bytearray:
+    """SOI, the JFIF APP0, one DQT per quantization table, then the SOF."""
+    qids = frame["qids"]
+    out = bytearray(b"\xff\xd8") + _jpeg_segment(0xE0, _JFIF_APP0)
+    for qid in sorted(set(qids)):
+        zz = _QTABLES[qid].flatten()[_ZIGZAG].astype(np.uint8)
+        out += _jpeg_segment(0xDB, bytes([qid]) + zz.tobytes())
+    sof = struct.pack(">BHHB", 8, frame["h"], frame["w"], len(qids))
+    for ci, (sh, sv) in enumerate(frame["samp"]):
+        sof += struct.pack(">BBB", ci + 1, (sh << 4) | sv, qids[ci])
+    return out + _jpeg_segment(sof_marker, sof)
+
+
+def _dht_segments(tables) -> bytes:
+    """One DHT segment per ((class, table id), canonical table) item."""
+    return b"".join(
+        _jpeg_segment(0xC4, bytes([(cls << 4) | tid]) + bytes(bits) + bytes(vals))
+        for (cls, tid), (bits, vals, _codes) in tables
+    )
+
+
+def _sos_segment(comps, tids: list[int], ss: int, se: int, ah: int, al: int) -> bytes:
+    """SOS header of a scan over frame components ``comps``: a component
+    names its DC table when the scan codes DC differences and its AC table
+    when the scan codes AC coefficients (0 otherwise)."""
+    body = bytes([len(comps)])
+    for ci in comps:
+        td = tids[ci] if ss == 0 and ah == 0 else 0
+        ta = tids[ci] if se else 0
+        body += struct.pack(">BB", ci + 1, (td << 4) | ta)
+    return _jpeg_segment(0xDA, body + bytes([ss, se, (ah << 4) | al]))
 
 
 def encode_jpeg(
@@ -1799,107 +1863,19 @@ def encode_jpeg(
     """Real baseline JFIF encoder. ``pixels`` is (h, w) grayscale or
     (h, w, 3) RGB uint8; ``subsampling`` is '444' or '420' (color only);
     ``restart_interval`` emits DRI + RSTn every N MCUs when > 0."""
-    h, w, comp_blocks, samp, qids, mcus_x, mcus_y = _prepare_blocks(pixels, subsampling)
-    planes = comp_blocks  # one entry per component from here on
-    qtables = {0: _QTABLE_LUMA, 1: _QTABLE_CHROMA}
-
-    # gather used Huffman symbols (two table pairs: luma=0, chroma=1)
-    dc_syms: dict[int, list[int]] = {0: [], 1: []}
-    ac_syms: dict[int, list[int]] = {0: [], 1: []}
-
-    def _collect(qcoef: np.ndarray, pred: int, tid: int) -> int:
-        zz = qcoef.flatten()[_ZIGZAG]
-        dc = int(zz[0])
-        dc_syms[tid].append(_bit_category(dc - pred))
-        run = 0
-        last_nz = int(np.max(np.nonzero(zz)[0])) if np.any(zz[1:]) else 0
-        for i in range(1, 64):
-            if i > last_nz:
-                break
-            v = int(zz[i])
-            if v == 0:
-                run += 1
-                continue
-            while run > 15:
-                ac_syms[tid].append(0xF0)
-                run -= 16
-            ac_syms[tid].append((run << 4) | _bit_category(v))
-            run = 0
-        if last_nz < 63:
-            ac_syms[tid].append(0x00)
-        return dc
-
-    tids = [0] + [1] * (len(planes) - 1)
-    preds = [0] * len(planes)
-    mcu_idx = 0
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            if restart_interval and mcu_idx and mcu_idx % restart_interval == 0:
-                preds = [0] * len(planes)
-            for ci, (sh, sv) in enumerate(samp):
-                for byy in range(sv):
-                    for bxx in range(sh):
-                        preds[ci] = _collect(
-                            comp_blocks[ci][my * sv + byy, mx * sh + bxx],
-                            preds[ci], tids[ci],
-                        )
-            mcu_idx += 1
-
-    tables = {}
-    for tid in set(tids):
-        tables[("dc", tid)] = _canonical_table(dc_syms[tid])
-        tables[("ac", tid)] = _canonical_table(ac_syms[tid])
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xE0, b"JFIF\x00\x01\x02\x00\x00\x01\x00\x01\x00\x00")
-    for qid in sorted(set(qids)):
-        zz = qtables[qid].flatten()[_ZIGZAG].astype(np.uint8)
-        out += seg(0xDB, bytes([qid]) + zz.tobytes())
-    sof = struct.pack(">BHHB", 8, h, w, len(planes))
-    for ci, (sh, sv) in enumerate(samp):
-        sof += struct.pack(">BBB", ci + 1, (sh << 4) | sv, qids[ci])
-    out += seg(0xC0, sof)
-    for (cls, tid), (bits, vals, _codes) in sorted(tables.items()):
-        body = bytes([((0 if cls == "dc" else 1) << 4) | tid])
-        body += bytes(bits) + bytes(vals)
-        out += seg(0xC4, body)
+    frame, coefs = _prepare_blocks(pixels, subsampling)
+    comps = list(range(len(coefs)))
+    tids = frame["qids"]  # Huffman tables pair luma / chroma like the quant tables
+    ops = _scan_ops((comps, 0, 63, 0, 0), coefs, frame, tids, restart_interval)
+    tables = _huffman_tables(ops)
+    out = _jpeg_frame_header(0xC0, frame)
+    # AC tables before DC tables: the segment order this writer emits
+    out += _dht_segments(sorted(tables.items(), key=lambda t: (-t[0][0], t[0][1])))
     if restart_interval:
-        out += seg(0xDD, struct.pack(">H", restart_interval))
-    sos = bytes([len(planes)])
-    for ci in range(len(planes)):
-        sos += struct.pack(">BB", ci + 1, (tids[ci] << 4) | tids[ci])
-    sos += bytes([0, 63, 0])
-    out += seg(0xDA, sos)
-
-    bw = _BitWriter()
-    preds = [0] * len(planes)
-    mcu_idx = 0
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            if restart_interval and mcu_idx and mcu_idx % restart_interval == 0:
-                bw.pad_to_byte()
-                out += bw.out
-                bw = _BitWriter()
-                rst = (mcu_idx // restart_interval - 1) % 8
-                out += bytes([0xFF, 0xD0 + rst])
-                preds = [0] * len(planes)
-            for ci, (sh, sv) in enumerate(samp):
-                dc_codes = tables[("dc", tids[ci])][2]
-                ac_codes = tables[("ac", tids[ci])][2]
-                for byy in range(sv):
-                    for bxx in range(sh):
-                        preds[ci] = _encode_coef_block(
-                            comp_blocks[ci][my * sv + byy, mx * sh + bxx],
-                            preds[ci], dc_codes, ac_codes, bw,
-                        )
-            mcu_idx += 1
-    bw.pad_to_byte()
-    out += bw.out
-    out += b"\xff\xd9"
-    return bytes(out)
+        out += _jpeg_segment(0xDD, struct.pack(">H", restart_interval))
+    out += _sos_segment(comps, tids, 0, 63, 0, 0)
+    _entropy_scan(out, ops, tables)
+    return bytes(out + b"\xff\xd9")
 
 
 # ---------------------------------------------------------------------------
@@ -1940,71 +1916,53 @@ def _default_scan_script(n_comp: int) -> list[tuple[list[int], int, int, int, in
     return scans
 
 
-def _prog_scan_ops(
+def _check_progressive_scan(n_comps: int, ss: int, se: int) -> None:
+    if ss == 0 and se != 0:
+        raise ValueError("progressive DC scan must have Se=0")
+    if ss and n_comps != 1:
+        raise ValueError("progressive AC scan must be single-component")
+
+
+def _ac_ops(ops: list[tuple], band: list[int], tid: int) -> int:
+    """Run-length code the coefficients of ``band`` up to its last nonzero
+    one (F.1.2.2, G.1.2.2): a ZRL per 16 zeros, then (run << 4 | size) and
+    the magnitude bits. Returns the trailing zero run, which the caller
+    codes as an end of block."""
+    r = 0
+    for v in band:
+        if v == 0:
+            r += 1
+            continue
+        while r > 15:
+            ops.append(("sym", 1, tid, 0xF0))  # ZRL
+            r -= 16
+        s = _bit_category(v)
+        ops.append(("sym", 1, tid, (r << 4) | s))
+        ops.append(("bits", v if v >= 0 else v + (1 << s) - 1, s))
+        r = 0
+    return r
+
+
+def _scan_ops(
     scan: tuple[list[int], int, int, int, int],
     coefs: list[np.ndarray],
-    samp: list[tuple[int, int]],
-    nb: list[tuple[int, int]],
-    mcus_x: int,
-    mcus_y: int,
+    frame: dict,
     tids: list[int],
     restart_interval: int,
 ) -> list[tuple]:
-    """Encode one progressive scan to a symbolic op list:
+    """Encode one scan (comps, Ss, Se, Ah, Al) to a symbolic op list:
     ("sym", class, tid, symbol) / ("bits", value, nbits) / ("rst", n).
-    Two-pass rendering (collect symbols -> build canonical tables -> write
-    bits) falls out of this representation for free."""
-    comps_idx, ss, se, ah, al = scan
+    Ss = 0 with Se > 0 is a sequential scan (each block codes its DC
+    difference and its AC band, ended by EOB); otherwise the scan is a
+    progressive DC or AC band, first pass or refinement. Two-pass rendering
+    (collect symbols -> build canonical tables -> write bits) falls out of
+    this representation for free."""
+    comps, ss, se, ah, al = scan
     ops: list[tuple] = []
-    if ss == 0:  # DC scan (interleaved when >1 component)
-        if se != 0:
-            raise ValueError("progressive DC scan must have Se=0")
-        if len(comps_idx) > 1:
-            units = []
-            for my in range(mcus_y):
-                for mx in range(mcus_x):
-                    blocks = []
-                    for ci in comps_idx:
-                        sh, sv = samp[ci]
-                        for byy in range(sv):
-                            for bxx in range(sh):
-                                blocks.append((ci, my * sv + byy, mx * sh + bxx))
-                    units.append(blocks)
-        else:
-            ci = comps_idx[0]
-            by_n, bx_n = nb[ci]
-            units = [[(ci, by, bx)] for by in range(by_n) for bx in range(bx_n)]
-        preds = {ci: 0 for ci in comps_idx}
-        nrst = 0
-        for ui, blocks in enumerate(units):
-            if restart_interval and ui and ui % restart_interval == 0:
-                ops.append(("rst", nrst % 8))
-                nrst += 1
-                preds = {ci: 0 for ci in comps_idx}
-            for ci, by, bx in blocks:
-                dc = int(coefs[ci][by, bx, 0])
-                if ah == 0:
-                    v = dc >> al  # DC point transform: arithmetic shift
-                    diff = v - preds[ci]
-                    preds[ci] = v
-                    cat = _bit_category(diff)
-                    ops.append(("sym", 0, tids[ci], cat))
-                    if cat:
-                        ops.append(("bits", diff if diff >= 0 else diff + (1 << cat) - 1, cat))
-                else:  # DC refinement: one raw bit per block, no Huffman
-                    ops.append(("bits", (dc >> al) & 1, 1))
-        return ops
-
-    # AC scan: single component only (T.81 G.1.1)
-    if len(comps_idx) != 1:
-        raise ValueError("progressive AC scan must be single-component")
-    ci = comps_idx[0]
-    tid = tids[ci]
-    by_n, bx_n = nb[ci]
     eobrun = 0
     eob_bits: list[int] = []  # correction bits folded into the pending EOB run
 
-    def flush_eob() -> None:
+    def flush_eob(tid: int) -> None:
         nonlocal eobrun
         if eobrun == 0:
             return
@@ -2017,42 +1975,42 @@ def _prog_scan_ops(
         eob_bits.clear()
         eobrun = 0
 
+    preds = dict.fromkeys(comps, 0)
     nrst = 0
-    ui = 0
-    for by in range(by_n):
-        for bx in range(bx_n):
-            if restart_interval and ui and ui % restart_interval == 0:
-                flush_eob()
-                ops.append(("rst", nrst % 8))
-                nrst += 1
-            ui += 1
-            band = [int(v) for v in coefs[ci][by, bx, ss : se + 1]]
+    for ui, unit in enumerate(_scan_units(frame, comps)):
+        if restart_interval and ui and ui % restart_interval == 0:
+            flush_eob(tids[comps[0]])
+            ops.append(("rst", nrst % 8))
+            nrst += 1
+            preds = dict.fromkeys(comps, 0)
+        for ci, by, bx in unit:
+            tid = tids[ci]
+            zz = coefs[ci][by, bx]
+            if ss == 0:
+                dc = int(zz[0])
+                if ah == 0:
+                    v = dc >> al  # DC point transform: arithmetic shift
+                    diff = v - preds[ci]
+                    preds[ci] = v
+                    cat = _bit_category(diff)
+                    ops.append(("sym", 0, tid, cat))
+                    if cat:
+                        ops.append(("bits", diff if diff >= 0 else diff + (1 << cat) - 1, cat))
+                else:  # DC refinement: one raw bit per block, no Huffman
+                    ops.append(("bits", (dc >> al) & 1, 1))
+                if se and _ac_ops(ops, zz[1 : se + 1].tolist(), tid):  # sequential
+                    ops.append(("sym", 1, tid, 0x00))  # EOB
+                continue
+            band = zz[ss : se + 1].tolist()
             if ah == 0:  # first scan of this band: AC point transform
                 t = [v >> al if v >= 0 else -((-v) >> al) for v in band]
-                nz = [i for i, v in enumerate(t) if v]
-                if not nz:
-                    eobrun += 1
-                    if eobrun == 0x7FFF:
-                        flush_eob()
-                    continue
-                flush_eob()
-                r = 0
-                for i in range(nz[-1] + 1):
-                    v = t[i]
-                    if v == 0:
-                        r += 1
+                if any(t):
+                    flush_eob(tid)
+                    if not _ac_ops(ops, t, tid):
                         continue
-                    while r > 15:
-                        ops.append(("sym", 1, tid, 0xF0))  # ZRL
-                        r -= 16
-                    s = _bit_category(v)
-                    ops.append(("sym", 1, tid, (r << 4) | s))
-                    ops.append(("bits", v if v >= 0 else v + (1 << s) - 1, s))
-                    r = 0
-                if nz[-1] < len(t) - 1:
-                    eobrun += 1
-                    if eobrun == 0x7FFF:
-                        flush_eob()
+                eobrun += 1
+                if eobrun == 0x7FFF:
+                    flush_eob(tid)
             else:  # refinement scan (G.1.2.3)
                 absv = [abs(v) >> al for v in band]
                 eob_k = -1  # index of the last newly-nonzero coefficient
@@ -2068,7 +2026,7 @@ def _prog_scan_ops(
                     # fold ZRLs only while more newly-nonzero coefs follow;
                     # otherwise the tail rides the EOB run
                     while r > 15 and i <= eob_k:
-                        flush_eob()
+                        flush_eob(tid)
                         ops.append(("sym", 1, tid, 0xF0))
                         r -= 16
                         for b in br_bits:
@@ -2077,7 +2035,7 @@ def _prog_scan_ops(
                     if a > 1:  # already nonzero: buffer its correction bit
                         br_bits.append(a & 1)
                         continue
-                    flush_eob()
+                    flush_eob(tid)
                     ops.append(("sym", 1, tid, (r << 4) | 1))
                     ops.append(("bits", 1 if band[i] > 0 else 0, 1))  # sign
                     for b in br_bits:
@@ -2088,9 +2046,38 @@ def _prog_scan_ops(
                     eobrun += 1
                     eob_bits.extend(br_bits)
                     if eobrun == 0x7FFF or len(eob_bits) > 900:
-                        flush_eob()
-    flush_eob()
+                        flush_eob(tid)
+    flush_eob(tids[comps[0]])
     return ops
+
+
+def _huffman_tables(ops: list[tuple]) -> dict:
+    """Canonical tables, keyed (class, table id), from the symbols a scan's
+    ops actually use."""
+    syms: dict[tuple[int, int], list[int]] = {}
+    for op in ops:
+        if op[0] == "sym":
+            syms.setdefault((op[1], op[2]), []).append(op[3])
+    return {key: _canonical_table(v) for key, v in sorted(syms.items())}
+
+
+def _entropy_scan(out: bytearray, ops: list[tuple], tables: dict) -> None:
+    """Render a scan's ops as entropy-coded bytes onto ``out``: each restart
+    op pads to a byte boundary and writes its RSTn marker."""
+    bw = _BitWriter()
+    for op in ops:
+        if op[0] == "sym":
+            code, ln = tables[(op[1], op[2])][2][op[3]]
+            bw.write(code, ln)
+        elif op[0] == "bits":
+            bw.write(op[1], op[2])
+        else:  # ("rst", n)
+            bw.pad_to_byte()
+            out += bw.out
+            bw = _BitWriter()
+            out += bytes([0xFF, 0xD0 + op[1]])
+    bw.pad_to_byte()
+    out += bw.out
 
 
 def encode_jpeg_progressive(
@@ -2107,74 +2094,22 @@ def encode_jpeg_progressive(
     entry is (component_indexes, Ss, Se, Ah, Al). Huffman tables are
     rebuilt and re-declared per scan (legal per T.81, and it exercises the
     decoder's table-redefinition path)."""
-    h, w, comp_blocks, samp, qids, mcus_x, mcus_y = _prepare_blocks(pixels, subsampling)
-    n_comp = len(comp_blocks)
-    hmax = max(s[0] for s in samp)
-    vmax = max(s[1] for s in samp)
-    tids = [0] + [1] * (n_comp - 1)
-    qtables = {0: _QTABLE_LUMA, 1: _QTABLE_CHROMA}
-    # zigzag-ordered coefficient grids: (by, bx, 64)
-    coefs = [
-        cb.reshape(cb.shape[0], cb.shape[1], 64)[:, :, _ZIGZAG] for cb in comp_blocks
-    ]
-    # non-interleaved per-component block grids (T.81 A.2.2: ceil of the
-    # scaled dimensions, NOT the MCU-padded grid)
-    nb = []
-    for sh, sv in samp:
-        cw, ch = -(-w * sh // hmax), -(-h * sv // vmax)
-        nb.append((-(-ch // 8), -(-cw // 8)))
+    frame, coefs = _prepare_blocks(pixels, subsampling)
+    tids = frame["qids"]  # Huffman tables pair luma / chroma like the quant tables
     if scans is None:
-        scans = _default_scan_script(n_comp)
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xE0, b"JFIF\x00\x01\x02\x00\x00\x01\x00\x01\x00\x00")
-    for qid in sorted(set(qids)):
-        zz = qtables[qid].flatten()[_ZIGZAG].astype(np.uint8)
-        out += seg(0xDB, bytes([qid]) + zz.tobytes())
-    sof = struct.pack(">BHHB", 8, h, w, n_comp)
-    for ci, (sh, sv) in enumerate(samp):
-        sof += struct.pack(">BBB", ci + 1, (sh << 4) | sv, qids[ci])
-    out += seg(0xC2, sof)
+        scans = _default_scan_script(len(coefs))
+    out = _jpeg_frame_header(0xC2, frame)
     if restart_interval:
-        out += seg(0xDD, struct.pack(">H", restart_interval))
-
+        out += _jpeg_segment(0xDD, struct.pack(">H", restart_interval))
     for scan in scans:
-        comps_idx, ss, se, ah, al = scan
-        ops = _prog_scan_ops(scan, coefs, samp, nb, mcus_x, mcus_y, tids, restart_interval)
+        comps, ss, se, ah, al = scan
+        _check_progressive_scan(len(comps), ss, se)
+        ops = _scan_ops(scan, coefs, frame, tids, restart_interval)
         # per-scan canonical tables from the symbols the scan actually uses
-        syms: dict[tuple[int, int], list[int]] = {}
-        for op in ops:
-            if op[0] == "sym":
-                syms.setdefault((op[1], op[2]), []).append(op[3])
-        tables = {key: _canonical_table(v) for key, v in sorted(syms.items())}
-        for (cls, tid), (bits, vals, _codes) in tables.items():
-            out += seg(0xC4, bytes([(cls << 4) | tid]) + bytes(bits) + bytes(vals))
-        sos = bytes([len(comps_idx)])
-        for ci in comps_idx:
-            td = tids[ci] if (ss == 0 and ah == 0) else 0
-            ta = tids[ci] if ss > 0 else 0
-            sos += struct.pack(">BB", ci + 1, (td << 4) | ta)
-        sos += bytes([ss, se, (ah << 4) | al])
-        out += seg(0xDA, sos)
-        bw = _BitWriter()
-        for op in ops:
-            if op[0] == "sym":
-                code, ln = tables[(op[1], op[2])][2][op[3]]
-                bw.write(code, ln)
-            elif op[0] == "bits":
-                bw.write(op[1], op[2])
-            else:  # ("rst", n)
-                bw.pad_to_byte()
-                out += bw.out
-                bw = _BitWriter()
-                out += bytes([0xFF, 0xD0 + op[1]])
-        bw.pad_to_byte()
-        out += bw.out
-    out += b"\xff\xd9"
-    return bytes(out)
+        tables = _huffman_tables(ops)
+        out += _dht_segments(tables.items()) + _sos_segment(comps, tids, ss, se, ah, al)
+        _entropy_scan(out, ops, tables)
+    return bytes(out + b"\xff\xd9")
 
 
 class _BitReader:
@@ -2266,28 +2201,20 @@ def _extend(v: int, cat: int) -> int:
 
 @_codec_guard("jpeg")
 def decode_jpeg(payload: bytes) -> dict:
-    """Full baseline JPEG pixel decode: marker walk, stream-declared
-    quant/Huffman tables, entropy decode with restart handling, IDCT,
-    chroma upsample, YCbCr->RGB. Returns the common pixel-statistics
-    record (+ the pixel array under 'pixels'). Progressive (SOF2) streams
-    route to the full multi-scan decoder; arithmetic coding raises
-    honestly."""
-    if payload[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG: missing SOI")
+    """Full JPEG pixel decode, sequential (SOF0/SOF1) and progressive
+    (SOF2): marker walk, stream-declared quant/Huffman tables (redefinable
+    between scans), every scan's entropy decode with restart handling into
+    per-component coefficient grids, then one dequantize + IDCT pass,
+    chroma upsample and YCbCr->RGB. Returns the common pixel-statistics
+    record (+ the pixel array under 'pixels'). Other frame types
+    (lossless, hierarchical, arithmetic) raise NotImplementedError."""
     qtables: dict[int, np.ndarray] = {}
     huff: dict[tuple[int, int], _HuffDecoder] = {}
     restart_interval = 0
     frame = None
-    pos = 2
-    while True:
-        if payload[pos] != 0xFF:
-            raise ValueError(f"marker sync lost at {pos}")
-        marker = payload[pos + 1]
-        if marker == 0xD9:
-            raise ValueError("no scan data before EOI")
-        (seg_len,) = struct.unpack_from(">H", payload, pos + 2)
-        body = payload[pos + 4 : pos + 2 + seg_len]
-        pos += 2 + seg_len
+    coefs: list[np.ndarray] = []
+    saw_scan = False
+    for marker, body, pos in _jpeg_segments(payload):
         if marker == 0xDB:  # DQT (possibly several tables per segment)
             i = 0
             while i < len(body):
@@ -2311,126 +2238,65 @@ def decode_jpeg(payload: bytes) -> dict:
                 vals = list(body[i + 17 : i + 17 + n])
                 huff[(cls, tid)] = _HuffDecoder(bits, vals)
                 i += 17 + n
-        elif marker in (0xC1, 0xC0):  # SOF0/1 baseline
-            precision, h, w, n_comp = struct.unpack_from(">BHHB", body, 0)
-            _check_dims(w, h, "jpeg")
-            comps = []
-            for c in range(n_comp):
-                cid, sampv, qid = struct.unpack_from(">BBB", body, 6 + 3 * c)
-                comps.append({"id": cid, "h": sampv >> 4, "v": sampv & 0xF, "q": qid})
-            frame = {"precision": precision, "h": h, "w": w, "comps": comps}
-        elif marker == 0xC2:  # SOF2 progressive -> multi-scan path (r11)
-            return _decode_progressive(payload)
-        elif marker in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-            raise NotImplementedError(
-                f"only baseline (SOF0/1) and progressive (SOF2) supported, "
-                f"got SOF marker {marker:#x}"
-            )
+        elif marker in _SOF_MARKERS:
+            if frame is not None:
+                raise ValueError("multiple SOF markers")
+            frame = _jpeg_frame(marker, body)
+            coefs = [
+                np.zeros((frame["mcus_y"] * sv, frame["mcus_x"] * sh, 64), dtype=np.int64)
+                for sh, sv in frame["samp"]
+            ]
         elif marker == 0xDD:  # DRI
             (restart_interval,) = struct.unpack_from(">H", body, 0)
-        elif marker == 0xDA:  # SOS -> entropy-coded data follows
+        elif marker == 0xDA:  # SOS
             if frame is None:
                 raise ValueError("SOS before SOF")
-            n_scan = body[0]
-            scan_tables = {}
-            for c in range(n_scan):
-                cid, tsel = struct.unpack_from(">BB", body, 1 + 2 * c)
-                scan_tables[cid] = (tsel >> 4, tsel & 0xF)
-            break
-    comps = frame["comps"]
+            _decode_scan(payload, pos, body, frame, coefs, huff, restart_interval)
+            saw_scan = True
+        # other segments (APPn, COM) are skipped
+    if not saw_scan:
+        raise ValueError("no scan data before EOI")
+    planes = []
+    for arr, qid in zip(coefs, frame["qids"]):
+        if qid not in qtables:
+            raise ValueError("frame references undefined quant table")
+        by, bx = arr.shape[:2]
+        plane = np.zeros((by * 8, bx * 8), dtype=np.uint8)
+        for i in range(by):
+            for j in range(bx):
+                qcoef = np.zeros(64, dtype=np.int64)
+                qcoef[_ZIGZAG] = arr[i, j]
+                plane[i * 8 : i * 8 + 8, j * 8 : j * 8 + 8] = _dequant_idct(
+                    qcoef.reshape(8, 8), qtables[qid]
+                )
+        planes.append(plane)
+    return _finish_planes(frame, planes)
+
+
+def _finish_planes(frame: dict, planes: list[np.ndarray]) -> dict:
+    """Decode tail: crop, chroma upsample, color convert, stats."""
     h, w = frame["h"], frame["w"]
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
-    mcus_x = -(-w // (8 * hmax))
-    mcus_y = -(-h // (8 * vmax))
-    planes = {}
-    for c in comps:
-        planes[c["id"]] = np.zeros(
-            (mcus_y * c["v"] * 8, mcus_x * c["h"] * 8), dtype=np.uint8
-        )
-    # T.81 defines the interleave by SOS scan-component order, not SOF frame
-    # order — iterate components as the scan declares them (B.2.3).
-    scan_order = {cid: i for i, cid in enumerate(scan_tables)}
-    if set(scan_order) != {c["id"] for c in comps}:
-        raise ValueError("SOS component set does not match SOF frame components")
-    comps_scan = sorted(comps, key=lambda c: scan_order[c["id"]])
-    br = _BitReader(payload, pos)
-    preds = {c["id"]: 0 for c in comps}
-    mcu_idx = 0
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            if restart_interval and mcu_idx and mcu_idx % restart_interval == 0:
-                br.align_and_expect_rst()
-                preds = {c["id"]: 0 for c in comps}
-            for c in comps_scan:
-                dc_key = (0, scan_tables[c["id"]][0])
-                ac_key = (1, scan_tables[c["id"]][1])
-                if dc_key not in huff or ac_key not in huff:
-                    raise ValueError("scan references undefined Huffman table")
-                if c["q"] not in qtables:
-                    raise ValueError("frame references undefined quant table")
-                dc_t = huff[dc_key]
-                ac_t = huff[ac_key]
-                qt = qtables[c["q"]]
-                for byy in range(c["v"]):
-                    for bxx in range(c["h"]):
-                        zz = np.zeros(64, dtype=np.int64)
-                        cat = dc_t.decode(br)
-                        diff = _extend(br.read(cat), cat) if cat else 0
-                        preds[c["id"]] += diff
-                        zz[0] = preds[c["id"]]
-                        k = 1
-                        while k < 64:
-                            sym = ac_t.decode(br)
-                            if sym == 0x00:  # EOB
-                                break
-                            if sym == 0xF0:  # ZRL
-                                k += 16
-                                continue
-                            k += sym >> 4
-                            cat = sym & 0xF
-                            if k > 63:
-                                raise ValueError("AC index overrun")
-                            zz[k] = _extend(br.read(cat), cat)
-                            k += 1
-                        qcoef = np.zeros(64, dtype=np.int64)
-                        qcoef[_ZIGZAG] = zz
-                        block = _dequant_idct(qcoef.reshape(8, 8), qt)
-                        y0 = (my * c["v"] + byy) * 8
-                        x0 = (mx * c["h"] + bxx) * 8
-                        planes[c["id"]][y0 : y0 + 8, x0 : x0 + 8] = block
-            mcu_idx += 1
-    return _finish_planes(comps, planes, h, w, hmax, vmax)
-
-
-def _finish_planes(comps, planes, h, w, hmax, vmax) -> dict:
-    """Shared decode tail: crop, chroma upsample, color convert, stats —
-    identical for the baseline and progressive paths."""
-    if len(comps) == 1:
-        px = planes[comps[0]["id"]][:h, :w]
-        out_px = px
+    if len(planes) == 1:
+        px = planes[0][:h, :w]
     else:
-        up = {}
-        for c in comps:
-            p = planes[c["id"]]
-            fy, fx = vmax // c["v"], hmax // c["h"]
+        up = []
+        for (sh, sv), p in zip(frame["samp"], planes):
+            fy, fx = frame["vmax"] // sv, frame["hmax"] // sh
             if fy > 1 or fx > 1:  # nearest-neighbor upsample
                 p = np.repeat(np.repeat(p, fy, axis=0), fx, axis=1)
-            up[c["id"]] = p[:h, :w]
-        ids = [c["id"] for c in comps]
-        out_px = _ycbcr_to_rgb(up[ids[0]], up[ids[1]], up[ids[2]])
-        px = out_px
+            up.append(p[:h, :w])
+        px = _ycbcr_to_rgb(up[0], up[1], up[2])
     flat = px.astype(np.int64)
     return {
         "width": w,
         "height": h,
         "bit_depth": 8,
-        "color_type": len(comps),
+        "color_type": len(planes),
         "n_px": int(flat.size),
         "px_sum": int(flat.sum()),
         "px_min": int(flat.min()),
         "px_max": int(flat.max()),
-        "pixels": out_px,
+        "pixels": px,
     }
 
 
@@ -2442,264 +2308,140 @@ def _refine_nonzero(blk: np.ndarray, k: int, br: _BitReader, p1: int, m1: int) -
         blk[k] += p1 if blk[k] >= 0 else m1
 
 
-def _decode_prog_scan(
+def _decode_scan(
     payload: bytes,
     pos: int,
+    sos: bytes,
     frame: dict,
-    coefs: dict[int, np.ndarray],
+    coefs: list[np.ndarray],
     huff: dict[tuple[int, int], _HuffDecoder],
     restart_interval: int,
-    scomps: list[tuple[int, int, int]],
-    ss: int,
-    se: int,
-    ah: int,
-    al: int,
-) -> int:
-    """Decode one progressive scan's entropy segment into the coefficient
-    grids (zigzag order). Returns the byte offset of the next marker."""
-    comps = {c["id"]: c for c in frame["comps"]}
-    br = _BitReader(payload, pos)
-    if ss == 0:  # DC scan
-        if se != 0:
-            raise ValueError("progressive DC scan must have Se=0")
-        if len(scomps) > 1:
-            units = []
-            for my in range(frame["mcus_y"]):
-                for mx in range(frame["mcus_x"]):
-                    blocks = []
-                    for cid, td, _ta in scomps:
-                        c = comps[cid]
-                        for byy in range(c["v"]):
-                            for bxx in range(c["h"]):
-                                blocks.append((cid, my * c["v"] + byy, mx * c["h"] + bxx, td))
-                    units.append(blocks)
-        else:
-            cid, td, _ta = scomps[0]
-            by_n, bx_n = frame["nb"][cid]
-            units = [[(cid, by, bx, td)] for by in range(by_n) for bx in range(bx_n)]
-        preds = {cid: 0 for cid, _td, _ta in scomps}
-        for ui, blocks in enumerate(units):
-            if restart_interval and ui and ui % restart_interval == 0:
-                br.align_and_expect_rst()
-                preds = {cid: 0 for cid, _td, _ta in scomps}
-            for cid, by, bx, td in blocks:
-                blk = coefs[cid][by, bx]
-                if ah == 0:
-                    if (0, td) not in huff:
-                        raise ValueError("scan references undefined Huffman table")
-                    cat = huff[(0, td)].decode(br)
-                    diff = _extend(br.read(cat), cat) if cat else 0
-                    preds[cid] += diff
-                    blk[0] = preds[cid] << al
-                else:  # DC refinement: one raw bit, OR into magnitude bit Al
-                    if br.read(1):
-                        blk[0] = int(blk[0]) | (1 << al)
-    else:  # AC scan: single component
-        if len(scomps) != 1:
-            raise ValueError("progressive AC scan must be single-component")
-        cid, _td, ta = scomps[0]
-        if (1, ta) not in huff:
+) -> None:
+    """Decode the scan whose SOS header is ``sos`` and whose entropy-coded
+    segment starts at ``pos`` into the zigzag coefficient grids: a
+    sequential scan (T.81 F.2) codes each block's DC difference and AC
+    band; a progressive scan (G.2) one DC or AC band, first pass or
+    refinement."""
+    n_scan = sos[0]
+    comps = []
+    for c in range(n_scan):
+        cid, tsel = struct.unpack_from(">BB", sos, 1 + 2 * c)
+        if cid not in frame["ids"]:
+            raise ValueError("SOS component set does not match SOF frame components")
+        comps.append((frame["ids"].index(cid), tsel >> 4, tsel & 0xF))
+    if frame["progressive"]:
+        ss, se, ahal = sos[1 + 2 * n_scan : 4 + 2 * n_scan]
+        ah, al = ahal >> 4, ahal & 0xF
+        _check_progressive_scan(n_scan, ss, se)
+    else:  # sequential: every scan codes the whole band, no point transform
+        ss, se, ah, al = 0, 63, 0, 0
+    tables = {}
+    for ci, td, ta in comps:
+        keys = [(0, td)] * (ss == 0 and ah == 0) + [(1, ta)] * (ss > 0 or se > 0)
+        if any(k not in huff for k in keys):
             raise ValueError("scan references undefined Huffman table")
-        ac = huff[(1, ta)]
-        by_n, bx_n = frame["nb"][cid]
-        arr = coefs[cid]
-        p1, m1 = 1 << al, -(1 << al)
-        eobrun = 0
-        ui = 0
-        for by in range(by_n):
-            for bx in range(bx_n):
-                if restart_interval and ui and ui % restart_interval == 0:
-                    br.align_and_expect_rst()
-                    eobrun = 0
-                ui += 1
-                blk = arr[by, bx]
-                if ah == 0:  # first scan of this band
-                    if eobrun:
-                        eobrun -= 1
+        tables[ci] = (huff.get((0, td)), huff.get((1, ta)))
+    br = _BitReader(payload, pos)
+    p1, m1 = 1 << al, -(1 << al)
+    preds = dict.fromkeys(tables, 0)
+    eobrun = 0
+    for ui, unit in enumerate(_scan_units(frame, [ci for ci, _td, _ta in comps])):
+        if restart_interval and ui and ui % restart_interval == 0:
+            br.align_and_expect_rst()
+            preds = dict.fromkeys(tables, 0)
+            eobrun = 0
+        for ci, by, bx in unit:
+            blk = coefs[ci][by, bx]
+            dc, ac = tables[ci]
+            if ss == 0:
+                if ah == 0:
+                    cat = dc.decode(br)
+                    preds[ci] += _extend(br.read(cat), cat) if cat else 0
+                    blk[0] = preds[ci] << al
+                elif br.read(1):  # DC refinement: OR into magnitude bit Al
+                    blk[0] = int(blk[0]) | p1
+                k = 1
+                while k <= se:  # sequential AC band (F.2.2.2): EOB ends it
+                    sym = ac.decode(br)
+                    if sym == 0x00:
+                        break
+                    if sym == 0xF0:  # ZRL
+                        k += 16
                         continue
-                    k = ss
+                    k += sym >> 4
+                    cat = sym & 0xF
+                    if k > 63:
+                        raise ValueError("AC index overrun")
+                    blk[k] = _extend(br.read(cat), cat)
+                    k += 1
+            elif ah == 0:  # first scan of a progressive AC band
+                if eobrun:
+                    eobrun -= 1
+                    continue
+                k = ss
+                while k <= se:
+                    sym = ac.decode(br)
+                    r, s = sym >> 4, sym & 15
+                    if s == 0:
+                        if r == 15:  # ZRL
+                            k += 16
+                            continue
+                        eobrun = (1 << r) - 1
+                        if r:
+                            eobrun += br.read(r)
+                        break
+                    k += r
+                    if k > se:
+                        raise ValueError("AC index overrun")
+                    blk[k] = _extend(br.read(s), s) << al
+                    k += 1
+            else:  # refinement scan
+                k = ss
+                if eobrun == 0:
                     while k <= se:
                         sym = ac.decode(br)
                         r, s = sym >> 4, sym & 15
-                        if s == 0:
-                            if r == 15:  # ZRL
-                                k += 16
-                                continue
-                            eobrun = (1 << r) - 1
+                        val = 0
+                        if s:
+                            if s != 1:
+                                raise ValueError(
+                                    "invalid magnitude in AC refinement scan"
+                                )
+                            val = p1 if br.read(1) else m1
+                        elif r != 15:  # EOB run (ZRL keeps r=15, val=0)
+                            eobrun = 1 << r
                             if r:
                                 eobrun += br.read(r)
                             break
-                        k += r
-                        if k > se:
-                            raise ValueError("AC index overrun")
-                        blk[k] = _extend(br.read(s), s) << al
-                        k += 1
-                else:  # refinement scan
-                    k = ss
-                    if eobrun == 0:
-                        while k <= se:
-                            sym = ac.decode(br)
-                            r, s = sym >> 4, sym & 15
-                            val = 0
-                            if s:
-                                if s != 1:
-                                    raise ValueError(
-                                        "invalid magnitude in AC refinement scan"
-                                    )
-                                val = p1 if br.read(1) else m1
-                            elif r != 15:  # EOB run (ZRL keeps r=15, val=0)
-                                eobrun = 1 << r
-                                if r:
-                                    eobrun += br.read(r)
-                                break
-                            # advance over r zero-history coefficients,
-                            # applying correction bits at nonzero ones
-                            while k <= se:
-                                if blk[k]:
-                                    _refine_nonzero(blk, k, br, p1, m1)
-                                else:
-                                    if r == 0:
-                                        break
-                                    r -= 1
-                                k += 1
-                            if val:
-                                if k > se:
-                                    raise ValueError("AC index overrun")
-                                blk[k] = val
-                            k += 1
-                    if eobrun:
-                        # rest of the band rides the EOB run: correction
-                        # bits only, for coefficients already nonzero
+                        # advance over r zero-history coefficients,
+                        # applying correction bits at nonzero ones
                         while k <= se:
                             if blk[k]:
                                 _refine_nonzero(blk, k, br, p1, m1)
+                            else:
+                                if r == 0:
+                                    break
+                                r -= 1
                             k += 1
-                        eobrun -= 1
-    # skip pad bits; the next marker starts the next scan segment
-    p = br.pos
-    while p + 1 < len(payload) and not (payload[p] == 0xFF and payload[p + 1] != 0x00):
-        p += 1
-    if p + 1 >= len(payload):
-        raise ValueError("entropy-coded data truncated before scan complete")
-    return p
-
-
-def _decode_progressive(payload: bytes) -> dict:
-    """Full progressive (SOF2) JPEG decode: multi-scan marker walk,
-    coefficient accumulation across spectral-selection and successive-
-    approximation scans, then one dequantize+IDCT pass and the shared
-    finish (crop / upsample / color convert / stats)."""
-    if payload[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG: missing SOI")
-    qtables: dict[int, np.ndarray] = {}
-    huff: dict[tuple[int, int], _HuffDecoder] = {}
-    restart_interval = 0
-    frame = None
-    coefs: dict[int, np.ndarray] = {}
-    saw_scan = False
-    pos = 2
-    while True:
-        if pos + 2 > len(payload):
-            raise ValueError("truncated before EOI")
-        if payload[pos] != 0xFF:
-            raise ValueError(f"marker sync lost at {pos}")
-        marker = payload[pos + 1]
-        if marker == 0xD9:  # EOI
-            break
-        if 0xD0 <= marker <= 0xD7:  # stray RSTn between segments: corrupt
-            raise ValueError("restart marker outside entropy-coded data")
-        (seg_len,) = struct.unpack_from(">H", payload, pos + 2)
-        body = payload[pos + 4 : pos + 2 + seg_len]
-        pos += 2 + seg_len
-        if marker == 0xDB:  # DQT
-            i = 0
-            while i < len(body):
-                prec, tid = body[i] >> 4, body[i] & 0xF
-                i += 1
-                if prec:
-                    vals = np.frombuffer(body[i : i + 128], dtype=">u2").astype(np.int64)
-                    i += 128
-                else:
-                    vals = np.frombuffer(body[i : i + 64], dtype=np.uint8).astype(np.int64)
-                    i += 64
-                t = np.zeros(64, dtype=np.int64)
-                t[_ZIGZAG] = vals
-                qtables[tid] = t.reshape(8, 8)
-        elif marker == 0xC4:  # DHT (tables may be redefined between scans)
-            i = 0
-            while i < len(body):
-                cls, tid = body[i] >> 4, body[i] & 0xF
-                bits = list(body[i + 1 : i + 17])
-                n = sum(bits)
-                vals = list(body[i + 17 : i + 17 + n])
-                huff[(cls, tid)] = _HuffDecoder(bits, vals)
-                i += 17 + n
-        elif marker == 0xC2:  # SOF2
-            if frame is not None:
-                raise ValueError("multiple SOF markers")
-            precision, h, w, n_comp = struct.unpack_from(">BHHB", body, 0)
-            _check_dims(w, h, "jpeg")
-            comps = []
-            for c in range(n_comp):
-                cid, sampv, qid = struct.unpack_from(">BBB", body, 6 + 3 * c)
-                comps.append({"id": cid, "h": sampv >> 4, "v": sampv & 0xF, "q": qid})
-            hmax = max(c["h"] for c in comps)
-            vmax = max(c["v"] for c in comps)
-            mcus_x = -(-w // (8 * hmax))
-            mcus_y = -(-h // (8 * vmax))
-            nb = {}
-            for c in comps:
-                cw, ch = -(-w * c["h"] // hmax), -(-h * c["v"] // vmax)
-                nb[c["id"]] = (-(-ch // 8), -(-cw // 8))
-                coefs[c["id"]] = np.zeros(
-                    (mcus_y * c["v"], mcus_x * c["h"], 64), dtype=np.int64
-                )
-            frame = {
-                "precision": precision, "h": h, "w": w, "comps": comps,
-                "hmax": hmax, "vmax": vmax, "mcus_x": mcus_x, "mcus_y": mcus_y,
-                "nb": nb,
-            }
-        elif marker in (0xC0, 0xC1):
-            raise ValueError("baseline SOF in progressive decode path")
-        elif marker == 0xDD:  # DRI
-            (restart_interval,) = struct.unpack_from(">H", body, 0)
-        elif marker == 0xDA:  # SOS
-            if frame is None:
-                raise ValueError("SOS before SOF")
-            n_scan = body[0]
-            scomps = []
-            for c in range(n_scan):
-                cid, tsel = struct.unpack_from(">BB", body, 1 + 2 * c)
-                if cid not in coefs:
-                    raise ValueError("SOS component not declared in SOF frame")
-                scomps.append((cid, tsel >> 4, tsel & 0xF))
-            ss, se, ahal = body[1 + 2 * n_scan : 4 + 2 * n_scan]
-            pos = _decode_prog_scan(
-                payload, pos, frame, coefs, huff, restart_interval,
-                scomps, ss, se, ahal >> 4, ahal & 0xF,
-            )
-            saw_scan = True
-        # other segments (APPn, COM) are skipped
-    if frame is None or not saw_scan:
-        raise ValueError("no scan data before EOI")
-    comps = frame["comps"]
-    planes = {}
-    for c in comps:
-        if c["q"] not in qtables:
-            raise ValueError("frame references undefined quant table")
-        qt = qtables[c["q"]]
-        arr = coefs[c["id"]]
-        by, bx = arr.shape[:2]
-        plane = np.zeros((by * 8, bx * 8), dtype=np.uint8)
-        for i in range(by):
-            for j in range(bx):
-                qcoef = np.zeros(64, dtype=np.int64)
-                qcoef[_ZIGZAG] = arr[i, j]
-                plane[i * 8 : i * 8 + 8, j * 8 : j * 8 + 8] = _dequant_idct(
-                    qcoef.reshape(8, 8), qt
-                )
-        planes[c["id"]] = plane
-    return _finish_planes(comps, planes, frame["h"], frame["w"], frame["hmax"], frame["vmax"])
+                        if val:
+                            if k > se:
+                                raise ValueError("AC index overrun")
+                            blk[k] = val
+                        k += 1
+                if eobrun:
+                    # rest of the band rides the EOB run: correction
+                    # bits only, for coefficients already nonzero
+                    while k <= se:
+                        if blk[k]:
+                            _refine_nonzero(blk, k, br, p1, m1)
+                        k += 1
+                    eobrun -= 1
+    # past the pad bits, an RSTn after the last unit lies outside the scan
+    p = payload.find(b"\xff", br.pos)
+    while 0 <= p < len(payload) - 1 and payload[p + 1] == 0:
+        p = payload.find(b"\xff", p + 2)
+    if 0 <= p < len(payload) - 1 and 0xD0 <= payload[p + 1] <= 0xD7:
+        raise ValueError("restart marker outside entropy-coded data")
 
 
 JPEG_DECODED_SCHEMA = (
@@ -2711,20 +2453,9 @@ JPEG_DECODED_SCHEMA = (
 def decode_jpeg_df(df: DataFrame, payload_col: str = "payload", id_col: str = "id") -> DataFrame:
     """Distributed full-pixel JPEG decode -> exact integer pixel statistics.
     One Arrow-batched mapInPandas pass, no shuffle (partition = files)."""
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = []
-            for b in pdf[payload_col]:
-                rec = decode_jpeg(bytes(b))
-                rec.pop("pixels")
-                rec.pop("bit_depth")
-                recs.append(rec)
-            out = pd.DataFrame(recs)
-            out.insert(0, "id", pdf[id_col].values)
-            yield out
-
-    return df.mapInPandas(_decode, schema=JPEG_DECODED_SCHEMA)
+    return _quarantine_map(
+        df, payload_col, id_col, _record_rows(decode_jpeg, JPEG_DECODED_SCHEMA), JPEG_DECODED_SCHEMA, "raise"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -2899,12 +2630,6 @@ def parse_image(payload: bytes) -> dict:
     raise ValueError("unrecognized image magic")
 
 
-_IMAGE_FIELDS = [
-    "format", "width", "height", "bit_depth", "color_type",
-    "n_px", "px_sum", "px_min", "px_max",
-]
-
-
 def parse_image_pixels(payload: bytes) -> np.ndarray:
     """Magic-sniffing decode to the pixel ARRAY ((h, w) gray or (h, w, c)
     color uint8) for the perceptual-hash path — same format routing as
@@ -2998,26 +2723,31 @@ def _quarantine_policy(errors: str) -> None:
         raise ValueError(f"errors must be raise/null/skip, got {errors!r}")
 
 
+def _fields(schema: str) -> list[str]:
+    """The column names of a DDL schema string, less its leading id."""
+    return [f.split()[0] for f in schema.split(", ")][1:]
+
+
 def _quarantine_map(
     df: DataFrame,
     payload_col: str,
     id_col: str,
     decode,
-    columns: list[str],
     schema: str,
     errors: str,
 ) -> DataFrame:
-    """The per-payload kernel of every media decoder with an ``errors``
-    policy: one Arrow-batched mapInPandas pass, no shuffle, in which
-    ``decode(payload bytes)`` returns that payload's output rows (tuples
-    over ``columns``; the id is prepended). A payload whose decode raises
-    ValueError or NotImplementedError (MediaCodecError is a ValueError)
-    fails the job under ``"raise"``, is dropped under ``"skip"``, and under
-    ``"null"`` becomes one dead-letter row: null fields, the message in an
-    extra ``error`` column. ``schema`` is the raise-mode output; both
-    tolerant modes add ``error string`` (NULL on good rows), so they share
-    one schema."""
+    """The per-payload kernel of every media decoder: one Arrow-batched
+    mapInPandas pass, no shuffle, in which ``decode(payload bytes)``
+    returns that payload's output rows (tuples over the ``schema``
+    columns after its leading id; the id is prepended). A payload whose
+    decode raises ValueError or NotImplementedError (MediaCodecError is a
+    ValueError) fails the job under ``"raise"``, is dropped under
+    ``"skip"``, and under ``"null"`` becomes one dead-letter row: null
+    fields, the message in an extra ``error`` column. ``schema`` is the
+    raise-mode output; both tolerant modes add ``error string`` (NULL on
+    good rows), so they share one schema."""
     _quarantine_policy(errors)
+    columns = _fields(schema)
     names = ["id", *columns, "error"]
     dead = (None,) * len(columns)
 
@@ -3038,6 +2768,18 @@ def _quarantine_map(
             yield frame.drop(columns=["error"]) if errors == "raise" else frame
 
     return df.mapInPandas(_run, schema=schema if errors == "raise" else schema + ", error string")
+
+
+def _record_rows(parse, schema: str):
+    """``decode`` for :func:`_quarantine_map` from a parser returning one
+    record per payload: its one row holds the record's ``schema`` fields."""
+    fields = _fields(schema)
+
+    def rows(payload: bytes) -> list[tuple]:
+        rec = parse(payload)
+        return [tuple(rec[f] for f in fields)]
+
+    return rows
 
 
 def decode_image(
@@ -3064,11 +2806,9 @@ def decode_image(
     A 100 TB crawl corpus WILL contain truncated files; the tolerant modes
     are why one bad byte never loses the other 99.999% of a batch."""
 
-    def _decode(payload: bytes) -> list[tuple]:
-        rec = parse_image(payload)
-        return [tuple(rec[f] for f in _IMAGE_FIELDS)]
-
-    return _quarantine_map(df, payload_col, id_col, _decode, _IMAGE_FIELDS, IMAGE_DECODED_SCHEMA, errors)
+    return _quarantine_map(
+        df, payload_col, id_col, _record_rows(parse_image, IMAGE_DECODED_SCHEMA), IMAGE_DECODED_SCHEMA, errors
+    )
 
 
 JPEG_META_SCHEMA = (
@@ -3077,17 +2817,11 @@ JPEG_META_SCHEMA = (
 
 
 def decode_jpeg_meta(df: DataFrame, payload_col: str = "payload", id_col: str = "id") -> DataFrame:
-    """Distributed JPEG header-metadata decode (marker walk; honest about
-    not recovering pixels — see parse_jpeg_meta)."""
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = [parse_jpeg_meta(bytes(b)) for b in pdf[payload_col]]
-            out = pd.DataFrame(recs)
-            out.insert(0, "id", pdf[id_col].values)
-            yield out
-
-    return df.mapInPandas(_decode, schema=JPEG_META_SCHEMA)
+    """Distributed JPEG header-metadata decode (marker walk, no entropy
+    decode — see parse_jpeg_meta)."""
+    return _quarantine_map(
+        df, payload_col, id_col, _record_rows(parse_jpeg_meta, JPEG_META_SCHEMA), JPEG_META_SCHEMA, "raise"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -3108,6 +2842,20 @@ def _riff_chunk(tag: bytes, body: bytes) -> bytes:
 
 def _riff_list(list_type: bytes, body: bytes) -> bytes:
     return _riff_chunk(b"LIST", list_type + body)
+
+
+def _riff_chunks(data: bytes, pos: int) -> Iterator[tuple[bytes, int, bytes]]:
+    """The one RIFF chunk walk: (fourcc, offset, body) for each chunk from
+    ``pos`` on, word-aligned (an odd-length body is followed by a pad
+    byte). Raises on a chunk whose body runs past the data."""
+    while pos + 8 <= len(data):
+        tag = data[pos : pos + 4]
+        (ln,) = struct.unpack_from("<I", data, pos + 4)
+        body = data[pos + 8 : pos + 8 + ln]
+        if len(body) != ln:
+            raise ValueError(f"truncated RIFF chunk {tag!r}")
+        yield tag, pos, body
+        pos += 8 + ln + (ln & 1)
 
 
 def encode_avi(
@@ -3254,8 +3002,7 @@ def encode_avi(
             _emit_audio(audio_chunks[i])
     for a in audio_chunks[len(payloads):]:  # leftover blocks trail the video
         _emit_audio(a)
-    body = b"AVI " + hdrl + _riff_list(b"movi", movi_body) + _riff_chunk(b"idx1", idx)
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    return _riff_chunk(b"RIFF", b"AVI " + hdrl + _riff_list(b"movi", movi_body) + _riff_chunk(b"idx1", idx))
 
 
 @_codec_guard("avi")
@@ -3275,49 +3022,23 @@ def parse_avi(payload: bytes, return_frames: bool = False) -> dict:
     streams: list[list[bytes | None]] = []  # per-strl [strh, strf]
     chunks: list[tuple[bytes, int, bytes]] = []  # (ckid, offset_in_movi, body)
     idx1 = None
-
-    def walk_hdrl(body: bytes) -> None:
-        nonlocal avih
-        p = 0
-        while p + 8 <= len(body):
-            tag = body[p : p + 4]
-            (ln,) = struct.unpack_from("<I", body, p + 4)
-            sub = body[p + 8 : p + 8 + ln]
-            p += 8 + ln + (ln & 1)
-            if tag == b"avih":
-                avih = struct.unpack_from("<14I", sub, 0)
-            elif tag == b"LIST" and sub[:4] == b"strl":
-                pair: list[bytes | None] = [None, None]
-                q = 4
-                while q + 8 <= len(sub):
-                    stag = sub[q : q + 4]
-                    (sln,) = struct.unpack_from("<I", sub, q + 4)
-                    sbody = sub[q + 8 : q + 8 + sln]
-                    q += 8 + sln + (sln & 1)
-                    if stag == b"strh" and pair[0] is None:
-                        pair[0] = sbody
-                    elif stag == b"strf" and pair[1] is None:
-                        pair[1] = sbody
-                streams.append(pair)
-
-    pos = 12
-    while pos + 8 <= len(payload):
-        tag = payload[pos : pos + 4]
-        (ln,) = struct.unpack_from("<I", payload, pos + 4)
-        body = payload[pos + 8 : pos + 8 + ln]
-        if len(body) != ln:
-            raise ValueError("truncated AVI chunk")
-        pos += 8 + ln + (ln & 1)
+    for tag, _pos, body in _riff_chunks(payload, 12):
         if tag == b"LIST" and body[:4] == b"hdrl":
-            walk_hdrl(body[4:])
+            for htag, _hpos, sub in _riff_chunks(body, 4):
+                if htag == b"avih":
+                    avih = struct.unpack_from("<14I", sub, 0)
+                elif htag == b"LIST" and sub[:4] == b"strl":
+                    pair: list[bytes | None] = [None, None]
+                    for stag, _spos, sbody in _riff_chunks(sub, 4):
+                        if stag == b"strh" and pair[0] is None:
+                            pair[0] = sbody
+                        elif stag == b"strf" and pair[1] is None:
+                            pair[1] = sbody
+                    streams.append(pair)
         elif tag == b"LIST" and body[:4] == b"movi":
-            p = 4
-            while p + 8 <= len(body):
-                ckid = body[p : p + 4]
-                (cln,) = struct.unpack_from("<I", body, p + 4)
+            for ckid, off, cbody in _riff_chunks(body, 4):
                 if ckid[2:4] in (b"db", b"dc", b"wb") and ckid[:2].isdigit():
-                    chunks.append((ckid, p, body[p + 8 : p + 8 + cln]))
-                p += 8 + cln + (cln & 1)
+                    chunks.append((ckid, off, cbody))
         elif tag == b"idx1":
             idx1 = body
     if avih is None or not streams:
@@ -3466,25 +3187,17 @@ def _split_jpeg_tables(
     segments with a marker in ``shared`` move into the SOI..EOI tables
     stream, everything else (SOF/DHT/SOS/entropy data) stays in the image
     stream."""
-    if stream[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG stream")
     tables = bytearray()
     rest = bytearray(b"\xff\xd8")
-    i = 2
-    while i < len(stream):
-        if stream[i] != 0xFF:
-            raise ValueError(f"bad JPEG marker alignment at {i}")
-        marker = stream[i + 1]
+    for marker, body, end in _jpeg_segments(stream):
+        seg = _jpeg_segment(marker, body)
         if marker == 0xDA:  # SOS: entropy data follows to EOI — copy whole
-            rest += stream[i:]
+            rest += seg + stream[end:]
             break
-        (seg_len,) = struct.unpack_from(">H", stream, i + 2)
-        seg = stream[i : i + 2 + seg_len]
         if marker in shared:
             tables += seg
         else:
             rest += seg
-        i += 2 + seg_len
     return b"\xff\xd8" + bytes(tables) + b"\xff\xd9", bytes(rest)
 
 
@@ -3496,115 +3209,6 @@ def _join_jpeg_tables(tables: bytes, strip: bytes) -> bytes:
     if strip[:2] != b"\xff\xd8":
         raise ValueError("TIFF JPEG strip missing SOI")
     return b"\xff\xd8" + tables[2:-2] + strip[2:]
-
-_LZW_CLEAR, _LZW_EOI = 256, 257
-
-
-def _lzw_encode_tiff(data: bytes) -> bytes:
-    """TIFF 6.0 §13 LZW: MSB-first bit packing, 9->12 bit codes with the
-    spec's EARLY code-width change (width grows when the next table slot
-    reaches 2^w - 1, one code earlier than generic LZW), ClearCode emitted
-    at start and whenever the table reaches slot 4094."""
-    acc = 0
-    nbits = 0
-    out = bytearray()
-
-    def emit(code: int, width: int) -> None:
-        nonlocal acc, nbits
-        acc = (acc << width) | code
-        nbits += width
-        while nbits >= 8:
-            nbits -= 8
-            out.append((acc >> nbits) & 0xFF)
-
-    def fresh() -> tuple[dict[bytes, int], int, int]:
-        return {bytes([i]): i for i in range(256)}, 258, 9
-
-    table, nxt, width = fresh()
-    emit(_LZW_CLEAR, width)
-    w = b""
-    for b in data:
-        wc = w + bytes([b])
-        if wc in table:
-            w = wc
-            continue
-        emit(table[w], width)
-        table[wc] = nxt
-        nxt += 1
-        if nxt == (1 << width) - 1 and width < 12:
-            width += 1
-        if nxt == 4094:
-            emit(_LZW_CLEAR, width)
-            table, nxt, width = fresh()
-        w = bytes([b])
-    if w:
-        emit(table[w], width)
-    emit(_LZW_EOI, width)
-    if nbits:
-        out.append((acc << (8 - nbits)) & 0xFF)
-    return bytes(out)
-
-
-def _lzw_decode_tiff(data: bytes, expected: int) -> bytes:
-    """Inverse of _lzw_encode_tiff. The decoder's table trails the
-    encoder's by one entry, so its early width change fires at slot
-    2^w - 2."""
-    out = bytearray()
-    # MSB-first sliding bit buffer (`buf` holds the low `nbits` valid bits);
-    # each input byte is loaded exactly once instead of the old per-code
-    # slice + int.from_bytes
-    buf = 0
-    nbits = 0
-    bytepos = 0
-    nbytes = len(data)
-
-    def read(width: int) -> int:
-        nonlocal buf, nbits, bytepos
-        while nbits < width:
-            if bytepos >= nbytes:
-                raise ValueError("LZW stream exhausted mid-code")
-            buf = (buf << 8) | data[bytepos]
-            bytepos += 1
-            nbits += 8
-        nbits -= width
-        val = (buf >> nbits) & ((1 << width) - 1)
-        buf &= (1 << nbits) - 1
-        return val
-
-    def fresh() -> tuple[dict[int, bytes], int, int]:
-        return {i: bytes([i]) for i in range(256)}, 258, 9
-
-    table, nxt, width = fresh()
-    prev: bytes | None = None
-    while len(out) < expected:
-        code = read(width)
-        if code == _LZW_EOI:
-            break
-        if code == _LZW_CLEAR:
-            table, nxt, width = fresh()
-            prev = None
-            continue
-        if prev is None:
-            if code >= 256:
-                raise ValueError(f"LZW: non-literal first code {code}")
-            entry = table[code]
-        elif code in table:
-            entry = table[code]
-        elif code == nxt:  # the KwKwK case
-            entry = prev + prev[:1]
-        else:
-            raise ValueError(f"LZW: code {code} beyond table ({nxt})")
-        out += entry
-        if prev is not None:
-            table[nxt] = prev + entry[:1]
-            nxt += 1
-            if nxt == (1 << width) - 2 and width < 12:
-                width += 1
-        prev = entry
-    if len(out) != expected:
-        raise ValueError("LZW output does not match the expected strip size")
-    return bytes(out)
-
 
 def _predict_diff(rows: np.ndarray, spp: int) -> np.ndarray:
     """Horizontal differencing (TIFF Predictor=2): per row, per channel,
@@ -3744,7 +3348,7 @@ def encode_tiff(
                 # identically)
                 strips.append(b"".join(_packbits_encode(r.tobytes()) for r in raw_rows))
             elif lzw:
-                strips.append(_lzw_encode_tiff(raw_rows.tobytes()))
+                strips.append(_lzw_encode(raw_rows.tobytes(), 8, _TIFF_LZW))
             elif deflate:  # Adobe Deflate (8): one zlib stream per block
                 strips.append(zlib.compress(raw_rows.tobytes(), 6))
             else:
@@ -3986,7 +3590,7 @@ def parse_tiff(payload: bytes, return_pixels: bool = False) -> dict:
             if comp == 32773:
                 return _packbits_decode(b, expected)
             if comp == 5:
-                return _lzw_decode_tiff(b, expected)
+                return _lzw_decode(b, 8, expected, _TIFF_LZW)
             if comp == 8:  # Adobe Deflate: one zlib stream per strip/tile
                 return zlib.decompress(b)
             return b

@@ -9,21 +9,23 @@ count = media files / target batch size; no shuffle).
 
 For image payloads the kernels are REAL: functions/media_codec.py fully
 decodes PNG (zlib inflate, CRC-verified chunk walk, all five filter-type
-reconstructions), BMP, and baseline JPEG (stream-declared Huffman/quant
-tables, restart handling, IDCT, chroma upsample, YCbCr->RGB) — so
-`decode_image_meta` returns true dimensions, `extract_features` computes
-real pixel-grid intensity features, and `resize_payload` does a genuine
-decode -> nearest-neighbor resample -> lossless PNG re-encode. The
-`fake=True` kernels remain ONLY for payloads in formats that need
-external codec libraries (ffmpeg video, progressive JPEG, model-based
-embeddings): deterministic stand-ins that keep the distributed plumbing
-(schema, batching, UDF signatures) testable; without fake such payloads
-raise honestly.
+reconstructions), BMP, GIF, and baseline and progressive JPEG
+(stream-declared Huffman/quant tables, restart handling, IDCT, chroma
+upsample, YCbCr->RGB) — so `decode_image_meta` returns true dimensions,
+`extract_features` computes real pixel-grid intensity features, and
+`resize_payload` does a genuine decode -> nearest-neighbor resample ->
+lossless PNG re-encode. The `fake=True` kernels remain ONLY for payloads in
+formats that need external codec libraries (ffmpeg video, lossless or
+arithmetic-coded JPEG, model-based embeddings): deterministic stand-ins
+that keep the distributed plumbing (schema, batching, UDF signatures)
+testable; without fake such payloads raise honestly.
 
-Every payload kernel with an ``errors`` raise/null/skip policy (GIF and AVI
-frame sampling, audio features and fingerprints, image pHashes, video
-fingerprints) runs on media_codec's one quarantine runner,
-``_quarantine_map``, as does media_codec.decode_image.
+Every payload kernel runs on media_codec's one per-payload runner,
+``_quarantine_map``: the decode/feature/resize kernels in raise mode, and
+the kernels with an ``errors`` raise/null/skip policy (GIF and AVI frame
+sampling, audio features and fingerprints, image pHashes, video
+fingerprints) in the mode the caller picks, as does
+media_codec.decode_image.
 
 The near-duplicate kernels — image ``phash_dup_pairs`` / ``phash_index`` +
 ``phash_incremental_pairs``, video ``video_dup_pairs`` / ``video_fp_index`` +
@@ -35,10 +37,7 @@ steps: ``_phash_band_rows`` (64-bit pHash bit bands), dedup's
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -84,75 +83,72 @@ def _sniff_image(payload: bytes) -> bool:
     return False
 
 
+def _first_frame(b: bytes, fake: bool) -> tuple[np.ndarray, int] | None:
+    """The pixels of a sniffed PNG/BMP/GIF/JPEG payload (a GIF's first
+    frame, color-table expanded to RGB) and the full-scale sample value;
+    None when the payload is not a sniffed image or, with ``fake``, fails
+    to decode (a mixed corpus falls through to the stand-in, not crash
+    the job)."""
+    if not _sniff_image(b):
+        return None
+    try:
+        if b[:8] == mc.PNG_SIGNATURE:
+            rec = mc.parse_png(b, return_pixels=True)
+            # palette images expand to 8-bit RGB
+            return rec["pixels"], 255 if rec["color_type"] == 3 else (1 << rec["bit_depth"]) - 1
+        if b[:2] == b"BM":
+            return mc.parse_bmp(b, return_pixels=True)["pixels"], 255
+        if b[:6] in (b"GIF87a", b"GIF89a"):
+            return mc.parse_gif(b, return_frames=True)["frames_rgb"][0], 255
+        return mc.decode_jpeg(b)["pixels"], 255
+    except (NotImplementedError, ValueError):
+        if not fake:
+            raise
+        return None
+
+
 def decode_image_meta(df: DataFrame, payload_col: str = "payload", fake: bool = False) -> DataFrame:
     """Decode each payload to (width, height, channels) via mapInPandas.
 
-    PNG/BMP payloads get a REAL pixel decode (media_codec full parsers);
-    JPEG payloads get REAL header metadata via the marker walk — which
-    reads SOF2 as well, so progressive JPEGs report true dimensions here
-    even though pixel decode (decode_jpeg) honestly raises on them. Other
-    payloads need external codecs: with fake=True a deterministic
-    stand-in derives dimensions from the byte content so tests can
-    exercise the distributed plumbing (and sniffed-but-corrupt payloads
-    fall through to it instead of crashing the job); without it they
-    raise honestly.
+    PNG/BMP/GIF payloads get a REAL pixel decode (media_codec full
+    parsers); JPEG payloads get REAL header metadata via the marker walk,
+    which reads every frame header decode_jpeg decodes (SOF0/SOF1/SOF2)
+    without paying for a pixel decode. Other payloads need external
+    codecs: with fake=True a deterministic stand-in derives dimensions
+    from the byte content so tests can exercise the distributed plumbing
+    (and sniffed-but-corrupt payloads fall through to it instead of
+    crashing the job); without it they raise honestly.
     """
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, widths, heights, chans, oks = [], [], [], [], []
-            for rid, raw in zip(pdf["id"], pdf[payload_col]):
-                b = bytes(raw)
-                dims = None
-                if b[:2] == b"\xff\xd8":
-                    # metadata needs only the header marker walk (reads SOF2
-                    # too), so meta never pays for a pixel decode
-                    try:
-                        jrec = mc.parse_jpeg_meta(b)
-                        dims = (jrec["width"], jrec["height"], jrec["n_components"])
-                    except ValueError:
-                        if not fake:
-                            raise
-                elif _sniff_image(b):
-                    try:
-                        rec = mc.parse_image(b)
-                        # PNG color-type numbering (parse_image maps GIF to
-                        # 3 = palette-expanded RGB, BMP to 2)
-                        c = {0: 1, 2: 3, 3: 3, 4: 2, 6: 4}.get(rec["color_type"], 1)
-                        dims = (rec["width"], rec["height"], c)
-                    except (NotImplementedError, ValueError):
-                        # sniffed-but-undecodable (corrupt stream): with
-                        # fake=True a mixed corpus must fall through to the
-                        # stand-in, not crash the job
-                        if not fake:
-                            raise
-                if dims is not None:
-                    w, h, c = dims
-                elif fake:
-                    n = len(b)
-                    w, h, c = n % 640 + 16, n % 480 + 16, (n % 2) * 2 + 1
-                else:
-                    raise NotImplementedError(
-                        "payload is not a PNG/BMP/baseline-JPEG; other formats "
-                        "need external codecs — pass fake=True for the "
-                        "deterministic test kernel"
-                    )
-                ids.append(rid)
-                widths.append(w)
-                heights.append(h)
-                chans.append(c)
-                oks.append(True)
-            yield pd.DataFrame(
-                {
-                    "id": pd.Series(ids, dtype="int64"),
-                    "width": pd.Series(widths, dtype="int32"),
-                    "height": pd.Series(heights, dtype="int32"),
-                    "n_channels": pd.Series(chans, dtype="int32"),
-                    "ok": oks,
-                }
-            )
+    def _decode(b: bytes) -> list[tuple]:
+        dims = None
+        try:
+            if b[:2] == b"\xff\xd8":
+                jrec = mc.parse_jpeg_meta(b)
+                dims = (jrec["width"], jrec["height"], jrec["n_components"])
+            elif _sniff_image(b):
+                rec = mc.parse_image(b)
+                # PNG color-type numbering (parse_image maps GIF to
+                # 3 = palette-expanded RGB, BMP to 2)
+                c = {0: 1, 2: 3, 3: 3, 4: 2, 6: 4}.get(rec["color_type"], 1)
+                dims = (rec["width"], rec["height"], c)
+        except (NotImplementedError, ValueError):
+            # sniffed-but-undecodable (corrupt stream): with fake=True a
+            # mixed corpus must fall through to the stand-in, not crash
+            if not fake:
+                raise
+        if dims is None:
+            if not fake:
+                raise NotImplementedError(
+                    "payload is not a PNG/BMP/GIF/JPEG; other formats "
+                    "need external codecs — pass fake=True for the "
+                    "deterministic test kernel"
+                )
+            n = len(b)
+            dims = (n % 640 + 16, n % 480 + 16, (n % 2) * 2 + 1)
+        return [(*dims, True)]
 
-    return df.mapInPandas(_decode, schema=DECODED_SCHEMA)
+    return mc._quarantine_map(df, payload_col, "id", _decode, DECODED_SCHEMA, "raise")
 
 
 FEATURES_SCHEMA = "id long, features array<double>"
@@ -165,7 +161,7 @@ def extract_features(
     """Feature extraction: payload bytes -> fixed-dim embedding via
     mapInPandas.
 
-    For PNG/BMP/baseline-JPEG payloads the features are REAL: the image is
+    For PNG/BMP/GIF/JPEG payloads the features are REAL: the image is
     fully pixel-decoded (media_codec) and feature_i = band_sum_i /
     (band_count_i * 255) over ``dim`` horizontal pixel bands (band of row r
     = r*dim//h; color images sum all channels) — the classic intensity-
@@ -176,61 +172,35 @@ def extract_features(
     embeds straight into the similarity operators (cosine_topk/ann_*),
     wiring the multimodal path into the ANN stack."""
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = []
-            for b in pdf[payload_col]:
-                b = bytes(b)
-                px = None
-                smax = 255
-                if _sniff_image(b):
-                    try:
-                        if b[:8] == mc.PNG_SIGNATURE:
-                            rec = mc.parse_png(b, return_pixels=True)
-                            px = rec["pixels"]
-                            if rec["color_type"] != 3:  # palette expands to 8-bit RGB
-                                smax = (1 << rec["bit_depth"]) - 1
-                        elif b[:2] == b"BM":
-                            px = mc.parse_bmp(b, return_pixels=True)["pixels"]
-                        elif b[:6] in (b"GIF87a", b"GIF89a"):
-                            # first frame, color-table expanded to RGB
-                            px = mc.parse_gif(b, return_frames=True)["frames_rgb"][0]
-                        else:
-                            px = mc.decode_jpeg(b)["pixels"]
-                    except (NotImplementedError, ValueError):
-                        if not fake:  # fake=True: fall through to stand-in
-                            raise
-                if px is not None:
-                    px = px.astype(np.int64)
-                    if px.ndim == 3:
-                        scale = px.shape[2] * smax  # all channels, incl. alpha
-                        px = px.sum(axis=2)
-                    else:
-                        scale = smax
-                    h = px.shape[0]
-                    band = np.arange(h) * dim // h
-                    sums = np.zeros(dim, dtype=np.int64)
-                    cnts = np.zeros(dim, dtype=np.int64)
-                    np.add.at(sums, band, px.sum(axis=1))
-                    np.add.at(cnts, band, px.shape[1])
-                    feats.append([
-                        float(s) / (int(c) * scale) if c else 0.0
-                        for s, c in zip(sums, cnts)
-                    ])
-                elif fake:
-                    sums = [0] * dim
-                    for pos, byte in enumerate(b):
-                        sums[pos % dim] += byte
-                    feats.append([(s % 1000) / 1000.0 for s in sums])
-                else:
-                    raise NotImplementedError(
-                        "payload is not a decodable image; model-based feature "
-                        "extraction (CLIP/wav2vec) is not present in this "
-                        "container — pass fake=True for the test kernel"
-                    )
-            yield pd.DataFrame({"id": pdf["id"], "features": feats})
+    def _extract(b: bytes) -> list[tuple]:
+        img = _first_frame(b, fake)
+        if img is not None:
+            px, smax = img
+            px = px.astype(np.int64)
+            if px.ndim == 3:
+                scale = px.shape[2] * smax  # all channels, incl. alpha
+                px = px.sum(axis=2)
+            else:
+                scale = smax
+            h = px.shape[0]
+            band = np.arange(h) * dim // h
+            sums = np.zeros(dim, dtype=np.int64)
+            cnts = np.zeros(dim, dtype=np.int64)
+            np.add.at(sums, band, px.sum(axis=1))
+            np.add.at(cnts, band, px.shape[1])
+            return [([float(s) / (int(c) * scale) if c else 0.0 for s, c in zip(sums, cnts)],)]
+        if not fake:
+            raise NotImplementedError(
+                "payload is not a decodable image; model-based feature "
+                "extraction (CLIP/wav2vec) is not present in this "
+                "container — pass fake=True for the test kernel"
+            )
+        sums = [0] * dim
+        for pos, byte in enumerate(b):
+            sums[pos % dim] += byte
+        return [([(s % 1000) / 1000.0 for s in sums],)]
 
-    return df.mapInPandas(_extract, schema=FEATURES_SCHEMA)
+    return mc._quarantine_map(df, payload_col, "id", _extract, FEATURES_SCHEMA, "raise")
 
 
 def resize_payload(
@@ -239,7 +209,7 @@ def resize_payload(
 ) -> DataFrame:
     """Resize: payload -> bounded-size payload via mapInPandas.
 
-    PNG/BMP/baseline-JPEG payloads get a REAL resize: full pixel decode
+    PNG/BMP/GIF/JPEG payloads get a REAL resize: full pixel decode
     (media_codec), deterministic nearest-neighbor resample so the longest
     side becomes min(longest, target_px) (source index = floor(i*src/dst) —
     integer-exact, no interpolation rounding ambiguity), then a lossless
@@ -247,60 +217,32 @@ def resize_payload(
     exact oracle. Non-image payloads: the fake kernel truncates to
     ``target_bytes`` (deterministic plumbing stand-in), else raise."""
 
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs, oks = [], [], []
-            for rid, raw in zip(pdf["id"], pdf[payload_col]):
-                b = bytes(raw)
-                px = None
-                if _sniff_image(b):
-                    try:
-                        if b[:8] == mc.PNG_SIGNATURE:
-                            px = mc.parse_png(b, return_pixels=True)["pixels"]
-                        elif b[:2] == b"BM":
-                            px = mc.parse_bmp(b, return_pixels=True)["pixels"]
-                        elif b[:6] in (b"GIF87a", b"GIF89a"):
-                            # first frame, color-table expanded to RGB
-                            px = mc.parse_gif(b, return_frames=True)["frames_rgb"][0]
-                        else:
-                            px = mc.decode_jpeg(b)["pixels"]
-                    except (NotImplementedError, ValueError):
-                        if not fake:  # fake=True: fall through to stand-in
-                            raise
-                if px is not None:
-                    px = np.asarray(px, dtype=np.int64)
-                    if int(px.max(initial=0)) > 255:  # 16-bit source -> 8-bit
-                        px = px >> 8
-                    h, w = px.shape[:2]
-                    longest = max(h, w)
-                    if longest > target_px:
-                        nh = max(1, h * target_px // longest)
-                        nw = max(1, w * target_px // longest)
-                        yi = np.arange(nh) * h // nh
-                        xi = np.arange(nw) * w // nw
-                        px = px[yi][:, xi]
-                    out = mc.encode_png(np.ascontiguousarray(px))
-                elif fake:
-                    out = b[:target_bytes]
-                else:
-                    raise NotImplementedError(
-                        "payload is not a decodable image; non-image resize "
-                        "needs external codecs — pass fake=True for the "
-                        "deterministic test kernel"
-                    )
-                ids.append(rid)
-                blobs.append(out)
-                oks.append(True)
-            yield pd.DataFrame(
-                {
-                    "id": pd.Series(ids, dtype="int64"),
-                    "n_bytes": pd.Series([len(x) for x in blobs], dtype="int32"),
-                    "resized": blobs,
-                    "ok": oks,
-                }
+    def _resize(b: bytes) -> list[tuple]:
+        img = _first_frame(b, fake)
+        if img is not None:
+            px = np.asarray(img[0], dtype=np.int64)
+            if int(px.max(initial=0)) > 255:  # 16-bit source -> 8-bit
+                px = px >> 8
+            h, w = px.shape[:2]
+            longest = max(h, w)
+            if longest > target_px:
+                nh = max(1, h * target_px // longest)
+                nw = max(1, w * target_px // longest)
+                yi = np.arange(nh) * h // nh
+                xi = np.arange(nw) * w // nw
+                px = px[yi][:, xi]
+            out = mc.encode_png(np.ascontiguousarray(px))
+        elif fake:
+            out = b[:target_bytes]
+        else:
+            raise NotImplementedError(
+                "payload is not a decodable image; non-image resize "
+                "needs external codecs — pass fake=True for the "
+                "deterministic test kernel"
             )
+        return [(len(out), out, True)]
 
-    return df.mapInPandas(_resize, schema=RESIZED_SCHEMA)
+    return mc._quarantine_map(df, payload_col, "id", _resize, RESIZED_SCHEMA, "raise")
 
 
 def sample_gif_frames(
@@ -334,7 +276,6 @@ def sample_gif_frames(
 
     return mc._quarantine_map(
         df, payload_col, id_col, _frames,
-        ["frame_idx", "n_frames", "height", "width", "idx_sum"],
         "id long, frame_idx int, n_frames int, height int, width int, idx_sum long",
         errors,
     )
@@ -346,11 +287,6 @@ def _check_every_n(every_n: int) -> None:
     ``errors=null/skip`` would turn an argument error into dead letters."""
     if every_n < 1:
         raise ValueError(f"every_n must be >= 1, got {every_n}")
-
-
-def _fields(schema: str) -> list[str]:
-    """The column names of a DDL schema string, less its leading id."""
-    return [f.split()[0] for f in schema.split(", ")][1:]
 
 
 VIDEO_FRAMES_SCHEMA = (
@@ -393,9 +329,7 @@ def sample_video_frames(
             )
         return rows
 
-    return mc._quarantine_map(
-        df, payload_col, id_col, _frames, _fields(VIDEO_FRAMES_SCHEMA), VIDEO_FRAMES_SCHEMA, errors
-    )
+    return mc._quarantine_map(df, payload_col, id_col, _frames, VIDEO_FRAMES_SCHEMA, errors)
 
 
 AUDIO_FEATURES_SCHEMA = (
@@ -426,13 +360,8 @@ def extract_audio_features(
     extension surface). ``errors`` (r13): raise/skip/null corrupt-payload
     policy, same contract as decode_image (null = dead-letter row with null
     features and the message in an ``error`` column)."""
-    fields = _fields(AUDIO_FEATURES_SCHEMA)
-
-    def _features(payload: bytes) -> list[tuple]:
-        rec = mc.audio_spectrum(payload, n_fft=n_fft)
-        return [tuple(rec[f] for f in fields)]
-
-    return mc._quarantine_map(df, payload_col, id_col, _features, fields, AUDIO_FEATURES_SCHEMA, errors)
+    features = mc._record_rows(lambda payload: mc.audio_spectrum(payload, n_fft=n_fft), AUDIO_FEATURES_SCHEMA)
+    return mc._quarantine_map(df, payload_col, id_col, features, AUDIO_FEATURES_SCHEMA, errors)
 
 
 def audio_fingerprints(
@@ -468,7 +397,7 @@ def audio_fingerprints(
                 rows.append((t, ((b1 * n_bins + b2) * n_bins + b3) * len(deltas) + di))
         return rows
 
-    return mc._quarantine_map(df, payload_col, id_col, _fp, ["t", "fp"], "id long, t int, fp long", errors)
+    return mc._quarantine_map(df, payload_col, id_col, _fp, "id long, t int, fp long", errors)
 
 
 def audio_dup_pairs(fps: DataFrame, min_matches: int = 10) -> DataFrame:
@@ -514,7 +443,7 @@ def image_phashes(
     def _hash(payload: bytes) -> list[tuple]:
         return [(mc.phash64(mc.parse_image_pixels(payload)),)]
 
-    return mc._quarantine_map(df, payload_col, id_col, _hash, ["phash"], "id long, phash long", errors)
+    return mc._quarantine_map(df, payload_col, id_col, _hash, "id long, phash long", errors)
 
 
 def phash_dup_pairs(
@@ -672,9 +601,7 @@ def video_fingerprints(
         frames = mc.parse_avi(payload, return_frames=True)["frames"]
         return [(t, mc.phash64(frames[t])) for t in range(0, len(frames), every_n)]
 
-    return mc._quarantine_map(
-        df, payload_col, id_col, _fp, ["t", "phash"], "id long, t long, phash long", errors
-    )
+    return mc._quarantine_map(df, payload_col, id_col, _fp, "id long, t long, phash long", errors)
 
 
 def video_dup_pairs(

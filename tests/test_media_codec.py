@@ -318,7 +318,7 @@ def test_gif_lzw_hand_trace():
     ends -> emit 0, emit END. LSB-first packing gives 0x04 0x12 0x50."""
     import numpy as np
 
-    data = mc._lzw_encode_gif(np.array([0, 0, 1, 1, 0], np.uint8), 2)
+    data = mc._lzw_encode(bytes([0, 0, 1, 1, 0]), 2, mc._GIF_LZW)
     assert data == bytes.fromhex("041250")
     bits = []
     for code, width in ((4, 3), (0, 3), (0, 3), (1, 3), (1, 4), (0, 4), (5, 4)):
@@ -331,7 +331,7 @@ def test_gif_lzw_hand_trace():
             byte |= b << j
         want.append(byte)
     assert data == bytes(want)
-    assert mc._lzw_decode_gif(data, 2, 5) == bytes([0, 0, 1, 1, 0])
+    assert mc._lzw_decode(data, 2, 5, mc._GIF_LZW) == bytes([0, 0, 1, 1, 0])
 
 
 def test_gif_lzw_eoi_width_boundary():
@@ -349,8 +349,8 @@ def test_gif_lzw_eoi_width_boundary():
     # length is not load-bearing
     for npx in range(230, 260):
         idx = rng.randint(0, 28, npx).astype(np.uint8)
-        enc = mc._lzw_encode_gif(idx, 5)
-        assert mc._lzw_decode_gif(enc, 5, npx) == idx.tobytes(), npx
+        enc = mc._lzw_encode(idx.tobytes(), 5, mc._GIF_LZW)
+        assert mc._lzw_decode(enc, 5, npx, mc._GIF_LZW) == idx.tobytes(), npx
 
 
 def test_gif_roundtrip_paths():
@@ -427,6 +427,13 @@ def test_jpeg_meta_baseline_and_progressive():
                    "n_components": 3, "progressive": False}
     out = mc.parse_jpeg_meta(mc.encode_jpeg_headers(31, 17, 1, progressive=True))
     assert out["progressive"] is True and out["n_components"] == 1
+    # an extended-sequential (SOF1) frame decodes, so its header reads too
+    sof1 = bytearray(mc.encode_jpeg(np.zeros((16, 12, 3), np.uint8)))
+    at = bytes(sof1).find(b"\xff\xc0")
+    sof1[at + 1] = 0xC1
+    assert mc.decode_jpeg(bytes(sof1))["width"] == 12
+    assert mc.parse_jpeg_meta(bytes(sof1)) == {"precision": 8, "width": 12, "height": 16,
+                                               "n_components": 3, "progressive": False}
 
 
 def test_jpeg_meta_scan_skip_with_stuffing_and_rst():
@@ -594,6 +601,12 @@ def test_jpeg_malformed_and_arithmetic_rejected():
     arith[sof_at + 1] = 0xC9
     with pytest.raises(NotImplementedError, match="SOF"):
         mc.decode_jpeg(bytes(arith))
+    # a zero sampling factor (T.81 allows 1..4) is a corrupt frame header,
+    # not a ZeroDivisionError out of the chroma upsampler
+    zero = bytearray(mc.encode_jpeg(np.zeros((8, 8, 3), np.uint8)))
+    zero[bytes(zero).find(b"\xff\xc0") + 14] = 0x00  # second component's H/V
+    with pytest.raises(ValueError, match="sampling factors"):
+        mc.decode_jpeg(bytes(zero))
 
 
 def test_jpeg_progressive_roundtrip_equals_baseline():
@@ -1022,12 +1035,12 @@ def test_tiff_lzw_kernel_table_reset_and_widths():
     rng = np.random.RandomState(6)
     for n in (0, 1, 257, 70000):
         data = rng.randint(0, 256, n).astype(np.uint8).tobytes()
-        assert mc._lzw_decode_tiff(mc._lzw_encode_tiff(data), n) == data
+        assert mc._lzw_decode(mc._lzw_encode(data, 8, mc._TIFF_LZW), 8, n, mc._TIFF_LZW) == data
         tiled = bytes(np.tile(np.arange(97, dtype=np.uint8), n // 97 + 1)[:n])
-        assert mc._lzw_decode_tiff(mc._lzw_encode_tiff(tiled), n) == tiled
+        assert mc._lzw_decode(mc._lzw_encode(tiled, 8, mc._TIFF_LZW), 8, n, mc._TIFF_LZW) == tiled
     # KwKwK case: aaa...a produces the code-just-added pattern immediately
     run = b"\xAA" * 500
-    assert mc._lzw_decode_tiff(mc._lzw_encode_tiff(run), 500) == run
+    assert mc._lzw_decode(mc._lzw_encode(run, 8, mc._TIFF_LZW), 8, 500, mc._TIFF_LZW) == run
 
 
 def test_tiff_packbits_is_per_row():

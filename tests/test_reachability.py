@@ -25,6 +25,9 @@ one-endpoint-per-partition layout only in ``session._pull_endpoints``.
 A fourth keeps the single-task route of the text trainers in one place: in
 ``functions/text.py`` a ``coalesce(1)`` happens only in ``_single_task``, and
 so does a ``mapInPandas``, apart from the listed per-batch passes.
+A fifth keeps the media payload kernels on one runner: in
+``functions/media_codec.py`` and ``functions/multimodal.py`` a
+``mapInPandas`` happens only in ``media_codec._quarantine_map``.
 """
 
 from __future__ import annotations
@@ -271,3 +274,30 @@ def test_text_single_task_route_runs_only_in_its_runner():
         "single-task route through _single_task."
     )
     assert {fn for _, _, fn in calls} == {"_single_task"} | TEXT_PER_BATCH_PASSES
+
+
+MEDIA_MODULES = ("media_codec.py", "multimodal.py")
+
+
+def _media_map_calls() -> list[tuple[str, str, str]]:
+    """(module, line, enclosing top-level def) for every ``mapInPandas``
+    call in the media modules."""
+    calls = []
+    for module in MEDIA_MODULES:
+        for top in ast.parse((PACKAGE / "functions" / module).read_text()).body:
+            for node in ast.walk(top):
+                if (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+                        and node.func.attr == "mapInPandas"):
+                    calls.append((module, str(node.lineno), getattr(top, "name", "<module>")))
+    return calls
+
+
+def test_media_payload_kernels_run_only_in_the_runner():
+    calls = _media_map_calls()
+    stray = [call for call in calls if call[::2] != ("media_codec.py", "_quarantine_map")]
+    assert not stray, (
+        f"mapInPandas outside media_codec._quarantine_map: {stray}. Run a "
+        "per-payload media kernel through _quarantine_map (errors='raise' "
+        "when it has no quarantine policy)."
+    )
+    assert len(calls) == 1
