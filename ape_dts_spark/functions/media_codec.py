@@ -2207,7 +2207,8 @@ def decode_jpeg(payload: bytes) -> dict:
     per-component coefficient grids, then one dequantize + IDCT pass,
     chroma upsample and YCbCr->RGB. Returns the common pixel-statistics
     record (+ the pixel array under 'pixels'). Other frame types
-    (lossless, hierarchical, arithmetic) raise NotImplementedError."""
+    (lossless, hierarchical, arithmetic) raise NotImplementedError, and a
+    sample precision other than 8 bits (SOF1's 12) MediaCodecError."""
     qtables: dict[int, np.ndarray] = {}
     huff: dict[tuple[int, int], _HuffDecoder] = {}
     restart_interval = 0
@@ -2242,6 +2243,10 @@ def decode_jpeg(payload: bytes) -> dict:
             if frame is not None:
                 raise ValueError("multiple SOF markers")
             frame = _jpeg_frame(marker, body)
+            if frame["precision"] != 8:
+                raise MediaCodecError(
+                    f"{frame['precision']}-bit JPEG samples not supported (8-bit only)"
+                )
             coefs = [
                 np.zeros((frame["mcus_y"] * sv, frame["mcus_x"] * sh, 64), dtype=np.int64)
                 for sh, sv in frame["samp"]

@@ -97,6 +97,9 @@ def get_spark(app_name: str = "ape_dts_spark", shuffle_partitions: int | None = 
         # reference, so each Python worker imports ape_dts_spark itself: give
         # the workers the tree this process imported, whatever their cwd
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
+        # the daemon that forks those workers first stops them re-reading
+        # pyspark.zip's index on every task (see the transport-runner notes)
+        .config("spark.python.daemon.module", "ape_dts_spark._worker_daemon")
     )
     jars = [j for j in (find_jdbc_jar(), find_h2_jar()) if j]
     if jars:
@@ -115,6 +118,15 @@ def get_spark(app_name: str = "ape_dts_spark", shuffle_partitions: int | None = 
 # ---------------------------------------------------------------------------
 # transport runners: every source module supplies only its per-file decode or
 # its per-endpoint pull; the Spark plumbing around it lives here, once
+#
+# Every runner is an Arrow task in a Python worker, and each such task first
+# pays PySpark's own set-up: `worker_util.setup_spark_files` calls
+# `importlib.invalidate_caches()` on every task. On CPython 3.11 and 3.12.1
+# that makes each cached zipimporter re-read its archive's whole index, and a
+# worker holds ~16 of them into pyspark.zip (1,328 entries): ~0.23 CPU-s per
+# task before any decode runs (3.13's lazy zipimporter reads nothing). The
+# session's daemon module, `_worker_daemon`, keeps an unchanged archive's
+# index across those calls in every worker it forks.
 # ---------------------------------------------------------------------------
 
 _BINARY_FILE_SCHEMA = "path string, modificationTime timestamp, length long, content binary"

@@ -266,7 +266,7 @@ class ParquetTable:
     def merge_apply(
         self,
         compacted: DataFrame,
-        spilled: DataFrame,
+        spilled: DataFrame | None,
         key_cols: list[str],
         stream_id: str = "default",
         batch_id: float | None = None,
@@ -277,7 +277,9 @@ class ParquetTable:
         2. upsert images are appended
         3. spilled events replay serially in seq order (key-changing updates,
            NULL-key rows — the reference's unmerged path,
-           dt-parallelizer/src/rdb_merger.rs:159-186)
+           dt-parallelizer/src/rdb_merger.rs:159-186); ``spilled`` None
+           means the caller knows nothing spilled, which skips the
+           emptiness probe (one Spark job)
 
         If ``batch_id`` is given and was already committed for ``stream_id``
         the apply is a no-op — making foreachBatch replays idempotent.
@@ -308,7 +310,7 @@ class ParquetTable:
             *self._image_cols(compacted, "after")
         )
         state = kept.unionByName(upserts)
-        if not spilled.isEmpty():
+        if spilled is not None and not spilled.isEmpty():
             # one emptiness probe: most CDC batches spill nothing, and an
             # empty spill set would still plan two broadcast anti-joins
             state = self._replay_spill(state, spilled, key_cols)

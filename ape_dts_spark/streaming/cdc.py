@@ -35,7 +35,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ape_dts_spark.operators.merge import compact_changes
+from ape_dts_spark.operators.merge import classify_mergeable, compact_changes
 from ape_dts_spark.sinks.parquet_table import ParquetTable
 
 # Debezium envelope op codes -> canonical row_type
@@ -399,12 +399,17 @@ class CdcPipeline:
         # otherwise re-execute the whole micro-batch subtree (source parse +
         # streaming state read), measured ~4-6 executions per batch.
         batch = self._prepare(batch).persist(StorageLevel.MEMORY_AND_DISK)
-        # ONE materializing job yields the event count AND the heartbeat
-        # readout (max seq / max ts) the metrics block needs at the end —
-        # the old separate count + agg paid two jobs per micro-batch
-        _stats = batch.agg(
+        # ONE materializing job yields the event count, the heartbeat
+        # readout (max seq / max ts) the metrics block needs at the end and
+        # the count of DML events compaction will spill: with none, no
+        # segment's merge_apply runs its spill emptiness probe (a job each)
+        unmergeable = ~F.col("mergeable")
+        if "ddl" in batch.columns:
+            unmergeable = unmergeable & (F.col("row_type") != "ddl")
+        _stats = classify_mergeable(batch, self.key_cols).agg(
             F.count(F.lit(1)).alias("n"), F.count("seq").alias("n_seq"),
             F.max("seq").alias("m"), F.max("ts").alias("t"),
+            F.count_if(unmergeable).alias("n_spill"),
         ).collect()[0]
         n_events = _stats["n"]
         if _stats["n_seq"] != n_events:
@@ -423,7 +428,7 @@ class CdcPipeline:
         # an empty micro-batch (e.g. every event filtered out) records its
         # epoch only: merge-applying it would commit a full copy of the table
         if n_events:
-            self._apply_segments(batch, batch_id)
+            self._apply_segments(batch, batch_id, spills=_stats["n_spill"] > 0)
         self.target.record_batch(self.stream_id, batch_id)
         apply_s = time.perf_counter() - t_apply
         check = self._inline_check(batch) if self.inline_check else {}
@@ -450,9 +455,11 @@ class CdcPipeline:
         if self.position_log is not None and self.position_of is not None:
             self.position_log.checkpoint(self.position_of(self.metrics[-1]))
 
-    def _apply_segments(self, batch: DataFrame, batch_id: int) -> None:
+    def _apply_segments(self, batch: DataFrame, batch_id: int, spills: bool) -> None:
         """Compact and merge-apply the batch's DML in the seq-ordered
-        segments its DDL barriers cut, applying each DDL in between."""
+        segments its DDL barriers cut, applying each DDL in between.
+        ``spills`` False: no DML event of the batch spills, so no segment's
+        merge_apply probes its spill set."""
         ddls = (
             batch.filter(F.col("row_type") == "ddl").orderBy("seq").collect()
             if "ddl" in batch.columns
@@ -483,7 +490,8 @@ class CdcPipeline:
             else:
                 compacted, spilled = compact_changes(seg, self.key_cols)
                 self.target.merge_apply(
-                    compacted, spilled, self.key_cols, stream_id=self.stream_id, batch_id=seg_epoch
+                    compacted, spilled if spills else None, self.key_cols,
+                    stream_id=self.stream_id, batch_id=seg_epoch,
                 )
             if hi is not None:
                 self.apply_ddl(ddls[i])

@@ -155,10 +155,7 @@ def run_task(spark: SparkSession, cfg: TaskConfig, registry: dict[str, list[str]
             F.struct(*[F.col(c) for c in src.columns]).alias("after"),
             F.monotonically_increasing_id().alias("seq"),
         )
-        empty_spill = compacted.filter(F.lit(False)).select(
-            "schema", "tb", F.lit("insert").alias("row_type"), F.col("after").alias("before"), "after", "seq"
-        )
-        table.merge_apply(compacted, empty_spill, keys)
+        table.merge_apply(compacted, None, keys)
         return TaskResult(kind="revise", tables={tb: table.current()})
 
     if extract_type == "cdc":

@@ -436,6 +436,18 @@ def test_jpeg_meta_baseline_and_progressive():
                                                "n_components": 3, "progressive": False}
 
 
+def test_jpeg_12bit_precision_refused():
+    # a SOF1 frame declaring 12-bit samples must not decode as 8-bit; its
+    # header still reads, precision included
+    sof1 = bytearray(mc.encode_jpeg(np.zeros((16, 12, 3), np.uint8)))
+    at = bytes(sof1).find(b"\xff\xc0")
+    sof1[at + 1] = 0xC1
+    sof1[at + 4] = 12  # P, after the marker and the segment length
+    with pytest.raises(mc.MediaCodecError, match="12-bit"):
+        mc.decode_jpeg(bytes(sof1))
+    assert mc.parse_jpeg_meta(bytes(sof1))["precision"] == 12
+
+
 def test_jpeg_meta_scan_skip_with_stuffing_and_rst():
     # SOF placed AFTER a scan whose bytes contain stuffed 0xFF00 and an RST
     # marker — the skip must not mistake either for a real marker

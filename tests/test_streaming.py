@@ -802,8 +802,11 @@ def test_empty_micro_batch_records_epoch_only(spark, dirs):
 
 def test_bulk_apply_batch_job_count(spark, dirs, spark_jobs):
     """One bulk-shaped micro-batch (one DML segment, no spill) into a
-    non-empty table: the apply starts fewer Spark jobs than the 12 the
-    materializing count() preamble cost."""
+    non-empty table: the stats job also counts the events that spill, so
+    with none the apply skips merge_apply's spill probe — 7 Spark jobs (the
+    materializing count() preamble once cost 12, the probe one more). A
+    following batch with a key-changing update still probes, and its spill
+    replays."""
     src, target_dir, _ = dirs
     table = ParquetTable(spark, target_dir, PAYLOAD)
     initial = [ev("c", after={"id": i, "name": f"n{i}", "bal": i}, seq=i) for i in range(1, 201)]
@@ -821,6 +824,23 @@ def test_bulk_apply_batch_job_count(spark, dirs, spark_jobs):
     pipe = CdcPipeline(spark, table, key_cols=["id"])
     with spark_jobs() as jobs:
         pipe.apply_batch(batch, batch_id=0)
-    assert 0 < jobs.n < 12
+    assert jobs.n == 7
     st = state_dict(table)
     assert len(st) == 200 and st[1] == ("x", 150) and st[51] == ("n51", 51)
+
+    rekey = [
+        ev("u", before={"id": 52, "name": "n52", "bal": 52},
+           after={"id": 1052, "name": "moved", "bal": 52}, seq=2000),
+        ev("u", before={"id": 53, "name": "n53", "bal": 53},
+           after={"id": 53, "name": "y", "bal": 0}, seq=2001),
+    ]
+    write_debezium_jsonl(rekey, os.path.join(src, "b2.jsonl"))
+    batch = parse_debezium(spark.read.text(os.path.join(src, "b2.jsonl")), PAYLOAD).select(
+        "schema", "tb", "row_type", "before", "after", "seq", "ts"
+    )
+    with spark_jobs() as jobs:
+        pipe.apply_batch(batch, batch_id=1)
+    assert jobs.n > 7
+    st = state_dict(table)
+    assert len(st) == 200 and 52 not in st and st[1052] == ("moved", 52)
+    assert st[53] == ("y", 0)
