@@ -6218,11 +6218,12 @@ def q_unigram_doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_langid_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """In-engine language-ID TRAINING (tx.langid_train): one-vs-rest integer
     perceptrons over hashed char 3-grams — fastText's architecture (Joulin
-    et al. 2016) with perceptron_train's integer-exact discipline. The
-    feature relation is built once (one shuffle, localCheckpointed); each
-    class x iteration is two map-side-combined hash aggs with only dim
-    integers crossing to the driver. Oracle unrolls every class's update
-    chain and must match the learned weights bit-for-bit."""
+    et al. 2016) with perceptron_train's integer-exact discipline. One
+    Arrow pass folds each document's char 3-grams into a dim-long bag
+    (localCheckpointed, no shuffle); all classes train together, K numpy
+    steps in one task, or one job per step over the partitions past the
+    dense-matrix bound. Oracle unrolls every class's update chain and must
+    match the learned weights bit-for-bit."""
     return tx.langid_train(demo.load(spark, sf_dir, "documents"), LANGID_CLASSES)
 
 
@@ -6230,10 +6231,11 @@ def q_langid_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Model APPLY measured alone (r13, VERDICT r12 item 4 — this gate
     previously re-ran the whole training chain and was the slowest bench row
     for it; training cost now lives on langid_train's own row): score every
-    document against every class with tx.langid_score (features join
-    broadcast weights, one hash agg), argmax with deterministic (score desc,
-    lang asc) tie-break, 'unknown' fallback for featureless or
-    non-positive-best docs — the lang_id_expr contract. The model is the
+    document against every class with tx.langid_score (the model collected
+    to the driver, each Arrow batch's n-gram bags times its weights, no
+    join or shuffle), argmax with deterministic (score desc, lang asc)
+    tie-break, 'unknown' fallback for featureless or non-positive-best
+    docs — the lang_id_expr contract. The model is the
     deterministic fixture weight table (tx.langid_fixture_weights), serving
     the apply path the way ann_*_index gates serve a built index; the
     trained-model path keeps full coverage via langid_train's bit-exact
@@ -6379,9 +6381,10 @@ def q_perceptron_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     English. Integer arithmetic end to end (counts, +-1 labels, integer
     weights) — no float accumulation to diverge, so the oracle's unrolled
     K-update CTE chain must match the learned weight vector bit-for-bit.
-    Scale shape: the feature relation builds once (one shuffle) and each
-    iteration is two map-side-combined hash aggs + a dim-sized driver
-    collect, exactly bpe_learn's loop discipline."""
+    Scale shape: the JVM hashes each doc's tokens in-row, one Arrow pass
+    counts them into a dim-long bag (no shuffle), and the K iterations run
+    as numpy steps in one task, or one job per step over the partitions
+    past the dense-matrix bound."""
     return tx.perceptron_train(
         demo.load(spark, sf_dir, "documents"), label_expr="lang = 'en'"
     )

@@ -1140,11 +1140,11 @@ def parse_bmp(payload: bytes, return_pixels: bool = False) -> dict:
 # table slots sooner ("early change"). A GIF writer emits Clear once the
 # 12-bit table is full (code 4096); a TIFF writer emits it when the table
 # reaches 4094 entries, i.e. in place of entry 4093 (an entry added just
-# before a Clear is never referenced, so the bytes are the same). A GIF
-# decoder reads up to the End code, and the length of the frame it
-# declares must agree; a TIFF decoder stops at the strip size, as libtiff
-# does, so the TIFF writer's End code is never read and does not take the
-# width step at the table boundary that GIF's does.
+# before a Clear is never referenced, so the bytes are the same). Both
+# writers take the width step before End, so a decoder may read End in
+# either dialect. A GIF decoder reads up to the End code, and the length of
+# the frame it declares must agree; a TIFF decoder stops at the strip
+# size, as libtiff does (``reads_eoi`` steers only the decoder).
 _GIF_LZW = (False, 0, 4096, True)
 _TIFF_LZW = (True, 2, 4093, False)
 
@@ -1153,7 +1153,7 @@ def _lzw_encode(data: bytes, mcs: int, dialect: tuple) -> bytes:
     """Variable-width LZW over ``data`` (symbols below 2^mcs): Clear, the
     greedy string-table walk, End. Codes start mcs + 1 bits wide and widen
     (to 12 at most) when the next free code reaches 2^width + 1 - early."""
-    msb, early, full, reads_eoi = dialect
+    msb, early, full, _reads_eoi = dialect
     clear, end = 1 << mcs, (1 << mcs) + 1
     out = bytearray()
     acc = 0
@@ -1202,7 +1202,7 @@ def _lzw_encode(data: bytes, mcs: int, dialect: tuple) -> bytes:
     # data code too (the encoder has nothing to append — no following char),
     # so when that append lands exactly on the width boundary the decoder
     # reads End one bit wider than the body was written.
-    if reads_eoi and nxt == (1 << width) - early and width < 12:
+    if nxt == (1 << width) - early and width < 12:
         width += 1
     emit(end, width)
     if nbits:

@@ -17,7 +17,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import DataType
+from pyspark.sql.types import DataType, StructType
 
 PORTABLE_HASH_P = 2_147_483_647  # 2^31 - 1
 
@@ -1218,11 +1218,12 @@ LIMIT {k}
 # perceptrons of perceptron_train / langid_train. Each training step has ONE
 # implementation every family calls: `_word_counts` (the weighted
 # distinct-word relation), `_train_merges` (the pair-merge loop),
-# `_unigram_em` (the EM schedule), `_perceptron`, and `_single_task` (the
+# `_unigram_em` (the EM schedule), `_perceptron` with its one numpy step
+# `_perceptron_step` and bag kernel `_hashed_bags`, and `_single_task` (the
 # single-task route). A family keeps only what is its own: its symbol split
-# and merge score, the unigram Viterbi E-step, its feature builder. Each
-# Python step is the step-for-step twin of its JVM step, so both routes
-# return identical rows.
+# and merge score, the unigram Viterbi E-step, its hash values. Each
+# Python step is the step-for-step twin of its JVM step (both perceptron
+# routes run the same numpy step), so both routes return identical rows.
 # ---------------------------------------------------------------------------
 
 BPE_END_OF_WORD = "</w>"
@@ -1238,13 +1239,14 @@ BPE_END_OF_WORD = "</w>"
 # vocabulary (Heaps-law bounded), not a local-core constant.
 _TOKENIZER_SINGLE_TASK_WORDS = 200_000
 
-# Feature-row bound for the single-task perceptron/langid trainer route: tens
-# of MB of (doc, bucket, cnt) ints, the same size-class judgment as the
-# connected-components single-task bound. At or below it the K full-batch
-# iterations run as ONE vectorized numpy task instead of 2 x iters
-# distributed jobs + iters driver round-trips; above it the distributed loop
-# runs.
-_TRAINER_SINGLE_TASK_ROWS = 2_000_000
+# Dense-matrix bound (bag rows x dim, ~96 MB of int64 bags) for the
+# single-task perceptron/langid route. At or below it the K full-batch
+# steps run in ONE task; above it each step is one job over the partitions
+# (~0.17 s fixed cost per job, plus one shuffle that brings a document's
+# rows together). Measured (SCALING.md "Trainer routes"): the single task
+# wins up to the x16 corpus and perceptron_train at x64 (10.2M cells);
+# langid_train at x64 (20.5M cells) runs 2.4 s faster on the partitions.
+_TRAINER_SINGLE_TASK_CELLS = 12_000_000
 
 
 def _single_task(df: DataFrame, run, schema: str) -> DataFrame:
@@ -1638,73 +1640,118 @@ GROUP BY t.{id_col}, t.n_tokens
 """
 
 
-def _perceptron(feats: DataFrame, classes: tuple, dim: int, iters: int) -> DataFrame:
-    """One-vs-rest full-batch integer perceptrons over ``feats`` = (_doc,
-    label, bucket, cnt): for class ci a doc has y = +1 iff label =
-    classes[ci], else -1 (NULL label: -1). Per iteration every (doc, class)
-    is scored against the integer weights and sum(y * cnt) per bucket over
-    the misclassified docs (y * score <= 0) is added in. Returns (ci,
-    bucket, weight), len(classes) x dim rows.
+def _hashed_bags(
+    df: DataFrame, col: str, dim: int, n: int = 0,
+    emit=None, out: str = "vec array<long>",
+) -> DataFrame:
+    """The hashed-bag kernel of the perceptron family: one Arrow pass that
+    turns each row's hash values h into a dense count bag of length dim,
+    ``np.bincount(row * dim + h % dim)``. ``n > 0``: ``col`` is
+    norm_text_expr output (ASCII, so a byte is a char) and the values are
+    its char n-grams under char_fold_expr's (acc * 31 + c) % P fold, run
+    over the Arrow byte buffer with the grams that cross a row boundary
+    masked out. ``n == 0``: ``col`` is an array<int> of hash values.
 
-    At or below _TRAINER_SINGLE_TASK_ROWS feature rows the iterations
-    (order-independent integer sums) vectorize into one numpy task. Above,
-    ALL classes train together: each iteration is ONE driver round-trip
-    (score all (doc, class) pairs against the classes x dim weight literal,
-    fold misclassified updates grouped by (class, bucket)), so the
-    checkpoint is scanned 2 x iters times, not 2 x classes x iters (r11,
-    VERDICT r10 item 3), and only classes x dim integers cross to the
-    driver per iteration."""
-    feats = feats.localCheckpoint(eager=False)
+    Every other column of ``df`` passes through; ``emit(batch, M)`` turns
+    the batch's (rows x dim) int64 bag matrix into the ``out`` columns
+    (default: the bag itself as ``vec``)."""
+    keep = [c for c in df.columns if c != col]
+    schema = StructType([df.schema[c] for c in keep] + DataType.fromDDL(out).fields)
+
+    def kernel(batches):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        for b in batches:
+            arr, rows = b.column(col), b.num_rows
+            lens = pc.fill_null(pc.binary_length(arr) if n else pc.list_value_length(arr), 0)
+            row = np.repeat(np.arange(rows), np.asarray(lens))
+            if n:  # a column from the JVM starts at byte 0 of its data buffer
+                data, size = np.frombuffer(arr.buffers()[2] or b"", np.uint8), max(len(row) - n + 1, 0)
+                h = data[:size].astype(np.int64)
+                for j in range(1, n):
+                    h = (h * 31 + data[j:size + j]) % PORTABLE_HASH_P
+                inrow = row[:size] == row[n - 1:]
+                h, row = h[inrow], row[:size][inrow]
+            else:
+                h = np.asarray(arr.flatten(), dtype=np.int64)
+            M = np.bincount(row * dim + h % dim, minlength=rows * dim).reshape(rows, dim)
+            cols = emit(b, M) if emit else [
+                pa.ListArray.from_arrays(np.arange(0, M.size + 1, dim, dtype=np.int32), M.ravel())
+            ]
+            yield pa.RecordBatch.from_arrays([b.column(c) for c in keep] + cols, names=schema.names)
+
+    return df.mapInArrow(kernel, schema)
+
+
+def _perceptron_docs(doc, label, V: np.ndarray, classes: tuple) -> tuple[np.ndarray, np.ndarray]:
+    """(M, Y) of bag rows: rows that share a doc id merge into one document
+    (their bags add up, as the oracle's GROUP BY d does); Y[doc, ci] = +1
+    iff a row of the doc has label classes[ci], else -1 (NULL label: -1)."""
+    import pandas as pd
+
+    pos = np.stack([np.asarray(label == c, dtype=bool) for c in classes], axis=1)
+    codes, uniq = pd.factorize(doc)
+    if len(uniq) < len(codes):
+        order = np.argsort(codes, kind="stable")
+        starts = np.flatnonzero(np.diff(codes[order], prepend=-1))
+        V, pos = np.add.reduceat(V[order], starts), np.logical_or.reduceat(pos[order], starts)
+    return V, np.where(pos, 1, -1)
+
+
+def _perceptron_step(M: np.ndarray, Y: np.ndarray, W: np.ndarray) -> np.ndarray:
+    """The full-batch update of every class at once: sum(y * bag) over the
+    docs the class's weights misclassify (y * score <= 0)."""
+    return (Y * ((Y * (M @ W.T)) <= 0)).T @ M
+
+
+def _perceptron(bags: DataFrame, classes: tuple, dim: int, iters: int) -> DataFrame:
+    """One-vs-rest full-batch integer perceptrons over ``bags`` = (_doc,
+    label, vec): for class ci a doc has y = +1 iff its label =
+    classes[ci], else -1. Per iteration every (doc, class) is scored
+    against the integer weights and `_perceptron_step` adds the update of
+    the misclassified docs. Rows with a NULL doc id are left out (the
+    oracle's join on d never matches them). Returns (ci, bucket, weight),
+    len(classes) x dim rows.
+
+    At or below _TRAINER_SINGLE_TASK_CELLS the K steps run in one task.
+    Above it, the bags are partitioned by doc id (so a document's rows
+    meet) and each iteration is ONE job: every partition runs the step
+    against the current weights and the driver sums the classes x dim
+    partial updates (exact: the update is an integer sum over docs)."""
+    bags = bags.filter(F.col("_doc").isNotNull()).localCheckpoint(eager=False)
     k = len(classes)
-    if feats.count() <= _TRAINER_SINGLE_TASK_ROWS:
+    W = np.zeros((k, dim), np.int64)
+
+    def readout(W):
+        return [(ci, b, int(W[ci, b])) for ci in range(k) for b in range(dim)]
+
+    if bags.count() * dim <= _TRAINER_SINGLE_TASK_CELLS:
 
         def run(pdf):
-            docs, di = np.unique(pdf["_doc"].to_numpy(), return_inverse=True)
-            M = np.zeros((len(docs), dim), dtype=np.int64)
-            np.add.at(M, (di, pdf["bucket"].to_numpy(np.int64)), pdf["cnt"].to_numpy(np.int64))
-            label = np.empty(len(docs), dtype=object)
-            label[di] = pdf["label"].to_numpy()  # one label per doc
-            Y = np.stack([np.where(label == c, 1, -1) for c in classes], axis=1)
-            W = np.zeros((k, dim), dtype=np.int64)
+            V = np.array(pdf["vec"].tolist(), dtype=np.int64).reshape(-1, dim)
+            M, Y = _perceptron_docs(pdf["_doc"], pdf["label"], V, classes)
+            w = W
             for _ in range(iters):
-                mis = (Y * (M @ W.T)) <= 0
-                W += (Y * mis).T @ M
-            return [(ci, b, int(W[ci, b])) for ci in range(k) for b in range(dim)]
+                w = w + _perceptron_step(M, Y, w)
+            return readout(w)
 
-        return _single_task(feats, run, "ci int, bucket int, weight long")
-    fc = feats.withColumn("ci", F.explode(F.array(*[F.lit(i) for i in range(k)]))).withColumn(
-        "y",
-        F.when(
-            F.element_at(F.array(*[F.lit(c) for c in classes]), F.col("ci") + 1)
-            == F.col("label"),
-            F.lit(1),
-        ).otherwise(F.lit(-1)),
-    )
-    w = [[0] * dim for _ in range(k)]
+        return _single_task(bags, run, "ci int, bucket int, weight long")
+    parts = bags.repartition("_doc").localCheckpoint(eager=False)
     for _ in range(iters):
-        w2 = F.array(*[F.array(*[F.lit(int(x)) for x in row]) for row in w])
-        scored = fc.groupBy("_doc", "ci", "y").agg(
-            F.sum(
-                F.col("cnt")
-                * F.element_at(F.element_at(w2, F.col("ci") + 1), F.col("bucket") + 1)
-            ).alias("score")
-        )
-        upd = (
-            fc.join(
-                scored.filter(F.col("y") * F.col("score") <= 0).select("_doc", "ci"),
-                ["_doc", "ci"],
-                "left_semi",
-            )
-            .groupBy("ci", "bucket")
-            .agg(F.sum(F.col("y") * F.col("cnt")).alias("upd"))
-            .collect()
-        )
-        for r in upd:
-            w[r["ci"]][r["bucket"]] += int(r["upd"])
-    return feats.sparkSession.createDataFrame(
-        [(ci, b, int(w[ci][b])) for ci in range(k) for b in range(dim)],
-        "ci int, bucket int, weight long",
-    )
+
+        def partial(batches, W=W):
+            import pyarrow as pa
+
+            got = list(batches)
+            if got:
+                t = pa.Table.from_batches(got)
+                V = np.asarray(t["vec"].combine_chunks().flatten(), dtype=np.int64).reshape(-1, dim)
+                upd = _perceptron_step(*_perceptron_docs(t["_doc"].to_pandas(), t["label"].to_pandas(), V, classes), W)
+                yield pa.RecordBatch.from_arrays([pa.array([upd.ravel()], pa.list_(pa.int64()))], names=["upd"])
+
+        W = W + sum(np.reshape(r[0], (k, dim)) for r in parts.mapInArrow(partial, "upd array<long>").collect())
+    return bags.sparkSession.createDataFrame(readout(W), "ci int, bucket int, weight long")
 
 
 def perceptron_train(
@@ -1713,29 +1760,24 @@ def perceptron_train(
 ) -> DataFrame:
     """In-engine quality-classifier TRAINING (the learning half of the
     fastText-shape scorer, clf_score): a full-batch perceptron over hashed
-    bag-of-words features, run as K deterministic DataFrame iterations.
+    bag-of-words features, run as K deterministic iterations.
     INTEGER arithmetic throughout (counts, +-1 labels, integer weights), so
     unlike gradient descent there is no float accumulation to diverge
     across engines — the oracle unrolls the same K updates in SQL and must
     match bit-for-bit.
 
-    The one-class case of `_perceptron` (y = +1 iff label_expr holds): per
-    iteration, score every doc against the broadcast weight vector, collect
-    the per-bucket update sum(y * cnt) over misclassified docs (y * score <=
-    0), add it in. The feature relation is built once, localCheckpointed,
-    and re-scanned K times; each iteration is two map-side-combined hash
-    aggs. Returns the learned (bucket, weight) table — dim rows."""
-    feats = (
+    The one-class case of `_perceptron` (y = +1 iff label_expr holds). The
+    JVM hashes each token in-row (one array<int> per doc, no explode or
+    shuffle) and `_hashed_bags` counts the hashes into a dim-long bag.
+    Returns the learned (bucket, weight) table — dim rows."""
+    hashes = f"transform({tokens_expr(text_col)}, tok -> CAST({portable_hash_expr('tok')} % {dim} AS INT))"
+    bags = _hashed_bags(
         df.select(
-            F.col(id_col).alias("_doc"),
-            F.expr(label_expr).alias("label"),
-            F.explode(F.expr(tokens_expr(text_col))).alias("tok"),
-        )
-        .select("_doc", "label", (F.expr(portable_hash_expr("tok")) % dim).cast("int").alias("bucket"))
-        .groupBy("_doc", "label", "bucket")
-        .agg(F.count(F.lit(1)).alias("cnt"))
+            F.col(id_col).alias("_doc"), F.expr(label_expr).alias("label"), F.expr(hashes).alias("_h")
+        ),
+        "_h", dim,
     )
-    return _perceptron(feats, (True,), dim, iters).select("bucket", "weight")
+    return _perceptron(bags, (True,), dim, iters).select("bucket", "weight")
 
 
 def perceptron_train_sql(
@@ -2130,34 +2172,13 @@ def unigram_encode_sql(
 # classifier over hashed character n-gram features, trained one-vs-rest per
 # language by `_perceptron`, the trainer perceptron_train runs with one class:
 # counts, +-1 labels and integer weights only, so the DuckDB twin's unrolled
-# update chain matches bit-for-bit. The heuristic
-# lang_id_expr stays as the zero-shot fallback; langid_score applies a
-# trained table.
+# update chain matches bit-for-bit. Training and scoring share one feature
+# builder, `_hashed_bags`: the JVM normalizes the text to ASCII and the
+# Arrow kernel folds its char n-grams straight off the batch's byte buffer,
+# because one substring + fold per position in the JVM costs ~10x the
+# training itself. The heuristic lang_id_expr stays as the zero-shot
+# fallback; langid_score applies a trained table.
 # ---------------------------------------------------------------------------
-
-
-def _gram_buckets(df: DataFrame, text_col: str, n: int, dim: int, **keys: Column) -> DataFrame:
-    """Hashed char n-gram bag per row key: (*keys, bucket, cnt). One corpus
-    pass (normalize -> shingle -> portable-hash -> hash agg)."""
-    return (
-        df.select(
-            *[c.alias(name) for name, c in keys.items()],
-            F.expr(norm_text_expr(text_col)).alias("_nt"),
-        )
-        .select(*keys, F.explode(F.expr(shingles_expr("_nt", n))).alias("g"))
-        .select(*keys, (F.expr(char_fold_expr("g", n)) % dim).cast("int").alias("bucket"))
-        .groupBy(*keys, "bucket")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-
-
-def langid_features(
-    df: DataFrame, id_col: str = "doc_id", label_col: str = "lang",
-    text_col: str = "text", n: int = 3, dim: int = 64,
-) -> DataFrame:
-    """Hashed char n-gram bag per document: (_doc, lang, bucket, cnt).
-    Built once and re-scanned by every class x iteration."""
-    return _gram_buckets(df, text_col, n, dim, _doc=F.col(id_col), lang=F.col(label_col))
 
 
 def langid_train(
@@ -2167,18 +2188,25 @@ def langid_train(
 ) -> DataFrame:
     """Multiclass one-vs-rest integer perceptrons over hashed char n-grams:
     for each language c, y = +1 iff lang = c, then `iters` full-batch
-    perceptron updates (score docs against the broadcast dim-integer weight
-    vector; add sum(y*cnt) per bucket over misclassified docs). Returns the
+    perceptron updates (score docs against the dim-integer weight vector;
+    add sum(y*cnt) per bucket over misclassified docs). Returns the
     trained (lang, bucket, weight) table — len(langs) x dim rows.
 
-    Scale shape: the feature relation is built once (one shuffle); all
-    classes train together in `_perceptron`, one driver round-trip per
-    iteration. The per-class arithmetic is unchanged row-for-row, so the
-    unrolled DuckDB twin still matches bit-exact. Classes are a
+    Scale shape: the JVM normalizes the text, `_hashed_bags` folds its char
+    n-grams into a dim-long bag per doc in one Arrow pass, and all classes
+    train together in `_perceptron`. The per-class arithmetic is the
+    unrolled DuckDB twin's, so the weights match bit-exact. Classes are a
     user-supplied tuple (a model hyperparameter, like dim) so the oracle can
     unroll them."""
-    feats = langid_features(df, id_col, label_col, text_col, n, dim)
-    w = _perceptron(feats.withColumnRenamed("lang", "label"), tuple(langs), dim, iters)
+    bags = _hashed_bags(
+        df.select(
+            F.col(id_col).alias("_doc"),
+            F.col(label_col).alias("label"),
+            F.expr(norm_text_expr(text_col)).alias("_nt"),
+        ),
+        "_nt", dim, n,
+    )
+    w = _perceptron(bags, tuple(langs), dim, iters)
     return w.select(
         F.element_at(F.array(*[F.lit(c) for c in langs]), F.col("ci") + 1).alias("lang"),
         "bucket",
@@ -2191,34 +2219,37 @@ def langid_score(
     text_col: str = "text", n: int = 3, dim: int = 64,
 ) -> DataFrame:
     """Apply a trained langid table: score every document against every
-    class (features join broadcast weights, one hash agg), argmax with
-    deterministic lexicographic tie-break; docs with no features (or all
-    scores <= 0) predict 'unknown' — mirroring lang_id_expr's contract.
-    Returns (doc_id, pred_lang)."""
-    feats = _gram_buckets(df, text_col, n, dim, _doc=F.col(id_col))
-    scores = (
-        feats.join(F.broadcast(weights), "bucket")
-        .groupBy("_doc", "lang")
-        .agg(F.sum(F.col("cnt") * F.col("weight")).alias("score"))
-    )
-    rn = F.row_number().over(
-        Window.partitionBy("_doc").orderBy(F.col("score").desc(), F.col("lang"))
-    )
-    pred = (
-        scores.withColumn("_rn", rn)
-        .filter(F.col("_rn") == 1)
-        .select(
-            "_doc",
-            F.when(F.col("score") > 0, F.col("lang")).otherwise(F.lit("unknown")).alias("pred_lang"),
-        )
-    )
-    return (
-        df.select(F.col(id_col).alias("_doc"))
-        .join(pred, "_doc", "left")
-        .select(
-            F.col("_doc").alias(id_col),
-            F.coalesce("pred_lang", F.lit("unknown")).alias("pred_lang"),
-        )
+    class, argmax with deterministic (score desc, lang asc) tie-break; docs
+    with no features (or all scores <= 0) and rows with a NULL id predict
+    'unknown' — mirroring lang_id_expr's contract. Returns (doc_id,
+    pred_lang), one row per input row.
+
+    The model, len(langs) x dim rows, is collected to the driver (the size
+    of the literal langid_fixture_weights describes) and rides the task
+    closure; each batch is scored as ``bags @ W.T`` inside `_hashed_bags`,
+    with no join, shuffle or window. A row is scored on its own text, so
+    the input's id column is expected to be a key (langid_score_sql merges
+    the text of rows that share an id)."""
+    model = [r for r in weights.collect() if None not in (r["lang"], r["bucket"], r["weight"])]
+    langs = sorted({r["lang"] for r in model})
+    # row 0 is 'unknown' at score 0: argmax takes the first maximum, so it
+    # wins unless some lang scores > 0, and ties go to the lower lang
+    W = np.zeros((len(langs) + 1, dim), dtype=np.int64)
+    for r in model:
+        if 0 <= r["bucket"] < dim:
+            W[langs.index(r["lang"]) + 1, r["bucket"]] += r["weight"]
+    names = np.array(["unknown", *langs], dtype=object)
+
+    def emit(batch, M):
+        import pyarrow as pa
+
+        pick = np.argmax(M @ W.T, axis=1)
+        pick[np.asarray(batch.column(id_col).is_null())] = 0
+        return [pa.array(names[pick], pa.string())]
+
+    return _hashed_bags(
+        df.select(id_col, F.expr(norm_text_expr(text_col)).alias("_nt")),
+        "_nt", dim, n, emit, "pred_lang string",
     )
 
 

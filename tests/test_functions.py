@@ -1375,8 +1375,11 @@ def test_tokenizer_single_task_matches_distributed(spark, monkeypatch):
 
 
 def test_perceptron_single_task_matches_distributed(spark, monkeypatch):
-    """The vectorized single-task perceptron/langid trainers must be
-    bit-identical to the distributed full-batch iterations."""
+    """Both perceptron/langid routes (the single task and the per-partition
+    step) must return identical weights, equal to the DuckDB twins."""
+    import duckdb
+    import pandas as pd
+
     rows = [
         (1, "the cat sat on the mat", "en"),
         (2, "el gato y la casa y el rio", "es"),
@@ -1388,25 +1391,71 @@ def test_perceptron_single_task_matches_distributed(spark, monkeypatch):
         (8, "the end of it", None),    # NULL label: -1 for every class
         (9, "!!! ???", "es"),          # no tokens
         (10, "a b c", "fr"),           # one-character words
+        (11, "猫\tcat 🐈 on\tthe mat", "en"),  # CJK, emoji, tabs: stripped to ASCII
+        (12, "", "de"),                # empty
+        (13, "  \t \n ", "fr"),        # whitespace only
+        (None, "the cat and the dog", "en"),  # NULL id: the oracle's join drops it
     ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string, lang string")
+    # doc 3 again with its label, in the second input partition: its rows
+    # merge into one document, as the oracle's GROUP BY d does
+    extra = [(3, "the big dog ran", "en")]
+    schema = "doc_id long, text string, lang string"
+    docs = spark.createDataFrame(rows, schema).union(spark.createDataFrame(extra, schema))
+    assert docs.rdd.getNumPartitions() > 1
+    con = duckdb.connect()
+    pdf = pd.DataFrame(rows + extra, columns=["doc_id", "text", "lang"])
+    con.register("documents", pdf.astype({"doc_id": "Int64"}))
+    langs = ("de", "en", "es", "fr")
 
-    def both(fn):
-        monkeypatch.setattr(tx, "_TRAINER_SINGLE_TASK_ROWS", 0)
-        dist = sorted(tuple(r) for r in fn().collect())
+    def both(fn, sql):
+        monkeypatch.setattr(tx, "_TRAINER_SINGLE_TASK_CELLS", 0)
+        parts = sorted(tuple(r) for r in fn().collect())
         monkeypatch.undo()
         single = sorted(tuple(r) for r in fn().collect())
-        assert dist == single
-        assert any(any(v not in (None, 0) for v in t[1:]) for t in dist)
+        assert parts == single
+        assert single == sorted(con.sql(sql).fetchall())
+        assert any(any(v not in (None, 0) for v in t[1:]) for t in single)
 
-    both(lambda: tx.perceptron_train(docs, "lang = 'en'"))
-    both(lambda: tx.langid_train(docs, ("de", "en", "es", "fr")))
+    both(lambda: tx.perceptron_train(docs, "lang = 'en'"), tx.perceptron_train_sql())
+    both(lambda: tx.langid_train(docs, langs), tx.langid_train_sql("documents", langs))
+
+
+def test_langid_score_matches_duckdb_oracle(spark):
+    """langid_score over the fixture model against langid_score_sql: a
+    two-class tie goes to the lower lang, a doc whose scores are all <= 0
+    and a NULL-id row predict 'unknown'."""
+    import duckdb
+    import pandas as pd
+
+    langs = ("de", "en", "es", "fr", "zh")
+    rows = [
+        (1, "the cat sat"),       # fr and zh both score 13: fr wins
+        (2, "aap"),               # every class scores -8
+        (3, "der hund lief"),
+        (4, "le chat noir"),
+        (5, None),
+        (6, "猫 🐈\t!!"),
+        (None, "der hund lief"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = sorted(
+        tx.langid_score(df, tx.langid_fixture_weights(spark, langs)).collect(),
+        key=lambda r: (r[0] is None, r[0]),
+    )
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(rows, columns=["doc_id", "text"]).astype({"doc_id": "Int64"}))
+    want = sorted(con.sql(tx.langid_score_sql("documents", langs)).fetchall(), key=lambda r: (r[0] is None, r[0]))
+    assert [tuple(r) for r in got] == want
+    assert dict(want[:6]) == {1: "fr", 2: "unknown", 3: "en", 4: "zh", 5: "unknown", 6: "unknown"}
+    assert want[6] == (None, "unknown")
 
 
 def test_trainer_job_counts(spark, spark_jobs):
     """The default (single-task) route of every trainer runs a fixed number
     of Spark jobs: the route count that materializes the reduced relation,
-    the one task, and the readout. Pinned so a shared step adds no job."""
+    the one task, and the readout; langid_score collects its model and runs
+    one scoring pass. Pinned
+    so a shared step adds no job."""
     rows = [
         (1, "the low lower newest widest", "en"),
         (2, "el gato y la casa y el rio", "es"),
@@ -1420,6 +1469,7 @@ def test_trainer_job_counts(spark, spark_jobs):
         "unigram_learn": lambda: tx.unigram_learn(docs, "text"),
         "perceptron_train": lambda: tx.perceptron_train(docs, "lang = 'en'"),
         "langid_train": lambda: tx.langid_train(docs, ("en", "es")),
+        "langid_score": lambda: tx.langid_score(docs, tx.langid_fixture_weights(spark, ("en", "es"))),
     }
     got = {}
     for name, fn in runs.items():
@@ -1428,7 +1478,7 @@ def test_trainer_job_counts(spark, spark_jobs):
         got[name] = jobs.n
     assert got == {
         "bpe_learn": 5, "wordpiece_learn": 5, "unigram_learn": 5,
-        "perceptron_train": 4, "langid_train": 4,
+        "perceptron_train": 3, "langid_train": 3, "langid_score": 2,
     }
 
 

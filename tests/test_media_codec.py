@@ -1055,6 +1055,21 @@ def test_tiff_lzw_kernel_table_reset_and_widths():
     assert mc._lzw_decode(mc._lzw_encode(run, 8, mc._TIFF_LZW), 8, 500, mc._TIFF_LZW) == run
 
 
+def test_tiff_lzw_end_code_reads_at_width_boundary():
+    """The TIFF writer takes GIF's width step before End too, so a decoder
+    that reads on to the End code (``reads_eoi``) finds it at the width the
+    table has grown to. Random strips whose final table append lands on the
+    9->10 (510) and 10->11 (1022) boundaries were misread before: "LZW code
+    514 beyond the string table", "truncated mid-code"."""
+    reads_end = (*mc._TIFF_LZW[:3], True)
+    rng = np.random.RandomState(0)
+    for n in [*range(240, 270), *range(750, 775)]:
+        data = rng.randint(0, 256, n).astype(np.uint8).tobytes()
+        enc = mc._lzw_encode(data, 8, mc._TIFF_LZW)
+        assert mc._lzw_decode(enc, 8, n, reads_end) == data, n
+        assert mc._lzw_decode(enc, 8, n, mc._TIFF_LZW) == data, n
+
+
 def test_tiff_packbits_is_per_row():
     # TIFF 6.0 §9: each row compressed independently — a run spanning two
     # rows must produce two row streams, i.e. decoding exactly one row's

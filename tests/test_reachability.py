@@ -245,13 +245,16 @@ def test_transport_steps_run_only_in_their_runner():
 
 
 # The per-batch Arrow passes of functions/text.py: they run on every
-# partition, so they are not a single-task route.
-TEXT_PER_BATCH_PASSES = {"ngram_overlap_bloom", "nfc_normalize_text"}
+# partition, so they are not a single-task route. `_hashed_bags` is the
+# perceptron family's bag kernel; `_perceptron` runs its step once per
+# partition per iteration on the partition route.
+TEXT_PER_BATCH_PASSES = {"ngram_overlap_bloom", "nfc_normalize_text", "_hashed_bags", "_perceptron"}
+TEXT_ARROW_STEPS = ("mapInPandas", "mapInArrow")
 
 
 def _text_task_calls() -> list[tuple[str, str, str]]:
-    """(step, "line", enclosing top-level def) for every ``coalesce(1)`` and
-    ``mapInPandas`` call in functions/text.py."""
+    """(step, "line", enclosing top-level def) for every ``coalesce(1)``,
+    ``mapInPandas`` and ``mapInArrow`` call in functions/text.py."""
     calls = []
     for top in ast.parse((PACKAGE / "functions" / "text.py").read_text()).body:
         for node in ast.walk(top):
@@ -259,7 +262,7 @@ def _text_task_calls() -> list[tuple[str, str, str]]:
                 continue
             step = node.func.attr
             one = [a.value for a in node.args if isinstance(a, ast.Constant)] == [1]
-            if step == "mapInPandas" or (step == "coalesce" and one):
+            if step in TEXT_ARROW_STEPS or (step == "coalesce" and one):
                 calls.append((step, str(node.lineno), getattr(top, "name", "<module>")))
     return calls
 
@@ -268,7 +271,7 @@ def test_text_single_task_route_runs_only_in_its_runner():
     calls = _text_task_calls()
     stray = [(step, line, fn) for step, line, fn in calls
              if fn != "_single_task"
-             and not (step == "mapInPandas" and fn in TEXT_PER_BATCH_PASSES)]
+             and not (step in TEXT_ARROW_STEPS and fn in TEXT_PER_BATCH_PASSES)]
     assert not stray, (
         f"single-task steps outside text._single_task: {stray}. Run a trainer's "
         "single-task route through _single_task."

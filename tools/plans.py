@@ -111,7 +111,7 @@ AUDITED = [
     "unigram_encode",     # chunk-relation Viterbi fold (JVM aggregate/array_min)
                           # + one exploded-token hash agg — final-pass plan;
                           # the EM loop's per-pass shape is identical
-    "langid_apply",       # feature hash agg + broadcast weights join + rank window
+    "langid_apply",       # one Arrow bag-and-score pass over the normalized text, no shuffle
     "wordpiece_encode",   # two codegen folds (longest-match table + greedy walk)
                           # + one exploded hash agg, no shuffle before it
     "hll_registers",      # md5 register/rank projection + one MAX hash agg
@@ -219,6 +219,7 @@ MARKS = [
     ("WholeStageCodegen", "whole-stage codegen"),
     ("FlatMapGroupsInPandas", "Arrow grouped kernel"),
     ("MapInPandas", "Arrow map kernel"),
+    ("MapInArrow", "Arrow map kernel (record batches)"),
     ("BroadcastNestedLoopJoin", "!! nested-loop join"),
     ("CartesianProduct", "!! cartesian product"),
 ]

@@ -534,10 +534,11 @@ def main() -> int:
         "  piece-cost map is vocab_size-bounded by contract (at >=10k-piece",
         "  production vocabularies swap the map literal for a broadcast join",
         "  building per-word cost arrays — same plan shape otherwise).",
-        "- `langid_train`/`langid_apply`: the hashed-feature relation is",
-        "  built once per run (one shuffle) and re-scanned per class x",
-        "  iteration as map-side-combined hash aggs; driver traffic is dim",
-        "  integers per update. Cost ~ corpus token volume x classes.",
+        "- `langid_train`/`langid_apply`: one Arrow pass folds each doc's",
+        "  char n-grams into a dim-long bag (no shuffle); training runs the",
+        "  K numpy steps in one task or one job per step over the",
+        "  partitions, apply scores each batch against the collected model.",
+        "  Cost ~ corpus bytes + docs x dim x classes per step.",
         "- `wordpiece_learn`/`wordpiece_encode`: bpe_learn's shape (distinct",
         "  word relation, O(vocab) per merge step) plus one symbol-frequency",
         "  agg per step; encode is two codegen folds per distinct word.",
