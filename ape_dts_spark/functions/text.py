@@ -1239,14 +1239,15 @@ BPE_END_OF_WORD = "</w>"
 # vocabulary (Heaps-law bounded), not a local-core constant.
 _TOKENIZER_SINGLE_TASK_WORDS = 200_000
 
-# Dense-matrix bound (bag rows x dim, ~96 MB of int64 bags) for the
+# Dense-matrix bound (bag rows x dim, ~64 MB of int64 bags) for the
 # single-task perceptron/langid route. At or below it the K full-batch
 # steps run in ONE task; above it each step is one job over the partitions
 # (~0.17 s fixed cost per job, plus one shuffle that brings a document's
-# rows together). Measured (SCALING.md "Trainer routes"): the single task
-# wins up to the x16 corpus and perceptron_train at x64 (10.2M cells);
-# langid_train at x64 (20.5M cells) runs 2.4 s faster on the partitions.
-_TRAINER_SINGLE_TASK_CELLS = 12_000_000
+# rows together). Measured (SCALING.md "Perceptron-family routes"): the
+# single task wins at 5.12M cells (langid_train x16, perceptron_train x32);
+# at 10.2M cells the partitions win for langid_train (x32) and tie for
+# perceptron_train (x64).
+_TRAINER_SINGLE_TASK_CELLS = 8_000_000
 
 
 def _single_task(df: DataFrame, run, schema: str) -> DataFrame:
