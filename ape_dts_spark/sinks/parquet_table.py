@@ -10,11 +10,16 @@ commits it as a new immutable version directory, with ``_meta.json`` pointing
 at the current version (a micro table-format commit — readers never see a
 partial write, and a failed apply leaves the previous version intact).
 
-Scale note: the new state is ``target LEFT ANTI JOIN changed_keys`` plus the
-upsert images — one shuffle on the key columns, broadcast when the change set
-is small (Spark/AQE picks that automatically since the compacted batch is
-usually tiny relative to the table). A real cluster deployment swaps this
-class for Delta ``MERGE`` and keeps every operator upstream unchanged.
+Scale note: a new version is a full snapshot written in two parts. The
+batch-side rows (the upsert images, plus the spill replay over them) go
+through Spark's writer. The kept rows are copied file by file in Arrow by
+``_copy_kept``: one ``mapInArrow`` task per bin of the current version's
+files reads them with pyarrow, drops the rows the batch removes (a set
+collected once and broadcast) and writes one file, so a kept row is never
+decoded into the JVM or re-encoded by parquet-mr. The copy is still a
+whole-table write per apply: the cost per kept row fell, not the count. A
+real cluster deployment swaps this class for Delta ``MERGE`` and keeps every
+operator upstream unchanged.
 """
 
 from __future__ import annotations
@@ -23,7 +28,11 @@ import json
 import math
 import os
 import time
+from functools import reduce
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -59,6 +68,136 @@ def _can_widen(old: T.DataType, new: T.DataType) -> bool:
     return False
 
 
+# Spark parquet codec names pyarrow spells differently
+_ARROW_CODECS = {"uncompressed": "none", "lz4_raw": "lz4"}
+
+
+def _data_files(version_dir: str) -> list[str]:
+    """The data files of a version directory in listing order, skipping the
+    names Spark's reader skips (``_SUCCESS``, ``.crc`` files)."""
+    return [
+        os.path.join(version_dir, n) for n in sorted(os.listdir(version_dir))
+        if not n.startswith(("_", "."))
+    ]
+
+
+def _file_bins(files: list[str], max_bytes: int) -> list[list[str]]:
+    """Pack ``files`` in order into bins of at most ``max_bytes`` (a file
+    larger than that is a bin of its own; no file is split)."""
+    bins, size = [], 0
+    for path in files:
+        n = os.path.getsize(path)
+        if not bins or size + n > max_bytes:
+            bins.append([])
+            size = 0
+        bins[-1].append(path)
+        size += n
+    return bins
+
+
+def _arrow_schema(schema: T.StructType) -> pa.Schema:
+    """``schema`` in Arrow with every field nullable, as Spark reads them (a
+    NULL-filled column must be nullable)."""
+    return pa.schema([f.with_nullable(True) for f in to_arrow_schema(schema)])
+
+
+def _project(batch, schema: pa.Schema) -> pa.Table:
+    """``batch`` (an Arrow batch or table) on ``schema``: columns by name,
+    cast where the stored type differs (a Spark-written INT96 timestamp, a
+    list's child name), NULL where ``batch`` lacks the name (ADD COLUMN);
+    names ``schema`` lacks (DROP COLUMN) are left out."""
+    have = batch.schema.names
+    cols = []
+    for f in schema:
+        if f.name not in have:
+            cols.append(pa.nulls(batch.num_rows, f.type))
+            continue
+        col = batch.column(f.name)
+        cols.append(col if col.type == f.type else col.cast(f.type))
+    return pa.Table.from_arrays(cols, schema=schema)
+
+
+def _hashable(v):
+    """A Python value of a nested Arrow column as a hashable tuple."""
+    if isinstance(v, dict):
+        return tuple((k, _hashable(x)) for k, x in v.items())
+    if isinstance(v, (list, tuple)):
+        return tuple(_hashable(x) for x in v)
+    return v
+
+
+def _removed(table: pa.Table, groups: list[tuple[list[str], pa.Table]]) -> np.ndarray:
+    """Mask of the rows of ``table`` a removal group matches. A group is
+    (columns, rows): a row matches when its values in those columns equal one
+    of the rows'. A NULL matches nothing, as in Spark's equi-join. Nested
+    columns, which an Arrow hash join cannot key on, compare as Python
+    values."""
+    hit = np.zeros(table.num_rows, dtype=bool)
+    for cols, rows in groups:
+        if not rows.num_rows:
+            continue
+        if any(pa.types.is_nested(rows.schema.field(c).type) for c in cols):
+            want = {_hashable(r) for r in zip(*(rows[c].to_pylist() for c in cols))}
+            got = [
+                i for i, r in enumerate(zip(*(table[c].to_pylist() for c in cols)))
+                if None not in r and _hashable(r) in want
+            ]
+        else:
+            keys = table.select(cols).append_column("_row", pa.array(np.arange(table.num_rows)))
+            got = keys.join(rows, cols, join_type="left semi")["_row"].to_numpy()
+        hit[got] = True
+    return hit
+
+
+def _copy_kept(
+    spark: SparkSession, src: str, out: str, schema: T.StructType,
+    groups: list[tuple[list[str], pa.Table]],
+) -> None:
+    """Copy the rows of version directory ``src`` that no removal group
+    matches (``_removed``) into ``out``, projected onto ``schema``.
+
+    The files are packed in listing order into bins of the session's
+    ``spark.sql.files.maxPartitionBytes``, and one ``mapInArrow`` task per bin
+    streams its files with pyarrow and writes one file with the session's
+    parquet codec. The groups ship to the tasks as one broadcast."""
+    conf = spark._jsparkSession.sessionState().conf()
+    bins = _file_bins(_data_files(src), conf.filesMaxPartitionBytes())
+    codec = _ARROW_CODECS.get(conf.parquetCompressionCodec(), conf.parquetCompressionCodec())
+    arrow_schema = _arrow_schema(schema)
+    removal = spark.sparkContext.broadcast(groups)
+
+    def copy(batches):
+        for b in batches:
+            for i, paths in zip(b["bin"].to_pylist(), b["files"].to_pylist()):
+                writer = None
+                for path in paths:
+                    with pq.ParquetFile(path, coerce_int96_timestamp_unit="us") as f:
+                        have = [c for c in arrow_schema.names if c in f.schema_arrow.names]
+                        for batch in f.iter_batches(columns=have):
+                            t = _project(batch, arrow_schema)
+                            t = t.filter(pa.array(~_removed(t, removal.value)))
+                            if not t.num_rows:
+                                continue
+                            if writer is None:
+                                writer = pq.ParquetWriter(
+                                    os.path.join(out, f"part-kept-{i:05d}.parquet"),
+                                    arrow_schema, compression=codec,
+                                )
+                            writer.write_table(t)
+                if writer is not None:
+                    writer.close()
+                yield pa.RecordBatch.from_pydict({"bin": [i]})
+
+    try:
+        spec = pa.table({
+            "bin": pa.array(range(len(bins)), pa.int64()),
+            "files": pa.array(bins, pa.list_(pa.string())),
+        })
+        spark.createDataFrame(spec).mapInArrow(copy, "bin long").collect()
+    finally:
+        removal.destroy()
+
+
 class ParquetTable:
     """A versioned parquet table supporting idempotent merge-apply commits."""
 
@@ -86,13 +225,25 @@ class ParquetTable:
             json.dump(meta, f)
         os.replace(tmp, self._meta_path)
 
-    def _commit(self, state: DataFrame, meta: dict, ddl: dict | None = None) -> None:
+    def _commit(
+        self, state: DataFrame, meta: dict, ddl: dict | None = None,
+        removal: list[tuple[list[str], pa.Table]] | None = None,
+    ) -> None:
         """Write ``state`` as the next version directory, then point
         ``_meta.json`` at it (stamping ``committed_at`` and logging ``ddl``)
-        — the one data commit every rewrite shares. A failed write leaves the
-        meta, and so the table, at the previous version."""
+        — the one data commit every rewrite shares. With ``removal`` the
+        current version's rows that no removal group matches are copied in
+        beside ``state`` (``_copy_kept``). A failed write leaves the meta, and
+        so the table, at the previous version."""
         version = meta["version"] + 1
-        state.write.mode("overwrite").parquet(os.path.join(self.path, f"v{version}"))
+        out = os.path.join(self.path, f"v{version}")
+        # overwrite mode clears `out` first, a failed attempt's files with it
+        state.write.mode("overwrite").parquet(out)
+        if removal is not None:
+            _copy_kept(
+                self.spark, os.path.join(self.path, f"v{meta['version']}"), out,
+                self.payload_schema, removal,
+            )
         meta["version"] = version
         meta["committed_at"] = time.time()
         if ddl is not None:
@@ -149,11 +300,23 @@ class ParquetTable:
         schema-on-read fills missing columns with NULL (the Delta
         ``mergeSchema`` analogue); the DDL is appended to the meta ddl_log
         (the reference refreshes cached metadata on DDL,
-        dt-pipeline/src/base_pipeline.rs:268-305)."""
+        dt-pipeline/src/base_pipeline.rs:268-305). A name that DROP COLUMN
+        left in the current version's files would read back the dropped
+        values, so then the version is rewritten with the column NULL."""
         if field.name in [f.name for f in self.payload_schema.fields]:
             return
+        entry = {"ddl": ddl_text, "column": field.name, "type": field.dataType.simpleString()}
+        meta = self._read_meta()
+        stale = meta["version"] >= 0 and any(
+            field.name in pq.read_schema(path).names
+            for path in _data_files(os.path.join(self.path, f"v{meta['version']}"))
+        )
+        cleared = self.current().withColumn(field.name, F.lit(None).cast(field.dataType)) if stale else None
         self.payload_schema = T.StructType(list(self.payload_schema.fields) + [field])
-        self.log_ddl({"ddl": ddl_text, "column": field.name, "type": field.dataType.simpleString()})
+        if stale:
+            self._commit(cleared, meta, entry)
+        else:
+            self.log_ddl(entry)
 
     def drop_column(self, name: str, ddl_text: str = "") -> None:
         """Schema evolution: DROP COLUMN. No data rewrite — the column simply
@@ -281,6 +444,13 @@ class ParquetTable:
            means the caller knows nothing spilled, which skips the
            emptiness probe (one Spark job)
 
+        The next version is written in two parts. The batch-side rows (steps
+        2 and 3 over the upsert images and the spilled inserts) go through
+        Spark's writer. The current version's rows are copied in by
+        ``_copy_kept``, less the removal set ``_removal_groups`` collects in
+        one Spark job: the changed keys and the rows step 3 deletes. A table
+        with no version has nothing to copy and runs no copy job.
+
         If ``batch_id`` is given and was already committed for ``stream_id``
         the apply is a no-op — making foreachBatch replays idempotent.
         """
@@ -293,31 +463,57 @@ class ParquetTable:
             return
 
         # No materializing preamble: the caller caches the batch both inputs
-        # derive from (CdcPipeline.apply_batch persists it), so each branch
-        # re-reads cached rows, not the source; a caller passing an uncached
-        # plan pays one recompute per branch. An empty state (first apply,
-        # after TRUNCATE/CREATE) is an empty LocalRelation, so Catalyst's
-        # PropagateEmptyRelation prunes the anti-join and the second
-        # reference to `compacted` with it. AQE's post-shuffle coalescing
-        # sizes the upsert files; the kept branch keeps the table's layout.
-        # Invariant (ADVICE r17): a ParquetTable holds ONE (schema, tb) —
-        # every caller routes per table — so selecting key_cols alone cannot
-        # put duplicate key rows on the build side (and the anti-join would
-        # tolerate them anyway; no distinct, which would add an exchange).
-        changed_keys = compacted.select(*[F.col(k) for k in key_cols])
-        kept = self.at_version(meta["version"]).join(changed_keys, key_cols, "left_anti")
-        upserts = compacted.filter(F.col("op") == "upsert").select(
+        # derive from (CdcPipeline.apply_batch persists it), so the removal
+        # collect and the write re-read cached rows, not the source; a caller
+        # passing an uncached plan pays one recompute for each. AQE's
+        # post-shuffle coalescing sizes the upsert files.
+        rows = compacted.filter(F.col("op") == "upsert").select(
             *self._image_cols(compacted, "after")
         )
-        state = kept.unionByName(upserts)
-        if spilled is not None and not spilled.isEmpty():
+        if spilled is not None and spilled.isEmpty():
             # one emptiness probe: most CDC batches spill nothing, and an
             # empty spill set would still plan two broadcast anti-joins
-            state = self._replay_spill(state, spilled, key_cols)
-
+            spilled = None
+        if spilled is not None:
+            rows = self._replay_spill(rows, spilled, key_cols)
         if batch_id is not None:
             meta["applied_batches"][stream_id] = batch_id
-        self._commit(state, meta)
+        removal = None
+        if meta["version"] >= 0:
+            removal = self._removal_groups(compacted, spilled, key_cols)
+        self._commit(rows, meta, removal=removal)
+
+    def _removal_groups(
+        self, compacted: DataFrame, spilled: DataFrame | None, key_cols: list[str]
+    ) -> list[tuple[list[str], pa.Table]]:
+        """The current version's rows this apply removes, as ``_removed``
+        groups collected in one Spark job: the changed keys and the keys of
+        the keyed delete images, matched on the key columns, then the NULL-key
+        images, one group per null mask, matched on their non-NULL columns.
+        This is ``_replay_spill``'s verdict on a row at seq -1, where every
+        image with a seq above -1 is visible, so it removes what the replay
+        over the whole table would."""
+        fields = self.payload_schema.fields
+        rows = compacted.select(
+            *[(F.col(f.name) if f.name in key_cols else F.lit(None)).cast(f.dataType).alias(f.name)
+              for f in fields],
+            F.lit(False).alias("_whole"),
+        )
+        if spilled is not None:
+            dels = self._delete_images(spilled, key_cols)
+            rows = rows.unionByName(dels.filter(F.col("_replay_seq") > -1).drop("_replay_seq"))
+        got = rows.toArrow()
+        whole = got["_whole"].to_numpy()
+        got = _project(got, _arrow_schema(self.payload_schema))
+        groups = [(key_cols, got.filter(pa.array(~whole)).select(key_cols))]
+        images = got.filter(pa.array(whole))
+        if images.num_rows:
+            valid = np.column_stack([images[c].is_valid().to_numpy() for c in images.column_names])
+            masks, which = np.unique(valid, axis=0, return_inverse=True)
+            for i, mask in enumerate(masks):
+                cols = [c for c, on in zip(images.column_names, mask) if on]
+                groups.append((cols, images.filter(pa.array(which.ravel() == i)).select(cols)))
+        return groups
 
     def _image_cols(self, df: DataFrame, image: str) -> list:
         """Project an event image struct onto the CURRENT payload schema,
@@ -354,21 +550,14 @@ class ParquetTable:
            reference's no-PK whole-row match, rdb_query_builder.rs no-PK
            guards). All-NULL images match nothing, as in the serial path.
         """
-        from functools import reduce
-
         payload_cols = list(state.columns)
         seq_c = "_replay_seq"
 
-        dels = spilled.filter(
-            ((F.col("row_type") == ROW_TYPE_DELETE) | (F.col("row_type") == "update"))
-            & F.col("before").isNotNull()
-        ).select(*self._image_cols(spilled, "before"), F.col("seq").alias(seq_c))
-        keys_ok = reduce(lambda a, b: a & b, [F.col(k).isNotNull() for k in key_cols])
-        keyed = dels.filter(keys_ok).select(
+        dels = self._delete_images(spilled, key_cols)
+        keyed = dels.filter(~F.col("_whole")).select(
             *[F.col(k).alias(f"_k_{k}") for k in key_cols], F.col(seq_c).alias("_k_seq")
         )
-        any_set = reduce(lambda a, b: a | b, [F.col(c).isNotNull() for c in payload_cols])
-        whole_row = dels.filter(~keys_ok).filter(any_set).select(
+        whole_row = dels.filter(F.col("_whole")).select(
             *[F.col(c).alias(f"_w_{c}") for c in payload_cols], F.col(seq_c).alias("_w_seq")
         )
 
@@ -392,6 +581,19 @@ class ParquetTable:
         ) & (F.col("_w_seq") > F.col(seq_c))
         rows = rows.join(F.broadcast(whole_row), wr_cond, "left_anti")
         return rows.select(*payload_cols)
+
+    def _delete_images(self, spilled: DataFrame, key_cols: list[str]) -> DataFrame:
+        """The before-images spilled deletes and updates delete, projected
+        onto the payload schema, with their ``_replay_seq`` and ``_whole``:
+        true for a NULL-key image, which matches rows on its non-NULL columns
+        (an all-NULL image matches nothing and is left out)."""
+        dels = spilled.filter(
+            ((F.col("row_type") == ROW_TYPE_DELETE) | (F.col("row_type") == "update"))
+            & F.col("before").isNotNull()
+        ).select(*self._image_cols(spilled, "before"), F.col("seq").alias("_replay_seq"))
+        keys_ok = reduce(lambda a, b: a & b, [F.col(k).isNotNull() for k in key_cols])
+        any_set = reduce(lambda a, b: a | b, [F.col(f.name).isNotNull() for f in self.payload_schema.fields])
+        return dels.filter(keys_ok | any_set).withColumn("_whole", ~keys_ok)
 
     def compact_files(self, target_rows_per_file: int = 1_000_000) -> int:
         """Small-file compaction (Delta OPTIMIZE analogue): rewrite the

@@ -135,6 +135,29 @@ def test_rename_and_drop_column_in_stream(spark, tmp_path):
     assert "name" not in table.current().columns
 
 
+def test_drop_then_add_column_reads_null(spark, tmp_path):
+    """DROP COLUMN then ADD COLUMN of the same name with no write between:
+    the re-added column is NULL on every existing row, as MySQL gives, not
+    the dropped values the parquet files still hold; rows written after the
+    ADD carry their own."""
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    table = ParquetTable(spark, str(tmp_path / "tgt"), PAYLOAD)
+    _apply(spark, src, table, [
+        ev("c", after={"id": 1, "name": "old", "bal": 10}, seq=1),
+        ev("c", after={"id": 2, "name": "old", "bal": 20}, seq=2),
+    ], PAYLOAD, batch_id=0)
+    table.drop_column("name", "ALTER TABLE users DROP COLUMN name")
+    table.add_column(T.StructField("name", T.StringType()), "ALTER TABLE users ADD COLUMN name varchar(8)")
+    assert [f.name for f in table.payload_schema.fields] == ["id", "bal", "name"]
+    assert {r["id"]: r["name"] for r in table.current().collect()} == {1: None, 2: None}
+    _apply(spark, src, table, [
+        ev("u", before={"id": 2, "bal": 20, "name": None},
+           after={"id": 2, "bal": 21, "name": "new"}, seq=5),
+    ], PAYLOAD, batch_id=1)
+    assert {r["id"]: r["name"] for r in table.current().collect()} == {1: None, 2: "new"}
+
+
 def test_truncate_rename_drop_table_in_stream(spark, tmp_path):
     src = str(tmp_path / "src")
     os.makedirs(src)

@@ -28,6 +28,8 @@ so does a ``mapInPandas``, apart from the listed per-batch passes.
 A fifth keeps the media payload kernels on one runner: in
 ``functions/media_codec.py`` and ``functions/multimodal.py`` a
 ``mapInPandas`` happens only in ``media_codec._quarantine_map``.
+A sixth keeps the sinks' Arrow file tasks in one place: under ``sinks/`` a
+``mapInArrow`` happens only in ``parquet_table._copy_kept``.
 """
 
 from __future__ import annotations
@@ -282,25 +284,35 @@ def test_text_single_task_route_runs_only_in_its_runner():
 MEDIA_MODULES = ("media_codec.py", "multimodal.py")
 
 
-def _media_map_calls() -> list[tuple[str, str, str]]:
-    """(module, line, enclosing top-level def) for every ``mapInPandas``
-    call in the media modules."""
+def _map_calls(modules: list[Path], step: str) -> list[tuple[str, str, str]]:
+    """(module, line, enclosing top-level def) for every ``step`` call
+    (``mapInPandas`` or ``mapInArrow``) in ``modules``."""
     calls = []
-    for module in MEDIA_MODULES:
-        for top in ast.parse((PACKAGE / "functions" / module).read_text()).body:
+    for path in modules:
+        for top in ast.parse(path.read_text()).body:
             for node in ast.walk(top):
                 if (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
-                        and node.func.attr == "mapInPandas"):
-                    calls.append((module, str(node.lineno), getattr(top, "name", "<module>")))
+                        and node.func.attr == step):
+                    calls.append((path.name, str(node.lineno), getattr(top, "name", "<module>")))
     return calls
 
 
 def test_media_payload_kernels_run_only_in_the_runner():
-    calls = _media_map_calls()
+    calls = _map_calls([PACKAGE / "functions" / m for m in MEDIA_MODULES], "mapInPandas")
     stray = [call for call in calls if call[::2] != ("media_codec.py", "_quarantine_map")]
     assert not stray, (
         f"mapInPandas outside media_codec._quarantine_map: {stray}. Run a "
         "per-payload media kernel through _quarantine_map (errors='raise' "
         "when it has no quarantine policy)."
+    )
+    assert len(calls) == 1
+
+
+def test_sink_arrow_tasks_run_only_in_the_kept_copy():
+    calls = _map_calls(sorted((PACKAGE / "sinks").glob("*.py")), "mapInArrow")
+    stray = [call for call in calls if call[::2] != ("parquet_table.py", "_copy_kept")]
+    assert not stray, (
+        f"mapInArrow outside parquet_table._copy_kept: {stray}. A sink's Arrow "
+        "file task runs in the kept-copy runner."
     )
     assert len(calls) == 1

@@ -803,10 +803,11 @@ def test_empty_micro_batch_records_epoch_only(spark, dirs):
 def test_bulk_apply_batch_job_count(spark, dirs, spark_jobs):
     """One bulk-shaped micro-batch (one DML segment, no spill) into a
     non-empty table: the stats job also counts the events that spill, so
-    with none the apply skips merge_apply's spill probe — 7 Spark jobs (the
-    materializing count() preamble once cost 12, the probe one more). A
-    following batch with a key-changing update still probes, and its spill
-    replays."""
+    with none the apply skips merge_apply's spill probe — 8 Spark jobs (the
+    materializing count() preamble once cost 12, the probe one more). Of
+    those, merge_apply runs the removal-set collect, the upsert write and
+    the kept copy. A following batch with a key-changing update still
+    probes, and its spill replays."""
     src, target_dir, _ = dirs
     table = ParquetTable(spark, target_dir, PAYLOAD)
     initial = [ev("c", after={"id": i, "name": f"n{i}", "bal": i}, seq=i) for i in range(1, 201)]
@@ -824,7 +825,7 @@ def test_bulk_apply_batch_job_count(spark, dirs, spark_jobs):
     pipe = CdcPipeline(spark, table, key_cols=["id"])
     with spark_jobs() as jobs:
         pipe.apply_batch(batch, batch_id=0)
-    assert jobs.n == 7
+    assert jobs.n == 8
     st = state_dict(table)
     assert len(st) == 200 and st[1] == ("x", 150) and st[51] == ("n51", 51)
 
@@ -840,7 +841,7 @@ def test_bulk_apply_batch_job_count(spark, dirs, spark_jobs):
     )
     with spark_jobs() as jobs:
         pipe.apply_batch(batch, batch_id=1)
-    assert jobs.n > 7
+    assert jobs.n > 8
     st = state_dict(table)
     assert len(st) == 200 and 52 not in st and st[1052] == ("moved", 52)
     assert st[53] == ("y", 0)
