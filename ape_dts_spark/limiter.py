@@ -58,6 +58,15 @@ class TokenBucket:
         return wait
 
 
+def batch_bytes(columns: list[str]):
+    """One row's byte charge: the length of the row's columns as JSON text,
+    the same order of magnitude as the reference's malloc-size accounting
+    on DtData."""
+    from pyspark.sql import functions as F
+
+    return F.length(F.to_json(F.struct(*columns)))
+
+
 @dataclass
 class PipelineLimiter:
     """The BufferLimiter composition: optional records/sec and bytes/sec
@@ -82,21 +91,19 @@ class PipelineLimiter:
     def wants_bytes(self) -> bool:
         return self.max_mbps > 0
 
-    def admit_batch(self, batch, n_records: int | None = None) -> float:
+    def admit_batch(self, batch) -> float:
         """Admit a micro-batch DataFrame: one agg computes (records, bytes)
         and both buckets acquire together (buffer_limiter.rs:79-99). Bytes =
-        serialized-JSON row size — the same order of magnitude as the
-        reference's malloc-size accounting on DtData. The bytes agg only
-        runs when max_mbps is configured; a pure max_rps limiter charges
-        ``n_records`` when the caller has already counted the batch, and
-        counts it otherwise."""
+        ``batch_bytes`` summed over the rows. The bytes agg only runs when
+        max_mbps is configured; a pure max_rps limiter counts the batch. A
+        caller that already summed both (``CdcPipeline``'s stats pass) calls
+        ``acquire`` directly."""
         from pyspark.sql import functions as F
 
         if not self.wants_bytes:
-            return self.acquire(batch.count() if n_records is None else n_records)
+            return self.acquire(batch.count())
         row = batch.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.length(F.to_json(F.struct(*batch.columns)))).alias("b"),
+            F.count(F.lit(1)).alias("n"), F.sum(batch_bytes(batch.columns)).alias("b"),
         ).collect()[0]
         return self.acquire(int(row["n"]), int(row["b"] or 0))
 

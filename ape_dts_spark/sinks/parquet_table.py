@@ -10,30 +10,35 @@ commits it as a new immutable version directory, with ``_meta.json`` pointing
 at the current version (a micro table-format commit — readers never see a
 partial write, and a failed apply leaves the previous version intact).
 
-Scale note: a new version is a full snapshot written in two parts. The
-batch-side rows (the upsert images, plus the spill replay over them) go
-through Spark's writer. The kept rows are copied file by file in Arrow by
-``_copy_kept``: one ``mapInArrow`` task per bin of the current version's
-files reads them with pyarrow, drops the rows the batch removes (a set
-collected once and broadcast) and writes one file, so a kept row is never
-decoded into the JVM or re-encoded by parquet-mr. The copy is still a
-whole-table write per apply: the cost per kept row fell, not the count. A
-real cluster deployment swaps this class for Delta ``MERGE`` and keeps every
-operator upstream unchanged.
+Scale note: a new version is a full snapshot written in two parts, the
+batch-side rows and the kept rows. When nothing spills and the write-set's
+estimated bytes stay below ``_WRITE_SET_MAX_BYTES``, one Arrow collect of the
+write-set yields both the changed keys and the upsert images, and the driver
+writes the upserts with pyarrow; otherwise the batch-side rows (the upsert
+images, plus the spill replay over them) go through Spark's writer. The kept
+rows are copied file by file in Arrow by ``_copy_kept``: one ``mapInArrow``
+task per bin of the current version's files reads them with pyarrow, drops
+the rows the batch removes (a set collected once and broadcast) and writes
+one file, so a kept row is never decoded into the JVM or re-encoded by
+parquet-mr. The copy is still a whole-table write per apply: the cost per
+kept row fell, not the count. A real cluster deployment swaps this class for
+Delta ``MERGE`` and keeps every operator upstream unchanged.
 """
 
 from __future__ import annotations
 
 import json
 import math
+import operator
 import os
+import shutil
 import time
 from functools import reduce
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -70,6 +75,47 @@ def _can_widen(old: T.DataType, new: T.DataType) -> bool:
 
 # Spark parquet codec names pyarrow spells differently
 _ARROW_CODECS = {"uncompressed": "none", "lz4_raw": "lz4"}
+
+# Estimated write-set bytes (``estimated_bytes`` summed over the batch's
+# after images) below which merge_apply collects the write-set to the
+# driver and writes the upserts there; above it Spark's writer runs. The
+# collect was faster in wall and CPU at every measured size, up to 1M
+# changed keys (~190 MB), so this is a driver-memory cap: the collect holds
+# the table about twice over at its peak, which stays far inside a default
+# 1 GB driver and its 1 GB ``maxResultSize`` (SCALING.md "Write-set
+# collect").
+_WRITE_SET_MAX_BYTES = 64 * 1024 * 1024
+
+# Arrow widths of the fixed-width Spark types ``estimated_bytes`` counts
+# other than 8 bytes
+_FIXED_WIDTHS = {
+    T.BooleanType: 1, T.ByteType: 1, T.ShortType: 2, T.IntegerType: 4,
+    T.FloatType: 4, T.DateType: 4, T.DecimalType: 16,
+}
+
+
+def estimated_bytes(col: Column, dtype: T.DataType) -> Column:
+    """An estimate of the Arrow bytes of ``col``, of type ``dtype``, on one
+    row: ``octet_length`` for a string or binary, the sum of the fields for a
+    struct, the JSON text's length for an array or a map, and the fixed
+    width for the rest. A NULL counts 0."""
+    if isinstance(dtype, T.StructType):
+        return reduce(operator.add, [
+            estimated_bytes(col.getField(f.name), f.dataType) for f in dtype.fields
+        ], F.lit(0).cast("long"))
+    if isinstance(dtype, (T.StringType, T.BinaryType)):
+        size = F.octet_length(col)
+    elif isinstance(dtype, (T.ArrayType, T.MapType)):
+        size = F.octet_length(F.to_json(col))
+    else:
+        size = F.when(col.isNotNull(), F.lit(_FIXED_WIDTHS.get(type(dtype), 8)))
+    return F.coalesce(size.cast("long"), F.lit(0).cast("long"))
+
+
+def _arrow_codec(conf) -> str:
+    """The session's parquet codec (``conf``: the JVM ``SQLConf``) as
+    pyarrow names it."""
+    return _ARROW_CODECS.get(conf.parquetCompressionCodec(), conf.parquetCompressionCodec())
 
 
 def _data_files(version_dir: str) -> list[str]:
@@ -162,7 +208,7 @@ def _copy_kept(
     parquet codec. The groups ship to the tasks as one broadcast."""
     conf = spark._jsparkSession.sessionState().conf()
     bins = _file_bins(_data_files(src), conf.filesMaxPartitionBytes())
-    codec = _ARROW_CODECS.get(conf.parquetCompressionCodec(), conf.parquetCompressionCodec())
+    codec = _arrow_codec(conf)
     arrow_schema = _arrow_schema(schema)
     removal = spark.sparkContext.broadcast(groups)
 
@@ -226,29 +272,43 @@ class ParquetTable:
         os.replace(tmp, self._meta_path)
 
     def _commit(
-        self, state: DataFrame, meta: dict, ddl: dict | None = None,
+        self, state: DataFrame | pa.Table, meta: dict, ddl: dict | None = None,
         removal: list[tuple[list[str], pa.Table]] | None = None,
-    ) -> None:
+    ) -> dict[str, float]:
         """Write ``state`` as the next version directory, then point
         ``_meta.json`` at it (stamping ``committed_at`` and logging ``ddl``)
-        — the one data commit every rewrite shares. With ``removal`` the
-        current version's rows that no removal group matches are copied in
-        beside ``state`` (``_copy_kept``). A failed write leaves the meta, and
-        so the table, at the previous version."""
+        — the one data commit every rewrite shares. A DataFrame goes through
+        Spark's writer; an Arrow table (rows on the payload schema) is written
+        by the driver as one file, even when empty, so the version always
+        holds the schema. With ``removal`` the current version's rows that no
+        removal group matches are copied in beside ``state`` (``_copy_kept``).
+        Either way ``out`` is cleared first, a failed attempt's files with it,
+        and a failed write leaves the meta, and so the table, at the previous
+        version. Returns the milliseconds of the kept copy (``copy_ms``) and
+        of the rest (``commit_ms``)."""
         version = meta["version"] + 1
         out = os.path.join(self.path, f"v{version}")
-        # overwrite mode clears `out` first, a failed attempt's files with it
-        state.write.mode("overwrite").parquet(out)
+        t0 = time.perf_counter()
+        if isinstance(state, pa.Table):
+            shutil.rmtree(out, ignore_errors=True)
+            os.makedirs(out)
+            conf = self.spark._jsparkSession.sessionState().conf()
+            pq.write_table(state, os.path.join(out, "part-upsert.parquet"), compression=_arrow_codec(conf))
+        else:
+            state.write.mode("overwrite").parquet(out)
+        t1 = time.perf_counter()
         if removal is not None:
             _copy_kept(
                 self.spark, os.path.join(self.path, f"v{meta['version']}"), out,
                 self.payload_schema, removal,
             )
+        t2 = time.perf_counter()
         meta["version"] = version
         meta["committed_at"] = time.time()
         if ddl is not None:
             meta.setdefault("ddl_log", []).append(ddl)
         self._write_meta(meta)
+        return {"copy_ms": (t2 - t1) * 1e3, "commit_ms": (time.perf_counter() - t2 + t1 - t0) * 1e3}
 
     def log_ddl(self, entry: dict, log: str = "ddl_log", **meta_fields) -> None:
         """Metadata-only commit: append ``entry`` to the meta's ``log``
@@ -433,7 +493,8 @@ class ParquetTable:
         key_cols: list[str],
         stream_id: str = "default",
         batch_id: float | None = None,
-    ) -> None:
+        image_bytes: int | None = None,
+    ) -> dict[str, float]:
         """Stage-ordered apply of a compacted write-set.
 
         1. every changed key leaves the table (covers delete AND upsert-replace)
@@ -444,44 +505,91 @@ class ParquetTable:
            means the caller knows nothing spilled, which skips the
            emptiness probe (one Spark job)
 
-        The next version is written in two parts. The batch-side rows (steps
-        2 and 3 over the upsert images and the spilled inserts) go through
-        Spark's writer. The current version's rows are copied in by
-        ``_copy_kept``, less the removal set ``_removal_groups`` collects in
-        one Spark job: the changed keys and the rows step 3 deletes. A table
-        with no version has nothing to copy and runs no copy job.
+        The next version is written in two parts: the batch-side rows, and
+        the current version's rows less the removal set, copied in by
+        ``_copy_kept``. The route for the batch-side rows depends on the
+        batch:
+
+        - nothing spills, the table has a version, and ``image_bytes`` (the
+          caller's ``estimated_bytes`` sum over the batch's after images) is
+          below ``_WRITE_SET_MAX_BYTES``: one Arrow collect of
+          ``compacted`` (``_write_set``) yields the changed keys, which are
+          the removal set, and the upsert images, which the driver writes as
+          one file. A collect that returns no rows writes no version: only
+          the epoch is recorded.
+        - otherwise (a spill, no version yet, or no or too large an estimate)
+          steps 2 and 3 run as one Spark write, and ``_removal_groups``
+          collects the removal set in a job of its own: the changed keys
+          and the rows step 3 deletes. A table with no version has nothing
+          to copy and runs no copy job.
 
         If ``batch_id`` is given and was already committed for ``stream_id``
         the apply is a no-op — making foreachBatch replays idempotent.
+        Returns the milliseconds spent collecting (``collect_ms``), copying
+        the kept rows (``copy_ms``) and writing the rest (``commit_ms``).
         """
         meta = self._read_meta()
         if meta.get("dropped"):
             raise ValueError(
                 f"table at {self.path} was dropped (DROP TABLE in stream); re-create before applying"
             )
+        timings = {"collect_ms": 0.0, "copy_ms": 0.0, "commit_ms": 0.0}
         if batch_id is not None and meta["applied_batches"].get(stream_id, -1) >= batch_id:
-            return
+            return timings
 
         # No materializing preamble: the caller caches the batch both inputs
-        # derive from (CdcPipeline.apply_batch persists it), so the removal
-        # collect and the write re-read cached rows, not the source; a caller
-        # passing an uncached plan pays one recompute for each. AQE's
-        # post-shuffle coalescing sizes the upsert files.
-        rows = compacted.filter(F.col("op") == "upsert").select(
-            *self._image_cols(compacted, "after")
-        )
+        # derive from (CdcPipeline.apply_batch persists it), so the collect
+        # and the write re-read cached rows, not the source; a caller
+        # passing an uncached plan pays one recompute for each.
         if spilled is not None and spilled.isEmpty():
             # one emptiness probe: most CDC batches spill nothing, and an
             # empty spill set would still plan two broadcast anti-joins
             spilled = None
-        if spilled is not None:
-            rows = self._replay_spill(rows, spilled, key_cols)
         if batch_id is not None:
             meta["applied_batches"][stream_id] = batch_id
-        removal = None
-        if meta["version"] >= 0:
-            removal = self._removal_groups(compacted, spilled, key_cols)
-        self._commit(rows, meta, removal=removal)
+        t0 = time.perf_counter()
+        if (
+            spilled is None and meta["version"] >= 0
+            and image_bytes is not None and image_bytes < _WRITE_SET_MAX_BYTES
+        ):
+            removal, rows = self._write_set(compacted, key_cols)
+            timings["collect_ms"] = (time.perf_counter() - t0) * 1e3
+            if not removal[0][1].num_rows:
+                # nothing changed: a copy of the table would be the whole commit
+                self._write_meta(meta)
+                return timings
+        else:
+            # AQE's post-shuffle coalescing sizes the upsert files
+            rows = compacted.filter(F.col("op") == "upsert").select(
+                *self._image_cols(compacted, "after")
+            )
+            if spilled is not None:
+                rows = self._replay_spill(rows, spilled, key_cols)
+            removal = None
+            if meta["version"] >= 0:
+                removal = self._removal_groups(compacted, spilled, key_cols)
+            timings["collect_ms"] = (time.perf_counter() - t0) * 1e3
+        timings.update(self._commit(rows, meta, removal=removal))
+        return timings
+
+    def _write_set(
+        self, compacted: DataFrame, key_cols: list[str]
+    ) -> tuple[list[tuple[list[str], pa.Table]], pa.Table]:
+        """``compacted`` collected in one ``toArrow``: the changed keys, cast
+        to the payload types, as the one ``_removed`` group of a batch with
+        no spill, and the upsert images on the payload schema. Columns are
+        fetched by position, so a payload column named like a key or ``op``
+        cannot collide."""
+        schema = _arrow_schema(self.payload_schema)
+        types = {f.name: f.dataType for f in self.payload_schema.fields}
+        cols = [F.col(k).cast(types[k]) for k in key_cols]
+        cols += [F.col("op") == "upsert", *self._image_cols(compacted, "after")]
+        got = compacted.select(*cols).toDF(*[f"_{i}" for i in range(len(cols))]).toArrow()
+        n = len(key_cols)
+        keys = pa.Table.from_arrays(got.columns[:n], names=key_cols)
+        images = pa.Table.from_arrays(got.columns[n + 1:], names=schema.names)
+        rows = _project(images.filter(got.column(n)), schema)
+        return [(key_cols, _project(keys, pa.schema([schema.field(k) for k in key_cols])))], rows
 
     def _removal_groups(
         self, compacted: DataFrame, spilled: DataFrame | None, key_cols: list[str]

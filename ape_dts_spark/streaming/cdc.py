@@ -388,53 +388,75 @@ class CdcPipeline:
         NULL-key inserts would append twice. Heartbeat/lag metric per batch =
         now - max(event ts) (reference heartbeat:
         mysql_cdc_extractor.rs:468-540).
+
+        Stats: one ``noop`` write over the batch both builds its persisted
+        cache and, through an ``Observation``, sums what the rest of the
+        method needs before anything is written: the event count, the count
+        of non-NULL seqs (a NULL seq is refused), the heartbeat readout (max
+        seq / max ts), the count of DML events compaction will spill (with
+        none, no segment's merge_apply probes its spill set), an estimate of
+        the after-image bytes (``estimated_bytes``, which picks merge_apply's
+        route) and, for a ``max_mbps`` limiter, the batch's ``batch_bytes``.
+        The batch's ``metrics`` row splits ``apply_ms`` into the summed
+        ``collect_ms``, ``copy_ms`` and ``commit_ms`` of its merge_applies.
         """
         if self.target.last_applied(self.stream_id) >= batch_id:
             return
+        from pyspark.sql import Observation
         from pyspark.storagelevel import StorageLevel
 
+        from ape_dts_spark.limiter import batch_bytes
+        from ape_dts_spark.sinks.parquet_table import estimated_bytes
+
         # Materialize the prepared micro-batch ONCE: this method references it
-        # from the DDL scan, every DML segment's compaction, the metrics
-        # count/agg and the optional inline check — each an action that would
+        # from the DDL scan, every DML segment's compaction, the stats pass
+        # and the optional inline check — each an action that would
         # otherwise re-execute the whole micro-batch subtree (source parse +
         # streaming state read), measured ~4-6 executions per batch.
         batch = self._prepare(batch).persist(StorageLevel.MEMORY_AND_DISK)
-        # ONE materializing job yields the event count, the heartbeat
-        # readout (max seq / max ts) the metrics block needs at the end and
-        # the count of DML events compaction will spill: with none, no
-        # segment's merge_apply runs its spill emptiness probe (a job each)
         unmergeable = ~F.col("mergeable")
         if "ddl" in batch.columns:
             unmergeable = unmergeable & (F.col("row_type") != "ddl")
-        _stats = classify_mergeable(batch, self.key_cols).agg(
+        exprs = [
             F.count(F.lit(1)).alias("n"), F.count("seq").alias("n_seq"),
             F.max("seq").alias("m"), F.max("ts").alias("t"),
             F.count_if(unmergeable).alias("n_spill"),
-        ).collect()[0]
-        n_events = _stats["n"]
-        if _stats["n_seq"] != n_events:
+            F.sum(estimated_bytes(F.col("after"), batch.schema["after"].dataType)).alias("image_bytes"),
+        ]
+        if self.limiter is not None and self.limiter.wants_bytes:
+            exprs.append(F.sum(batch_bytes(batch.columns)).alias("b"))
+        observed = Observation()
+        classify_mergeable(batch, self.key_cols).observe(observed, *exprs).write.format(
+            "noop"
+        ).mode("overwrite").save()
+        stats = observed.get
+        n_events = stats["n"]
+        if stats["n_seq"] != n_events:
             # a NULL seq cannot be placed against the DDL barriers: a DDL
             # would never apply and every segment would re-cover the batch
             batch.unpersist()
             raise ValueError(
-                f"batch {batch_id}: {n_events - _stats['n_seq']} event(s) with a NULL seq "
+                f"batch {batch_id}: {n_events - stats['n_seq']} event(s) with a NULL seq "
                 "cannot be ordered; parse the stream with parse_debezium_with_dead_letter, "
                 "which quarantines them as missing_seq"
             )
         throttle_sec = 0.0
         if self.limiter is not None:
-            throttle_sec = self.limiter.admit_batch(batch, n_events)
+            throttle_sec = self.limiter.acquire(n_events, int(stats.get("b") or 0))
         t_apply = time.perf_counter()
+        timings = {"collect_ms": 0.0, "copy_ms": 0.0, "commit_ms": 0.0}
         # an empty micro-batch (e.g. every event filtered out) records its
         # epoch only: merge-applying it would commit a full copy of the table
         if n_events:
-            self._apply_segments(batch, batch_id, spills=_stats["n_spill"] > 0)
+            timings = self._apply_segments(
+                batch, batch_id, spills=stats["n_spill"] > 0,
+                image_bytes=int(stats["image_bytes"] or 0),
+            )
         self.target.record_batch(self.stream_id, batch_id)
         apply_s = time.perf_counter() - t_apply
         check = self._inline_check(batch) if self.inline_check else {}
-        max_ts = _stats
         batch.unpersist()
-        lag = (time.time() - max_ts["t"].timestamp()) if max_ts["t"] is not None else None
+        lag = (time.time() - stats["t"].timestamp()) if stats["t"] is not None else None
         if self.monitor is not None:
             self.monitor.add("extractor", "record_count", n_events, count=1)
             self.monitor.add("sinker", "record_count", n_events, count=1)
@@ -444,10 +466,11 @@ class CdcPipeline:
             {
                 "batch_id": batch_id,
                 "n_events": n_events,
-                "max_seq": max_ts["m"],
+                "max_seq": stats["m"],
                 "lag_sec": lag,
                 "throttle_sec": throttle_sec,
                 "apply_ms": apply_s * 1e3,
+                **timings,
                 "at": time.time(),
                 **check,
             }
@@ -455,11 +478,15 @@ class CdcPipeline:
         if self.position_log is not None and self.position_of is not None:
             self.position_log.checkpoint(self.position_of(self.metrics[-1]))
 
-    def _apply_segments(self, batch: DataFrame, batch_id: int, spills: bool) -> None:
+    def _apply_segments(
+        self, batch: DataFrame, batch_id: int, spills: bool, image_bytes: int
+    ) -> dict[str, float]:
         """Compact and merge-apply the batch's DML in the seq-ordered
         segments its DDL barriers cut, applying each DDL in between.
         ``spills`` False: no DML event of the batch spills, so no segment's
-        merge_apply probes its spill set."""
+        merge_apply probes its spill set. ``image_bytes``, the whole batch's
+        estimate, bounds every segment's. Returns merge_apply's timings
+        summed over the segments."""
         ddls = (
             batch.filter(F.col("row_type") == "ddl").orderBy("seq").collect()
             if "ddl" in batch.columns
@@ -473,6 +500,7 @@ class CdcPipeline:
         # A batch with rows and no re-registering DDL ahead of them fails
         # exactly like the old batch-level check did.
         bounds = [d["seq"] for d in ddls] + [None]
+        totals = {"collect_ms": 0.0, "copy_ms": 0.0, "commit_ms": 0.0}
         lo = None
         for i, hi in enumerate(bounds):
             seg = dml
@@ -489,13 +517,16 @@ class CdcPipeline:
                     )
             else:
                 compacted, spilled = compact_changes(seg, self.key_cols)
-                self.target.merge_apply(
+                timings = self.target.merge_apply(
                     compacted, spilled if spills else None, self.key_cols,
-                    stream_id=self.stream_id, batch_id=seg_epoch,
+                    stream_id=self.stream_id, batch_id=seg_epoch, image_bytes=image_bytes,
                 )
+                for k, v in timings.items():
+                    totals[k] += v
             if hi is not None:
                 self.apply_ddl(ddls[i])
             lo = hi
+        return totals
 
     def _inline_check(self, batch: DataFrame) -> dict:
         """CDC-inline check (the reference's checker-in-CDC mode,

@@ -158,6 +158,51 @@ def test_drop_then_add_column_reads_null(spark, tmp_path):
     assert {r["id"]: r["name"] for r in table.current().collect()} == {1: None, 2: "new"}
 
 
+def test_batch_ending_in_ddl_commits_no_empty_segment(spark, tmp_path):
+    """The empty DML segments around a batch's DDLs commit no copy of the
+    table: a batch ending in ADD COLUMN advances the version by its DML
+    segment only, and a batch holding only a DROP COLUMN not at all. Every
+    epoch still records."""
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    table = ParquetTable(spark, str(tmp_path / "tgt"), PAYLOAD)
+    _apply(spark, src, table, [
+        ev("c", after={"id": 1, "name": "a", "bal": 10}, seq=1),
+        ev("c", after={"id": 2, "name": "b", "bal": 20}, seq=2),
+    ], PAYLOAD, batch_id=0)
+    assert table.version() == 0
+    _apply(spark, src, table, [
+        ev("u", before={"id": 1, "name": "a", "bal": 10}, after={"id": 1, "name": "a", "bal": 11}, seq=3),
+        ddl("ALTER TABLE default.users ADD COLUMN tier varchar(8)", seq=4),
+    ], PAYLOAD, batch_id=1)
+    assert table.version() == 1 and table.last_applied("cdc") == 1
+    assert [f.name for f in table.payload_schema.fields] == ["id", "name", "bal", "tier"]
+    assert {r["id"]: (r["bal"], r["tier"]) for r in table.current().collect()} == {1: (11, None), 2: (20, None)}
+    _apply(spark, src, table, [ddl("ALTER TABLE default.users DROP COLUMN name", seq=5)],
+           PAYLOAD, batch_id=2)
+    assert table.version() == 1 and table.last_applied("cdc") == 2
+
+
+def test_drop_then_add_column_in_stream_reads_null(spark, tmp_path):
+    """DROP COLUMN then ADD COLUMN of the same name as adjacent DDLs of one
+    batch: no write lands between them, so the ADD's own rewrite is the
+    batch's one commit and the re-added column reads NULL."""
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    table = ParquetTable(spark, str(tmp_path / "tgt"), PAYLOAD)
+    _apply(spark, src, table, [
+        ev("c", after={"id": 1, "name": "old", "bal": 10}, seq=1),
+        ev("c", after={"id": 2, "name": "old", "bal": 20}, seq=2),
+    ], PAYLOAD, batch_id=0)
+    _apply(spark, src, table, [
+        ddl("ALTER TABLE default.users DROP COLUMN name", seq=3),
+        ddl("ALTER TABLE default.users ADD COLUMN name varchar(8)", seq=4),
+    ], PAYLOAD, batch_id=1)
+    assert [f.name for f in table.payload_schema.fields] == ["id", "bal", "name"]
+    assert {r["id"]: r["name"] for r in table.current().collect()} == {1: None, 2: None}
+    assert table.version() == 1 and table.last_applied("cdc") == 1
+
+
 def test_truncate_rename_drop_table_in_stream(spark, tmp_path):
     src = str(tmp_path / "src")
     os.makedirs(src)
@@ -196,6 +241,26 @@ def test_null_seq_event_refused_before_commit(spark, tmp_path):
             ev("c", after={"id": None, "name": "n", "bal": 0}, seq=4),
         ], PAYLOAD, batch_id=0)
     assert table.version() == -1
+
+
+def test_null_seq_batch_writes_no_version_or_epoch(spark, tmp_path):
+    """On a table with a version, a DML-only batch holding a NULL-seq event
+    is refused by the stats pass: no version, no epoch (whole or
+    fractional) is written."""
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    table = ParquetTable(spark, str(tmp_path / "tgt"), PAYLOAD)
+    _apply(spark, src, table, [ev("c", after={"id": 1, "name": "a", "bal": 10}, seq=1)], PAYLOAD, batch_id=0)
+    meta = table._read_meta()
+    unordered = ev("u", before={"id": 1, "name": "a", "bal": 10}, after={"id": 1, "name": "a", "bal": 99})
+    del unordered["source"]["seq"]
+    with pytest.raises(ValueError, match="NULL seq"):
+        _apply(spark, src, table, [
+            ev("c", after={"id": 2, "name": "b", "bal": 20}, seq=2), unordered,
+        ], PAYLOAD, batch_id=1)
+    assert table._read_meta() == meta and table.version() == 0
+    assert sorted(os.listdir(table.path)) == ["_meta.json", "v0"]
+    assert {r["id"]: r["bal"] for r in table.current().collect()} == {1: 10}
 
 
 def test_parse_dcl_statement_kinds():

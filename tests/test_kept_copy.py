@@ -1,8 +1,10 @@
 """``ParquetTable.merge_apply`` copies the kept rows in Arrow: the state after
 each apply must equal the one-plan state (``current LEFT ANTI JOIN
 changed_keys``, plus the upsert images, then the spill replay) across column
-types, key shapes, schema changes and spills; a failed copy must leave the
-previous version, and repeated applies must not accumulate files."""
+types, key shapes, schema changes and spills, whether the batch-side rows
+come from the write-set collect or from Spark's writer; a failed copy must
+leave the previous version, and repeated applies must not accumulate
+files."""
 
 import datetime as dt
 import os
@@ -57,11 +59,38 @@ def _one_plan(table, compacted, spilled, keys):
     return _rows(state)
 
 
-def _apply_and_compare(spark, table, keys, events):
-    compacted, spilled = compact_changes(_events(spark, table.payload_schema, events), keys)
+def _image_bytes(batch):
+    """The after-image estimate CdcPipeline's stats pass hands merge_apply."""
+    est = parquet_table.estimated_bytes(F.col("after"), batch.schema["after"].dataType)
+    return batch.agg(F.sum(est)).first()[0] or 0
+
+
+def _apply(spark, table, keys, events):
+    batch = _events(spark, table.payload_schema, events)
+    compacted, spilled = compact_changes(batch, keys)
+    table.merge_apply(compacted, spilled, keys, image_bytes=_image_bytes(batch))
+
+
+def _apply_and_compare(spark, table, keys, events, route=None):
+    """Apply ``events`` with the stats pass's estimate and compare with the
+    one-plan state; ``route`` names the route the batch must take."""
+    batch = _events(spark, table.payload_schema, events)
+    compacted, spilled = compact_changes(batch, keys)
     want = _one_plan(table, compacted, spilled, keys)
-    table.merge_apply(compacted, spilled, keys)
+    table.merge_apply(compacted, spilled, keys, image_bytes=_image_bytes(batch))
     assert _rows(table.current()) == want
+    if route is not None:
+        upsert_file = os.path.join(table.path, f"v{table.version()}", "part-upsert.parquet")
+        assert os.path.exists(upsert_file) == (route == "collect")
+
+
+@pytest.fixture(params=["collect", "spark"])
+def route(request, monkeypatch):
+    """merge_apply's route for the batch-side rows: the write-set collect,
+    or Spark's writer, forced by a zero byte bound."""
+    if request.param == "spark":
+        monkeypatch.setattr(parquet_table, "_WRITE_SET_MAX_BYTES", 0)
+    return request.param
 
 
 TYPES = T.StructType([
@@ -86,26 +115,35 @@ def _typed(i, tag=0):
     )
 
 
-def test_typed_columns_copy_equals_one_plan(spark, tmp_path):
-    """An INT96 timestamp written by Spark in v0, TIMESTAMP_NTZ, date,
-    decimal(38,10), binary and nested columns survive two kept copies (the
-    second copies a pyarrow-written file)."""
-    table = ParquetTable(spark, str(tmp_path / "t"), TYPES)
+TYPED_BATCHES = [
+    [
+        ("update", _typed(3), _typed(3, 1), 100),
+        ("delete", _typed(4), None, 101),
+        ("insert", None, _typed(41, 2), 102),
+        ("update", _typed(5), (5, None, None, None, None, None, None, None, None), 103),
+    ],
+    [("update", _typed(3, 1), _typed(3, 5), 200), ("delete", _typed(7), None, 201)],
+]
+
+
+def _typed_table(spark, path):
+    """A TYPES table whose v0 Spark wrote, with its ``ts`` as INT96."""
+    table = ParquetTable(spark, path, TYPES)
     table.merge_apply(*compact_changes(
         _events(spark, TYPES, [("insert", None, _typed(i), i) for i in range(1, 41)]), ["id"]), ["id"])
     v0 = os.path.join(table.path, "v0")
     assert any("int96 field_id=-1 ts" in str(pq.ParquetFile(os.path.join(v0, f)).schema)
                for f in os.listdir(v0) if f.endswith(".parquet"))
-    _apply_and_compare(spark, table, ["id"], [
-        ("update", _typed(3), _typed(3, 1), 100),
-        ("delete", _typed(4), None, 101),
-        ("insert", None, _typed(41, 2), 102),
-        ("update", _typed(5), (5, None, None, None, None, None, None, None, None), 103),
-    ])
-    _apply_and_compare(spark, table, ["id"], [
-        ("update", _typed(3, 1), _typed(3, 5), 200),
-        ("delete", _typed(7), None, 201),
-    ])
+    return table
+
+
+def test_typed_columns_copy_equals_one_plan(spark, tmp_path):
+    """An INT96 timestamp written by Spark in v0, TIMESTAMP_NTZ, date,
+    decimal(38,10), binary and nested columns survive two kept copies (the
+    second copies a pyarrow-written file)."""
+    table = _typed_table(spark, str(tmp_path / "t"))
+    for events in TYPED_BATCHES:
+        _apply_and_compare(spark, table, ["id"], events, "collect")
     assert len(table.current().collect()) == 39
 
 
@@ -115,23 +153,54 @@ KEYED = T.StructType([
     T.StructField("v", T.LongType()),
 ])
 
+KEYED_BATCHES = [
+    [
+        ("update", ("k1", 1, 1), ("k1", 1, 100), 50),
+        ("delete", ("k2", 2, 2), None, 51),
+        ("insert", None, ("k99", 0, 99), 52),
+    ],
+    [("update", ("k1", 1, 100), ("k1", 1, 101), 60)],
+]
+
+
+def _keyed_table(spark, path, keys):
+    """A KEYED table with two NULL-key base rows."""
+    table = ParquetTable(spark, path, KEYED)
+    base = [("insert", None, (f"k{i}", i % 3, i), i) for i in range(30)]
+    base += [("insert", None, (None, 1, 900), 40), ("insert", None, ("k5", None, 901), 41)]
+    table.merge_apply(*compact_changes(_events(spark, KEYED, base), keys), keys)
+    return table
+
 
 @pytest.mark.parametrize("keys", [["a"], ["a", "b"]], ids=["string_key", "composite_key"])
 def test_keyed_copy_equals_one_plan(spark, tmp_path, keys):
     """A string key and a composite key; base rows with a NULL key (spilled
     inserts of v0) are kept, and a NULL key in a changed key matches
     nothing."""
-    table = ParquetTable(spark, str(tmp_path / "t"), KEYED)
-    base = [("insert", None, (f"k{i}", i % 3, i), i) for i in range(30)]
-    base += [("insert", None, (None, 1, 900), 40), ("insert", None, ("k5", None, 901), 41)]
-    table.merge_apply(*compact_changes(_events(spark, KEYED, base), keys), keys)
-    _apply_and_compare(spark, table, keys, [
-        ("update", ("k1", 1, 1), ("k1", 1, 100), 50),
-        ("delete", ("k2", 2, 2), None, 51),
-        ("insert", None, ("k99", 0, 99), 52),
-    ])
-    assert table.current().filter(F.col("a").isNull() | F.col("b").isNull()).count() == 2
-    _apply_and_compare(spark, table, keys, [("update", ("k1", 1, 100), ("k1", 1, 101), 60)])
+    table = _keyed_table(spark, str(tmp_path / "t"), keys)
+    for events in KEYED_BATCHES:
+        _apply_and_compare(spark, table, keys, events, "collect")
+        assert table.current().filter(F.col("a").isNull() | F.col("b").isNull()).count() == 2
+
+
+def test_forced_spark_route_equals_collect_route(spark, tmp_path, monkeypatch):
+    """The type matrix and the composite key through both batch-side
+    routes: the write-set collect, and Spark's writer, forced by a zero
+    byte bound. After every batch both routes hold the same rows, each the
+    one-plan state, and each version shows the route it took."""
+    states = {}
+    for route in ("collect", "spark"):
+        with monkeypatch.context() as m:
+            if route == "spark":
+                m.setattr(parquet_table, "_WRITE_SET_MAX_BYTES", 0)
+            typed = _typed_table(spark, str(tmp_path / route / "typed"))
+            keyed = _keyed_table(spark, str(tmp_path / route / "keyed"), ["a", "b"])
+            states[route] = []
+            for table, keys, batches in [(typed, ["id"], TYPED_BATCHES), (keyed, ["a", "b"], KEYED_BATCHES)]:
+                for events in batches:
+                    _apply_and_compare(spark, table, keys, events, route)
+                    states[route].append(_rows(table.current()))
+    assert states["collect"] == states["spark"]
 
 
 SIMPLE = T.StructType([
@@ -157,12 +226,12 @@ def test_copy_after_add_and_drop_column_equals_one_plan(spark, tmp_path):
     _apply_and_compare(spark, table, ["id"], [
         ("update", (1, "n1", 1, None), (1, "n1", 2, 7), 100),
         ("insert", None, (50, "new", 0, 3), 101),
-    ])
+    ], "collect")
     table.drop_column("name")
     _apply_and_compare(spark, table, ["id"], [
         ("delete", (2, 2, None), None, 200),
         ("update", (3, 3, None), (3, 33, 1), 201),
-    ])
+    ], "collect")
     assert table.current().columns == ["id", "bal", "tier"]
 
 
@@ -206,6 +275,35 @@ def test_nested_whole_row_delete_copy_equals_one_plan(spark, tmp_path):
     assert sorted(r["tags"] for r in table.current().collect() if r["id"] is None) == [["x"]]
 
 
+def test_all_deleted_version_holds_the_schema(spark, tmp_path, route):
+    """A batch that deletes every row commits a version whose directory
+    still holds a file with the payload schema, so pyarrow and Spark both
+    read it as an empty table of the right shape."""
+    table = ParquetTable(spark, str(tmp_path / "t"), SIMPLE)
+    _apply(spark, table, ["id"], [("insert", None, (i, f"n{i}", i), i) for i in range(1, 6)])
+    _apply_and_compare(spark, table, ["id"], [
+        ("delete", (i, f"n{i}", i), None, 10 + i) for i in range(1, 6)
+    ], route)
+    files = parquet_table._data_files(os.path.join(table.path, f"v{table.version()}"))
+    assert table.version() == 1 and files
+    got = pq.read_table(files)
+    assert got.num_rows == 0 and got.schema.names == ["id", "name", "bal"]
+    assert table.current().collect() == [] and table.current().schema == SIMPLE
+
+
+def test_empty_write_set_commits_no_version(spark, tmp_path):
+    """A write-set with no rows and no spill writes no version: the epoch
+    alone is recorded."""
+    table = _simple_table(spark, str(tmp_path / "t"))
+    before = _rows(table.current())
+    batch = _events(spark, SIMPLE, [])
+    table.merge_apply(*compact_changes(batch, ["id"]), ["id"], stream_id="s", batch_id=0.5,
+                      image_bytes=_image_bytes(batch))
+    assert table.version() == 0 and table._read_meta()["applied_batches"]["s"] == 0.5
+    assert not os.path.exists(os.path.join(table.path, "v1"))
+    assert _rows(table.current()) == before
+
+
 def test_failed_copy_keeps_version_and_retry_commits(spark, tmp_path, monkeypatch):
     """A copy task that raises fails the apply before the meta moves: the
     table stays at its version and reads as before, and applying the same
@@ -231,13 +329,13 @@ def test_failed_copy_keeps_version_and_retry_commits(spark, tmp_path, monkeypatc
 
 
 def test_bulk_applies_keep_two_files_per_version(spark, tmp_path):
-    """Ten bulk-shaped applies: each version holds the kept copy and the
-    upsert file, because the previous upsert file folds into the next copy,
-    and the state tracks a dict model."""
+    """Ten bulk-shaped applies on the write-set collect route: each version
+    holds the kept copy and the driver's upsert file, because the previous
+    upsert file folds into the next copy, and the state tracks a dict
+    model."""
     table = ParquetTable(spark, str(tmp_path / "t"), SIMPLE)
     model = {i: (f"n{i}", i) for i in range(2000)}
-    table.merge_apply(*compact_changes(_events(
-        spark, SIMPLE, [("insert", None, (i, *v), i) for i, v in model.items()]), ["id"]), ["id"])
+    _apply(spark, table, ["id"], [("insert", None, (i, *v), i) for i, v in model.items()])
     rng = random.Random(7)
     seq = 10_000
     for n in range(10):
@@ -253,7 +351,8 @@ def test_bulk_applies_keep_two_files_per_version(spark, tmp_path):
             seq += 1
             events.append(("insert", None, (i, "new", seq), seq))
             model[i] = ("new", seq)
-        table.merge_apply(*compact_changes(_events(spark, SIMPLE, events), ["id"]), ["id"])
+        _apply(spark, table, ["id"], events)
         vdir = os.path.join(table.path, f"v{table.version()}")
         assert len(parquet_table._data_files(vdir)) <= 2
+        assert os.path.exists(os.path.join(vdir, "part-upsert.parquet"))
     assert {r["id"]: (r["name"], r["bal"]) for r in table.current().collect()} == model

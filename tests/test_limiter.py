@@ -132,6 +132,30 @@ def test_rps_limiter_adds_no_job_to_apply_batch(spark, spark_jobs, tmp_path):
     assert runs["rps"] == runs["unlimited"] > 0, runs
 
 
+def test_mbps_limiter_rides_the_stats_pass(spark, spark_jobs, tmp_path):
+    """A max_mbps limiter's byte sum rides apply_batch's observed stats
+    pass: the limited batch runs as many Spark jobs as an unlimited one and
+    is charged the batch's JSON byte length, counted as admit_batch's own
+    agg counts it."""
+    from pyspark.sql import functions as F
+
+    class Recording(PipelineLimiter):
+        def acquire(self, n_records, n_bytes=0):
+            self.charged = (n_records, n_bytes)
+            return super().acquire(n_records, n_bytes)
+
+    c = Clock()
+    runs = {}
+    for name, lim in [("unlimited", None), ("mbps", Recording(max_mbps=1, clock=c.now, sleep=c.sleep))]:
+        pipe, batch = _debezium_pipe(spark, tmp_path / name, lim)
+        with spark_jobs() as jobs:
+            pipe.apply_batch(batch, batch_id=0)
+        runs[name] = jobs.n
+    assert runs["mbps"] == runs["unlimited"] > 0, runs
+    want = batch.agg(F.sum(F.length(F.to_json(F.struct(*batch.columns))))).first()[0]
+    assert lim.charged == (2, want) and want > 0
+
+
 def test_admit_batch_charges_bytes(spark):
     """max_mbps-only limiter must deduct real batch bytes (ADVICE r7: bytes
     bucket was silently a no-op when only max_mbps was set)."""

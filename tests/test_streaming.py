@@ -802,12 +802,14 @@ def test_empty_micro_batch_records_epoch_only(spark, dirs):
 
 def test_bulk_apply_batch_job_count(spark, dirs, spark_jobs):
     """One bulk-shaped micro-batch (one DML segment, no spill) into a
-    non-empty table: the stats job also counts the events that spill, so
-    with none the apply skips merge_apply's spill probe — 8 Spark jobs (the
-    materializing count() preamble once cost 12, the probe one more). Of
-    those, merge_apply runs the removal-set collect, the upsert write and
-    the kept copy. A following batch with a key-changing update still
-    probes, and its spill replays."""
+    non-empty table runs 4 Spark jobs: the stats pass, which also builds the
+    batch's cache and counts the events that spill, so with none the apply
+    skips merge_apply's spill probe; then the write-set collect (the
+    compaction's shuffle stage and its result) and the kept copy. The
+    materializing count() preamble once made it 12, and a stats collect plus
+    a Spark write of the upserts 8. A following batch with a key-changing
+    update still probes, and its spill replays through Spark's writer: 11
+    jobs (13 while the stats pass was a three-job collect)."""
     src, target_dir, _ = dirs
     table = ParquetTable(spark, target_dir, PAYLOAD)
     initial = [ev("c", after={"id": i, "name": f"n{i}", "bal": i}, seq=i) for i in range(1, 201)]
@@ -825,7 +827,10 @@ def test_bulk_apply_batch_job_count(spark, dirs, spark_jobs):
     pipe = CdcPipeline(spark, table, key_cols=["id"])
     with spark_jobs() as jobs:
         pipe.apply_batch(batch, batch_id=0)
-    assert jobs.n == 8
+    assert jobs.n == 4
+    m = pipe.metrics[-1]
+    phases = [m["collect_ms"], m["copy_ms"], m["commit_ms"]]
+    assert min(phases) > 0 and sum(phases) <= m["apply_ms"]
     st = state_dict(table)
     assert len(st) == 200 and st[1] == ("x", 150) and st[51] == ("n51", 51)
 
@@ -841,7 +846,7 @@ def test_bulk_apply_batch_job_count(spark, dirs, spark_jobs):
     )
     with spark_jobs() as jobs:
         pipe.apply_batch(batch, batch_id=1)
-    assert jobs.n > 8
+    assert jobs.n == 11
     st = state_dict(table)
     assert len(st) == 200 and 52 not in st and st[1052] == ("moved", 52)
     assert st[53] == ("y", 0)
